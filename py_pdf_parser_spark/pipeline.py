@@ -15,7 +15,9 @@ Design (SURVEY.md §3.1, §4):
   (bigdoc/bigmedia families) skew *kernel compute*, which AQE cannot see:
   heavy docs (``size(spans) > heavy_threshold``) are split off and
   round-robin repartitioned so no task gets two of them; light docs flow
-  straight from file splits (no shuffle).
+  straight from file splits (no shuffle: a full-corpus repartition
+  measured ~3x slower).  ``extract_spans_rebalanced`` runs one kernel
+  per branch.
 * **Checkpoint/resume.** Docs are routed to ``bucket =
   pmod(xxhash64(doc_id), num_buckets)``; the job runs in waves of
   buckets, each wave committed via dynamic partition overwrite (retries
@@ -380,28 +382,6 @@ def tune_scan_splits(
     spark.conf.set("spark.sql.files.openCostInBytes", str(min(split, 4 << 20)))
 
 
-def rebalance(
-    docs_df: DataFrame,
-    heavy_threshold: int = 512,
-    heavy_partitions: Optional[int] = None,
-) -> DataFrame:
-    """Split pathological documents onto their own tasks.
-
-    Light docs ALWAYS keep their scan partitioning — a full-corpus
-    repartition caps throughput at the shuffle, measured ~3x slower than
-    shuffle-free scan splits (see tune_scan_splits).  Heavy docs
-    (span-count above threshold) are a tiny fraction by count and are
-    round-robin repartitioned so no task gets more than ~one of them.
-    """
-    cost = _doc_cost(docs_df)
-    parallelism = docs_df.sparkSession.sparkContext.defaultParallelism
-    light = docs_df.where(cost <= heavy_threshold)
-    heavy = docs_df.where(cost > heavy_threshold)
-    if heavy_partitions is None:
-        heavy_partitions = parallelism
-    return light.unionByName(heavy.repartition(heavy_partitions))
-
-
 def _doc_cost(docs_df: DataFrame):
     """Per-document cost for the skew split.
 
@@ -425,10 +405,11 @@ def extract_spans_rebalanced(
 ) -> DataFrame:
     """Skew-aware extraction: per-branch kernels, union AFTER extraction.
 
-    ``rebalance()`` + one kernel puts the heavy branch's exchange UNDER
-    the union, so the combined kernel stage cannot start until the heavy
-    pre-scan finishes — the two corpus scans serialize (measured 4x
-    slower than plain on a mildly-skewed corpus).  Extracting each
+    Splitting first and running ONE kernel over the union puts the
+    heavy branch's exchange UNDER the union, so the combined kernel
+    stage cannot start until the heavy pre-scan finishes — the two
+    corpus scans serialize (measured 4x slower than plain on a
+    mildly-skewed corpus).  Extracting each
     branch separately keeps the stages independent: Spark runs the light
     scan+kernel CONCURRENTLY with the heavy scan+shuffle, so the second
     scan hides behind the first and only genuinely pathological docs

@@ -2,6 +2,7 @@
 
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -26,6 +27,33 @@ DOCUMENTS_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
         StructField("spans", ArrayType(SPAN_STRUCT)),
+    ]
+)
+
+# Documents table (TESTDATA.md): the text-analysis operators' input.
+DOC_TABLE_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("text", StringType()),
+        StructField("lang", StringType()),
+        StructField("source", StringType()),
+        StructField("n_chars", LongType()),
+    ]
+)
+
+# Crawled HTML pages.
+HTML_PAGES_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType()),
+        StructField("html", StringType()),
+    ]
+)
+
+# Raw PDF files.
+PDF_BYTES_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType()),
+        StructField("pdf_bytes", BinaryType()),
     ]
 )
 

@@ -21,8 +21,8 @@ preferred; an injected ``extract_pages`` callable overrides both
 
 At 100 TB: one narrow mapInArrow over the (doc_id, pdf_bytes) scan —
 no shuffle; giant PDFs are the task-level skew the pipeline's
-``rebalance()`` already handles (split on byte size at the scan, since
-``n_spans`` is unknown pre-parse).
+``extract_spans_rebalanced`` already handles (split on byte size at the
+scan, since ``n_spans`` is unknown pre-parse).
 """
 
 from __future__ import annotations

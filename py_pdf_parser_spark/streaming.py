@@ -1,26 +1,108 @@
-"""Structured Streaming wrapper around the extraction pipeline.
+"""Structured Streaming surfaces: the batch operators on file-source streams.
 
 The reference has no streaming (SURVEY.md §2.10); the batch kernels are
-pure, so the identical extraction runs under ``foreachBatch`` for
-continuous ingestion of newly-landed document files.  Checkpointing is
-Spark's own stream checkpoint (offsets) — per-batch output is appended,
-and the batch kernel's per-document error containment carries over.
+pure, so every surface runs the batch operator itself and the kernels'
+per-document error containment carries over.  Each surface is one
+reader, one transform and one of two sinks:
+
+* ``_read_stream`` — the parquet files landing in an input directory;
+* ``_memory_sink`` — an in-memory table, for the stateless gates and the
+  stateful operators;
+* ``_idempotent_sink`` — the exactly-once parquet sink, for transforms
+  whose output lands on disk.
+
+A new surface declares its input schema, its ``maxFilesPerTrigger``
+default, its transform (closing over any frozen artifact: a model, a
+codebook, a thresholds table) and its sink.
 """
 
 from __future__ import annotations
 
+from functools import partial
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .schema import DOCUMENTS_SCHEMA
+from .schema import (
+    DOC_TABLE_SCHEMA,
+    DOCUMENTS_SCHEMA,
+    EVENTS_SCHEMA,
+    HTML_PAGES_SCHEMA,
+    PDF_BYTES_SCHEMA,
+)
 
 
-def read_document_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File-source stream of document parquet drops."""
+def _read_stream(
+    spark: SparkSession, input_dir: str, schema, max_files_per_trigger: int
+) -> DataFrame:
+    """File-source stream of the parquet files landing in ``input_dir``."""
     return (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
+    )
+
+
+def _memory_sink(
+    df: DataFrame, query_name: str, output_mode: str = "append"
+) -> StreamingQuery:
+    """Stream ``df`` into the in-memory table ``query_name``."""
+    return (
+        df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .start()
+    )
+
+
+def write_batch(
+    transform: Callable[[DataFrame], DataFrame],
+    output_dir: str,
+    batch_df: DataFrame,
+    batch_id: int,
+) -> None:
+    """Write ``transform(batch_df)`` as partition ``batch_id`` of
+    ``output_dir``, replacing that partition if it already exists."""
+    (
+        transform(batch_df)
+        .withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(output_dir)
+    )
+
+
+def _idempotent_sink(
+    stream: DataFrame,
+    transform: Callable[[DataFrame], DataFrame],
+    output_dir: str,
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Exactly-once parquet sink: every micro-batch runs ``transform``
+    and lands as its own ``batch_id`` partition of ``output_dir``.
+
+    ``foreachBatch`` is at-least-once: a batch retried after a partial
+    write, or replayed from the checkpoint before its commit, runs
+    again, so a blind append would duplicate rows.  ``write_batch``
+    overwrites only partition ``batch_id=N`` (dynamic partition
+    overwrite), and every transform here is deterministic, so a replay
+    rewrites the same rows instead of appending a second copy.
+
+    Transforms that aggregate per document (scores, span ``seq``) run
+    per micro-batch and still equal the batch operator, because a
+    document arrives whole in one file, never split across batches.
+    Frozen artifacts (models, thresholds) are static broadcast tables,
+    so arriving documents never shift them.
+    """
+    return (
+        stream.writeStream.foreachBatch(
+            partial(write_batch, transform, output_dir)
+        )
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
     )
 
 
@@ -29,37 +111,20 @@ def stream_windowed_counts(
     input_dir: str,
     query_name: str = "ev_windowed_counts",
     watermark: str = "10 minutes",
-):
-    """Streaming tumbling-window aggregation with event-time watermark.
-
-    The same ``events.windowed_counts`` transformation as batch, under a
-    ``withWatermark`` prefix: Spark keeps window state only until the
-    watermark passes the window end, so state is bounded however long
-    the stream runs — the late-data/stateful-agg path of SURVEY.md §2.10.
-    Results land in an in-memory sink table named ``query_name``
-    (complete mode, so the test can compare against the batch run).
-    """
+) -> StreamingQuery:
+    """``events.windowed_counts`` under an event-time watermark, which
+    bounds the window state however long the stream runs; complete mode,
+    so the table equals the batch result."""
     from .events import windowed_counts
-    from .schema import EVENTS_SCHEMA
-
-    from pyspark.sql import functions as F
 
     # Watermarks require TIMESTAMP (ltz); parquet naive timestamps read
     # as NTZ.  Session timezone is pinned UTC, so the cast is exact.
     stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_dir)
+        _read_stream(spark, input_dir, EVENTS_SCHEMA, 4)
         .withColumn("ts", F.col("ts").cast("timestamp_ltz"))
         .withWatermark("ts", watermark)
     )
-    return (
-        windowed_counts(stream)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .start()
-    )
+    return _memory_sink(windowed_counts(stream), query_name, "complete")
 
 
 SESSION_OUT_SCHEMA = (
@@ -73,21 +138,13 @@ def stream_sessionize(
     input_dir: str,
     gap_minutes: int = 30,
     query_name: str = "ev_sessions",
-):
-    """Custom stateful streaming operator: gap-based sessionization via
-    ``applyInPandasWithState`` (SURVEY.md §2.10's custom-stateful path).
-
-    State per user = the open session (id, count, start, last-seen).
-    Each micro-batch folds its events into the state and emits a
-    snapshot row per touched session; the LAST emission per
-    (user, session) equals the batch ``events.sessionize`` result, which
-    the test asserts.  Update-mode memory sink under ``query_name``.
-    """
+) -> StreamingQuery:
+    """Gap-based sessionization with ``applyInPandasWithState``; state per
+    user is the open session.  The LAST update-mode emission per (user,
+    session) equals the batch ``events.sessionize`` row."""
     import pandas as pd
 
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .schema import EVENTS_SCHEMA
 
     gap_s = gap_minutes * 60.0
 
@@ -128,11 +185,7 @@ def stream_sessionize(
             columns=["user_id", "session_id", "n_events", "start_s", "end_s"],
         ).astype({"start_s": "int64", "end_s": "int64"})
 
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(input_dir)
-    )
+    stream = _read_stream(spark, input_dir, EVENTS_SCHEMA, 2)
     sessions = stream.groupBy("user_id").applyInPandasWithState(
         fold,
         outputStructType=SESSION_OUT_SCHEMA,
@@ -140,12 +193,7 @@ def stream_sessionize(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
-        sessions.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .start()
-    )
+    return _memory_sink(sessions, query_name, "update")
 
 
 DEDUP_OUT_SCHEMA = "doc_id string, digest string"
@@ -157,24 +205,13 @@ def stream_dedup(
     input_dir: str,
     query_name: str = "doc_dedup",
     max_files_per_trigger: int = 4,
-):
-    """Streaming exact dedup at ingest: the FIRST document seen per
-    content digest passes through; every later byte-identical copy —
-    within a micro-batch or any later one — is dropped.
-
-    ``applyInPandasWithState`` keyed by digest; state = a seen flag, so
-    state size is one long per distinct document ever ingested (the
-    minimal possible for exact streaming dedup; at larger horizons swap
-    the flag store for a TTL'd state via GroupStateTimeout).  Within the
-    first batch of a digest group, rows sort by doc_id so the survivor
-    is deterministic.  Append-mode memory sink under ``query_name``.
-    """
+) -> StreamingQuery:
+    """Exact dedup at ingest: the first document per content digest
+    passes (lowest doc_id within its first batch); state is one seen
+    flag per digest, so later copies in any batch are dropped."""
     import pandas as pd
 
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from .schema import DOCUMENTS_SCHEMA
 
     def keep_first(key, pdfs, state):
         (digest,) = key
@@ -192,9 +229,7 @@ def stream_dedup(
                 pass
 
     stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+        _read_stream(spark, input_dir, DOCUMENTS_SCHEMA, max_files_per_trigger)
         .withColumn(
             "digest",
             # Digest over RAW span fields with explicit separators —
@@ -229,12 +264,7 @@ def stream_dedup(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
-    )
+    return _memory_sink(deduped, query_name)
 
 
 def stream_extract(
@@ -243,59 +273,13 @@ def stream_extract(
     output_dir: str,
     checkpoint_dir: str,
 ) -> StreamingQuery:
-    """readStream -> per-batch extract -> append parquet sink."""
-    from .pipeline import extract_spans, rebalance
+    """Span extraction of document drops with the skew-aware
+    ``extract_spans_rebalanced``."""
+    from .pipeline import extract_spans_rebalanced
 
-    stream = read_document_stream(spark, input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = extract_spans(spark, rebalance(batch_df))
-        out.write.mode("append").parquet(output_dir)
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def read_html_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File-source stream of crawled HTML page parquet drops."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("html", StringType()),
-        ]
-    )
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
-
-def write_html_batch(
-    batch_df: DataFrame, batch_id: int, output_dir: str
-) -> None:
-    """Idempotent micro-batch writer for ``stream_html_extract``.
-
-    Dynamic-partition-overwrite keyed on batch_id: a replayed batch N
-    rewrites ONLY partition batch_id=N (byte-identical — the block
-    pipeline is deterministic), never appends a second copy."""
-    from pyspark.sql import functions as F
-
-    from .textops.html import content_spans
-
-    (
-        content_spans(batch_df)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(output_dir)
-    )
+    stream = _read_stream(spark, input_dir, DOCUMENTS_SCHEMA, 8)
+    transform = partial(extract_spans_rebalanced, spark)
+    return _idempotent_sink(stream, transform, output_dir, checkpoint_dir)
 
 
 def stream_html_extract(
@@ -304,55 +288,12 @@ def stream_html_extract(
     output_dir: str,
     checkpoint_dir: str,
 ) -> StreamingQuery:
-    """Continuous HTML main-content extraction: readStream → the exact
-    batch span pipeline (textops.html.content_spans) → append sink.
+    """HTML main-content extraction with the batch block pipeline
+    (``textops.html.content_spans``)."""
+    from .textops.html import content_spans
 
-    The block pipeline is stateless narrow Column expressions, so it
-    runs unchanged under Structured Streaming; the only stateful piece
-    (the per-doc row_number for span ``seq``) is computed per
-    micro-batch under ``foreachBatch`` — correct because a page arrives
-    whole in one file, never split across batches.
-
-    Exactly-once: foreachBatch is at-least-once (a batch retried after
-    a partial write, or replayed from the checkpoint before its commit,
-    runs again), so a blind append would duplicate span rows.  The
-    write is made idempotent by partitioning the output on ``batch_id``
-    and using dynamic partition overwrite — a replay of batch N
-    rewrites ONLY partition batch_id=N, byte-identical, instead of
-    appending a second copy."""
-    stream = read_html_stream(spark, input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_html_batch(batch_df, batch_id, output_dir)
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def read_pdf_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File-source stream of (doc_id, pdf_bytes) parquet drops — raw
-    crawled PDFs as they land."""
-    from pyspark.sql.types import (
-        BinaryType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("pdf_bytes", BinaryType()),
-        ]
-    )
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
+    stream = _read_stream(spark, input_dir, HTML_PAGES_SCHEMA, 8)
+    return _idempotent_sink(stream, content_spans, output_dir, checkpoint_dir)
 
 
 def stream_pdf_extract(
@@ -363,39 +304,16 @@ def stream_pdf_extract(
     config=None,
     include_media: bool = False,
 ) -> StreamingQuery:
-    """Continuous REAL-PDF ingestion: readStream of raw PDF bytes → the
-    exact batch byte-path extraction (sources.pdf_bytes.
-    extract_spans_from_pdf, minipdf parse + per-family recipes, corrupt
-    documents isolated as error rows) → idempotent sink.
-
-    Same exactly-once discipline as stream_html_extract: foreachBatch
-    is at-least-once, so the write partitions on ``batch_id`` with
-    dynamic partition overwrite — a replayed batch rewrites only its
-    own partition (the parse is deterministic), never appends a
-    duplicate."""
-    from pyspark.sql import functions as F
-
+    """Real-PDF ingestion with the batch byte path
+    (``sources.pdf_bytes.extract_spans_from_pdf``); corrupt PDFs land as
+    error rows."""
     from .sources.pdf_bytes import extract_spans_from_pdf
 
-    stream = read_pdf_stream(spark, input_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            extract_spans_from_pdf(
-                batch_df, config=config, include_media=include_media
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_dir)
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    stream = _read_stream(spark, input_dir, PDF_BYTES_SCHEMA, 8)
+    transform = partial(
+        extract_spans_from_pdf, config=config, include_media=include_media
     )
+    return _idempotent_sink(stream, transform, output_dir, checkpoint_dir)
 
 
 def stream_pii_scrub(
@@ -403,33 +321,15 @@ def stream_pii_scrub(
     input_dir: str,
     query_name: str = "pii_scrub",
     max_files_per_trigger: int = 4,
-):
-    """Streaming PII scrubbing at ingest: the stateless per-document
-    analysis.pii_scrub transformation applied to a file-source stream —
-    detections counted and text redacted BEFORE documents land anywhere
-    downstream, which is where a privacy gate belongs in a pipeline.
-    Stateless narrow transformation: identical results to the batch
-    operator on the same rows (asserted by test), no watermark or state
-    store.  Append-mode memory sink under ``query_name``."""
+) -> StreamingQuery:
+    """PII scrubbing at ingest (``analysis.pii_scrub``): detections
+    counted and text redacted before documents land downstream."""
     from .textops.analysis import pii_scrub
 
-    # the documents-table shape (TESTDATA.md), not the spans schema
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
+    stream = _read_stream(
+        spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger
     )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        pii_scrub(stream)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
-    )
+    return _memory_sink(pii_scrub(stream), query_name)
 
 
 def stream_blocklist_gate(
@@ -439,33 +339,16 @@ def stream_blocklist_gate(
     max_frac: float = 0.02,
     query_name: str = "blocklist_gate",
     max_files_per_trigger: int = 4,
-):
-    """Streaming C4-family blocklist gate at ingest: the stateless
-    per-document analysis.blocklist_filter audit (bad-word count /
-    fraction / keep decision) applied to a file-source stream, so a
-    crawl is gated BEFORE documents land downstream.  The word list
-    compiles into the plan as one literal alternation regex — no state
-    store, no watermark — so results are identical to the batch
-    operator on the same rows (asserted by test) and replayed files
-    decide identically across stream restarts.  Append-mode memory
-    sink under ``query_name``."""
+) -> StreamingQuery:
+    """C4-family blocklist gate at ingest (``analysis.blocklist_filter``);
+    the word list compiles into the plan as one literal regex."""
     from .textops.analysis import blocklist_filter
 
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
+    stream = _read_stream(
+        spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger
     )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        blocklist_filter(stream, words, max_frac=max_frac)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
+    return _memory_sink(
+        blocklist_filter(stream, words, max_frac=max_frac), query_name
     )
 
 
@@ -476,62 +359,17 @@ def stream_mixture_sample(
     default_pct: int = 0,
     query_name: str = "mixture_sample",
     max_files_per_trigger: int = 4,
-):
-    """Streaming mixture sampling at ingest: analysis.mixture_sample
-    applied to a file-source stream — each arriving document is kept or
-    dropped by its source's rate BEFORE landing downstream, the shape a
-    continuously-ingesting training mix runs.  Stateless narrow
-    transformation over a static broadcast rates table, so results are
-    identical to the batch operator on the same rows (asserted by
-    test), and because the md5 buckets are fixed, REPLAYED files decide
-    identically — the sample stays consistent across stream restarts.
-    Append-mode memory sink under ``query_name``."""
+) -> StreamingQuery:
+    """Mixture sampling at ingest (``analysis.mixture_sample``) against a
+    frozen per-source rates table; md5 buckets are fixed, so replayed
+    files decide identically."""
     from .textops.analysis import mixture_sample
 
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
+    stream = _read_stream(
+        spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger
     )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        mixture_sample(stream, rates, default_pct=default_pct)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
-    )
-
-
-def write_quality_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    lm: DataFrame,
-    thresholds: DataFrame,
-    output_dir: str,
-) -> None:
-    """Idempotent micro-batch writer for ``stream_quality_gate``:
-    score the batch under the FIXED pre-trained LM, label against the
-    FIXED thresholds, dynamic-partition-overwrite on batch_id (a
-    replayed batch rewrites only its own partition — the scoring is
-    deterministic, so byte-identical)."""
-    from pyspark.sql import functions as F
-
-    from .textops.analysis import bucket_by_thresholds, lm_perplexity
-
-    scores = lm_perplexity(batch_df.select("doc_id", "text"), lm=lm).join(
-        batch_df.select("doc_id", "lang"), "doc_id"
-    )
-    (
-        bucket_by_thresholds(scores, thresholds)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(output_dir)
+    return _memory_sink(
+        mixture_sample(stream, rates, default_pct=default_pct), query_name
     )
 
 
@@ -544,40 +382,22 @@ def stream_quality_gate(
     checkpoint_dir: str,
     max_files_per_trigger: int = 4,
 ) -> StreamingQuery:
-    """Continuous CCNet-style quality gating at ingest: each arriving
-    document is scored (bits-per-token under a FIXED pre-trained
-    unigram LM) and labelled head/middle/tail against FIXED per-language
-    tercile thresholds — the deployment shape of
-    ``analysis.perplexity_buckets``, where the model and gate are
-    artifacts trained once on a reference corpus
-    (``analysis.unigram_lm`` + ``analysis.perplexity_thresholds``) and
-    every ingest batch is scored against them.
+    """CCNet-style quality gate at ingest: bits-per-token under a frozen
+    unigram LM (``analysis.unigram_lm``), labelled head/middle/tail
+    against frozen per-language thresholds (``perplexity_thresholds``)."""
+    from .textops.analysis import bucket_by_thresholds, lm_perplexity
 
-    Both artifacts are static broadcast tables, and the per-doc score
-    aggregate runs per micro-batch under ``foreachBatch`` (a document
-    arrives whole in one file, never split across batches), so results
-    are identical to the batch operator with the same ``lm`` +
-    ``thresholds`` on the same rows (asserted by test).  Exactly-once
-    via batch_id dynamic partition overwrite, same as the other
-    foreachBatch sinks here."""
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    stream = _read_stream(
+        spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_quality_batch(batch_df, batch_id, lm, thresholds, output_dir)
+    def gate(batch_df: DataFrame) -> DataFrame:
+        scores = lm_perplexity(batch_df.select("doc_id", "text"), lm=lm).join(
+            batch_df.select("doc_id", "lang"), "doc_id"
+        )
+        return bucket_by_thresholds(scores, thresholds)
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _idempotent_sink(stream, gate, output_dir, checkpoint_dir)
 
 
 def stream_gopher_gate(
@@ -586,58 +406,15 @@ def stream_gopher_gate(
     query_name: str = "gopher_gate",
     max_files_per_trigger: int = 4,
     **rule_bounds,
-):
-    """Streaming Gopher-rule quality gate at ingest: the stateless
-    per-document analysis.gopher_rules audit (per-rule flags + keep)
-    applied to a file-source stream.  The rule thresholds compile into
-    the plan as literals — no state store, no watermark — so results
-    are identical to the batch operator on the same rows (asserted by
-    test) and replayed files decide identically across restarts.
-    Append-mode memory sink under ``query_name``; ``rule_bounds``
-    forwards min_words/max_words/etc to gopher_rules."""
+) -> StreamingQuery:
+    """Gopher-rule quality gate at ingest (``analysis.gopher_rules``);
+    ``rule_bounds`` forwards min_words/max_words/etc."""
     from .textops.analysis import gopher_rules
 
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
+    stream = _read_stream(
+        spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger
     )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        gopher_rules(stream, **rule_bounds)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
-    )
-
-
-def write_dsir_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    model: DataFrame,
-    output_dir: str,
-    n_buckets: int,
-) -> None:
-    """Idempotent micro-batch writer for ``stream_dsir_gate``: score
-    the batch against the FIXED model, dynamic-partition-overwrite on
-    batch_id (scoring is deterministic integer arithmetic, so a
-    replayed batch rewrites its partition byte-identically)."""
-    from pyspark.sql import functions as F
-
-    from .textops.analysis import dsir_score
-
-    (
-        dsir_score(batch_df.select("doc_id", "text"), model, n_buckets)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(output_dir)
-    )
+    return _memory_sink(gopher_rules(stream, **rule_bounds), query_name)
 
 
 def stream_dsir_gate(
@@ -649,44 +426,20 @@ def stream_dsir_gate(
     max_files_per_trigger: int = 4,
     n_buckets: int = None,
 ) -> StreamingQuery:
-    """Streaming DSIR scoring at ingest: each arriving document is
-    scored against a FIXED pre-trained (f, lr) model
-    (``analysis.dsir_model``, trained once on a reference corpus +
-    in-domain sample) — the deployment shape of importance
-    resampling, where the model is a broadcast artifact and the
-    stream only pays the score path (explode + broadcast join +
-    per-doc sum).
-
-    The model covers the whole finite feature space, so documents
-    with tokens the training corpus never saw still score, and the
-    gate never retrains mid-stream (the statistically correct
-    shape).  The per-doc aggregate runs per micro-batch under
-    ``foreachBatch`` (a document arrives whole in one file, never
-    split across batches — the same contract as
-    ``stream_quality_gate``), so results equal the batch
-    ``dsir_score`` with the same model on the same rows (asserted by
-    test).  Exactly-once via batch_id dynamic partition overwrite."""
-    from .textops.analysis import DSIR_BUCKETS
+    """DSIR importance scoring at ingest against a frozen (f, lr) model
+    (``analysis.dsir_model``) covering the whole hashed feature space, so
+    tokens the training corpus never saw still score."""
+    from .textops.analysis import DSIR_BUCKETS, dsir_score
 
     nb = n_buckets or DSIR_BUCKETS
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    stream = _read_stream(
+        spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_dsir_batch(batch_df, batch_id, model, output_dir, nb)
+    def score(batch_df: DataFrame) -> DataFrame:
+        return dsir_score(batch_df.select("doc_id", "text"), model, nb)
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _idempotent_sink(stream, score, output_dir, checkpoint_dir)
 
 
 def stream_pq_encode(
@@ -695,94 +448,38 @@ def stream_pq_encode(
     codebook: DataFrame,
     query_name: str = "pq_encode",
     max_files_per_trigger: int = 4,
-):
-    """Streaming PQ encoding at ingest: every arriving embedding is
-    compressed to its M subspace codes against a FIXED pre-trained
-    codebook (``similarity.pq_train``, trained once — over a hash
-    sample at web scale) — the deployment shape of vector-index
-    ingestion, where the codebook is a broadcast artifact and the
-    stream pays only the one-projection encode path (no shuffle, no
-    state).  Stateless narrow transformation: identical codes to the
-    batch ``pq_assign`` with the same codebook on the same rows
-    (asserted by test).  Append-mode memory sink under
-    ``query_name``."""
+) -> StreamingQuery:
+    """PQ encoding at ingest (``similarity.pq_assign``): each embedding
+    compressed to its subspace codes against a frozen codebook."""
     from .textops.similarity import pq_assign
 
-    emb_schema = "vec_id long, embedding array<float>, label int"
-    stream = (
-        spark.readStream.schema(emb_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    stream = _read_stream(
+        spark,
+        input_dir,
+        "vec_id long, embedding array<float>, label int",
+        max_files_per_trigger,
     )
-    return (
-        pq_assign(stream, codebook)
-        .writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .start()
-    )
-
-
-def write_bm25_batch(
-    batch_df: "DataFrame",
-    batch_id: int,
-    model: "DataFrame",
-    output_dir: str,
-) -> None:
-    """Idempotent micro-batch writer for ``stream_bm25_gate``: score
-    the batch against the FIXED model, dynamic-partition-overwrite on
-    batch_id (scoring is deterministic integer arithmetic, so a
-    replayed batch rewrites its partition byte-identically)."""
-    from pyspark.sql import functions as F
-
-    from .textops.analysis import bm25_score
-
-    (
-        bm25_score(batch_df.select("doc_id", "text"), model)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(output_dir)
-    )
+    return _memory_sink(pq_assign(stream, codebook), query_name)
 
 
 def stream_bm25_gate(
     spark: SparkSession,
     input_dir: str,
-    model: "DataFrame",
+    model: DataFrame,
     output_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 4,
 ) -> StreamingQuery:
-    """Streaming BM25 scoring at ingest: every arriving document is
-    scored against a FIXED retrieval model (``analysis.bm25_model``,
-    trained once on a reference corpus) — the deployment shape of
-    targeted curation, where the few-KB model broadcasts and each
-    micro-batch pays only explode -> broadcast join -> exact integer
-    per-(doc, query) sum.  df/idf/avgdl are frozen, so arriving
-    documents never shift the ranking function and a replayed file
-    scores identically.  The per-doc aggregate runs per micro-batch
-    under ``foreachBatch`` (a document arrives whole in one file —
-    the same contract as ``stream_quality_gate``), so results equal
-    the batch ``bm25_score`` with the same model on the same rows
-    (asserted by test).  Exactly-once via batch_id dynamic partition
-    overwrite."""
-    doc_table_schema = (
-        "doc_id long, text string, lang string, source string,"
-        " n_chars long"
-    )
-    stream = (
-        spark.readStream.schema(doc_table_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    """BM25 scoring at ingest against a frozen retrieval model
+    (``analysis.bm25_model``): df/idf/avgdl never shift with arriving
+    documents."""
+    from .textops.analysis import bm25_score
+
+    stream = _read_stream(
+        spark, input_dir, DOC_TABLE_SCHEMA, max_files_per_trigger
     )
 
-    def process_batch(batch_df: "DataFrame", batch_id: int) -> None:
-        write_bm25_batch(batch_df, batch_id, model, output_dir)
+    def score(batch_df: DataFrame) -> DataFrame:
+        return bm25_score(batch_df.select("doc_id", "text"), model)
 
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _idempotent_sink(stream, score, output_dir, checkpoint_dir)

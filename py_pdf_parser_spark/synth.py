@@ -168,8 +168,8 @@ def _mixed_rows(n_docs: int, skew: bool) -> Iterator[Row]:
     if n_patho:
         # Pathological docs are CLUSTERED at the tail (their own files),
         # like a crawl segment of heavy PDFs — this is the task-level skew
-        # that rebalance() must break up; uniformly interleaving them
-        # would hide the problem.
+        # that extract_spans_rebalanced must break up; uniformly
+        # interleaving them would hide the problem.
         yield from _iter_rows("bigdoc", n_patho)
         yield from _iter_rows("bigmedia", n_patho)
         # bigtable: superlinear-recipe docs — compute skew that byte-

@@ -421,8 +421,8 @@ def jaccard_lsh_verified(
     above 0.7; measured on engineered BORDERLINE pairs (J 0.51-0.67,
     synth.borderline_text) by tests/test_borderline.py and the
     td_lsh_recall_borderline driver query, plus 100% agreement with
-    the exact operator at sf0.1 (BENCH/exp_jaccard_r3.py).  Shuffles:
-    small candidate keys +
+    the exact operator at sf0.1 (PLANS.md, "Round 3: jaccard A/B/C").
+    Shuffles: small candidate keys +
     two hash joins against the shingle rows on (doc, h) — never
     corpus-quadratic.
     """

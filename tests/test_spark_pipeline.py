@@ -17,7 +17,6 @@ from py_pdf_parser_spark.frame import ElementFrame  # noqa: E402
 from py_pdf_parser_spark.pipeline import (  # noqa: E402
     extract_spans,
     parse_elements,
-    rebalance,
     run_job,
 )
 from py_pdf_parser_spark.synth import (  # noqa: E402
@@ -266,14 +265,6 @@ class TestExtract:
         assert spans[0]["text"].startswith("TO: ")
         assert [s["order"] for s in spans] == list(range(len(spans)))
 
-    def test_rebalance_splits_heavy(self, spark):
-        path = ensure_mixed_corpus(0.001, skew=True)
-        docs = spark.read.parquet(path)
-        balanced = rebalance(docs, heavy_threshold=512)
-        assert balanced.count() == docs.count()
-        out = extract_spans(spark, balanced)
-        assert out.where(F.col("status") == "error").count() == 0
-
     def test_skew_split_pushes_n_spans_to_scan(self, spark):
         """The light/heavy cost split must reach the parquet scan as a
         stats-prunable n_spans predicate (one-corpus-read I/O), not a
@@ -287,8 +278,9 @@ class TestExtract:
         plan = out._jdf.queryExecution().toString()
         assert "GreaterThan(n_spans,512)" in plan
         assert "LessThanOrEqual(n_spans,512)" in plan
-        # and the split is lossless
+        # and the split is lossless: every doc extracted, none in error
         assert out.count() == docs.count()
+        assert out.where(F.col("status") == "error").count() == 0
 
 
 class TestCheckpointResume:

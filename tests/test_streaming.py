@@ -4,6 +4,7 @@ import pytest
 
 pyspark = pytest.importorskip("pyspark")
 
+from py_pdf_parser_spark.pipeline import extract_spans  # noqa: E402
 from py_pdf_parser_spark.streaming import stream_extract  # noqa: E402
 from py_pdf_parser_spark.synth import ensure_mixed_corpus  # noqa: E402
 
@@ -28,16 +29,40 @@ def test_stream_extract_processes_files(spark, tmp_path):
 
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    query = stream_extract(spark, in_dir, out_dir, ckpt)
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
+
+    def run():
+        query = stream_extract(spark, in_dir, out_dir, ckpt)
+        try:
+            query.processAllAvailable()
+        finally:
+            query.stop()
+
+    run()
+    # replay: a batch whose offsets were logged but whose commit was lost
+    # runs again on restart (foreachBatch is at-least-once)
+    commits = os.path.join(ckpt, "commits")
+    for name in os.listdir(commits):
+        os.remove(os.path.join(commits, name))
+    run()
 
     out = spark.read.parquet(out_dir)
     n_docs = spark.read.parquet(src).count()
     assert out.count() == n_docs
     assert out.where("status = 'ok'").count() == n_docs
+
+    # span-sequence equality with batch extraction of the same files
+    def span_seqs(frame):
+        return sorted(
+            (
+                r.doc_id,
+                r.status,
+                [(s.kind, s.text, s.media_ref, s.order) for s in r.spans or []],
+            )
+            for r in frame.collect()
+        )
+
+    batch = extract_spans(spark, spark.read.parquet(in_dir))
+    assert span_seqs(out.drop("batch_id")) == span_seqs(batch)
 
 
 def test_stream_windowed_counts_matches_batch(spark, tmp_path):
@@ -237,24 +262,34 @@ def test_stream_html_extract_matches_batch(spark, tmp_path):
     assert got == want
 
 
-def test_stream_html_extract_replay_is_idempotent(spark, tmp_path):
+@pytest.mark.parametrize("surface", ["html", "extract"])
+def test_stream_replay_is_idempotent(spark, tmp_path, surface):
     """A replayed micro-batch (foreachBatch is at-least-once) must not
-    duplicate span rows: the writer overwrites its batch_id partition."""
-    from py_pdf_parser_spark.streaming import write_html_batch
+    duplicate rows: the shared sink's writer overwrites its batch_id
+    partition, for HTML and document extraction alike."""
+    from functools import partial
+
+    from py_pdf_parser_spark.pipeline import extract_spans_rebalanced
+    from py_pdf_parser_spark.streaming import write_batch
     from py_pdf_parser_spark.synth import ensure_html_corpus
+    from py_pdf_parser_spark.textops.html import content_spans
 
-    src = ensure_html_corpus(0.001)
+    if surface == "html":
+        src, transform = ensure_html_corpus(0.001), content_spans
+    else:
+        src = ensure_mixed_corpus(0.001)
+        transform = partial(extract_spans_rebalanced, spark)
     batch = spark.read.parquet(src)
-    out_dir = str(tmp_path / "html_replay_out")
+    out_dir = str(tmp_path / "replay_out")
 
-    write_html_batch(batch, 0, out_dir)
+    write_batch(transform, out_dir, batch, 0)
     first = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
     # simulate a checkpoint replay: same batch_id, same input, again
-    write_html_batch(batch, 0, out_dir)
+    write_batch(transform, out_dir, batch, 0)
     second = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
     assert first == second
     # while a genuinely NEW batch appends its own partition
-    write_html_batch(batch.limit(1), 1, out_dir)
+    write_batch(transform, out_dir, batch.limit(1), 1)
     n_new = (
         spark.read.parquet(out_dir).where("batch_id = 1").count()
     )
