@@ -60,7 +60,11 @@ def memo_recipe(doc: Doc) -> List[OutSpan]:
     return out
 
 
-def ordsum_recipe(doc: Doc) -> List[OutSpan]:
+def ordsum_items_table(doc: Doc) -> Tuple[List[List[str]], int]:
+    """The order summary's items grid as text: the "Items ordered:"
+    section up to (not including) the "Totals:" sub-title, header and
+    text fonts only.  Also returns the "Totals:" element, where the
+    totals section starts."""
     elements = doc.elements
     sub_titles = elements.filter_by_font("sub_title")
     items_start = sub_titles.filter_by_text_equal(
@@ -70,14 +74,19 @@ def ordsum_recipe(doc: Doc) -> List[OutSpan]:
     doc.sectioning.create_section(
         "items", items_start, totals_start, include_last_element=False
     )
-    doc.sectioning.create_section("totals", totals_start, elements.last())
-
-    out: List[OutSpan] = []
     items = (
         elements.filter_by_section("items_0")
         .filter_by_fonts("table_header", "table_text")
     )
-    items_table = extract_simple_table(items, as_text=True)
+    return extract_simple_table(items, as_text=True), totals_start
+
+
+def ordsum_recipe(doc: Doc) -> List[OutSpan]:
+    elements = doc.elements
+    items_table, totals_start = ordsum_items_table(doc)
+    doc.sectioning.create_section("totals", totals_start, elements.last())
+
+    out: List[OutSpan] = []
     for row in add_header_to_table(items_table):
         out.append(
             ("text", "|".join(f"{k}={v}" for k, v in row.items()), None)

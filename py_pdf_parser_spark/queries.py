@@ -1,7 +1,7 @@
 """Query registry: every operator exposed as a (Spark builder, DuckDB
 oracle SQL) pair for the driver's correctness gate.
 
-Spark side runs the REAL engine paths (mapInPandas parse kernel,
+Spark side runs the REAL engine paths (mapInArrow parse kernel,
 ElementFrame operators, textops); the oracle re-derives the expected
 result independently in ANSI SQL — for the ``ora`` corpus the synthetic
 layout arithmetic is mirrored 1:1 (see kernel/layout.py ora_* functions),
@@ -14,13 +14,22 @@ under name-sorted columns).
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Tuple
+import json
+from functools import partial
+from pathlib import Path
+from typing import Callable, Dict, List, Tuple
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .errors import DocError
 from .frame import ElementFrame
-from .kernel.layout import _MEMO_SPEC, _ORDSUM_SPEC  # golden specs
+from .kernel.doc import Doc
+from .kernel.layout import _MEMO_SPEC  # golden spec
+from .kernel.parse import doc_from_spans
+from .kernel.recipes import ordsum_items_table
+from .kernel.tables import extract_simple_table, extract_table
 from .pipeline import extract_spans, parse_elements
 from .synth import (
     ensure_borderline_corpus,
@@ -104,6 +113,48 @@ sh AS (
 # ---------------------------------------------------------------------------
 
 
+def _spread(df: DataFrame, *keys: str) -> DataFrame:
+    """Driver tables arrive as ONE parquet file with one row group —
+    unsplittable, so every downstream expression runs on one core (a
+    sandbox artifact: a real corpus has thousands of splits).  One tiny
+    round-robin shuffle restores the parallelism the scan would have.
+    With ``keys`` the shuffle hash-clusters on them instead, and a
+    persisted result keeps that partitioning for its consumers."""
+    return df.repartition(
+        df.sparkSession.sparkContext.defaultParallelism, *keys
+    )
+
+
+_TABLE_CACHE: Dict = {}
+
+
+def _shared(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    build: Callable[[], DataFrame],
+    eager: bool = False,
+) -> DataFrame:
+    """Persist ``build()`` once per (application, corpus, name) and hand
+    every later caller that same DataFrame — the in-memory analogue of
+    the tables a parse-once-query-many deployment materializes once and
+    every consumer reads.  ``eager`` fills the cache now (one count)
+    instead of inside the first consuming query."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    df = _TABLE_CACHE.get(key)
+    if df is None:
+        df = build().persist()
+        if eager:
+            df.count()
+        _TABLE_CACHE[key] = df
+    return df
+
+
+def _read_corpus(spark: SparkSession, sf_dir: str, ensure) -> DataFrame:
+    """A synthetic corpus at the driver tables' scale factor, spread."""
+    return _spread(spark.read.parquet(ensure(sf_of_dir(sf_dir))))
+
+
 def _ora_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _spread BEFORE the per-doc parse kernel: the oracle corpus is a
     # handful of small parquet files that Spark packs into 1-3 input
@@ -111,18 +162,14 @@ def _ora_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hottest stage — the shared _elements fill plus each custom-config
     # parse like pp_font_mode/pp_ordering_*) ran on 1-3 cores.
     # Measured at sf0.1: spread parse 0.67s vs unspread 1.14s warm.
-    key = (spark.sparkContext.applicationId, sf_dir, "__oracle_docs__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = _spread(
-        spark.read.parquet(ensure_oracle_corpus(sf_of_dir(sf_dir)))
-    ).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__oracle_docs__",
+                   lambda: _read_corpus(spark, sf_dir, ensure_oracle_corpus))
 
 
-_ELEMENTS_CACHE: Dict = {}
+def _family_docs(spark: SparkSession, sf_dir: str, family: str) -> DataFrame:
+    # Family corpora are one ~2000-doc file at bench sf: without the
+    # spread the per-doc kernel runs on ONE core (see _spread).
+    return _read_corpus(spark, sf_dir, partial(ensure_family_corpus, family))
 
 
 def _elements(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,18 +186,8 @@ def _elements(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins, windows and set algebra over it plan with ZERO further
     # exchanges, and the parse kernel runs exactly once per corpus for
     # the whole query run (driver correctness + bench).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _ELEMENTS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    parallelism = spark.sparkContext.defaultParallelism
-    els = (
-        parse_elements(_ora_docs(spark, sf_dir))
-        .repartition(parallelism, "doc_id")
-        .persist()
-    )
-    _ELEMENTS_CACHE[key] = els
-    return els
+    return _shared(spark, sf_dir, "__elements__", lambda: _spread(
+        parse_elements(_ora_docs(spark, sf_dir)), "doc_id"))
 
 
 def _ef(spark: SparkSession, sf_dir: str) -> ElementFrame:
@@ -161,15 +198,30 @@ def _keys(ef: ElementFrame) -> DataFrame:
     return ef.df.select("doc_id", "idx")
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Driver tables arrive as ONE parquet file with one row group —
-    unsplittable, so every downstream expression runs on one core (a
-    sandbox artifact: a real corpus has thousands of splits).  One tiny
-    round-robin shuffle restores the parallelism the scan would have."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+def _per_doc(
+    docs: DataFrame,
+    schema: str,
+    rows_of: Callable[[str, Doc], List[tuple]],
+) -> DataFrame:
+    """The per-document row kernel: parse each (doc_id, spans) row of
+    ``docs``; ``rows_of(doc_id, doc)`` returns that document's output
+    tuples, emitted as rows of ``schema``.  A document whose parse or
+    ``rows_of`` raises DocError emits no rows; the rest of its batch is
+    unaffected."""
+    columns = [field.split()[0] for field in schema.split(",")]
 
+    def batches_of(batches):
+        for pdf in batches:
+            rows = []
+            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
+                try:
+                    doc = doc_from_spans(doc_id, spans)
+                    rows += rows_of(doc_id, doc)
+                except DocError:
+                    continue
+            yield pd.DataFrame(rows, columns=columns)
 
-_TABLE_CACHE: Dict = {}
+    return docs.mapInPandas(batches_of, schema)
 
 
 def _driver_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -177,13 +229,8 @@ def _driver_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     corpus): many queries scan the same small table; caching the spread
     result keeps every query's first stage parallel without re-reading
     and re-shuffling the single-file parquet each time."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = _spread(spark.read.parquet(f"{sf_dir}/{name}.parquet")).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, name, lambda: _spread(
+        spark.read.parquet(f"{sf_dir}/{name}.parquet")))
 
 
 def _docs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,6 +239,27 @@ def _docs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _emb_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _driver_table(spark, sf_dir, "embeddings")
+
+
+def _minhash_rows(spark: SparkSession, sf_dir: str, corpus) -> DataFrame:
+    """Distinct 3-gram shingle rows of ``corpus(spark, sf_dir)``."""
+    return _shared(spark, sf_dir, f"{corpus.__name__}.rows", lambda: (
+        dedup.shingle_rows(corpus(spark, sf_dir), 3, distinct=True)))
+
+
+def _minhash_wide(spark: SparkSession, sf_dir: str, corpus) -> DataFrame:
+    """Wide (doc_id, m0..m31) MinHash signatures over _minhash_rows."""
+    return _shared(spark, sf_dir, f"{corpus.__name__}.wide", lambda: (
+        dedup.minhash_wide(corpus(spark, sf_dir),
+                           rows=_minhash_rows(spark, sf_dir, corpus))))
+
+
+def _minhash_bands(spark: SparkSession, sf_dir: str, corpus) -> DataFrame:
+    """(doc_id, band, bucket) rows of _minhash_wide, clustered on
+    (band, bucket)."""
+    return _shared(spark, sf_dir, f"{corpus.__name__}.bands", lambda: _spread(
+        dedup.minhash_banded(_minhash_wide(spark, sf_dir, corpus)),
+        "band", "bucket"))
 
 
 def _shingle_rows_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,15 +273,7 @@ def _shingle_rows_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the shingle window's partitioning, which the distinct aggregate
     and the doc-level min-aggregates both satisfy), so consumers add no
     exchange on the doc side."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__shingle_rows__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = dedup.shingle_rows(
-        _docs_table(spark, sf_dir), 3, distinct=True
-    ).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _minhash_rows(spark, sf_dir, _docs_table)
 
 
 def _minhash_wide_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,15 +282,7 @@ def _minhash_wide_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer (candidate pairs, verified jaccard, dup clusters) banded
     BOTH self-join sides from a recomputed signature aggregate;
     persisting the tiny (doc_id, m0..m31) table computes it once."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__minhash_wide__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = dedup.minhash_wide(
-        _docs_table(spark, sf_dir), rows=_shingle_rows_table(spark, sf_dir)
-    ).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _minhash_wide(spark, sf_dir, _docs_table)
 
 
 def _banded_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,31 +295,15 @@ def _banded_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost class PLANS.md r4 documents for the html decoder).  The
     persisted partitioning matches the consumers' (band, bucket) window
     and join keys, so the chunk-cap window adds no exchange."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__minhash_banded__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    parallelism = spark.sparkContext.defaultParallelism
-    df = (
-        dedup.minhash_banded(_minhash_wide_table(spark, sf_dir))
-        .repartition(parallelism, "band", "bucket")
-        .persist()
-    )
-    _TABLE_CACHE[key] = df
-    return df
+    return _minhash_bands(spark, sf_dir, _docs_table)
 
 
 def _simhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, simhash) persisted per (application, corpus): the
     signature aggregate (explode + 32 bit-vote sums) dominates
     simhash_pairs' cost and appears on both self-join sides."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__simhash__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = dedup.simhash(_docs_table(spark, sf_dir)).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__simhash__",
+                   lambda: dedup.simhash(_docs_table(spark, sf_dir)))
 
 
 def _ppl_scores_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,13 +313,8 @@ def _ppl_scores_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     matters doubly for td_ppl_buckets: the score subtree (corpus token
     explode + LM train + per-doc aggregate) otherwise evaluates on
     BOTH plan branches (per-doc labels + threshold CDF)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__ppl_scores__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = analysis.lm_perplexity(_docs_table(spark, sf_dir)).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__ppl_scores__",
+                   lambda: analysis.lm_perplexity(_docs_table(spark, sf_dir)))
 
 
 def _events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -575,16 +606,10 @@ def _pdf_corpus_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the byte-path analogue of the other shared corpus tables: in a
     deployment PDFs ARRIVE as bytes, so the measured operator is
     parse+extract, and rendering is fixture generation (pdf_writer)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__pdf_bytes__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
     from .sources.pdf_writer import render_pdfs
 
-    df = render_pdfs(_ora_docs(spark, sf_dir)).persist()
-    df.count()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__pdf_bytes__",
+                   lambda: render_pdfs(_ora_docs(spark, sf_dir)), eager=True)
 
 
 @q(
@@ -1041,12 +1066,7 @@ FROM read_parquet('{{memo_path}}/*.parquet') d
 CROSS JOIN (VALUES {_memo_expected_values()}) AS v(ord, text)""",
 )
 def pp_memo_extract(spark, sf_dir):
-    # Family corpora are one ~2000-doc file at bench sf: without the
-    # spread the per-doc kernel runs on ONE core (see _spread).
-    docs = _spread(spark.read.parquet(
-        ensure_family_corpus("memo", sf_of_dir(sf_dir))
-    ))
-    out = extract_spans(spark, docs)
+    out = extract_spans(spark, _family_docs(spark, sf_dir, "memo"))
     s = out.select("doc_id", F.explode("spans").alias("s"))
     return s.select(
         "doc_id",
@@ -1072,6 +1092,20 @@ def _ordsum_cells_values() -> str:
     return ", ".join(f"({r}, {c}, '{v}')" for r, c, v in cells)
 
 
+def _table_cells(spark: SparkSession, sf_dir: str, family: str,
+                 table_of) -> DataFrame:
+    """``table_of(doc)``'s grid for every document of a family corpus,
+    one (doc_id, row_id, col_id, value) row per cell."""
+    def rows_of(doc_id, doc):
+        return [(doc_id, r, c, v)
+                for r, row in enumerate(table_of(doc))
+                for c, v in enumerate(row)]
+
+    return _per_doc(_family_docs(spark, sf_dir, family),
+                    "doc_id string, row_id long, col_id long, value string",
+                    rows_of)
+
+
 @q(
     "pp_ordsum_table",
     f"""
@@ -1082,56 +1116,8 @@ CROSS JOIN (VALUES {_ordsum_cells_values()}) AS v(row_id, col_id, value)""",
 )
 def pp_ordsum_table(spark, sf_dir):
     """Sections + fonts + simple-table grid, emitted as cells."""
-    import pandas as pd
-
-    from .errors import DocError
-    from .kernel.parse import doc_from_spans
-    from .kernel.tables import extract_simple_table
-
-    # Family corpora are one ~2000-doc file at bench sf: without the
-    # spread the per-doc kernel runs on ONE core (see _spread).
-    docs = _spread(spark.read.parquet(
-        ensure_family_corpus("ordsum", sf_of_dir(sf_dir))
-    ))
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "row_id": [], "col_id": [], "value": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                try:
-                    doc = doc_from_spans(doc_id, spans)
-                    els = doc.elements
-                    items_start = (
-                        els.filter_by_font("sub_title")
-                        .filter_by_text_equal("Items ordered:")
-                        .extract_single_element()
-                    )
-                    totals_start = (
-                        els.filter_by_font("sub_title")
-                        .filter_by_text_equal("Totals:")
-                        .extract_single_element()
-                    )
-                    doc.sectioning.create_section(
-                        "items", items_start, totals_start,
-                        include_last_element=False,
-                    )
-                    items = els.filter_by_section("items_0").filter_by_fonts(
-                        "table_header", "table_text"
-                    )
-                    table = extract_simple_table(items, as_text=True)
-                except DocError:
-                    continue
-                for r, row in enumerate(table):
-                    for c, v in enumerate(row):
-                        rows["doc_id"].append(doc_id)
-                        rows["row_id"].append(r)
-                        rows["col_id"].append(c)
-                        rows["value"].append(v)
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        gen, "doc_id string, row_id long, col_id long, value string"
-    )
+    return _table_cells(spark, sf_dir, "ordsum",
+                        lambda doc: ordsum_items_table(doc)[0])
 
 
 @q(
@@ -1146,41 +1132,8 @@ CROSS JOIN (VALUES (0, 0, 'A'), (0, 1, 'B'), (1, 0, 'C'), (1, 1, ''))
 def pp_gridmerge_table(spark, sf_dir):
     """extract_table with a row-spanning element: union-find style row
     fixing (fix_element_in_multiple_rows, tables.py:348-400)."""
-    import pandas as pd
-
-    from .errors import DocError
-    from .kernel.parse import doc_from_spans
-    from .kernel.tables import extract_table
-
-    # Family corpora are one ~2000-doc file at bench sf: without the
-    # spread the per-doc kernel runs on ONE core (see _spread).
-    docs = _spread(spark.read.parquet(
-        ensure_family_corpus("gridmerge", sf_of_dir(sf_dir))
-    ))
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "row_id": [], "col_id": [], "value": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                try:
-                    doc = doc_from_spans(doc_id, spans)
-                    table = extract_table(
-                        doc.elements, as_text=True,
-                        fix_element_in_multiple_rows=True,
-                    )
-                except DocError:
-                    continue
-                for r, row in enumerate(table):
-                    for c, v in enumerate(row):
-                        rows["doc_id"].append(doc_id)
-                        rows["row_id"].append(r)
-                        rows["col_id"].append(c)
-                        rows["value"].append(v)
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        gen, "doc_id string, row_id long, col_id long, value string"
-    )
+    return _table_cells(spark, sf_dir, "gridmerge", lambda doc: extract_table(
+        doc.elements, as_text=True, fix_element_in_multiple_rows=True))
 
 
 @q(
@@ -1196,41 +1149,9 @@ def pp_table_dup_headers(spark, sf_dir):
     """Multi-page simple table: page-2 repeated header row removed
     (remove_duplicate_header_rows, tables.py:448-499; column membership
     spans pages via vertically_in_line_with all_pages)."""
-    import pandas as pd
-
-    from .errors import DocError
-    from .kernel.parse import doc_from_spans
-    from .kernel.tables import extract_simple_table
-
-    # Family corpora are one ~2000-doc file at bench sf: without the
-    # spread the per-doc kernel runs on ONE core (see _spread).
-    docs = _spread(spark.read.parquet(
-        ensure_family_corpus("duphdr", sf_of_dir(sf_dir))
-    ))
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "row_id": [], "col_id": [], "value": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                try:
-                    doc = doc_from_spans(doc_id, spans)
-                    table = extract_simple_table(
-                        doc.elements, as_text=True,
-                        remove_duplicate_header_rows=True,
-                    )
-                except DocError:
-                    continue
-                for r, row in enumerate(table):
-                    for c, v in enumerate(row):
-                        rows["doc_id"].append(doc_id)
-                        rows["row_id"].append(r)
-                        rows["col_id"].append(c)
-                        rows["value"].append(v)
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        gen, "doc_id string, row_id long, col_id long, value string"
-    )
+    return _table_cells(spark, sf_dir, "duphdr", lambda doc: (
+        extract_simple_table(doc.elements, as_text=True,
+                             remove_duplicate_header_rows=True)))
 
 
 @q(
@@ -1247,41 +1168,8 @@ def pp_colmerge_table(spark, sf_dir):
     kept only in its left-most column (fix_element_in_multiple_cols,
     tables.py:403-445); geometry mirrors the reference's own fix_cols
     case (tests/test_tables.py:843-875)."""
-    import pandas as pd
-
-    from .errors import DocError
-    from .kernel.parse import doc_from_spans
-    from .kernel.tables import extract_table
-
-    # Family corpora are one ~2000-doc file at bench sf: without the
-    # spread the per-doc kernel runs on ONE core (see _spread).
-    docs = _spread(spark.read.parquet(
-        ensure_family_corpus("colmerge", sf_of_dir(sf_dir))
-    ))
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "row_id": [], "col_id": [], "value": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                try:
-                    doc = doc_from_spans(doc_id, spans)
-                    table = extract_table(
-                        doc.elements, as_text=True,
-                        fix_element_in_multiple_cols=True,
-                    )
-                except DocError:
-                    continue
-                for r, row in enumerate(table):
-                    for c, v in enumerate(row):
-                        rows["doc_id"].append(doc_id)
-                        rows["row_id"].append(r)
-                        rows["col_id"].append(c)
-                        rows["value"].append(v)
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        gen, "doc_id string, row_id long, col_id long, value string"
-    )
+    return _table_cells(spark, sf_dir, "colmerge", lambda doc: extract_table(
+        doc.elements, as_text=True, fix_element_in_multiple_cols=True))
 
 
 @q(
@@ -1306,28 +1194,13 @@ def pp_table_validation(spark, sf_dir):
     and emit (doc_id, check, status) rows.  Exercises the validators as
     per-doc status rows, the distributed analogue of the reference's
     raise-and-assert tests."""
-    import pandas as pd
-
     from .errors import (
-        DocError,
         InvalidTableError,
         InvalidTableHeaderError,
         TableExtractionError,
     )
     from .kernel.layout import colmerge_spans
-    from .kernel.parse import doc_from_spans
-    from .kernel.tables import (
-        add_header_to_table,
-        extract_simple_table,
-        extract_table,
-        _validate_table_shape,
-    )
-
-    # Family corpora are one ~2000-doc file at bench sf: without the
-    # spread the per-doc kernel runs on ONE core (see _spread).
-    docs = _spread(spark.read.parquet(
-        ensure_family_corpus("ordsum", sf_of_dir(sf_dir))
-    ))
+    from .kernel.tables import add_header_to_table, _validate_table_shape
 
     colspans = [
         {"kind": k, "text": t, "media_ref": m, "offset": o}
@@ -1342,57 +1215,29 @@ def pp_table_validation(spark, sf_dir):
                 TableExtractionError) as err:
             return type(err).__name__
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "chk": [], "status": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                try:
-                    doc = doc_from_spans(doc_id, spans)
-                    els = doc.elements
-                    items_start = (
-                        els.filter_by_font("sub_title")
-                        .filter_by_text_equal("Items ordered:")
-                        .extract_single_element()
-                    )
-                    totals_start = (
-                        els.filter_by_font("sub_title")
-                        .filter_by_text_equal("Totals:")
-                        .extract_single_element()
-                    )
-                    doc.sectioning.create_section(
-                        "items", items_start, totals_start,
-                        include_last_element=False,
-                    )
-                    items = els.filter_by_section("items_0").filter_by_fonts(
-                        "table_header", "table_text"
-                    )
-                    table = extract_simple_table(items, as_text=True)
-                except DocError:
-                    continue
-                width = len(table[0])
-                cdoc = doc_from_spans("colmerge-0", colspans)
-                checks = [
-                    ("valid", lambda: add_header_to_table(
-                        table, [f"h{c}" for c in range(width)])),
-                    ("short_header", lambda: add_header_to_table(
-                        table, [f"h{c}" for c in range(width - 1)])),
-                    ("dup_header", lambda: add_header_to_table(
-                        table, ["h0"] * width)),
-                    ("ragged", lambda: _validate_table_shape(
-                        [table[0], table[1][:-1]])),
-                    ("colspan_plain", lambda: extract_table(
-                        cdoc.elements, as_text=True)),
-                    ("colspan_fixed", lambda: extract_table(
-                        cdoc.elements, as_text=True,
-                        fix_element_in_multiple_cols=True)),
-                ]
-                for chk, fn in checks:
-                    rows["doc_id"].append(doc_id)
-                    rows["chk"].append(chk)
-                    rows["status"].append(status_of(fn))
-            yield pd.DataFrame(rows)
+    def rows_of(doc_id, doc):
+        table = ordsum_items_table(doc)[0]
+        width = len(table[0])
+        cdoc = doc_from_spans("colmerge-0", colspans)
+        checks = [
+            ("valid", lambda: add_header_to_table(
+                table, [f"h{c}" for c in range(width)])),
+            ("short_header", lambda: add_header_to_table(
+                table, [f"h{c}" for c in range(width - 1)])),
+            ("dup_header", lambda: add_header_to_table(
+                table, ["h0"] * width)),
+            ("ragged", lambda: _validate_table_shape(
+                [table[0], table[1][:-1]])),
+            ("colspan_plain", lambda: extract_table(
+                cdoc.elements, as_text=True)),
+            ("colspan_fixed", lambda: extract_table(
+                cdoc.elements, as_text=True,
+                fix_element_in_multiple_cols=True)),
+        ]
+        return [(doc_id, chk, status_of(fn)) for chk, fn in checks]
 
-    return docs.mapInPandas(gen, "doc_id string, chk string, status string")
+    return _per_doc(_family_docs(spark, sf_dir, "ordsum"),
+                    "doc_id string, chk string, status string", rows_of)
 
 
 @q(
@@ -1413,37 +1258,18 @@ def pp_set_protocol(spark, sf_dir):
     list, and __hash__ consistency (a python set of two equal lists
     dedups to one) — per doc, emitted as columns (filtering.py:76-107
     protocol surface)."""
-    import pandas as pd
+    def rows_of(doc_id, doc):
+        els = doc.elements
+        l1 = els.filter_by_font("f1,8")
+        l0 = els.filter_by_font("f0,8")
+        return [(doc_id, len(l1), els[0] in l1, l1 == l0, (l1 | l1) == l1,
+                 len({l1, els.filter_by_font("f1,8")}) == 1)]
 
-    from .kernel.parse import doc_from_spans
-
-    docs = _ora_docs(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {
-                "doc_id": [], "n_f1": [], "first_in": [],
-                "xeq": [], "union_eq": [], "hash_dedup": [],
-            }
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                doc = doc_from_spans(doc_id, spans)
-                els = doc.elements
-                l1 = els.filter_by_font("f1,8")
-                l0 = els.filter_by_font("f0,8")
-                rows["doc_id"].append(doc_id)
-                rows["n_f1"].append(len(l1))
-                rows["first_in"].append(els[0] in l1)
-                rows["xeq"].append(l1 == l0)
-                rows["union_eq"].append((l1 | l1) == l1)
-                rows["hash_dedup"].append(
-                    len({l1, els.filter_by_font("f1,8")}) == 1
-                )
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        gen,
+    return _per_doc(
+        _ora_docs(spark, sf_dir),
         "doc_id string, n_f1 long, first_in boolean, xeq boolean, "
         "union_eq boolean, hash_dedup boolean",
+        rows_of,
     )
 
 
@@ -1459,32 +1285,18 @@ def pp_tag_ignore_flow(spark, sf_dir):
     """Staged mutation semantics (SURVEY.md §3.4): tag elements by font,
     then ignore by text; a newly-created list drops ignored elements
     (filtering.py:95) while tags assigned earlier persist."""
-    import pandas as pd
+    def rows_of(doc_id, doc):
+        els = doc.elements
+        els.filter(
+            lambda i: doc.font[i].startswith("f0,")
+        ).add_tag_to_elements("hdrfont")
+        els.filter_by_text_contains("val").ignore_elements()
+        return [(doc_id, i, doc.text_of(i), "hdrfont" in doc.tags[i])
+                for i in doc.elements]  # re-created: drops ignored
 
-    from .kernel.parse import doc_from_spans
-
-    docs = _ora_docs(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "idx": [], "text": [], "tagged": []}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                doc = doc_from_spans(doc_id, spans)
-                els = doc.elements
-                els.filter(
-                    lambda i: doc.font[i].startswith("f0,")
-                ).add_tag_to_elements("hdrfont")
-                els.filter_by_text_contains("val").ignore_elements()
-                for i in doc.elements:  # re-created: drops ignored
-                    rows["doc_id"].append(doc_id)
-                    rows["idx"].append(i)
-                    rows["text"].append(doc.text_of(i))
-                    rows["tagged"].append("hdrfont" in doc.tags[i])
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(
-        gen, "doc_id string, idx long, text string, tagged boolean"
-    )
+    return _per_doc(_ora_docs(spark, sf_dir),
+                    "doc_id string, idx long, text string, tagged boolean",
+                    rows_of)
 
 
 @q(
@@ -2389,15 +2201,8 @@ def td_mixture_sample(spark, sf_dir):
 
 
 def _pii_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "__pii__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = _spread(
-        spark.read.parquet(ensure_pii_corpus(sf_of_dir(sf_dir)))
-    ).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__pii__",
+                   lambda: _read_corpus(spark, sf_dir, ensure_pii_corpus))
 
 
 def _pii_oracle() -> str:
@@ -2821,13 +2626,8 @@ def _emb_hashed_table(spark, sf_dir):
     (bucket counts + both self-join sides); without sharing, each scan
     re-evaluated the sketch over the corpus — the r4 emb_dup_pairs
     watch-item regression."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__emb_hashed__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = similarity.hashed_embeddings(_emb_table(spark, sf_dir)).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__emb_hashed__", lambda: (
+        similarity.hashed_embeddings(_emb_table(spark, sf_dir))))
 
 
 def _kmeans_cents_table(spark, sf_dir):
@@ -2837,15 +2637,8 @@ def _kmeans_cents_table(spark, sf_dir):
     iterations over the corpus; without persistence each consumer
     re-trained (emb_kmeans_ivf_topk paid training again on top of
     emb_kmeans_centroids — 2.6 s vs ~1 s at sf0.1)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__kmeans_cents__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = similarity.kmeans_centroids(
-        _emb_table(spark, sf_dir), n_iters=2
-    ).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__kmeans_cents__", lambda: (
+        similarity.kmeans_centroids(_emb_table(spark, sf_dir), n_iters=2)))
 
 
 @q("emb_kmeans_centroids", _kmeans_centroids_oracle())
@@ -3036,13 +2829,8 @@ def _pq_codebook_table(spark, sf_dir):
     """Trained PQ codebook, persisted per (application, corpus) — the
     artifact a deployment trains once (over a hash_sample at web
     scale) and every encode/search consumer broadcasts."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__pq_codebook__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = similarity.pq_train(_emb_table(spark, sf_dir), n_iters=2).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__pq_codebook__", lambda: (
+        similarity.pq_train(_emb_table(spark, sf_dir), n_iters=2)))
 
 
 @q(
@@ -3121,13 +2909,8 @@ def _ivf_residuals_table(spark, sf_dir):
     ONCE; PQ training (2 iterations + final encode = 4 scans) and the
     query side all reuse the materialization — a deployment stores
     this table partitioned by cell_id so a probe prunes partitions."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__ivf_residuals__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = similarity.ivf_residuals(_emb_table(spark, sf_dir)).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__ivf_residuals__", lambda: (
+        similarity.ivf_residuals(_emb_table(spark, sf_dir))))
 
 
 def _ivfpq_oracle() -> str:
@@ -3936,18 +3719,9 @@ def _patho_banded_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band rows for the pathological fixture corpus, persisted per
     (application, corpus) — fixture signatures are setup, the operator
     under test is the chunk-capped bucket self-join."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__patho_banded__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    parallelism = spark.sparkContext.defaultParallelism
-    df = (
-        dedup.minhash_banded(dedup.minhash_wide(_patho_corpus(spark, sf_dir)))
-        .repartition(parallelism, "band", "bucket")
-        .persist()
-    )
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__patho_banded__", lambda: _spread(
+        dedup.minhash_banded(dedup.minhash_wide(_patho_corpus(spark, sf_dir))),
+        "band", "bucket"))
 
 
 @q(
@@ -4018,18 +3792,11 @@ def td_simhash_pairs(spark, sf_dir):
 
 
 def _html_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "__html__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
     # _spread like every other driver table: at bench sf the corpus is
     # one parquet file, so without it all html_* block pipelines would
     # run on a single core (r3 ADVICE).
-    df = _spread(
-        spark.read.parquet(ensure_html_corpus(sf_of_dir(sf_dir)))
-    ).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__html__",
+                   lambda: _read_corpus(spark, sf_dir, ensure_html_corpus))
 
 
 def _html_blocks_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4043,18 +3810,8 @@ def _html_blocks_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the content_spans window plan with no further exchange.
     Result-identity with the recomputed path is unit-tested
     (tests/test_html.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__html_blocks__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    parallelism = spark.sparkContext.defaultParallelism
-    df = (
-        html_ops.html_blocks(_html_table(spark, sf_dir))
-        .repartition(parallelism, "doc_id")
-        .persist()
-    )
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__html_blocks__", lambda: _spread(
+        html_ops.html_blocks(_html_table(spark, sf_dir)), "doc_id"))
 
 
 def _duck_region_strip(col: str) -> str:
@@ -4388,64 +4145,26 @@ _BL_SHINGLES_DUCK = _SHINGLES_DUCK.replace(
 def _embdup_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Planted near-dup embedding fixture, spread + persisted (the
     shared-fixture shape the bl_/pii_ tables use)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "__embdup__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = _spread(
-        spark.read.parquet(ensure_embdup_corpus(sf_of_dir(sf_dir)))
-    ).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__embdup__",
+                   lambda: _read_corpus(spark, sf_dir, ensure_embdup_corpus))
 
 
 def _bl_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "__borderline__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = _spread(
-        spark.read.parquet(ensure_borderline_corpus(sf_of_dir(sf_dir)))
-    ).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _shared(spark, sf_dir, "__borderline__",
+                   lambda: _read_corpus(spark, sf_dir,
+                                        ensure_borderline_corpus))
 
 
 def _bl_rows_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "__bl_shingle_rows__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = dedup.shingle_rows(_bl_table(spark, sf_dir), 3, distinct=True).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _minhash_rows(spark, sf_dir, _bl_table)
 
 
 def _bl_wide_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "__bl_minhash_wide__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = dedup.minhash_wide(
-        _bl_table(spark, sf_dir), rows=_bl_rows_table(spark, sf_dir)
-    ).persist()
-    _TABLE_CACHE[key] = df
-    return df
+    return _minhash_wide(spark, sf_dir, _bl_table)
 
 
 def _bl_banded_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, "__bl_banded__")
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    parallelism = spark.sparkContext.defaultParallelism
-    df = (
-        dedup.minhash_banded(_bl_wide_table(spark, sf_dir))
-        .repartition(parallelism, "band", "bucket")
-        .persist()
-    )
-    _TABLE_CACHE[key] = df
-    return df
+    return _minhash_bands(spark, sf_dir, _bl_table)
 
 
 @q("td_jaccard_borderline", _jaccard_lsh_oracle(_BL_SHINGLES_DUCK))
@@ -4530,105 +4249,47 @@ def td_lsh_recall_borderline(spark, sf_dir):
 # ---------------------------------------------------------------------------
 #
 # The driver's CORRECTNESS gate samples the FIRST 50 registry entries in
-# iteration order.  Ordering rule (oldest-driver-row-first, generalized
-# from r3's hand list per the r3 verdict): queries sort by the round of
-# their most recent green driver row — never-verified/new queries and
-# queries whose implementation was RETOUCHED this round come first
-# (effective round 0), then the stalest rows, then fresh ones — ties in
-# registration order.  _DRIVER_ROW_ROUND is refreshed each round from
-# CORRECTNESS_r{N}.json; _RETOUCHED lists queries whose code paths
-# changed since their last row.
-
-# Latest round with a green driver row (r1/r2/r3 CORRECTNESS files).
-_DRIVER_ROW_ROUND: Dict[str, int] = {}
-_DRIVER_ROW_ROUND.update(dict.fromkeys([
-    # r2 rows, no row since (the 34 "r2-era" queries of the r3 verdict)
-    "mm_frame_samples", "mm_resize_plan", "pp_above_all_pages",
-    "pp_after", "pp_before", "pp_below_all_pages", "pp_between",
-    "pp_count_per_page", "pp_entirely_within", "pp_filter_by_font",
-    "pp_filter_by_font_size", "pp_filter_by_fonts", "pp_filter_by_page",
-    "pp_filter_by_pages", "pp_filter_out_header_footer",
-    "pp_filter_regex", "pp_filter_text_contains", "pp_filter_text_equal",
-    "pp_filter_udf", "pp_first_last", "pp_font_mapping_regex",
-    "pp_fonts_distinct", "pp_getitem_slice",
-    "pp_horizontally_in_line_with", "pp_media_passthrough",
-    "pp_table_dup_headers", "pp_tag_ignore_flow", "pp_text_raw",
-    "pp_to_the_left_of", "pp_to_the_right_of",
-    "pp_vertically_in_line_with", "td_lang_id", "td_quality_score",
-    "td_token_count",
-], 2))
-_DRIVER_ROW_ROUND.update(dict.fromkeys([
-    # r3 rows (CORRECTNESS_r03.json)
-    "emb_cosine_topk", "emb_dup_pairs", "emb_ivf_multiprobe",
-    "emb_ivf_topk", "emb_lsh_multiprobe", "emb_lsh_topk",
-    "ev_distinct_users", "ev_json_props", "ev_sessionize",
-    "ev_windowed_counts", "html_block_features", "html_content_spans",
-    "html_dedup_main_text", "html_link_stats", "html_main_text",
-    "html_title", "mm_media_features", "pp_colmerge_table",
-    "pp_extract_spans", "pp_font_mode", "pp_gridmerge_table",
-    "pp_memo_extract", "pp_move_backwards", "pp_move_capped",
-    "pp_move_forwards", "pp_ordering_callable", "pp_ordering_custom",
-    "pp_ordering_presets", "pp_ordsum_table", "pp_parse_elements",
-    "pp_section_elements", "pp_sections", "pp_sections_multi",
-    "pp_set_protocol", "pp_set_xor", "pp_table_validation",
-    "td_corpus_prep", "td_dedup_survivors", "td_dup_clusters",
-    "td_exact_dups", "td_fingerprint", "td_jaccard_lsh_verified",
-    "td_lsh_candidate_pairs", "td_lsh_pairs_capped",
-    "td_minhash_signatures", "td_ngram_jaccard_pairs",
-    "td_rolling_fingerprint", "td_simhash", "td_simhash_pairs",
-    "td_token_count_bpe",
-], 3))
-_DRIVER_ROW_ROUND.update(dict.fromkeys([
-    # r4 GREEN rows (CORRECTNESS_r04.json; the 2 red rows —
-    # td_token_shards / td_shard_stats — are deliberately absent, so
-    # they stay effective round 0 until their first green formal row).
-    "pp_font_mode", "pp_pdf_roundtrip_extract", "pp_pdf_parse_status",
-    "td_decontaminate", "td_chunk_documents", "td_repetition_stats",
-    "td_hash_sample", "td_source_cap", "td_mixture_sample",
-    "td_pii_scrub", "td_minhash_signatures", "emb_kmeans_centroids",
-    "emb_kmeans_ivf_topk", "td_lsh_candidate_pairs",
-    "td_jaccard_lsh_verified", "td_dup_clusters", "td_corpus_prep",
-    "td_lsh_pairs_capped", "html_block_features", "html_main_text",
-    "html_content_spans", "html_title", "html_dedup_main_text",
-    "html_line_dedup", "html_link_stats", "td_jaccard_borderline",
-    "td_lsh_recall_borderline", "pp_font_mapping_regex", "pp_text_raw",
-    "pp_getitem_slice", "pp_filter_udf", "pp_media_passthrough",
-    "pp_filter_text_equal", "pp_filter_text_contains", "pp_filter_regex",
-    "pp_filter_by_font", "pp_filter_by_fonts", "pp_filter_by_page",
-    "pp_filter_by_pages", "pp_filter_out_header_footer",
-    "pp_fonts_distinct", "pp_count_per_page", "pp_first_last",
-    "pp_before", "pp_after", "pp_between", "pp_to_the_right_of",
-    "pp_to_the_left_of",
-], 4))
-
-# Code paths changed THIS round after their last driver row: force a
-# fresh row even though a green (now-stale) one exists.  r5: the three
-# LSH-signature consumers now read the shared persisted
-# _emb_hashed_table (same values, different plan) — their last rows
-# are r3-era and emb_dup_pairs sat at position 50, one past the
-# window edge.  The shard-packing oracle-cast fix and the new composed
-# td_corpus_to_shards are effective round 0 already (no green row ever
-# / new), so the window leads with them + these, then the 13 r2-era
-# rows, then the stalest r3-era rows (r4 verdict task #4).
-_RETOUCHED: set = {"emb_dup_pairs", "emb_lsh_topk", "emb_lsh_multiprobe"}
+# iteration order.  Queries sort oldest-driver-row-first: by the latest
+# round with a green row in the CORRECTNESS_rNN.json files checked in
+# next to the package, never-verified queries and _RETOUCHED ones at
+# effective round 0, ties in registration order.  Adding a round's
+# CORRECTNESS file refreshes the order.  Without the files (e.g. an
+# executor importing the package from a py-files zip) every query is
+# round 0 and the order is registration order.
 
 
-def _reorder_registry() -> None:
-    def effective_round(name: str) -> int:
-        if name in _RETOUCHED:
-            return 0
-        return _DRIVER_ROW_ROUND.get(name, 0)  # new/never-verified -> 0
+def _latest_green_rounds(root: Path) -> Dict[str, int]:
+    """name -> latest round whose CORRECTNESS row for it is green (rows,
+    schema and hash match, no error), for registered names only."""
+    rounds: Dict[str, int] = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        n = int(path.stem[len("CORRECTNESS_r"):])
+        for name, row in json.loads(path.read_text()).items():
+            green = (row.get("rows_match") and row.get("schema_match")
+                     and row.get("hash_match") and row.get("err") is None)
+            if green and name in REGISTRY:
+                rounds[name] = max(n, rounds.get(name, 0))
+    return rounds
 
-    order = sorted(
-        enumerate(REGISTRY),  # registration position = tiebreak
-        key=lambda pos_name: (effective_round(pos_name[1]), pos_name[0]),
+
+# Queries whose code paths changed after their last green driver row:
+# force a fresh row even though a green (now-stale) one exists.
+_RETOUCHED: set = set()
+
+
+def _driver_order(rounds: Dict[str, int]) -> List[str]:
+    """Registered names by effective round; sorted() is stable, so ties
+    keep registration order."""
+    return sorted(
+        _REGISTERED,
+        key=lambda name: 0 if name in _RETOUCHED else rounds.get(name, 0),
     )
-    ordered = {name: REGISTRY[name] for _, name in order}
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
 
 
-_reorder_registry()
+_REGISTERED = list(REGISTRY)
+_DRIVER_ROW_ROUND = _latest_green_rounds(Path(__file__).resolve().parents[1])
+for _name in _driver_order(_DRIVER_ROW_ROUND):
+    REGISTRY[_name] = REGISTRY.pop(_name)
 
 
 # ---------------------------------------------------------------------------
@@ -4644,14 +4305,13 @@ def clear_caches() -> None:
     touches many sf_dirs would otherwise accumulate dead entries (and,
     for the live session, executor storage).  Entries whose session has
     already been stopped are evicted without touching Spark."""
-    for cache in (_ELEMENTS_CACHE, _TABLE_CACHE):
-        for key, df in list(cache.items()):
-            try:
-                if not df.sparkSession.sparkContext._jsc.sc().isStopped():
-                    df.unpersist()
-            except Exception:
-                pass  # session already gone — nothing to unpersist
-            del cache[key]
+    for key, df in list(_TABLE_CACHE.items()):
+        try:
+            if not df.sparkSession.sparkContext._jsc.sc().isStopped():
+                df.unpersist()
+        except Exception:
+            pass  # session already gone — nothing to unpersist
+        del _TABLE_CACHE[key]
 
 
 def queries() -> Dict[str, QueryFn]:

@@ -925,10 +925,13 @@ def index_bucket_reps(
     representatives per (band, bucket) — the incremental-dedup dual of
     ``_chunk_capped``.  A boilerplate bucket holding millions of index
     docs would make every arriving doc that lands in it join-fan-out
-    by the full bucket; for FLAGGING (is this new doc a dup of
-    anything?) a bounded representative set suffices — any true
-    near-dup shares the band signature with the reps too.  Rank order
-    is the same band-salted md5 as ``_chunk_capped`` (deterministic,
+    by the full bucket.  The cap bounds that fan-out at a cost in
+    recall: new docs are verified against the reps only, so when a
+    bucket overflows ``max_bucket`` a new doc whose true near-dup was
+    not kept as a rep in any bucket they share is NOT flagged, and a
+    flagged doc's ``dup_of`` can name a rep rather than its true best
+    match.  Buckets within the cap lose nothing.  Rank order is the
+    same band-salted md5 as ``_chunk_capped`` (deterministic,
     SQL-reproducible).  A deployment materializes this table once per
     index build; it is strictly smaller than the full band table."""
     order_col = F.md5(
