@@ -19,10 +19,12 @@ Design (SURVEY.md §3.1, §4):
   measured ~3x slower).  ``extract_spans_rebalanced`` runs one kernel
   per branch.
 * **Checkpoint/resume.** Docs are routed to ``bucket =
-  pmod(xxhash64(doc_id), num_buckets)``; the job runs in waves of
-  buckets, each wave committed via dynamic partition overwrite (retries
-  idempotent) plus a lineage row per bucket.  Resume anti-joins completed
-  buckets — completed splits are never reprocessed (BASELINE.md).
+  pmod(xxhash64(doc_id), num_buckets)``; the job runs in a fixed plan of
+  waves (wave ``w`` is buckets ``range(w, num_buckets, num_waves)``),
+  each committed via dynamic partition overwrite (retries idempotent)
+  plus a lineage row per bucket.  A run reads the lineage once and
+  filters completed buckets out of their waves — completed splits are
+  never reprocessed, and a failed wave is replayed whole (BASELINE.md).
 """
 
 from __future__ import annotations
@@ -32,6 +34,7 @@ from typing import Iterator, List, Optional, Tuple
 
 import numpy as np
 import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -436,24 +439,53 @@ def extract_spans_rebalanced(
 # ---------------------------------------------------------------------------
 
 
-def completed_buckets(spark: SparkSession, output_dir: str) -> List[int]:
-    try:
-        lineage = spark.read.parquet(f"{output_dir}/_lineage")
-    except Exception:
-        return []
-    rows = lineage.where(F.col("status") == "ok").select("bucket").distinct()
-    return [r["bucket"] for r in rows.collect()]
+def _lineage_state(spark: SparkSession, output_dir: str) -> Tuple[set, dict]:
+    """-> (buckets with an ``ok`` lineage row, last attempt per bucket).
 
-
-def _attempts_so_far(spark: SparkSession, output_dir: str) -> dict:
+    One read with the schema given (no inference job) and one collect.
+    A lineage that does not exist yet is an empty state; any other read
+    error raises, since treating an unreadable lineage as empty would
+    silently reprocess every completed bucket and restart attempts at 1.
+    """
     try:
-        lineage = spark.read.parquet(f"{output_dir}/_lineage")
-    except Exception:
-        return {}
-    rows = (
-        lineage.groupBy("bucket").agg(F.max("attempt").alias("a")).collect()
+        rows = (
+            spark.read.schema(LINEAGE_SCHEMA)
+            .parquet(f"{output_dir}/_lineage")
+            .groupBy("bucket")
+            .agg(
+                F.max("attempt").alias("attempt"),
+                F.max(F.col("status") == "ok").alias("ok"),
+            )
+            .collect()
+        )
+    except AnalysisException as err:
+        if err.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return set(), {}
+    return (
+        {r["bucket"] for r in rows if r["ok"]},
+        {r["bucket"]: r["attempt"] for r in rows},
     )
-    return {r["bucket"]: r["a"] for r in rows}
+
+
+def completed_buckets(spark: SparkSession, output_dir: str) -> List[int]:
+    """Buckets with an ``ok`` lineage row, ascending."""
+    return sorted(_lineage_state(spark, output_dir)[0])
+
+
+def _append_lineage(
+    spark: SparkSession, output_dir: str, rows: List[tuple]
+) -> None:
+    """Append ``LINEAGE_SCHEMA`` rows as one part file.
+
+    The rows go in as a ``pyarrow.Table``: the plan is a
+    ``LocalTableScan`` in the JVM, where a Python list would become a
+    PythonRDD whose 1-task job starts a Python worker to unpickle them.
+    """
+    table = pa.table(dict(zip(LINEAGE_SCHEMA.names, zip(*rows))))
+    spark.createDataFrame(table, LINEAGE_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(f"{output_dir}/_lineage")
 
 
 def run_job(
@@ -467,6 +499,11 @@ def run_job(
 ) -> dict:
     """Checkpointed extraction: resume-safe, skew-aware.
 
+    Wave ``w`` is always buckets ``range(w, num_buckets, num_waves)``;
+    a run processes each wave minus its completed buckets and skips the
+    waves left empty, so a resume replays a failed wave as the one wave
+    it was.
+
     ``fail_buckets`` injects a failure for those buckets (testing only:
     proves failed waves don't poison completed ones and resume
     reprocesses only the failed buckets).
@@ -479,16 +516,15 @@ def run_job(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
     )
 
-    done = set(completed_buckets(spark, output_dir))
-    attempts = _attempts_so_far(spark, output_dir)
-    todo = [b for b in range(num_buckets) if b not in done]
-    waves: List[List[int]] = [
-        todo[w::num_waves] for w in range(num_waves) if todo[w::num_waves]
+    done, attempts = _lineage_state(spark, output_dir)
+    waves = [
+        [b for b in range(w, num_buckets, num_waves) if b not in done]
+        for w in range(num_waves)
     ]
 
     stats = {"processed_buckets": 0, "skipped_buckets": len(done), "docs": 0,
              "errors": 0}
-    for wave in waves:
+    for wave in filter(None, waves):
         t0 = time.time()
         wave_docs = docs.where(F.col("bucket").isin(wave))
         attempt_nums = {b: attempts.get(b, 0) + 1 for b in wave}
@@ -542,14 +578,9 @@ def run_job(
             stats["errors"] += sum(r[3] for r in lineage_rows)
         except Exception:
             wall_ms = int((time.time() - t0) * 1000)
-            lineage_rows = [
+            _append_lineage(spark, output_dir, [
                 (b, 0, 0, 0, "failed", attempt_nums[b], wall_ms) for b in wave
-            ]
-            spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(
-                1
-            ).write.mode("append").parquet(f"{output_dir}/_lineage")
+            ])
             raise
-        spark.createDataFrame(lineage_rows, LINEAGE_SCHEMA).coalesce(
-            1
-        ).write.mode("append").parquet(f"{output_dir}/_lineage")
+        _append_lineage(spark, output_dir, lineage_rows)
     return stats

@@ -7,6 +7,7 @@ trivially scalable: narrow transformations only, no shuffle).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -574,7 +575,7 @@ def length_quantiles(
         F.sum("cnt").over(Window.partitionBy("source")).alias("total"),
     )
     qdf = docs.sparkSession.createDataFrame(
-        [(int(q),) for q in qs], "q long"
+        pa.table({"q": [int(q) for q in qs]}), "q long"
     )
     return (
         cum.crossJoin(F.broadcast(qdf))
@@ -644,7 +645,7 @@ def perplexity_thresholds(scores: DataFrame) -> DataFrame:
             F.sum("cnt").over(Window.partitionBy("lang")).alias("total"),
         )
     )
-    ks = scores.sparkSession.createDataFrame([(1,), (2,)], "k long")
+    ks = scores.sparkSession.createDataFrame(pa.table({"k": [1, 2]}), "k long")
     return (
         cum.crossJoin(F.broadcast(ks))
         .where(F.col("cum") >= F.expr("(k * total + 2) div 3"))
@@ -1084,6 +1085,17 @@ DEFAULT_BM25_QUERIES = (
 )
 
 
+def _query_terms(docs: DataFrame, queries) -> DataFrame:
+    """(q_id, tok): one row per term of each (q_id, terms) query."""
+    return docs.sparkSession.createDataFrame(
+        pa.table({
+            "q_id": [int(q) for q, ts in queries for _ in ts],
+            "tok": [t for _, ts in queries for t in ts],
+        }),
+        "q_id long, tok string",
+    )
+
+
 def bm25_topk(
     docs: DataFrame,
     queries=DEFAULT_BM25_QUERIES,
@@ -1118,10 +1130,7 @@ def bm25_topk(
     posting-list size.
     """
     all_terms = sorted({t for _, ts in queries for t in ts})
-    qterms = docs.sparkSession.createDataFrame(
-        [(int(q), t) for q, ts in queries for t in ts],
-        "q_id long, tok string",
-    )
+    qterms = _query_terms(docs, queries)
     stats = docs.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum(F.size(_tokens())).cast("long").alias("total_tokens"),
@@ -1195,10 +1204,7 @@ def bm25_model(
     stats as ``bm25_topk`` — scoring a corpus against a model trained
     on it reproduces bm25_topk's scores exactly."""
     all_terms = sorted({t for _, ts in queries for t in ts})
-    qterms = docs.sparkSession.createDataFrame(
-        [(int(q), t) for q, ts in queries for t in ts],
-        "q_id long, tok string",
-    )
+    qterms = _query_terms(docs, queries)
     stats = docs.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum(F.size(_tokens())).cast("long").alias("total_tokens"),

@@ -283,6 +283,37 @@ class TestExtract:
         assert out.where(F.col("status") == "error").count() == 0
 
 
+def _lineage_waves(spark, out_dir):
+    """The lineage's part files as ``{part file: {(bucket, status, attempt)}}``
+    (each wave appends its rows as one part file)."""
+    waves = {}
+    rows = (
+        spark.read.parquet(f"{out_dir}/_lineage")
+        .select("bucket", "status", "attempt", F.input_file_name().alias("f"))
+        .collect()
+    )
+    for r in rows:
+        waves.setdefault(r["f"], set()).add((r["bucket"], r["status"], r["attempt"]))
+    return waves
+
+
+def _write_lineage(out_dir, rows):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from py_pdf_parser_spark.schema import LINEAGE_SCHEMA
+
+    os.makedirs(f"{out_dir}/_lineage", exist_ok=True)
+    schema = to_arrow_schema(LINEAGE_SCHEMA)
+    pq.write_table(
+        pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=schema
+        ),
+        f"{out_dir}/_lineage/part-y.parquet",
+    )
+
+
 class TestCheckpointResume:
     def test_resume_skips_completed_buckets(self, spark, tmp_path):
         path = ensure_mixed_corpus(0.001)
@@ -293,6 +324,12 @@ class TestCheckpointResume:
                 spark, path, out_dir, num_buckets=8, num_waves=4,
                 fail_buckets=[3],
             )
+        # Wave w is buckets range(w, 8, 4); only the last one failed.
+        first = _lineage_waves(spark, out_dir)
+        assert sorted(sorted(b for b, _, _ in w) for w in first.values()) == [
+            [0, 4], [1, 5], [2, 6], [3, 7],
+        ]
+        assert {(3, "failed", 1), (7, "failed", 1)} in first.values()
         completed_first = (
             spark.read.parquet(f"{out_dir}/_lineage")
             .where(F.col("status") == "ok")
@@ -305,6 +342,11 @@ class TestCheckpointResume:
         stats = run_job(spark, path, out_dir, num_buckets=8, num_waves=4)
         assert stats["skipped_buckets"] == completed_first
         assert stats["processed_buckets"] == 8 - completed_first
+        # The failed wave is replayed as the one wave it was: one part file.
+        resumed = _lineage_waves(spark, out_dir)
+        assert [resumed[f] for f in set(resumed) - set(first)] == [
+            {(3, "ok", 2), (7, "ok", 2)}
+        ]
         # Full output present exactly once per doc.
         extracted = spark.read.parquet(f"{out_dir}/extracted")
         n_docs = spark.read.parquet(path).count()
@@ -316,6 +358,49 @@ class TestCheckpointResume:
             (F.col("status") == "ok") & (F.col("attempt") > 1)
         ).count()
         assert retried > 0
+
+    def test_lineage_state(self, spark, tmp_path):
+        from py_pdf_parser_spark.pipeline import _lineage_state
+
+        assert _lineage_state(spark, str(tmp_path / "missing")) == (set(), {})
+        out_dir = str(tmp_path / "job_out")
+        _write_lineage(out_dir, [
+            (0, 0, 0, 0, "failed", 1, 5),
+            (0, 10, 100, 0, "ok", 2, 7),
+            (1, 0, 0, 0, "failed", 1, 5),
+        ])
+        assert _lineage_state(spark, out_dir) == ({0}, {0: 2, 1: 1})
+
+    def test_unreadable_lineage_raises(self, spark, tmp_path):
+        """A corrupt lineage part file must fail the job, not read as an
+        empty lineage that reprocesses every completed bucket."""
+        out_dir = str(tmp_path / "job_out")
+        _write_lineage(out_dir, [(b, 1, 1, 0, "ok", 1, 5) for b in range(8)])
+        # Sorts before part-y, so it is the first footer a reader opens.
+        with open(f"{out_dir}/_lineage/part-x.parquet", "wb") as f:
+            f.write(b"not parquet")
+        with pytest.raises(Exception, match="part-x.parquet"):
+            run_job(
+                spark, ensure_mixed_corpus(0.001), out_dir, num_buckets=8,
+                num_waves=4,
+            )
+        assert not os.path.exists(f"{out_dir}/extracted")
+
+    def test_lineage_append_plans_as_local_table_scan(self, spark, tmp_path):
+        """Driver-side lineage rows stay in the JVM: a LocalTableScan, not a
+        PythonRDD scan whose job starts a Python worker."""
+        from py_pdf_parser_spark.pipeline import _append_lineage
+
+        out_dir = str(tmp_path / "job_out")
+        _append_lineage(spark, out_dir, [(3, 0, 0, 0, "failed", 1, 5)])
+        store = spark._jsparkSession.sharedState().statusStore()
+        execs = store.executionsList()
+        plans = [
+            execs.apply(i).physicalPlanDescription()
+            for i in range(execs.size())
+        ]
+        plan = [p for p in plans if f"{out_dir}/_lineage" in p][-1]
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
 
 
 class TestMaterializedElements:
