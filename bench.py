@@ -1,35 +1,49 @@
 #!/usr/bin/env python
-"""Benchmark harness.
+"""Driver benchmark: extraction throughput and scaling, per-query times
+and the LSH audit, in one run that always prints its headline.
 
-Prints ONE JSON line to stdout:
-  {"metric": "...", "value": <flagship extraction sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>, "docs_per_sec": ...,
-   "scaling": {...}, "skew": {...}}
+    python bench.py
 
-Also writes BENCH/BASELINE.md with the N-vs-4N-executor scaling evidence
-(BASELINE.md criterion: efficiency >= 0.8): the identical job on Spark
-local-cluster (separate executor JVMs, package via py-files), each
-executor pinned to its own CPU block, at 1 vs 4 executors — plus a
-full-box pair, a Spark-free kernel hardware control, and the
-skewed-corpus comparison (rebalance on/off).
+1. Runs the gated benchmark's own command (``BENCHMARK.json``'s
+   ``command`` with ``--workload all --seed 1 --seconds <run_seconds>``)
+   as a child and reads its record: docs/s, 1-CPU-vs-all-CPU scaling
+   efficiency and correctness of ``spans_mixed``, ``pdf_bytes`` and
+   ``skew_checkpoint``.
+2. Times every ``BENCH_QUERIES`` entry in one ``get_spark(cores=
+   SPARK_GRAFT_CPUS)`` session over ``SPARK_GRAFT_SF_DIR``: one warm
+   pass, then one measured pass with the build and the force timed apart.
+3. Audits the LSH dedup: bucket-cap drops and connected-component rounds.
 
-Scaling runs in subprocesses (one cluster per level, interleaved
-best-of rounds); only job time is measured (startup excluded).
+Stdout carries exactly one line, the headline (under 1 KB); the full
+record, per-query times included, goes to ``BENCH/RESULT.json`` and
+everything Spark prints to ``BENCH/bench.log`` (both under the working
+directory).  A SIGTERM or the ``DEADLINE_S`` deadline still yields the
+headline, with whatever had finished and ``"complete": false``, and
+exit code 3.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import subprocess
 import sys
 import time
+import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from perfbench import record as rec_mod
+from perfbench import spark_env
+from perfbench.run import signal_off
 
+ROOT = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# A run ends, with its headline, inside 15 minutes: the perfbench child
+# stops itself within 3 x 170 s, and at sf0.1 on 4 CPUs the queries and
+# the audit took ~250 s (the whole run 405 s).
+DEADLINE_S = 840
+RESULT = os.path.join("BENCH", "RESULT.json")
+LOG = os.path.join("BENCH", "bench.log")
 
 BENCH_QUERIES = [
     "pp_extract_spans",
@@ -100,856 +114,66 @@ BENCH_QUERIES = [
 ]
 
 
-def _force(df) -> int:
-    """Force full computation; return row count."""
-    return df.count()
+def run_perfbench(record: rec_mod.Record) -> None:
+    """The gated extraction workloads, in a child; its metrics, document
+    counts and correctness go into ``record``."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    cmd = spec["command"] + ["--workload", "all", "--seed", "1",
+                             "--seconds", str(spec["run_seconds"])]
+    proc = subprocess.Popen(cmd, cwd=ROOT, stdout=subprocess.PIPE, text=True)
+    try:
+        out, _ = proc.communicate()
+    except rec_mod.Interrupted:
+        signal_off()
+        proc.terminate()  # the child prints its own partial record
+        take_child_record(record, proc.communicate()[0], proc.returncode)
+        raise
+    take_child_record(record, out, proc.returncode)
 
 
-def _read_replicated(spark, corpus_path: str, replicate: int):
-    # One scan over the path repeated `replicate` times (Spark keeps
-    # duplicate paths): constant-size plan regardless of replicate, and
-    # split tuning sees the full replicated byte count.  The previous
-    # replicate-way unionByName built an O(replicate)-branch plan whose
-    # analysis ran INSIDE the timed region — at sf0.001 (replicate
-    # ~2400) that was minutes of driver-side planning per pass.
-    if replicate <= 1:
-        return spark.read.parquet(corpus_path)
-    return spark.read.parquet(*([corpus_path] * replicate))
+def take_child_record(record: rec_mod.Record, out: str, rc: int) -> None:
+    lines = out.strip().splitlines()
+    child = json.loads(lines[-1]) if lines else {}
+    if not child.get("correct"):
+        record.fail(f"perfbench exited {rc} with an incorrect or no record")
+    record.count(child.get("attempted", 1), child.get("failed", 1))
+    for name, m in child.get("metrics", {}).items():
+        record.put(name, m["value"], m["unit"])
 
 
-def _run_extraction(spark, corpus_path: str, rebal: bool = False,
-                    replicate: int = 1):
-    from py_pdf_parser_spark.pipeline import (
-        extract_spans,
-        extract_spans_rebalanced,
-        tune_scan_splits,
-    )
+def time_queries(spark, queries: dict) -> None:
+    """Per query: a warm pass, which fills the shared tables it reads,
+    then a measured pass on a rebuilt DataFrame (forcing the same object
+    again would reuse its shuffle outputs).  The build is timed apart
+    from the force: it covers driver-side planning and any eager jobs a
+    builder runs (td_dup_clusters' connected-component rounds)."""
+    from py_pdf_parser_spark.queries import queries as registry
+
+    qs = registry()
+    for name in BENCH_QUERIES:
+        qs[name](spark, SF_DIR).count()
+        t0 = time.perf_counter()
+        df = qs[name](spark, SF_DIR)
+        t1 = time.perf_counter()
+        df.count()
+        queries[name] = {"build_s": round(t1 - t0, 3),
+                         "force_s": round(time.perf_counter() - t1, 3)}
+
+
+def lsh_audit(spark) -> dict:
+    """What the 256-doc LSH bucket cap drops at this sf, and how many
+    label-propagation rounds the connected components take."""
     from pyspark.sql import functions as F
 
-    # Split sizing accounts for replication (one scan over the repeated
-    # path list), keeping per-task work identical to the unreplicated
-    # case.
-    tune_scan_splits(spark, corpus_path, replicate=replicate)
-    docs = _read_replicated(spark, corpus_path, replicate)
-    if rebal:
-        out = extract_spans_rebalanced(spark, docs)
-    else:
-        out = extract_spans(spark, docs)
-    t0 = time.time()
-    row = out.agg(
-        F.count("*").alias("docs"), F.sum("n_spans").alias("spans")
-    ).collect()[0]
-    sec = time.time() - t0
-    return row["docs"], row["spans"], sec
-
-
-REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
-PYFILES_ZIP = "/tmp/pps_pkg_bench.zip"
-
-
-def _ensure_pyfiles_zip() -> str:
-    """Package zip shipped to executors — the spark-submit --py-files
-    deployment shape the BASELINE.md north rule describes."""
-    import shutil
-
-    if not os.path.exists(PYFILES_ZIP):
-        shutil.make_archive(
-            PYFILES_ZIP[:-4], "zip",
-            root_dir=REPO_ROOT, base_dir="py_pdf_parser_spark",
-        )
-    return PYFILES_ZIP
-
-
-def _pin_executors(n_exec: int, cores: int) -> None:
-    """Pin each executor JVM (and the Python workers it forks) to its own
-    ``cores``-CPU block — emulating dedicated executor nodes.  The
-    driver/master JVM stays unpinned (on a real cluster it is a separate
-    node)."""
-    deadline = time.time() + 60
-    execs = []
-    while time.time() < deadline:
-        out = subprocess.run(
-            ["ps", "-eo", "pid,args"], capture_output=True, text=True
-        ).stdout
-        execs = sorted(
-            int(line.split()[0])
-            for line in out.splitlines()
-            if "CoarseGrainedExecutorBackend" in line
-        )
-        if len(execs) == n_exec:
-            break
-        time.sleep(1)
-    if len(execs) != n_exec:
-        raise RuntimeError(f"expected {n_exec} executors, found {len(execs)}")
-    # Blocks are allocated from the TOP of the CPU range: CPU 0 handles
-    # most interrupts/system work and measures ~10% slow, which would
-    # bias the small (1-executor) level that always includes block 0.
-    for k, pid in enumerate(execs):
-        hi = CPUS - 1 - cores * k
-        subprocess.run(
-            ["taskset", "-apc", f"{hi - cores + 1}-{hi}", str(pid)],
-            capture_output=True,
-        )
-
-
-def lc_worker(
-    n_exec: int, cores: int, corpus_path: str, replicate: int
-) -> None:
-    """Subprocess: the extraction job on a local-cluster of ``n_exec``
-    separate executor JVMs x ``cores`` cores each (real multi-executor
-    scheduling + per-executor Python workers, package shipped via
-    py-files).  Warm pass, then best of 2 measured passes; prints JSON.
-    """
-    from pyspark.sql import SparkSession
-
-    zip_path = _ensure_pyfiles_zip()
-    builder = (
-        SparkSession.builder
-        .master(f"local-cluster[{n_exec},{cores},12288]")
-        .appName(f"bench-lc-{n_exec}x{cores}")
-        .config("spark.sql.shuffle.partitions", str(n_exec * cores))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.submit.pyFiles", zip_path)
-        .config("spark.executorEnv.PYTHONPATH", zip_path)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 32k-row Arrow batches: fewer JVM<->python handoffs per task.
-        # Measured on the 4x8 fullbox level (32 python workers):
-        # 14.1 s -> 11.5 s vs 8k batches; the 1x8 level is unchanged
-        # (PLANS.md round-3 scaling notes).
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "32768"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", "8g")
-        # A single-host local-cluster has no rack/node locality to wait
-        # for; the default 3 s wait idles freshly-freed slots at stage
-        # boundaries — visible at 32 concurrent tasks (14.1 -> 11.3 s),
-        # noise at 8.
-        .config("spark.locality.wait", "0s")
-    )
-    # Extra tuning axes: "k=v,k=v" (experiment hook, see PLANS.md)
-    for kv in os.environ.get("SPARK_GRAFT_LC_CONFS", "").split(","):
-        if "=" in kv:
-            k, v = kv.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
-    spark = builder.getOrCreate()
-    _pin_executors(n_exec, cores)
-    _run_extraction(spark, corpus_path, replicate=replicate)  # warm
-    best = None
-    for _ in range(3):
-        docs, spans, sec = _run_extraction(
-            spark, corpus_path, replicate=replicate
-        )
-        best = sec if best is None else min(best, sec)
-    print(json.dumps({"n_exec": n_exec, "cores": cores, "docs": docs,
-                      "spans": spans, "sec": best}))
-    spark.stop()
-
-
-def kernel_worker() -> None:
-    """Subprocess (pinned to one CPU by the caller): pure-kernel docs/s —
-    the hardware-scaling control with zero Spark in the loop."""
-    import glob
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from py_pdf_parser_spark.pipeline import extract_arrow_batch
-
-    files = sorted(glob.glob(sys.argv[2] + "/*.parquet"))[:2]
-    tbl = pa.concat_tables([pq.read_table(f) for f in files])
-    batches = tbl.combine_chunks().to_batches(max_chunksize=8192)
-    extract_arrow_batch(batches[0], [])  # warm
-    t0 = time.time()
-    n = 0
-    for _ in range(6):
-        for b in batches:
-            extract_arrow_batch(b, [])
-            n += b.num_rows
-    print(n / (time.time() - t0))
-
-
-def _kernel_run_once(corpus_path: str, n_procs: int) -> float:
-    """Aggregate docs/sec of ``n_procs`` pinned Spark-free kernel
-    workers — the hardware control building block."""
-    # Top-down CPU choice for the same reason as _pin_executors.
-    procs = [
-        subprocess.Popen(
-            ["taskset", "-c", str(CPUS - 1 - i), sys.executable,
-             os.path.abspath(__file__), "--kernel-worker", corpus_path],
-            stdout=subprocess.PIPE, text=True,
-        )
-        for i in range(n_procs)
-    ]
-    total = 0.0
-    for p in procs:
-        out, _ = p.communicate(timeout=600)
-        total += float(out.strip().splitlines()[-1])
-    return total
-
-
-def _kernel_scaling(corpus_path: str) -> dict:
-    """Pure-kernel throughput at 2 vs 8 pinned single-CPU processes:
-    isolates how the *host* scales the per-document compute, with no
-    JVM/Arrow/scheduling in the loop."""
-    def run_once(n_procs: int) -> float:
-        return _kernel_run_once(corpus_path, n_procs)
-
-    # Interleaved best-of: back-to-back repeats of one level share any
-    # host-noise window and fabricate super/sub-linear artifacts.
-    # Levels clamp to the available CPUs (taskset ids go negative past
-    # CPUS and the whole bench would abort on a smaller host).
-    levels = sorted({min(n, CPUS) for n in (2, 8, 32) if CPUS >= 2})
-    best = {n: 0.0 for n in levels}
-    for _ in range(2):
-        for n in levels:
-            best[n] = max(best[n], run_once(n))
-    out = {}
-    for n in levels:
-        out[f"docs_per_sec_{n}procs"] = round(best[n], 1)
-    for lo, hi in zip(levels, levels[1:]):
-        out[f"efficiency_{lo}_to_{hi}"] = round(
-            best[hi] / ((hi / lo) * best[lo]), 3
-        )
-    return out
-
-
-# Target job length at the SMALL cluster level, given the pipeline
-# sustains roughly PIPE_DOCS_PER_SEC_CORE docs/sec/core end to end.
-# 60 s (round 3, was 30): the big level's pass is then ~17-20 s, long
-# enough that per-pass fixed costs (job scheduling, AQE planning, stage
-# startup at 32 concurrent tasks) stop taxing the 4x level's measured
-# throughput — a real cluster job amortizes them over minutes.
-TARGET_SMALL_SEC = 60
-PIPE_DOCS_PER_SEC_CORE = 4000
-
-
-def _scaling_lc(corpus_path: str, corpus_docs: int, cores: int,
-                n_small: int = 1, n_big: int = 4,
-                rounds: int = 3, control: bool = False,
-                run_fn=None, kernel_fn=None) -> dict:
-    """N vs 4N executors (separate pinned JVMs, local-cluster mode).
-
-    ``rounds`` is a FIXED, pre-registered paired-round count — r4's
-    adaptive extension stopped as soon as one pair cleared the 0.8
-    rule, and optional stopping on the gate statistic guarantees
-    crossing any threshold under noise (ADVICE r4).  The gate
-    statistic is the MEDIAN paired efficiency across all rounds;
-    best-pair numbers are reported alongside but never gate the rule.
-
-    ``control=True`` additionally runs the Spark-free kernel control
-    at the two core totals INSIDE each round, right after the two
-    Spark levels — so the engine-only decomposition (Spark efficiency
-    ÷ hardware-control efficiency) is ratioed within ONE noise window
-    per round instead of against a control measured minutes later
-    (r5: a post-hoc control caught a quiet moment while the Spark
-    rounds were loaded, deflating the engine's number to 0.709 for
-    pure window-timing reasons).  The headline ``engine_efficiency``
-    becomes the median of the per-round paired decompositions.
-
-    ``run_fn(n_exec) -> {"docs": .., "sec": ..}`` and
-    ``kernel_fn(n_procs) -> docs_per_sec`` are test-injection seams
-    (tests/test_bench_stats.py pins the gate statistics: median-gated,
-    fixed rounds, corrupted-pair exclusion, per-round decomposition);
-    production leaves them None.
-    """
-    target_docs = TARGET_SMALL_SEC * PIPE_DOCS_PER_SEC_CORE * n_small * cores
-    replicate = max(1, round(target_docs / max(corpus_docs, 1)))
-    results = {}
-
-    def run(n_exec: int) -> dict:
-        if run_fn is not None:
-            return run_fn(n_exec)
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--lc-worker",
-             str(n_exec), str(cores), corpus_path, str(replicate)],
-            capture_output=True, text=True, timeout=1800,
-        )
-        last = [ln for ln in proc.stdout.strip().splitlines()
-                if ln.startswith("{")]
-        if not last:
-            raise RuntimeError(
-                f"lc worker {n_exec}x{cores} failed: {proc.stderr[-2000:]}"
-            )
-        return json.loads(last[-1])
-
-    kernel = kernel_fn or (lambda n: _kernel_run_once(corpus_path, n))
-
-    # Each round runs BOTH levels back-to-back, yielding a PAIRED
-    # efficiency measured inside one noise window (ratioing bests from
-    # DIFFERENT windows measures the noise delta between windows, not
-    # the engine; that cross-window ratio is still recorded as
-    # ``efficiency_xwindow``).  The round count is FIXED up front and
-    # every pair stays in the record; the headline ``efficiency`` is
-    # the MEDIAN across all pairs — the noise-robust central statistic
-    # the 0.8 rule is gated on (never a best-of, never an adaptive
-    # stop: both were flagged as optional-stopping bias in r4 ADVICE).
-    round_pairs = []
-    for _ in range(rounds):
-        pair = {}
-        for n_exec in (n_small, n_big):
-            r = run(n_exec)
-            pair[n_exec] = r
-            if n_exec not in results or r["sec"] < results[n_exec]["sec"]:
-                results[n_exec] = r
-        tp_s = pair[n_small]["docs"] / pair[n_small]["sec"]
-        tp_b = pair[n_big]["docs"] / pair[n_big]["sec"]
-        rec = {
-            "sec_small": round(pair[n_small]["sec"], 3),
-            "sec_big": round(pair[n_big]["sec"], 3),
-            "efficiency": round(
-                tp_b / ((n_big / n_small) * tp_s), 3
-            ),
-        }
-        if control:
-            # Same-window hardware control: the identical kernel at the
-            # two core TOTALS the Spark levels just used, back-to-back
-            # with them.  Clamp the control at 1.0 (hardware can't
-            # super-scale; a noisy-fast control must not deflate the
-            # engine) and the per-round decomposition at 1.0 (a slow
-            # control window can't credit the engine past linear).
-            lo = min(n_small * cores, CPUS)
-            hi = min(n_big * cores, CPUS)
-            dps_lo = kernel(lo)
-            dps_hi = kernel(hi)
-            ctl = min(1.0, max(dps_hi / ((hi / lo) * dps_lo), 1e-9))
-            rec["ctl_efficiency"] = round(ctl, 3)
-            rec["engine_efficiency"] = round(
-                min(1.0, rec["efficiency"] / ctl), 3
-            )
-        round_pairs.append(rec)
-    # Noise moves a paired ratio BOTH ways: a slow big side deflates
-    # it, a slow SMALL side inflates it — past 1.0, which is physically
-    # impossible for this shuffle-free job, so a raw efficiency > 1.0
-    # is positive evidence VM steal hit that pair's SMALL side: the
-    # pair is a corrupted measurement, excluded from best-pair
-    # selection entirely (not clamped into the headline — r4 ADVICE).
-    # If every pair is corrupted, fall back to the least-inflated one.
-    valid_pairs = [p for p in round_pairs if p["efficiency"] <= 1.0]
-    best_pair = (
-        max(valid_pairs, key=lambda p: p["efficiency"])
-        if valid_pairs
-        else min(round_pairs, key=lambda p: p["efficiency"])
-    )
-    docs = results[n_big]["docs"]
-    tp_small = docs / best_pair["sec_small"]
-    tp_big = docs / best_pair["sec_big"]
-    tp_small_x = results[n_small]["docs"] / results[n_small]["sec"]
-    tp_big_x = results[n_big]["docs"] / results[n_big]["sec"]
-    eff_x = tp_big_x / ((n_big / n_small) * tp_small_x)
-    eff_median = statistics.median(p["efficiency"] for p in round_pairs)
-    extra = {}
-    if control:
-        extra["ctl_efficiency_median"] = round(
-            statistics.median(p["ctl_efficiency"] for p in round_pairs), 3
-        )
-        extra["engine_efficiency"] = round(
-            statistics.median(
-                p["engine_efficiency"] for p in round_pairs
-            ), 3
-        )
-    return {
-        **extra,
-        "n_small": n_small,
-        "n_big": n_big,
-        "cores_per_executor": cores,
-        "docs": docs,
-        "replicate": replicate,
-        "sec_small": best_pair["sec_small"],
-        "sec_big": best_pair["sec_big"],
-        "docs_per_sec_small": round(tp_small, 1),
-        "docs_per_sec_big": round(tp_big, 1),
-        # gate statistic: median paired efficiency, fixed round count
-        "efficiency": round(min(eff_median, 1.0), 3),
-        "efficiency_median": round(eff_median, 3),
-        "efficiency_best_pair": best_pair["efficiency"],
-        "efficiency_xwindow": round(eff_x, 3),
-        "rounds": round_pairs,
-    }
-
-
-def _scaling_table(s) -> list:
-    c = s["cores_per_executor"]
-    return [
-        f"| executors | job sec | docs/sec |",
-        f"|---|---|---|",
-        f"| {s['n_small']} × {c} cores | {s['sec_small']} | "
-        f"{s['docs_per_sec_small']} |",
-        f"| {s['n_big']} × {c} cores | {s['sec_big']} | "
-        f"{s['docs_per_sec_big']} |",
-        "",
-        f"**efficiency = throughput({s['n_big']} exec) / "
-        f"({s['n_big'] // s['n_small']} × throughput({s['n_small']} exec)) "
-        f"= {s['efficiency']}** — the MEDIAN paired efficiency over a "
-        f"fixed, pre-registered {len(s['rounds'])} rounds of "
-        f"{[p['efficiency'] for p in s['rounds']]} (the 0.8 rule gates "
-        f"on this central statistic; best clean pair "
-        f"{s['efficiency_best_pair']} and cross-window ratio "
-        f"{s['efficiency_xwindow']} are reported, never gate; a raw "
-        f"pair > 1.0 would be excluded from best-pair selection as a "
-        f"corrupted sample — VM steal on the small side; "
-        f"{s['docs']} docs/pass)",
-    ]
-
-
-def _write_baseline_md(
-    sf, flagship, scaling, scaling_fullbox, kernel_ctl, skew, query_secs,
-    cache_fill_sec=None, flagship_passes=None, pdf_path=None,
-    lsh_audit=None,
-) -> None:
-    os.makedirs("BENCH", exist_ok=True)
-    passes_note = (
-        f" (median of passes {flagship_passes})"
-        if flagship_passes
-        else ""
-    )
-    lines = [
-        "# BENCH/BASELINE.md — measured numbers",
-        "",
-        f"Corpus: mixed-family synthetic interleaved docs at sf={sf} "
-        f"({flagship['docs']} docs, {flagship['spans']} output spans); "
-        f"machine: 32-vCPU shared VM.",
-        "",
-        "## Headline",
-        "",
-        f"- flagship extraction (parse→order→classify→recipe→spans): "
-        f"**{flagship['sec']:.2f} s** = "
-        f"**{flagship['docs'] / flagship['sec']:.0f} docs/sec** "
-        f"at local[{CPUS}]" + passes_note,
-        "",
-        *(
-            [
-                "- REAL-PDF byte path (rendered corpus → from-scratch "
-                "minipdf parse → extract, span-sequence oracle-equal): "
-                f"**{pdf_path['sec']:.2f} s** = "
-                f"**{pdf_path['docs_per_sec']:.0f} docs/sec** for "
-                f"{pdf_path['docs']} documents as actual PDF bytes "
-                "(pp_pdf_roundtrip_extract; render is one-time fixture "
-                "fill)",
-                "",
-            ]
-            if pdf_path and pdf_path.get("sec")
-            else []
-        ),
-        "Shared-VM windows move ALL absolute numbers ±20-40% between "
-        "runs (best recorded window: flagship 0.48 s / 41.7k docs/s at "
-        "r5; loaded windows read 0.78-1.14 s — an A/B of the same two "
-        "commits inside one window shows no code regression, see "
-        "PLANS.md).  The Spark-free kernel control moves in lockstep, "
-        "so scaling RATIOS and the engine decomposition below are the "
-        "stable quantities; per-pass spreads are recorded in the bench "
-        "JSON itself.",
-        "",
-        "## Scaling: N vs 4N executors "
-        "(BASELINE.json criterion: efficiency ≥ 0.8)",
-        "",
-        "Measured the way the north rule describes: the identical job on "
-        "a real multi-executor cluster (Spark local-cluster mode — "
-        "separate executor JVMs with their own Python workers, package "
-        "shipped via py-files), each executor pinned to its own "
-        "dedicated CPU block, driver unpinned (a separate node on a real "
-        "cluster).  Both levels run back-to-back per interleaved round; "
-        "the headline efficiency is the MEDIAN over a fixed, "
-        "pre-registered count of PAIRED rounds (both arms of a pair "
-        "measured inside one noise window — shared-VM steal-time noise "
-        "is ±20% on single passes, so ratioing bests from different "
-        "windows measures the windows, not the engine; the best clean "
-        "pair and the cross-window ratio are recorded alongside but "
-        "never gate the rule, and every round pair is in the bench "
-        "JSON).",
-        "",
-        "### Headline: N=1 vs 4N=4 executors × 2 cores",
-        "",
-        *_scaling_table(scaling),
-        "",
-        "### Full box: N=1 vs 4N=4 executors × 8 cores",
-        "",
-        *_scaling_table(scaling_fullbox),
-        "",
-        "### Hardware control: Spark-free kernel at 2 / 8 / 32 pinned procs",
-        "",
-        f"- {kernel_ctl['docs_per_sec_2procs']} / "
-        f"{kernel_ctl['docs_per_sec_8procs']} / "
-        f"{kernel_ctl['docs_per_sec_32procs']} docs/s — "
-        f"efficiency 2→8: {kernel_ctl['efficiency_2_to_8']}, "
-        f"8→32: {kernel_ctl['efficiency_8_to_32']}",
-        "",
-        "The 2-core pair is the headline because it measures the ENGINE: "
-        "at 8 of 32 host CPUs each executor keeps the per-node "
-        "memory-bandwidth headroom every real cluster node has (the "
-        "kernel control confirms the hardware itself is ~1.0 efficient "
-        "there).  The full-box pair additionally absorbs this single "
-        "host's shared memory-controller falloff — the control measures "
-        "that hardware ceiling (8→32 procs) with no engine code in the "
-        "loop.  The engine's stages add no cross-executor coupling (the "
-        "hot path is shuffle-free), so at 1000 real executors the only "
-        "shared resource is the storage scan.",
-        "",
-        (
-            "**Rule verdict (N vs 4N executors, median-gated):** the "
-            f"headline pair measured **{scaling['efficiency']}"
-            f"{' ≥ 0.8 — rule met' if scaling['efficiency'] >= 0.8 else ' < 0.8 — rule NOT met this window (identical code clears it in most windows — see Window record)'}** "
-            "(median of a fixed round count; no optional stopping)."
-        ),
-        "",
-        (
-            "**Full-box supplementary probe:** median "
-            f"{scaling_fullbox['efficiency']}"
-            + (
-                " ≥ 0.8 — clears the rule even on the stricter "
-                "all-32-CPU configuration.  "
-                if scaling_fullbox["efficiency"] >= 0.8
-                else " < 0.8.  "
-            )
-            + "Engine-only decomposition: each round's Spark pair is "
-            "ratioed against a hardware control (Spark-free kernel at "
-            "8 and 32 pinned procs, clamped at 1.0) run back-to-back "
-            "INSIDE the same round's noise window; the median of the "
-            "per-round decompositions is "
-            f"**{scaling_fullbox['engine_efficiency']}** (per-round "
-            "control medians "
-            f"{scaling_fullbox['ctl_efficiency_median']}) — any "
-            "falloff below the control is what this single host's "
-            "shared memory controller imposes on ANY 32-way "
-            "computation (the control hits the same wall with zero "
-            "engine code in the loop); the engine's own contribution "
-            "is the decomposed number."
-        ),
-        "",
-        "**Window record:** the 2-core headline pair's formal run "
-        "medians — every run ever recorded, none discarded — are r1 "
-        "0.916, r2 0.825, r3 0.885-0.913, r4 0.949, and r5 0.835 / "
-        "0.891 / 0.972 / 0.799 / 0.899 / 0.896 across six runs of "
-        "identical engine code (the 0.799 window also read a corrupted "
-        "1.016 round — VM steal on the small side — so window load, not "
-        "the engine).  The round count was raised 3→5 after the fourth "
-        "run to stabilize the median; both runs at the raised count "
-        "cleared the gate (0.899, 0.896).  Full-box formal medians are "
-        "0.788, 0.657, 0.757, 0.755, 0.876, and 0.64 — the fifth run "
-        "(quiet window, 5 rounds inside [0.866, 0.884]) is the one "
-        "formal full-box ≥0.8; loaded windows read 0.59-0.78 on "
-        "identical code, which is why the decomposition against the "
-        "per-round paired hardware control is reported alongside (sixth "
-        "run: engine 0.856 vs control 0.768).",
-        "",
-        "## Skew (0.1% pathological docs — 1600-page bigdoc, giant-media "
-        "bigmedia, superlinear-recipe bigtable — clustered in their own "
-        "files like a crawl segment)",
-        "",
-        f"| corpus | rebalance | sec |",
-        f"|---|---|---|",
-        f"| flat | off | {skew['flat_sec']:.2f} |",
-        f"| skewed | off | {skew['skew_plain_sec']:.2f} |",
-        f"| skewed | on | {skew['skew_rebal_sec']:.2f} |",
-        "",
-        "(rebalance = extract_spans_rebalanced: per-branch kernels so the "
-        "light scan+extract overlaps the heavy pre-scan; only docs with "
-        "span count > threshold are shuffled.  Skew rows are MEDIANS of "
-        "3 interleaved rounds (per-round values in the bench JSON) — "
-        "straggler-dominated by design, so a single pass can be "
-        "inverted by one VM-steal hit — and their absolute "
-        "values depend on the replication shape (multi-path scan, "
-        "replicate≈8, since r3: heavy files land in fewer, longer "
-        "splits, which LENGTHENS the unrebalanced straggler tail vs the "
-        "r2 union-based replication); compare within one table, not "
-        "across bench versions.)",
-        "",
-        *(
-            [
-                "## Dedup audit trend (no silent caps)",
-                "",
-                "| round | minhash perms | bands × rows | oversized "
-                "buckets | capped pairs dropped | cc rounds |",
-                "|---|---|---|---|---|---|",
-                "| r4 | 32 | 16 × 2 | 0 | 0 | 5 |",
-                (
-                    f"| this run | {lsh_audit['minhash_perms']} | "
-                    f"{lsh_audit['bands']} × "
-                    f"{lsh_audit['rows_per_band']} | "
-                    f"{lsh_audit['oversized_buckets']} | "
-                    f"{lsh_audit['capped_pairs_dropped']} | "
-                    f"{lsh_audit['cc_rounds']} |"
-                ),
-                "",
-                "(r1–r3 predate these audit fields in the record; r2/r3 "
-                "ran 8 permutations until the r3 verdict's recall fix "
-                "widened MinHash to 32 perms / 16 bands × 2 rows in "
-                "r4.  Zero oversized buckets / zero dropped pairs = "
-                "the 256-doc bucket cap never binds at this sf.)",
-                "",
-            ]
-            if lsh_audit
-            else []
-        ),
-        "## Per-query seconds (sf={} at local[{}]; median of 3 "
-    "interleaved passes)".format(sf, CPUS),
-        "",
-        "Steady-state operator cost under the parse-once-query-many "
-        "deployment shape: the clustered elements persist (the in-memory "
-        "analogue of the bucketed elements table), the three spread "
-        "driver tables, the html page + extracted-blocks tables, and the shared "
-        "shingle-rows / MinHash-wide / SimHash signature tables (the "
-        "materialized-table analogues a deployment writes next to the "
-        "corpus) are filled once per session — "
-        + (
-            f"**{cache_fill_sec:.2f} s** total, timed separately"
-            if cache_fill_sec is not None
-            else "timed separately"
-        )
-        + " — so a query's number is the operator, not the shared fill.",
-        "",
-        "| query | sec |",
-        "|---|---|",
-    ]
-    lines += [f"| {k} | {v:.2f} |" for k, v in query_secs.items()]
-    lines.append("")
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write("\n".join(lines))
-
-
-def _slim_scaling(s: dict) -> dict:
-    """The parse-critical fields of a _scaling_lc record — no per-round
-    pair arrays."""
-    out = {
-        k: s[k]
-        for k in (
-            "n_small", "n_big", "cores_per_executor", "efficiency",
-            "efficiency_median", "docs_per_sec_small", "docs_per_sec_big",
-        )
-        if k in s
-    }
-    for k in ("engine_efficiency", "ctl_efficiency_median"):
-        if k in s:
-            out[k] = s[k]
-    return out
-
-
-def _slim_headline(result: dict) -> dict:
-    """The <1 KB stdout headline (r4 verdict task #2, third ask).
-
-    BENCH_r03/r04 recorded ``parsed: null`` because the driver keeps a
-    bounded stdout TAIL (~2 KB) and the full record — two ~50-entry
-    per-query maps — outgrew it even minified, so the capture started
-    mid-object.  The final stdout line therefore carries ONLY the
-    headline: flagship value/throughput, both scaling records slimmed
-    to their gate statistics (plus engine_efficiency and the
-    kernel-control number so the record self-evidently decomposes),
-    pdf_path, lsh_audit, skew.  Per-query maps and per-round pair
-    arrays live in BENCH/RESULT.json only.
-    """
-    slim = {
-        k: result[k]
-        for k in (
-            "metric", "value", "unit", "sf", "docs", "docs_per_sec",
-            "pdf_path", "lsh_audit",
-        )
-        if k in result
-    }
-    for k in ("scaling", "scaling_fullbox"):
-        if k in result:
-            slim[k] = _slim_scaling(result[k])
-    if "kernel_control" in result:
-        slim["kernel_control"] = {
-            "efficiency_8_to_32": result["kernel_control"][
-                "efficiency_8_to_32"
-            ]
-        }
-    if "skew" in result:
-        slim["skew"] = result["skew"]
-    slim["detail"] = "BENCH/RESULT.json"
-    return slim
-
-
-def _emit_result(
-    result: dict, full: dict = None, quick: bool = False
-) -> None:
-    """Emit the bench record: the full record (per-query maps, per-pass
-    arrays) to BENCH/RESULT.json (``--quick`` smokes write
-    BENCH/RESULT_quick.json instead, so a verification drive at a toy
-    sf can never clobber the formal sf0.1 record), and ONE slim
-    (<1 KB, asserted) JSON headline as the very last stdout line —
-    flushed, so it cannot interleave with teardown output and cannot
-    outgrow the driver's bounded stdout-tail capture.
-    """
-    os.makedirs("BENCH", exist_ok=True)
-    path = "BENCH/RESULT_quick.json" if quick else "BENCH/RESULT.json"
-    with open(path, "w") as f:
-        json.dump(full or result, f, indent=1)
-    slim = _slim_headline(result)
-    slim["detail"] = path
-    line = json.dumps(slim, separators=(",", ":"))
-    assert len(line) < 1000, (
-        f"headline line {len(line)}B >= 1000B — would risk the driver's "
-        "stdout-tail capture window; slim it further"
-    )
-    sys.stdout.flush()
-    print(line, flush=True)
-
-
-def main(quick: bool = False) -> None:
-    """Full bench, or --quick: flagship + per-query only (1 measured
-    pass, no skew/scaling/kernel-control sections, does NOT overwrite
-    BENCH/BASELINE.md) — a smoke-drive for verification.  The scaling
-    sections target a fixed ~60 s job per executor level, so the full
-    bench takes ~30+ min at ANY sf; --quick finishes in a few minutes.
-    """
-    from py_pdf_parser_spark.queries import queries as all_queries
-    from py_pdf_parser_spark.session import get_spark
-    from py_pdf_parser_spark.synth import ensure_mixed_corpus, sf_of_dir
-
-    sf = sf_of_dir(SF_DIR)
-    flat = ensure_mixed_corpus(sf)
-    skewed = None if quick else ensure_mixed_corpus(sf, skew=True)
-    if os.path.exists(PYFILES_ZIP):
-        os.remove(PYFILES_ZIP)  # never ship a stale package to executors
-
-    spark = get_spark(cores=CPUS, app_name="bench")
-
-    # Flagship extraction: warm-up, then MEDIAN of 3 measured passes —
-    # single passes swing ±20% on this shared VM (PLANS.md), and a
-    # best-of hides regressions while a single pass fabricates them.
-    _run_extraction(spark, flat)
-    flagship_passes = []
-    for _ in range(1 if quick else 3):
-        docs, spans, s = _run_extraction(spark, flat)
-        flagship_passes.append(round(s, 3))
-    sec = statistics.median(flagship_passes)
-    flagship = {"docs": docs, "spans": spans, "sec": sec}
-
-    # Skew comparison at a meaningful job length (~200k docs): the skew
-    # corpus clusters pathological docs into their own files, so without
-    # rebalance the tasks owning those files are stragglers.
-    # One-pass-like regime: heavy files appear a handful of times, so a
-    # clustered heavy split is long RELATIVE to the job — the straggler
-    # scenario rebalancing targets.  (High replication re-reads the same
-    # heavy files dozens of times, which self-spreads them and models a
-    # corpus where heavy segments are already uniformly distributed.)
-    if quick:
-        skew = {}
-    else:
-        # Medians of 3 interleaved rounds, same discipline as the
-        # scaling sections: single skew passes are straggler-dominated
-        # BY DESIGN, so one VM-steal hit (or the first-pass cache fill)
-        # can invert the plain/rebal comparison — a formal window once
-        # read rebal 12.8 > plain 7.6 on a single pass while 3
-        # interleaved rounds read 4.8 < 7.3 with rebal winning every
-        # round.
-        skew_rep = max(1, 160_000 // max(docs, 1))
-        _run_extraction(spark, skewed, rebal=False, replicate=skew_rep)
-        plains, rebals, flats = [], [], []
-        for _ in range(3):
-            plains.append(
-                _run_extraction(
-                    spark, skewed, rebal=False, replicate=skew_rep
-                )[2]
-            )
-            rebals.append(
-                _run_extraction(
-                    spark, skewed, rebal=True, replicate=skew_rep
-                )[2]
-            )
-            flats.append(
-                _run_extraction(spark, flat, replicate=skew_rep)[2]
-            )
-        skew = {
-            "flat_sec": statistics.median(flats),
-            "skew_plain_sec": statistics.median(plains),
-            "skew_rebal_sec": statistics.median(rebals),
-            "rounds": [
-                {
-                    "skew_plain_sec": round(p, 3),
-                    "skew_rebal_sec": round(r, 3),
-                    "flat_sec": round(f, 3),
-                }
-                for p, r, f in zip(plains, rebals, flats)
-            ],
-        }
-
-    # Shared-input caches (parse-once-query-many deployment shape: the
-    # clustered elements persist + the three spread driver tables +
-    # the shared distinct shingle-rows table).
-    # Filled ONCE per session and timed separately, so per-query numbers
-    # below are steady-state operator costs, not first-touch fills.
-    from py_pdf_parser_spark.queries import (
-        _docs_table,
-        _elements,
-        _emb_table,
-        _events_table,
-        _shingle_rows_table,
-        _html_table,
-        _html_blocks_table,
-        _minhash_wide_table,
-        _banded_table,
-        _patho_banded_table,
-        _pdf_corpus_table,
-        _simhash_table,
-        _kmeans_cents_table,
-    )
-
-    t0 = time.time()
-    _elements(spark, SF_DIR).count()
-    _pdf_corpus_table(spark, SF_DIR).count()
-    _docs_table(spark, SF_DIR).count()
-    _emb_table(spark, SF_DIR).count()
-    _events_table(spark, SF_DIR).count()
-    _shingle_rows_table(spark, SF_DIR).count()
-    _html_table(spark, SF_DIR).count()
-    _html_blocks_table(spark, SF_DIR).count()
-    _minhash_wide_table(spark, SF_DIR).count()
-    _banded_table(spark, SF_DIR).count()
-    _patho_banded_table(spark, SF_DIR).count()
-    _simhash_table(spark, SF_DIR).count()
-    _kmeans_cents_table(spark, SF_DIR).count()
-    cache_fill_sec = round(time.time() - t0, 3)
-
-    # Per-query timings (steady-state): one warm round, then 3 measured
-    # rounds INTERLEAVED across queries (so a host-noise window hits all
-    # queries, not one), median per query.  The DataFrame is rebuilt
-    # each round — re-forcing the same object would reuse its shuffle
-    # map outputs and report skipped-stage times.
-    qs = all_queries()
-    query_passes = {name: [] for name in BENCH_QUERIES}
-    build_passes = {name: [] for name in BENCH_QUERIES}
-    for name in BENCH_QUERIES:  # warm (includes corpus synth first run)
-        _force(qs[name](spark, SF_DIR))
-    for _ in range(1 if quick else 3):
-        for name in BENCH_QUERIES:
-            # Build timed SEPARATELY from force: build covers driver-side
-            # work a deployment pays once per plan (Catalyst analysis of
-            # big expression trees — PLANS.md r4) but ALSO any eager jobs
-            # a builder runs (td_dup_clusters' iterative CC rounds happen
-            # at build).  Reporting both keeps the steady-state operator
-            # number comparable across rounds without hiding build-side
-            # cost.
-            t0 = time.time()
-            df = qs[name](spark, SF_DIR)
-            build_passes[name].append(round(time.time() - t0, 3))
-            t0 = time.time()
-            _force(df)
-            query_passes[name].append(round(time.time() - t0, 3))
-    query_secs = {
-        name: round(statistics.median(ts), 3)
-        for name, ts in query_passes.items()
-    }
-    query_build_secs = {
-        name: round(statistics.median(ts), 3)
-        for name, ts in build_passes.items()
-    }
-
-    # LSH/CC audit (no silent caps): what the 256-doc bucket cap drops
-    # at this sf, and how many label-propagation rounds the connected
-    # components took — tracked round-over-round in the bench record.
     from py_pdf_parser_spark.queries import _docs_table, _minhash_wide_table
     from py_pdf_parser_spark.textops import dedup as dedup_ops
-    from pyspark.sql import functions as F
 
-    banded = dedup_ops.minhash_banded(_minhash_wide_table(spark, SF_DIR))
+    wide = _minhash_wide_table(spark, SF_DIR)
     cap_row = (
-        dedup_ops.bucket_cap_stats(banded, ["band", "bucket"], 256)
+        dedup_ops.bucket_cap_stats(
+            dedup_ops.minhash_banded(wide), ["band", "bucket"], 256
+        )
         .agg(
             F.count("*").alias("oversized_buckets"),
             F.sum("pairs_dropped").alias("pairs_dropped"),
@@ -958,11 +182,9 @@ def main(quick: bool = False) -> None:
     )
     cc_stats: dict = {}
     dedup_ops.dup_clusters(
-        _docs_table(spark, SF_DIR),
-        wide=_minhash_wide_table(spark, SF_DIR),
-        stats=cc_stats,
+        _docs_table(spark, SF_DIR), wide=wide, stats=cc_stats
     ).count()
-    lsh_audit = {
+    return {
         "minhash_perms": len(dedup_ops.MINHASH_PARAMS),
         "bands": dedup_ops.MINHASH_BANDS,
         "rows_per_band": dedup_ops.MINHASH_ROWS_PER_BAND,
@@ -971,113 +193,93 @@ def main(quick: bool = False) -> None:
         "cc_rounds": cc_stats.get("rounds"),
     }
 
-    # Byte-path headline: the same extraction through REAL PDF bytes
-    # (north-rule surface: docs/sec with span-sequence equality; the
-    # rendered corpus is persisted fixture fill, parse+extract is the
-    # measured operator — see queries._pdf_corpus_table).
-    from py_pdf_parser_spark.queries import _pdf_corpus_table
-    pdf_docs = _pdf_corpus_table(spark, SF_DIR).count()
-    pdf_sec = query_secs.get("pp_pdf_roundtrip_extract")
-    pdf_path = {
-        "docs": int(pdf_docs),
-        "sec": pdf_sec,
-        "docs_per_sec": (
-            round(pdf_docs / pdf_sec, 1) if pdf_sec else None
-        ),
+
+def headline(full: dict) -> dict:
+    """The stdout line: extraction throughput and scaling (from the
+    gated workloads), correctness, error share and the LSH audit.
+    Per-query times stay in the full record."""
+    m = full["metrics"]
+
+    def metric(name: str, digits: int):
+        return None if name not in m else round(m[name], digits)
+
+    dps = metric("spans_mixed.docs_per_s", 1)
+    return {
+        "metric": "spans_mixed extraction throughput (perfbench, local[nproc])",
+        "value": dps,
+        "unit": "docs/s",
+        "docs_per_sec": dps,
+        "pdf_path": {"docs_per_sec": metric("pdf_bytes.docs_per_s", 1)},
+        "skew": {"docs_per_sec": metric("skew_checkpoint.docs_per_s", 1)},
+        "scaling": {
+            "efficiency_median": metric("spans_mixed.scaling_eff", 3),
+            "levels": [1, full["nproc"]],
+        },
+        "correct": full["correct"],
+        "complete": full["complete"],
+        "error_share": round(full["failed"] / max(full["attempted"], 1), 6),
+        "lsh_audit": full["lsh_audit"],
+        "detail": RESULT,
     }
 
-    spark.stop()
 
-    # Scaling evidence: N vs 4N executors as separate pinned JVMs
-    # (local-cluster mode, package shipped via py-files).  Headline pair
-    # uses 2-core executors (8/32 host CPUs -> per-node memory bandwidth
-    # headroom, like a real cluster); the full-box 8-core pair and the
-    # Spark-free kernel control expose how much of any shortfall is the
-    # shared-host hardware rather than the engine.
-    if quick:
-        _emit_result(
-            {
-                "metric": "flagship extraction wall time (quick, "
-                f"local[{CPUS}])",
-                "value": round(sec, 3),
-                "unit": "sec",
-                "cache_fill_sec": cache_fill_sec,
-                "queries": query_secs,
-                "query_build_secs": query_build_secs,
-                "sf": sf,
-                "docs": docs,
-                "docs_per_sec": round(docs / sec, 1),
-                "pdf_path": pdf_path,
-                "lsh_audit": lsh_audit,
-            },
-            quick=True,
-        )
-        return
-    # Headline pair: 5 FIXED rounds (raised from 3 after four r5
-    # formal runs of identical code landed medians 0.835 / 0.891 /
-    # 0.972 / 0.799 — a 3-round median has too much variance on a
-    # shared VM; more pre-registered rounds stabilize the central
-    # statistic without optional stopping, and every historical run
-    # median stays in the Window record below regardless of outcome).
-    scaling = _scaling_lc(flat, docs, cores=2, rounds=5)
-    # The full-box pair is the noisiest measurement on this host (all
-    # 32 CPUs busy -> shared memory-controller contention + VM steal),
-    # so it gets more FIXED rounds (5) for a stabler median — the
-    # round count is pre-registered, never extended adaptively (r4
-    # ADVICE: optional stopping on the gate statistic guarantees
-    # crossing any threshold under noise).  Total bench stays under
-    # ~1 h so the per-round driver run always reaches its result JSON.
-    # Engine-only decomposition (control=True): each full-box round
-    # also runs the Spark-free kernel at the same two core totals
-    # back-to-back with the Spark levels, so Spark efficiency is
-    # ratioed against the hardware ceiling of ITS OWN noise window —
-    # the kernel's 8->32-proc falloff is this host's shared-memory-
-    # bandwidth ceiling, and dividing it out per round isolates what
-    # the ENGINE adds on top of the hardware.  engine_efficiency is
-    # the MEDIAN of the per-round decompositions (fixed rounds, never
-    # extended adaptively — r4 ADVICE).
-    scaling_fullbox = _scaling_lc(
-        flat, docs, cores=CPUS // 4, rounds=5, control=True
+def main() -> int:
+    os.makedirs("BENCH", exist_ok=True)
+    # Stdout carries the headline only: Spark's output, the child's
+    # summary and any traceback go to the log.
+    out_fd = os.dup(1)
+    log_fd = os.open(LOG, os.O_WRONLY | os.O_CREAT | os.O_TRUNC, 0o644)
+    os.dup2(log_fd, 1)
+    os.dup2(log_fd, 2)
+    record = rec_mod.Record(out_fd)
+    # Python workers import the engine from the repository, whatever the
+    # working directory.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     )
-    kernel_ctl = _kernel_scaling(flat)
-
-    _write_baseline_md(
-        sf, flagship, scaling, scaling_fullbox, kernel_ctl, skew, query_secs,
-        cache_fill_sec, flagship_passes=flagship_passes, pdf_path=pdf_path,
-        lsh_audit=lsh_audit,
-    )
-
-    result = {
-        "metric": "flagship extraction wall time (mixed corpus, "
-        f"local[{CPUS}])",
-        "value": round(sec, 3),
-        "unit": "sec",
-        "measurement": "median of 3 interleaved passes "
-        "(warm-up excluded; cache_fill timed separately)",
-        "flagship_passes": flagship_passes,
-        "cache_fill_sec": cache_fill_sec,
-        "queries": query_secs,
-        "query_build_secs": query_build_secs,
-        "sf": sf,
-        "docs": docs,
-        "docs_per_sec": round(docs / sec, 1),
-        "pdf_path": pdf_path,
-        "scaling": scaling,
-        "scaling_fullbox": scaling_fullbox,
-        "kernel_control": kernel_ctl,
-        "lsh_audit": lsh_audit,
-        "skew": {k: round(v, 3) for k, v in skew.items()},
+    queries: dict = {}
+    audit: dict = {}
+    session = spark_env.Session(CPUS)
+    t0 = time.perf_counter()
+    rec_mod.install_interrupts(DEADLINE_S)
+    complete = False
+    try:
+        run_perfbench(record)
+        spark = session.start()
+        time_queries(spark, queries)
+        audit = lsh_audit(spark)
+        complete = True
+    except Exception as err:  # noqa: BLE001 - any failure still gets a headline
+        traceback.print_exc()
+        if not rec_mod.INTERRUPTED_BY:
+            record.fail(f"{type(err).__name__}: {err}")
+            complete = True
+    finally:
+        signal_off()
+        session.shutdown(graceful=complete)
+    full = {
+        "complete": complete,
+        "correct": complete and record.correct,
+        "attempted": record.attempted,
+        "failed": record.failed,
+        "problems": record.problems,
+        "metrics": {k: m["value"] for k, m in sorted(record.metrics.items())},
+        "queries": queries,
+        "lsh_audit": audit or None,
+        "elapsed_s": round(time.perf_counter() - t0, 1),
+        "deadline_s": DEADLINE_S,
+        "sf_dir": SF_DIR,
+        "cpus": CPUS,
+        "nproc": spark_env.cores(),
     }
-    # Full detail (per-pass arrays) goes to a file; stdout carries the
-    # compact record only — see _emit_result.
-    _emit_result(result, full={**result, "query_passes": query_passes})
+    with open(RESULT, "w") as fh:
+        json.dump(full, fh, indent=1)
+    line = json.dumps(headline(full), separators=(",", ":")) + "\n"
+    os.write(out_fd, line.encode())
+    if not complete:
+        return 3
+    return 0 if full["correct"] else 1
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 2 and sys.argv[1] == "--lc-worker":
-        lc_worker(int(sys.argv[2]), int(sys.argv[3]), sys.argv[4],
-                  int(sys.argv[5]))
-    elif len(sys.argv) >= 2 and sys.argv[1] == "--kernel-worker":
-        kernel_worker()
-    else:
-        main(quick="--quick" in sys.argv[1:])
+    sys.exit(main())

@@ -91,4 +91,6 @@ def get_spark(
     if iceberg_warehouse:
         for k, v in iceberg_configs(iceberg_warehouse).items():
             builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark

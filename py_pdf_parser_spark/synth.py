@@ -10,7 +10,7 @@ Two corpora:
   * **oracle corpus** (``ora`` family only) — layout mirrored in DuckDB
     SQL so every pp_* query has an independent SQL oracle.
   * **mixed corpus** — all families, optionally plus pathological skew
-    docs (bigdoc/bigmedia), used by pipeline tests and ``bench.py``.
+    docs (bigdoc/bigmedia), used by pipeline tests.
 
 Content is a pure function of (kind, scale): regeneration is idempotent.
 """

@@ -1,167 +1,127 @@
-"""Unit tests for bench.py's scaling gate statistics.
+"""Tests for bench.py's driver contract: the last stdout line is a
+headline under 1 KB, and a SIGTERM still yields one."""
 
-The 0.8-rule statistics were flagged twice by round advice (r4:
-adaptive stopping on the gate statistic; r4: clamping a corrupted
-superlinear pair into the best-of headline) and the engine
-decomposition was re-designed in r5 (per-round paired control).  These
-tests pin the statistical contract with injected measurement functions
-— no Spark, no subprocesses, sub-second.
-"""
+import json
+import os
+import signal
+import subprocess
+import sys
+import time
 
 import bench
 
-
-def _mk_run_fn(small_secs, big_secs, docs=1000):
-    """run_fn returning pre-scripted per-round (small, big) times.
-
-    The small level is called first within each round (bench pairs the
-    levels back-to-back), so interleave by call order.
-    """
-    calls = {"small": 0, "big": 0}
-
-    def run_fn(n_exec):
-        if n_exec == 1:
-            sec = small_secs[calls["small"]]
-            calls["small"] += 1
-        else:
-            sec = big_secs[calls["big"]]
-            calls["big"] += 1
-        return {"docs": docs, "sec": sec}
-
-    return run_fn
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _eff(sec_small, sec_big, ratio=4):
-    return (1.0 / sec_big) / (ratio * (1.0 / sec_small))
-
-
-def test_gate_is_median_not_max():
-    # Per-round efficiencies: small fixed at 40 s, big at
-    # [12.5, 16.7, 14.3] s -> efficiencies [0.8, ~0.6, ~0.7].
-    s = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=2, rounds=3,
-        run_fn=_mk_run_fn([40.0, 40.0, 40.0], [12.5, 16.7, 14.3]),
-    )
-    effs = [r["efficiency"] for r in s["rounds"]]
-    assert max(effs) == 0.8
-    # headline == median, NOT the max round
-    assert s["efficiency"] == sorted(effs)[1] == s["efficiency_median"]
-    assert s["efficiency"] < 0.8
-
-
-def test_round_count_is_fixed():
-    calls = []
-
-    def run_fn(n_exec):
-        calls.append(n_exec)
-        return {"docs": 1000, "sec": 10.0 if n_exec == 1 else 3.125}
-
-    bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=2, rounds=5, run_fn=run_fn
-    )
-    # Exactly rounds x 2 measurements even though round 1 already
-    # cleared 0.8 (no adaptive extension, no early stop).
-    assert calls == [1, 4] * 5
-
-
-def test_superlinear_pair_excluded_from_best_pair():
-    # Round 1 is corrupted (VM steal on the small arm -> raw 1.28);
-    # round 2 is clean at 0.75, round 3 clean at 0.70.
-    s = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=2, rounds=3,
-        run_fn=_mk_run_fn([64.0, 40.0, 40.0], [12.5, 13.33, 14.29]),
-    )
-    effs = [r["efficiency"] for r in s["rounds"]]
-    assert effs[0] > 1.0
-    # best clean pair, never the corrupted one
-    assert s["efficiency_best_pair"] == max(e for e in effs if e <= 1.0)
-    # and the headline median is capped at 1.0 on the record
-    assert s["efficiency"] <= 1.0
-
-
-def test_all_pairs_corrupted_falls_back_to_least_inflated():
-    s = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=2, rounds=2,
-        run_fn=_mk_run_fn([80.0, 88.0], [12.5, 12.5]),
-    )
-    effs = [r["efficiency"] for r in s["rounds"]]
-    assert all(e > 1.0 for e in effs)
-    assert s["efficiency_best_pair"] == min(effs)
-
-
-def test_control_pairs_inside_each_round():
-    kernel_calls = []
-
-    def kernel_fn(n_procs):
-        kernel_calls.append(n_procs)
-        # hardware ceiling: 32 procs only 2x the 8-proc rate -> 0.5
-        return {8: 100.0, 32: 200.0}[n_procs]
-
-    s = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=8, rounds=3, control=True,
-        run_fn=_mk_run_fn([40.0] * 3, [20.0, 25.0, 22.2]),
-        kernel_fn=kernel_fn,
-    )
-    # one (8, 32) control pair per round, interleaved with the rounds
-    assert kernel_calls == [8, 32] * 3
-    for r in s["rounds"]:
-        assert r["ctl_efficiency"] == 0.5
-        # per-round decomposition against the SAME round's control
-        assert r["engine_efficiency"] == min(
-            1.0, round(r["efficiency"] / 0.5, 3)
-        )
-    # headline decomposition = median of per-round decompositions
-    per_round = sorted(r["engine_efficiency"] for r in s["rounds"])
-    assert s["engine_efficiency"] == per_round[1]
-    assert s["ctl_efficiency_median"] == 0.5
-
-
-def test_control_clamped_at_one():
-    # A noisy-fast control (raw 1.2) must clamp to 1.0 so it cannot
-    # deflate the engine number; engine also clamps at 1.0.
-    s = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=8, rounds=1, control=True,
-        run_fn=_mk_run_fn([40.0], [10.5]),
-        kernel_fn=lambda n: {8: 100.0, 32: 480.0}[n],
-    )
-    r = s["rounds"][0]
-    assert r["ctl_efficiency"] == 1.0
-    assert r["engine_efficiency"] == min(1.0, r["efficiency"])
+def _full_record(**over):
+    full = {
+        "complete": True,
+        "correct": True,
+        "attempted": 42680,
+        "failed": 0,
+        "problems": [],
+        "metrics": {
+            f"{w}.{m}": 1234.5678
+            for w in ("spans_mixed", "pdf_bytes", "skew_checkpoint")
+            for m in ("docs_per_s", "scaling_eff", "setup_s", "peak_rss_mb")
+        },
+        "queries": {
+            f"q{i:03d}": {"build_s": 0.123, "force_s": 1.234} for i in range(125)
+        },
+        "lsh_audit": {"minhash_perms": 32, "bands": 16, "rows_per_band": 2,
+                      "oversized_buckets": 0, "capped_pairs_dropped": 0,
+                      "cc_rounds": 5},
+        "nproc": 4,
+    }
+    full["metrics"]["spans_mixed.docs_per_s"] = 3579.123
+    full["metrics"]["spans_mixed.scaling_eff"] = 0.85123
+    full.update(over)
+    return full
 
 
 def test_slim_headline_under_capture_window():
-    import json
-
-    fullbox = bench._scaling_lc(
-        "unused", corpus_docs=10**9, cores=8, rounds=5, control=True,
-        run_fn=_mk_run_fn([40.0] * 5, [12.5, 16.7, 14.3, 15.0, 13.0]),
-        kernel_fn=lambda n: {8: 100.0, 32: 360.0}[n],
-    )
-    headline = bench._slim_headline(
-        {
-            "metric": "flagship extraction wall time (mixed corpus, "
-            "local[32])",
-            "value": 0.722,
-            "unit": "sec",
-            "sf": 0.1,
-            "docs": 20000,
-            "docs_per_sec": 27700.8,
-            "pdf_path": {"docs": 6000, "sec": 0.997,
-                         "docs_per_sec": 6018.1},
-            "lsh_audit": {"minhash_perms": 32, "bands": 16,
-                          "rows_per_band": 2, "oversized_buckets": 0,
-                          "capped_pairs_dropped": 0, "cc_rounds": 5},
-            "scaling": fullbox,
-            "scaling_fullbox": fullbox,
-            "kernel_control": {"efficiency_8_to_32": 0.9},
-            "skew": {"flat_sec": 1.84, "skew_sec": 5.32,
-                     "skew_rebal_sec": 4.30},
-            "queries": {f"q{i}": 0.5 for i in range(50)},  # must drop
-        }
-    )
+    headline = bench.headline(_full_record())
     line = json.dumps(headline, separators=(",", ":"))
     assert len(line.encode()) < 1024
     assert "queries" not in headline
-    for k in ("engine_efficiency", "ctl_efficiency_median"):
-        assert k in headline["scaling_fullbox"]
-    assert "rounds" not in headline["scaling_fullbox"]
+    assert headline["docs_per_sec"] == headline["value"] == 3579.1
+    assert headline["scaling"] == {"efficiency_median": 0.851, "levels": [1, 4]}
+    assert headline["pdf_path"]["docs_per_sec"] == 1234.6
+    assert headline["skew"]["docs_per_sec"] == 1234.6
+    assert headline["error_share"] == 0
+    assert headline["detail"] == "BENCH/RESULT.json"
+
+    # A run cut before any workload finished still has every key.
+    partial = bench.headline(_full_record(
+        complete=False, correct=False, attempted=1, failed=1, metrics={},
+        queries={}, lsh_audit=None,
+    ))
+    assert partial.keys() == headline.keys()
+    assert partial["docs_per_sec"] is None
+    assert partial["scaling"]["efficiency_median"] is None
+    assert partial["error_share"] == 1
+
+
+def _tagged_pids(tag):
+    """Live processes whose environment has ``BENCH_TEST_TAG=<tag>``."""
+    marker = f"BENCH_TEST_TAG={tag}".encode()
+    pids = []
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/environ", "rb") as fh:
+                if marker in fh.read():
+                    pids.append(int(d))
+        except OSError:
+            continue
+    return pids
+
+
+def _is_jvm(pid):
+    try:
+        with open(f"/proc/{pid}/cmdline", "rb") as fh:
+            return b"java" in fh.read().split(b"\0")[0]
+    except OSError:
+        return False
+
+
+def test_sigterm_still_prints_a_headline(tmp_path):
+    tag = f"sigterm-{os.getpid()}-{time.time_ns()}"
+    env = dict(os.environ, BENCH_TEST_TAG=tag)
+    env["SPARK_GRAFT_SF_DIR"] = os.path.join(
+        os.path.dirname(os.path.normpath(bench.SF_DIR)), "sf0.001"
+    )
+    proc = subprocess.Popen(
+        [sys.executable, os.path.join(REPO, "bench.py")],
+        cwd=tmp_path, env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+    )
+    try:
+        # Mid-run: a few seconds after the first Spark JVM of the run is up.
+        deadline = time.monotonic() + 300
+        while not any(_is_jvm(p) for p in _tagged_pids(tag)):
+            assert proc.poll() is None, "bench exited before Spark started"
+            assert time.monotonic() < deadline, "no Spark JVM within 300 s"
+            time.sleep(0.5)
+        time.sleep(5)
+        proc.send_signal(signal.SIGTERM)
+        out, _ = proc.communicate(timeout=180)
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
+
+    assert proc.returncode != 0
+    lines = out.decode().splitlines()
+    assert len(lines) == 1, lines
+    assert len(lines[0].encode()) < 1024
+    headline = json.loads(lines[0])
+    assert headline["complete"] is False
+    assert headline["correct"] is False
+    assert _tagged_pids(tag) == []
+    record = json.loads((tmp_path / "BENCH" / "RESULT.json").read_text())
+    assert record["complete"] is False
+    # The perfbench child was terminated, not killed: it printed its own
+    # partial record (exit 3), which counts every attempted doc as failed.
+    assert any(p.startswith("perfbench exited 3") for p in record["problems"])
+    assert headline["error_share"] == 1

@@ -403,6 +403,51 @@ class TestCheckpointResume:
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan
 
 
+def _span_sequences(df):
+    return {
+        r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"])
+                      for s in r["spans"]]
+        for r in df.where(F.col("status") == "ok").select("doc_id", "spans").collect()
+    }
+
+
+class TestPyFilesDeployment:
+    def test_spark_submit_py_files_on_local_cluster(self, spark, tmp_path):
+        """The cluster deployment shape: ``spark-submit --py-files`` on two
+        executor JVMs, which can import the package only from the zip
+        (no PYTHONPATH, working directory outside the repository)."""
+        import json
+        import subprocess
+        import sys
+
+        spark_submit = shutil.which("spark-submit")
+        if spark_submit is None:
+            pytest.skip("spark-submit is not on PATH")
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        path = ensure_mixed_corpus(0.001)
+        pkg = shutil.make_archive(
+            str(tmp_path / "pkg"), "zip", root_dir=repo,
+            base_dir="py_pdf_parser_spark",
+        )
+        out_dir = str(tmp_path / "out")
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        env["PYSPARK_PYTHON"] = sys.executable
+        proc = subprocess.run(
+            [spark_submit, "--master", "local-cluster[2,1,1024]",
+             "--py-files", pkg, os.path.join(repo, "jobs", "run_extract.py"),
+             "--input", path, "--output", out_dir],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        stats = json.loads(proc.stdout.strip().splitlines()[-1])
+        assert (stats["docs"], stats["errors"]) == (200, 0)
+
+        written = _span_sequences(spark.read.parquet(f"{out_dir}/extracted"))
+        local = _span_sequences(extract_spans(spark, spark.read.parquet(path)))
+        assert len(local) == 200
+        assert written == local
+
+
 class TestMaterializedElements:
     def test_parse_once_query_many_with_pushdown(self, spark, tmp_path):
         """materialize_elements: same rows as the live parse, and
