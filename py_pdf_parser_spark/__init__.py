@@ -5,4 +5,6 @@ From-scratch reimplementation of jstockwin/py-pdf-parser's semantics
 vectorized pandas/Arrow kernels.  See SURVEY.md for the blueprint.
 """
 
+from . import _worker  # noqa: F401  (once per process, see _worker.py)
+
 __version__ = "0.1.0"

@@ -8,9 +8,13 @@ Design (SURVEY.md §3.1, §4):
   is the parquet scan and the partitioned write.
 * **Vectorized kernels.** Arrow batches in, numpy per-document kernels
   inside (``kernel/``), Arrow batches out.  No per-row Python UDFs.
-* **Per-document error containment.** Reference exceptions
-  (exceptions.py:1-52) become ``status/error`` columns; a poisoned
-  document never kills a stage.
+* **Cheap tasks.** Unpickling a kernel imports this package, which stops
+  Spark's per-task re-read of its own archives (``_worker.py``): a reused
+  Python worker pays that only on its first task.
+* **Per-document error containment.** Any exception raised while
+  building or extracting one document (the reference's exceptions,
+  exceptions.py:1-52, or anything else) becomes ``status='error'`` and
+  ``error='<Class>: msg'``; a poisoned document never kills a stage.
 * **Skew handling.** AQE covers shuffle skew, but pathological documents
   (bigdoc/bigmedia families) skew *kernel compute*, which AQE cannot see:
   heavy docs (``size(spans) > heavy_threshold``) are split off and
@@ -38,7 +42,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .errors import DocError
 from .kernel.parse import doc_from_arrays
 from .kernel.recipes import recipe_for
 from .schema import (
@@ -71,7 +74,7 @@ def _flatten_span_batch(batch: pa.RecordBatch):
 
 
 def _iter_docs(batch: pa.RecordBatch, config: dict = None):
-    """Yield (pos, doc_id, Doc-or-DocError) per document in the batch."""
+    """Yield (pos, doc_id, Doc-or-exception) per document in the batch."""
     doc_ids, offs, kinds, texts, refs, offsets = _flatten_span_batch(batch)
     for pos, doc_id in enumerate(doc_ids):
         lo, hi = offs[pos], offs[pos + 1]
@@ -80,7 +83,7 @@ def _iter_docs(batch: pa.RecordBatch, config: dict = None):
                 doc_id, kinds[lo:hi], texts[lo:hi], refs[lo:hi],
                 offsets[lo:hi], config=config,
             )
-        except DocError as err:
+        except Exception as err:  # any bad document, see module docstring
             yield pos, doc_id, err
             continue
         yield pos, doc_id, doc
@@ -177,7 +180,7 @@ def parse_elements_arrow_batch(
         (doc_id, doc)
         for _, doc_id, doc in _iter_docs(batch, config)
         # parse-stage errors surface via extract_spans status
-        if not isinstance(doc, DocError)
+        if not isinstance(doc, Exception)
     )
 
 
@@ -239,7 +242,7 @@ def pack_extracted_batch(
     batch: Optional[pa.RecordBatch] = None,
     passthrough: Optional[List[str]] = None,
 ) -> pa.RecordBatch:
-    """(doc_id, Doc-or-DocError) pairs -> EXTRACTED_SCHEMA RecordBatch.
+    """(doc_id, Doc-or-exception) pairs -> EXTRACTED_SCHEMA RecordBatch.
 
     Shared by the spans path (extract_arrow_batch) and the byte-stream
     path (sources.pdf_bytes.extract_spans_from_pdf): one recipe run per
@@ -258,7 +261,7 @@ def pack_extracted_batch(
     row = 0
     for doc_id, doc in pairs:
         doc_ids.append(doc_id)
-        if isinstance(doc, Exception):  # DocError, or any byte-path error
+        if isinstance(doc, Exception):  # the document failed to build
             statuses.append("error")
             errors.append(f"{type(doc).__name__}: {doc}")
         else:
@@ -272,7 +275,7 @@ def pack_extracted_batch(
                     counts[row] = len(out)
                 statuses.append("ok")
                 errors.append(None)
-            except DocError as err:
+            except Exception as err:
                 statuses.append("error")
                 errors.append(f"{type(err).__name__}: {err}")
         list_offs[row + 1] = list_offs[row] + counts[row]
@@ -362,11 +365,16 @@ def tune_scan_splits(
 ) -> None:
     """Size parquet scan splits so the job gets ~tasks_per_core tasks/core.
 
-    Shuffle-free parallelism: measured on this box, repartitioning the
-    corpus caps extraction at ~21k docs/s (disk shuffle) / ~37k (tmpfs)
-    vs ~61k with fine scan splits and no shuffle.  At 100 TB the default
-    128 MB split already yields ~1M tasks, so the adaptive value is
-    capped there and this is a no-op; it only matters for small inputs.
+    Parallelism comes from scan splits, not a shuffle (see the module
+    docstring).  The split is input bytes / (cores * tasks_per_core),
+    clamped to [1 MiB, 128 MiB].  At 100 TB the 128 MiB cap binds (~1M
+    tasks) and this is a no-op.  Below cores * tasks_per_core MiB the
+    1 MiB floor binds: the gated perfbench inputs (~0.4 MB and ~0.18 MB)
+    get the same split, plan and tasks at 1, 2 or 4 tasks per core.
+    Paired runs on 4 CPUs (``--seconds 10``, seeds 1-3, per-task archive
+    re-read already removed) read spans_mixed 5968 / 5852 / 5670 docs/s
+    and skew_checkpoint 401 / 436 / 516 docs/s (medians at 1 / 2 / 4):
+    run-to-run noise, no value winning both, so the default stays 4.
 
     Local paths only use os.walk; on a cluster the same computation runs
     against the Hadoop FileSystem listing.

@@ -23,7 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .errors import DocError
 from .frame import ElementFrame
 from .kernel.doc import Doc
 from .kernel.layout import _MEMO_SPEC  # golden spec
@@ -206,8 +205,8 @@ def _per_doc(
     """The per-document row kernel: parse each (doc_id, spans) row of
     ``docs``; ``rows_of(doc_id, doc)`` returns that document's output
     tuples, emitted as rows of ``schema``.  A document whose parse or
-    ``rows_of`` raises DocError emits no rows; the rest of its batch is
-    unaffected."""
+    ``rows_of`` raises any exception emits no rows; the rest of its batch
+    is unaffected."""
     columns = [field.split()[0] for field in schema.split(",")]
 
     def batches_of(batches):
@@ -216,9 +215,10 @@ def _per_doc(
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
                 try:
                     doc = doc_from_spans(doc_id, spans)
-                    rows += rows_of(doc_id, doc)
-                except DocError:
+                    doc_rows = list(rows_of(doc_id, doc))
+                except Exception:
                     continue
+                rows += doc_rows
             yield pd.DataFrame(rows, columns=columns)
 
     return docs.mapInPandas(batches_of, schema)
@@ -3325,7 +3325,10 @@ reach AS (
   UNION
   SELECT r.src, s.b AS dst FROM reach r JOIN sym s ON r.dst = s.a
 ),
-clusters AS (
+-- Materialized: without it DuckDB 1.0 runs out of memory joining two
+-- CTEs derived from the recursive reach (td_prep_scrub_score's final
+-- and cx2), even with 2 GB and a spill directory.
+clusters AS MATERIALIZED (
   SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src
 ),
 kept AS (
@@ -4273,8 +4276,10 @@ def _latest_green_rounds(root: Path) -> Dict[str, int]:
 
 
 # Queries whose code paths changed after their last green driver row:
-# force a fresh row even though a green (now-stale) one exists.
-_RETOUCHED: set = set()
+# force a fresh row even though a green (now-stale) one exists.  The
+# three share _PREP_CTES, whose ``clusters`` CTE is now MATERIALIZED.
+_RETOUCHED: set = {"td_corpus_prep", "td_corpus_to_shards",
+                   "td_prep_scrub_score"}
 
 
 def _driver_order(rounds: Dict[str, int]) -> List[str]:

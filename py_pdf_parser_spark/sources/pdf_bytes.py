@@ -253,7 +253,7 @@ def _iter_pdf_docs(
 
     Per-document error isolation: one corrupt PDF (pdfminer
     PDFSyntaxError, PDFPasswordIncorrect, zlib errors...) must not fail
-    the Spark task and with it the whole job — mirror the DocError
+    the Spark task and with it the whole job — mirror the per-document
     handling in the spans parse path (pipeline._iter_docs)."""
     ids = batch.column("doc_id").to_pylist()
     datas = batch.column(bytes_col).to_pylist()
@@ -327,8 +327,8 @@ def parse_pdf_bytes(
     operator (filters, geometry, sections, tables, extraction recipes)
     works unchanged on byte-stream-loaded documents.  Documents whose
     parse raises (corrupt bytes, wrong password) are DROPPED here, like
-    the spans path drops DocError docs; use ``pdf_parse_status`` to see
-    which and why.  ``config`` may be a Doc-kwargs dict or a callable
+    the spans path drops docs whose build raises; use
+    ``pdf_parse_status`` to see which and why.  ``config`` may be a Doc-kwargs dict or a callable
     ``doc_id -> dict`` (per-family configs)."""
     from ..pipeline import pack_elements_batch
     from ..schema import ELEMENTS_SCHEMA

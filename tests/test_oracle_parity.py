@@ -24,8 +24,14 @@ def spark():
 
 
 @pytest.fixture(scope="module")
-def duck():
-    con = duckdb.connect()
+def duck(tmp_path_factory):
+    # Bounded, with a spill directory: DuckDB's default limit is 80% of
+    # the host's memory, which a shared test host cannot give it.
+    con = duckdb.connect(config={
+        "threads": "4",
+        "memory_limit": "2GB",
+        "temp_directory": str(tmp_path_factory.mktemp("duckdb")),
+    })
     for t in DRIVER_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "

@@ -65,3 +65,55 @@ def test_error_doc_does_not_poison_neighbors():
     out = extract_arrow_batch(_batch(rows), [])
     statuses = out.column(3).to_pylist()
     assert statuses.count("ok") == 5 and statuses.count("error") == 1
+
+
+def _ipc_bytes(table: pa.Table) -> bytes:
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as writer:
+        writer.write_table(table.combine_chunks())
+    return sink.getvalue().to_pybytes()
+
+
+def test_any_exception_is_contained_per_document(monkeypatch):
+    """Not only DocError: a recipe raising RuntimeError and a span struct
+    whose offsets fall outside the layout (IndexError) each become one
+    error row, and every other row is byte-identical to the clean batch."""
+    from py_pdf_parser_spark import pipeline
+
+    clean = [(f"ora-{i:06d}", ora_spans(i)) for i in range(4)]
+    clean.append(("memo-000000", memo_spans(0)))
+    malformed = [(k, t, m, -10**9) for k, t, m, _ in memo_spans(8)]
+    poisoned = clean[:2] + [("memo-000007", memo_spans(7))] + clean[2:]
+    poisoned.append(("memo-000008", malformed))
+
+    def raises(doc):
+        raise RuntimeError("recipe bug")
+
+    real_recipe_for = pipeline.recipe_for
+    monkeypatch.setattr(
+        pipeline, "recipe_for",
+        lambda doc_id: raises if doc_id == "memo-000007"
+        else real_recipe_for(doc_id),
+    )
+
+    out = pa.Table.from_batches([extract_arrow_batch(_batch(poisoned), [])])
+    rows = {r["doc_id"]: r for r in out.to_pylist()}
+    assert rows["memo-000007"]["status"] == "error"
+    assert rows["memo-000007"]["error"] == "RuntimeError: recipe bug"
+    assert rows["memo-000008"]["status"] == "error"
+    assert rows["memo-000008"]["error"].startswith("IndexError: ")
+    kept = out.filter(pa.array(
+        [d not in ("memo-000007", "memo-000008") for d in rows]
+    ))
+    expected = pa.Table.from_batches([extract_arrow_batch(_batch(clean), [])])
+    assert kept.column("status").to_pylist() == ["ok"] * len(clean)
+    assert _ipc_bytes(kept) == _ipc_bytes(expected)
+
+    # The parse stage drops the doc it cannot build (memo-000008).
+    elements = pa.Table.from_batches([parse_elements_arrow_batch(
+        _batch([r for r in poisoned if r[0] != "memo-000007"])
+    )])
+    expected = pa.Table.from_batches(
+        [parse_elements_arrow_batch(_batch(clean))]
+    )
+    assert _ipc_bytes(elements) == _ipc_bytes(expected)

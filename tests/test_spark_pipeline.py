@@ -283,6 +283,16 @@ class TestExtract:
         assert out.where(F.col("status") == "error").count() == 0
 
 
+def _executed_plan(spark, marker):
+    """The physical plan of the session's last SQL execution that mentions
+    ``marker`` (e.g. its output path), read from the status store."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription() for i in range(execs.size())
+    ]
+    return [p for p in plans if marker in p][-1]
+
+
 def _lineage_waves(spark, out_dir):
     """The lineage's part files as ``{part file: {(bucket, status, attempt)}}``
     (each wave appends its rows as one part file)."""
@@ -393,14 +403,65 @@ class TestCheckpointResume:
 
         out_dir = str(tmp_path / "job_out")
         _append_lineage(spark, out_dir, [(3, 0, 0, 0, "failed", 1, 5)])
-        store = spark._jsparkSession.sharedState().statusStore()
-        execs = store.executionsList()
-        plans = [
-            execs.apply(i).physicalPlanDescription()
-            for i in range(execs.size())
-        ]
-        plan = [p for p in plans if f"{out_dir}/_lineage" in p][-1]
+        plan = _executed_plan(spark, f"{out_dir}/_lineage")
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+class TestHotPathPlan:
+    def test_extract_spans_over_parquet_has_no_exchange(self, spark, tmp_path):
+        """The hot path stays shuffle-free: scan -> mapInArrow -> write."""
+        out = str(tmp_path / "extracted")
+        docs = spark.read.parquet(ensure_mixed_corpus(0.001))
+        extract_spans(spark, docs).write.parquet(out)
+        plan = _executed_plan(spark, out)
+        assert "Scan parquet" in plan and "MapInArrow" in plan
+        assert "Exchange" not in plan
+
+
+class TestWorkerZipCache:
+    def test_reused_worker_keeps_spark_archive_directories(self, spark):
+        """Spark calls ``importlib.invalidate_caches()`` before every task.
+        Once the package is imported, a reused worker keeps the directory
+        dicts it read for Spark's own archives (pyspark.zip, the
+        spark-core jar); a re-read builds new dicts, so their ids would
+        change on every task."""
+        import collections
+
+        import pyarrow as pa
+
+        def probe(batches):
+            import zipimport
+
+            import py_pdf_parser_spark  # noqa: F401
+
+            for _ in batches:
+                pass
+            cache = zipimport._zip_directory_cache
+            spark_archives = sorted(
+                p for p in cache
+                if os.path.basename(p) == "pyspark.zip"
+                or os.path.basename(p).startswith("spark-core")
+            )
+            dir_ids = ",".join(str(id(cache[p])) for p in spark_archives)
+            yield pa.RecordBatch.from_pydict({
+                "pid": [os.getpid()],
+                "archives": [len(spark_archives)],
+                "dir_ids": [dir_ids],
+            })
+
+        rows = (
+            spark.range(0, 32, numPartitions=32)
+            .mapInArrow(probe, "pid long, archives long, dir_ids string")
+            .collect()
+        )
+        assert len(rows) == 32
+        assert all(r["archives"] >= 1 for r in rows)
+        tasks = collections.Counter(r["pid"] for r in rows)
+        dir_ids = collections.defaultdict(set)
+        for r in rows:
+            dir_ids[r["pid"]].add(r["dir_ids"])
+        assert max(tasks.values()) >= 2
+        assert all(len(ids) == 1 for ids in dir_ids.values()), dict(tasks)
 
 
 def _span_sequences(df):
