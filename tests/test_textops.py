@@ -1978,6 +1978,147 @@ class TestIvfPq:
             assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
 
+def _round_half_up(x: float, dp: int) -> float:
+    """Spark's round() on a double: HALF_UP on the shortest decimal repr."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(
+        Decimal(repr(x)).quantize(Decimal(1).scaleb(-dp), ROUND_HALF_UP)
+    )
+
+
+def _fold_sum(values) -> float:
+    """Left-to-right sum from 0.0, the order of Spark's aggregate()."""
+    acc = 0.0
+    for v in values:
+        acc += float(v)
+    return acc
+
+
+class TestSimilarityInvariants:
+    """Oracle-independent properties of the search building blocks,
+    checked against plain numpy on seeded vectors."""
+
+    def _emb(self, spark, vecs):
+        return spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "vec_id long, embedding array<double>",
+        )
+
+    def test_single_cell_ivf_equals_exact_topk(self, spark):
+        import numpy as np
+
+        emb = self._emb(spark, np.random.RandomState(31).randn(40, 8))
+        ivf = similarity.ivf_topk(emb, n_queries=6, k=4, n_cells=1)
+        exact = similarity.cosine_topk(emb, n_queries=6, k=4)
+        got = sorted(tuple(r) for r in ivf.collect())
+        assert got == sorted(tuple(r) for r in exact.collect())
+        assert len(got) == 6 * 4
+
+    def test_single_cell_semantic_pairs_equal_brute_force(self, spark):
+        import numpy as np
+
+        rng = np.random.RandomState(32)
+        base = rng.randn(6, 8)
+        vecs = np.array([base[i % 6] + 0.3 * rng.randn(8) for i in range(48)])
+        threshold = 0.9
+
+        def cos(a, b):
+            dot = _fold_sum(a * b)
+            return dot / (
+                np.sqrt(_fold_sum(a * a)) * np.sqrt(_fold_sum(b * b))
+            )
+
+        want = set()
+        for i in range(len(vecs)):
+            for j in range(i + 1, len(vecs)):
+                c = _round_half_up(cos(vecs[i], vecs[j]), 4)
+                if c >= threshold:
+                    want.add((i, j, c))
+        got = {
+            tuple(r)
+            for r in similarity.semantic_dup_pairs(
+                self._emb(spark, vecs), threshold=threshold, n_cells=1,
+                max_bucket=len(vecs),
+            ).collect()
+        }
+        assert got == want
+        assert 0 < len(want) < len(vecs) * (len(vecs) - 1) // 2
+
+    @staticmethod
+    def _adist(q, codes, codebook, n_subs):
+        """ADC distance from the returned codebook and codes: per
+        subspace the 6dp squared distance to the coded codeword, summed
+        in sub_id order and rounded to 4dp."""
+        import numpy as np
+
+        w = len(q) // n_subs
+        parts = []
+        for s in range(n_subs):
+            d = np.asarray(q[s * w:(s + 1) * w]) - codebook[(s, codes[s])]
+            parts.append(_round_half_up(_fold_sum(d * d), 6))
+        return _round_half_up(_fold_sum(parts), 4)
+
+    def _check_adc(self, rows, queries, codes, codebook, n_subs, k,
+                   candidates):
+        got = {(r.q_id, r.vec_id): (r.adist, r.rank) for r in rows}
+        want = {}
+        for q_id, q in queries.items():
+            scored = sorted(
+                (self._adist(q, codes[v], codebook, n_subs), v)
+                for v in candidates(q_id)
+            )
+            for rank, (adist, v) in enumerate(scored[:k], start=1):
+                want[(q_id, v)] = (adist, rank)
+        assert got == want
+        assert len(want) == len(queries) * k
+
+    def test_pq_adc_distances_match_numpy(self, spark):
+        import numpy as np
+
+        vecs = np.random.RandomState(33).randn(40, 8)
+        emb = self._emb(spark, vecs)
+        cb = similarity.pq_train(emb, n_subs=4, n_codes=8)
+        codes = similarity.pq_assign(emb, cb, n_subs=4)
+        rows = similarity.pq_adc_topk(
+            emb, cb, codes=codes, n_queries=5, k=4, n_subs=4
+        ).collect()
+        codebook = {(r.sub_id, r.code): np.array(r.centroid)
+                    for r in cb.collect()}
+        code_of = {r.vec_id: r.codes for r in codes.collect()}
+        self._check_adc(
+            rows, {i: vecs[i] for i in range(5)}, code_of, codebook, 4, 4,
+            lambda q_id: [v for v in code_of if v != q_id],
+        )
+
+    def test_ivfpq_adc_distances_match_numpy(self, spark):
+        import numpy as np
+
+        rng = np.random.RandomState(34)
+        base = rng.randn(3, 8) * 3
+        vecs = np.array([base[i % 3] + rng.randn(8) for i in range(60)])
+        emb = self._emb(spark, vecs)
+        res = similarity.ivf_residuals(emb, n_cells=3)
+        cb = similarity.pq_train(
+            res.select("vec_id", "embedding"), n_subs=4, n_codes=4
+        )
+        rows = similarity.ivfpq_topk(
+            emb, residuals=res, codebook=cb, n_cells=3, n_queries=4, k=3,
+            n_subs=4,
+        ).collect()
+        codebook = {(r.sub_id, r.code): np.array(r.centroid)
+                    for r in cb.collect()}
+        code_of = {r.vec_id: r.codes
+                   for r in similarity.pq_assign(res, cb, n_subs=4).collect()}
+        resid = {r.vec_id: (r.cell_id, r.embedding) for r in res.collect()}
+        self._check_adc(
+            rows, {i: resid[i][1] for i in range(3, 7)}, code_of, codebook,
+            4, 3,
+            lambda q_id: [v for v in code_of if v != q_id
+                          and resid[v][0] == resid[q_id][0]],
+        )
+
+
 class TestBm25:
     """analysis.bm25_topk: Okapi BM25 retrieval for targeted curation."""
 
