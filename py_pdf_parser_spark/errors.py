@@ -2,8 +2,8 @@
 
 Mirrors the reference exception taxonomy (/root/reference/py_pdf_parser/
 exceptions.py:1-52).  In a distributed job these NEVER kill a stage: the
-pipeline kernel catches ``DocError`` per document and emits an error-status
-row instead (see ``pipeline.extract_spans``).
+pipeline kernel catches any ``Exception`` per document, these included, and
+emits an error-status row instead (see ``pipeline.extract_spans``).
 """
 
 

@@ -2,7 +2,7 @@
 
 The distributed analogue of the reference's ``load()`` (loaders.py:44-102):
 the document's span stream becomes ordered, classified elements.  Runs
-inside ``mapInPandas`` over Arrow batches (see ``pipeline.py``); this module
+inside ``mapInArrow`` over Arrow batches (see ``pipeline.py``); this module
 is pure numpy/pandas and unit-testable without Spark.
 
 Text spans become text elements; media spans become pass-through media
@@ -32,9 +32,15 @@ def doc_from_arrays(
 
     The Arrow fast path: the pipeline flattens a whole batch's span
     structs into flat columns once (C-level) and hands per-document
-    slices here — no per-span Python objects are created.
+    slices here — no per-span Python objects are created.  A null span
+    offset raises ``ValueError``: Arrow hands a column with nulls over as
+    float64 with NaN (and one without as int64), so only a float slice
+    needs the NaN scan.
     """
-    offsets_arr = np.asarray(offsets, dtype=np.int64)
+    offsets = np.asarray(offsets)
+    if offsets.dtype.kind == "f" and np.isnan(offsets).any():
+        raise ValueError("null span offset")
+    offsets_arr = offsets.astype(np.int64, copy=False)
     layout = layout_for(doc_id, offsets_arr)
     cfg = config_for(doc_id)
     if config:

@@ -3,7 +3,7 @@
 Design (SURVEY.md §3.1, §4):
 
 * **Shuffle-free core.** Each input row is one complete document, so
-  parse + extract is embarrassingly parallel ``mapInPandas`` — no groupBy,
+  parse + extract is embarrassingly parallel ``mapInArrow`` — no groupBy,
   no join, no shuffle in the hot path.  At 100 TB the only data movement
   is the parquet scan and the partitioned write.
 * **Vectorized kernels.** Arrow batches in, numpy per-document kernels

@@ -2361,60 +2361,154 @@ def td_ngram_jaccard_pairs(spark, sf_dir):
 
 
 # -- similarity search ------------------------------------------------------------------
+#
+# The emb_* oracles are assembled from one DuckDB fragment per step, each
+# the mirror of one similarity.py helper: the stand-in cells (_cells), the
+# nearest-cell assignment (_ivf_scored), the cosine rerank (_rerank_topk)
+# and top-k tail (_top_k), the chunk-capped pair join (_capped_pairs), one
+# Lloyd's iteration keyed by its grouping columns (_lloyd_update), the PQ
+# subvector CTE + training (pq_train / pq_assign) and the ADC LUT + scoring
+# (_adc_topk).  Fragments open with ", name AS (" so they chain after the
+# WITH of _emb_duck; the top-k tail ends the statement.
 
 
-@q(
-    "emb_cosine_topk",
-    """
-WITH e AS (
+def _emb_duck(name: str = "e") -> str:
+    return f"""
+WITH {name} AS (
   SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), q AS (
-  SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id < 10
-), j AS (
-  SELECT q.q_id, e.vec_id,
-         round(list_cosine_similarity(q.q_emb, e.emb), 4) AS cos
-  FROM q, e WHERE e.vec_id != q.q_id
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id)
+)"""
+
+
+def _topk_tail_duck(src: str, order: str) -> str:
+    """_top_k: the best 5 rows of ``src`` (q_id, vec_id, score) per
+    query by ``order`` (the score column, optionally DESC), ties by
+    vec_id."""
+    score = order.split()[0]
+    return f"""
+, r AS (
+  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY {order}, vec_id)
       AS rank
-  FROM j
+  FROM {src}
 )
-SELECT q_id, vec_id, cos, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5""",
-)
+SELECT q_id, vec_id, {score}, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5"""
+
+
+def _rerank_duck(corpus: str, key: str = None, q_from: str = None,
+                 q_key: str = None) -> str:
+    """_rerank_topk: the queries ``q_from`` (default: the first 10
+    corpus rows) rerank by 4dp cosine against the ``corpus`` rows
+    (vec_id, emb[, key]) whose ``key`` equals theirs (``q_key``: the
+    query side's key expression, default the key column)."""
+    q_from = q_from or f"{corpus} WHERE vec_id < 10"
+    q_col = f", {q_key or key} AS q_key" if key else ""
+    on = f"a.{key} = q.q_key AND " if key else ""
+    return f"""
+, q AS (
+  SELECT vec_id AS q_id, emb AS q_emb{q_col}
+  FROM {q_from}
+), j AS (
+  SELECT q.q_id, a.vec_id,
+         round(list_cosine_similarity(q.q_emb, a.emb), 4) AS cos
+  FROM q JOIN {corpus} a ON {on}a.vec_id != q.q_id
+)""" + _topk_tail_duck("j", "cos DESC")
+
+
+def _standin_duck(name: str, src: str = "e") -> str:
+    """_cells' stand-in: the first 16 vectors as cells (cell_id, c)."""
+    return f"""
+, {name} AS (
+  SELECT vec_id AS cell_id, emb AS c FROM {src} WHERE vec_id < 16
+)"""
+
+
+def _assign_duck(cells: str, src: str = "e") -> str:
+    """_ivf_scored: ``scored`` ranks every ``src`` row's (vec_id, emb)
+    ``cells`` (cell_id, c) by cosine, lowest cell_id on ties;
+    ``assigned`` (vec_id, emb, cell_id) keeps its nearest cell."""
+    return f"""
+, scored AS (
+  SELECT x.vec_id, x.emb, c.cell_id,
+         row_number() OVER (PARTITION BY x.vec_id
+             ORDER BY list_cosine_similarity(x.emb, c.c) DESC,
+                      c.cell_id) AS rn
+  FROM {src} x CROSS JOIN {cells} c
+), assigned AS (
+  SELECT vec_id, emb, cell_id FROM scored WHERE rn = 1
+)"""
+
+
+def _capped_pairs_duck(src: str, key: str, threshold: float) -> str:
+    """_capped_pairs: ``p`` (id_a, id_b, cos) = the ``src`` (vec_id, emb,
+    key) pairs sharing a ``key`` group and md5 chunk (ceil(n / 256) per
+    group) with 4dp cosine >= ``threshold``."""
+    return f"""
+, cnt AS (
+  SELECT {key}, COUNT(*) AS n FROM {src} GROUP BY {key}
+), ch AS (
+  SELECT x.vec_id, x.emb, x.{key},
+         CAST('0x' || substr(md5(CAST(x.vec_id AS VARCHAR)), 1, 8) AS BIGINT)
+             % CAST(ceil(c.n / 256.0) AS BIGINT) AS chunk
+  FROM {src} x JOIN cnt c ON x.{key} = c.{key}
+), p AS (
+  SELECT * FROM (
+    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           round(list_cosine_similarity(a.emb, b.emb), 4) AS cos
+    FROM ch a JOIN ch b
+      ON a.{key} = b.{key} AND a.chunk = b.chunk AND a.vec_id < b.vec_id
+  ) WHERE cos >= {threshold}
+)"""
+
+
+def _lloyd_assign_duck(n: int, src: str, score: str, cell: str,
+                       group: tuple = (), order: str = "") -> str:
+    """s{n} scores every ``src`` row (vec_id, *group, ...) against each
+    codeword (*group, cell, c) of c{n-1} by ``score`` (an expression over
+    x and c, 6dp so both engines rank identical values); a{n} (vec_id,
+    *group, cell, d) keeps the best by ``d {order}``, lowest cell on
+    ties."""
+    on = " AND ".join(f"x.{g} = c.{g}" for g in group) or "true"
+    xg = "".join(f"x.{g}, " for g in group)
+    part = "".join(f", {g}" for g in group)
+    return f"""
+, s{n} AS (
+  SELECT x.vec_id, {xg}c.{cell}, {score} AS d
+  FROM {src} x JOIN c{n - 1} c ON {on}
+), a{n} AS (
+  SELECT * EXCLUDE (rn) FROM (
+    SELECT *, row_number() OVER (PARTITION BY vec_id{part}
+                                 ORDER BY d{order}, {cell}) AS rn
+    FROM s{n}) WHERE rn = 1
+)"""
+
+
+def _lloyd_iter_duck(n: int, src: str, vec: str, score: str, cell: str,
+                     group: tuple = (), order: str = "") -> str:
+    """One Lloyd's iteration: the a{n} assignment, then _lloyd_update —
+    c{n} (*group, cell, c) = the per-(*group, cell) component means of
+    the assigned ``vec`` arrays, 6dp."""
+    keys = ", ".join((*group, cell))
+    using = ", ".join(("vec_id", *group))
+    return _lloyd_assign_duck(n, src, score, cell, group, order) + f"""
+, x{n} AS (
+  SELECT a.*, unnest(generate_series(1, len(x.{vec}))) AS pos, x.{vec} AS v
+  FROM a{n} a JOIN {src} x USING ({using})
+), m{n} AS (
+  SELECT {keys}, pos, round(avg(v[pos]), 6) AS m
+  FROM x{n} GROUP BY {keys}, pos
+), c{n} AS (
+  SELECT {keys}, list(m ORDER BY pos) AS c FROM m{n} GROUP BY {keys}
+)"""
+
+
+@q("emb_cosine_topk", _emb_duck() + _rerank_duck("e"))
 def emb_cosine_topk(spark, sf_dir):
     return similarity.cosine_topk(_emb_table(spark, sf_dir))
 
 
 @q(
     "emb_ivf_topk",
-    """
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), cents AS (
-  SELECT vec_id AS cell_id, emb AS c_emb FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, e.emb, c.cell_id,
-         list_cosine_similarity(e.emb, c.c_emb) AS c_cos
-  FROM e CROSS JOIN cents c
-), assigned AS (
-  SELECT vec_id, emb, cell_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY vec_id ORDER BY c_cos DESC, cell_id) AS rn
-    FROM scored
-  ) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS q_id, emb AS q_emb, cell_id AS q_cell
-  FROM assigned WHERE vec_id < 10
-), j AS (
-  SELECT q.q_id, a.vec_id,
-         round(list_cosine_similarity(q.q_emb, a.emb), 4) AS cos
-  FROM q JOIN assigned a ON a.cell_id = q.q_cell AND a.vec_id != q.q_id
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id)
-      AS rank
-  FROM j
-)
-SELECT q_id, vec_id, cos, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5""",
+    _emb_duck() + _standin_duck("cells") + _assign_duck("cells")
+    + _rerank_duck("assigned", "cell_id"),
 )
 def emb_ivf_topk(spark, sf_dir):
     """IVF-bucketed ANN: coarse-quantize to deterministic centroids,
@@ -2424,32 +2518,10 @@ def emb_ivf_topk(spark, sf_dir):
 
 @q(
     "emb_ivf_multiprobe",
-    """
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), cents AS (
-  SELECT vec_id AS cell_id, emb AS c_emb FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, e.emb, c.cell_id,
-         row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.emb, c.c_emb) DESC,
-                      c.cell_id) AS rn
-  FROM e CROSS JOIN cents c
-), corpus AS (
-  SELECT vec_id, emb, cell_id FROM scored WHERE rn = 1
-), q AS (
-  SELECT vec_id AS q_id, emb AS q_emb, cell_id AS q_cell
-  FROM scored WHERE vec_id < 10 AND rn <= 2
-), j AS (
-  SELECT q.q_id, a.vec_id,
-         round(list_cosine_similarity(q.q_emb, a.emb), 4) AS cos
-  FROM q JOIN corpus a ON a.cell_id = q.q_cell AND a.vec_id != q.q_id
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id)
-      AS rank
-  FROM j
-)
-SELECT q_id, vec_id, cos, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5""",
+    _emb_duck() + _standin_duck("cells") + _assign_duck("cells")
+    + _rerank_duck(
+        "assigned", "cell_id", q_from="scored WHERE vec_id < 10 AND rn <= 2"
+    ),
 )
 def emb_ivf_multiprobe(spark, sf_dir):
     """Multi-probe IVF ANN (n_probe=2): the query's two nearest cells
@@ -2472,31 +2544,13 @@ def _sketch_duck(col: str) -> str:
 
 
 def _emb_lsh_cte() -> str:
-    return f"""
-WITH e0 AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), e AS (
+    return _emb_duck("e0") + f"""
+, e AS (
   SELECT vec_id, emb, CAST({_sketch_duck("emb")} AS BIGINT) AS bucket FROM e0
 )"""
 
 
-@q(
-    "emb_lsh_topk",
-    _emb_lsh_cte()
-    + """, q AS (
-  SELECT vec_id AS q_id, emb AS q_emb, bucket AS q_bucket
-  FROM e WHERE vec_id < 10
-), j AS (
-  SELECT q.q_id, e.vec_id,
-         round(list_cosine_similarity(q.q_emb, e.emb), 4) AS cos
-  FROM q JOIN e ON e.bucket = q.q_bucket AND e.vec_id != q.q_id
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id)
-      AS rank
-  FROM j
-)
-SELECT q_id, vec_id, cos, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5""",
-)
+@q("emb_lsh_topk", _emb_lsh_cte() + _rerank_duck("e", "bucket"))
 def emb_lsh_topk(spark, sf_dir):
     return similarity.lsh_topk(
         _emb_table(spark, sf_dir), hashed=_emb_hashed_table(spark, sf_dir)
@@ -2508,22 +2562,8 @@ def _lsh_multiprobe_oracle() -> str:
         f"xor(bucket, {1 << h})"
         for h in range(similarity.N_HYPERPLANES)
     )
-    return (
-        _emb_lsh_cte()
-        + f""", q AS (
-  SELECT vec_id AS q_id, emb AS q_emb,
-         unnest([bucket, {probes}]) AS q_bucket
-  FROM e WHERE vec_id < 10
-), j AS (
-  SELECT q.q_id, e.vec_id,
-         round(list_cosine_similarity(q.q_emb, e.emb), 4) AS cos
-  FROM q JOIN e ON e.bucket = q.q_bucket AND e.vec_id != q.q_id
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id)
-      AS rank
-  FROM j
-)
-SELECT q_id, vec_id, cos, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5"""
+    return _emb_lsh_cte() + _rerank_duck(
+        "e", "bucket", q_key=f"unnest([bucket, {probes}])"
     )
 
 
@@ -2539,41 +2579,15 @@ def emb_lsh_multiprobe(spark, sf_dir):
 
 
 def _kmeans_oracle() -> str:
-    """Two Lloyd's iterations in plain SQL, mirroring
-    similarity.kmeans_centroids step for step: init = first 16 vectors,
-    assignment = round(cos, 6) DESC with cell_id tie-break, update =
-    per-(cell, position) mean rounded to 6dp (so both engines iterate
-    on identical component values)."""
-    it = """
-, s{n} AS (
-  SELECT e.vec_id, c.cell_id,
-         round(list_cosine_similarity(e.emb, c.c), 6) AS cos
-  FROM e CROSS JOIN c{p} c
-), a{n} AS (
-  SELECT vec_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY cos DESC, cell_id) AS rn
-    FROM s{n}) WHERE rn = 1
-), x{n} AS (
-  SELECT a.cell_id, unnest(generate_series(1, len(e.emb))) AS pos,
-         e.emb AS emb
-  FROM a{n} a JOIN e USING (vec_id)
-), m{n} AS (
-  SELECT cell_id, pos, round(avg(emb[pos]), 6) AS m
-  FROM x{n} GROUP BY cell_id, pos
-), c{n} AS (
-  SELECT cell_id, list(m ORDER BY pos) AS c FROM m{n} GROUP BY cell_id
-)"""
+    """Two Lloyd's iterations mirroring similarity.kmeans_centroids:
+    init = first 16 vectors, assignment = round(cos, 6) DESC with
+    cell_id tie-break, update = per-(cell, position) mean rounded to
+    6dp (so both engines iterate on identical component values)."""
+    cos = "round(list_cosine_similarity(x.emb, c.c), 6)"
     return (
-        """
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), c0 AS (
-  SELECT vec_id AS cell_id, emb AS c FROM e WHERE vec_id < 16
-)"""
-        + it.format(n=1, p=0)
-        + it.format(n=2, p=1)
+        _emb_duck() + _standin_duck("c0")
+        + _lloyd_iter_duck(1, "e", "emb", cos, "cell_id", order=" DESC")
+        + _lloyd_iter_duck(2, "e", "emb", cos, "cell_id", order=" DESC")
     )
 
 
@@ -2586,34 +2600,11 @@ SELECT cell_id, CAST(pos - 1 AS BIGINT) AS pos, m AS val FROM m2"""
 
 
 def _kmeans_ivf_oracle() -> str:
-    """IVF search against the TRAINED codebook (c2): same search shape
-    as emb_ivf_topk's oracle, centroids swapped for the k-means CTE."""
+    """IVF search against the TRAINED codebook (c2): emb_ivf_topk's
+    oracle with the stand-in cells swapped for the k-means CTE."""
     return (
-        _kmeans_oracle()
-        + """
-, scored AS (
-  SELECT e.vec_id, e.emb, c.cell_id,
-         list_cosine_similarity(e.emb, c.c) AS c_cos
-  FROM e CROSS JOIN c2 c
-), assigned AS (
-  SELECT vec_id, emb, cell_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY vec_id ORDER BY c_cos DESC, cell_id) AS rn
-    FROM scored
-  ) WHERE rn = 1
-), q AS (
-  SELECT vec_id AS q_id, emb AS q_emb, cell_id AS q_cell
-  FROM assigned WHERE vec_id < 10
-), j AS (
-  SELECT q.q_id, a.vec_id,
-         round(list_cosine_similarity(q.q_emb, a.emb), 4) AS cos
-  FROM q JOIN assigned a ON a.cell_id = q.q_cell AND a.vec_id != q.q_id
-), r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id)
-      AS rank
-  FROM j
-)
-SELECT q_id, vec_id, cos, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5"""
+        _kmeans_oracle() + _assign_duck("c2")
+        + _rerank_duck("assigned", "cell_id")
     )
 
 
@@ -2669,21 +2660,9 @@ def emb_kmeans_ivf_topk(spark, sf_dir):
 
 @q(
     "emb_dup_pairs",
-    _emb_lsh_cte()
-    + """, cnt AS (
-  SELECT bucket, COUNT(*) AS n FROM e GROUP BY bucket
-), ec AS (
-  SELECT e.vec_id, e.emb, e.bucket,
-         CAST('0x' || substr(md5(CAST(e.vec_id AS VARCHAR)), 1, 8) AS BIGINT)
-             % CAST(ceil(c.n / 256.0) AS BIGINT) AS chunk
-  FROM e JOIN cnt c ON e.bucket = c.bucket
-), p AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         round(list_cosine_similarity(a.emb, b.emb), 4) AS cos
-  FROM ec a JOIN ec b
-    ON a.bucket = b.bucket AND a.chunk = b.chunk AND a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, cos FROM p WHERE cos >= 0.9""",
+    _emb_lsh_cte() + _capped_pairs_duck("e", "bucket", 0.9)
+    + """
+SELECT id_a, id_b, cos FROM p""",
 )
 def emb_dup_pairs(spark, sf_dir):
     return similarity.embedding_dup_pairs(
@@ -2693,40 +2672,19 @@ def emb_dup_pairs(spark, sf_dir):
 
 
 def _semantic_dedup_oracle() -> str:
-    """Stand-in-centroid assignment over the PLANTED near-dup fixture
-    (the emb_ivf_topk fragment re-pointed at read_parquet) +
-    chunk-capped within-cell pairs (the emb_dup_pairs fragment) +
-    recursive transitive closure (the corpus_prep fragment)."""
+    """Stand-in-cell assignment over the PLANTED near-dup fixture +
+    chunk-capped within-cell pairs + recursive transitive closure (the
+    corpus_prep fragment)."""
     return (
         """
 WITH RECURSIVE e AS (
   SELECT vec_id, embedding::DOUBLE[] AS emb
   FROM read_parquet('{embdup_path}/*.parquet')
-), c2 AS (
-  SELECT vec_id AS cell_id, emb AS c FROM e WHERE vec_id < 16
-), scored AS (
-  SELECT e.vec_id, e.emb, c.cell_id,
-         list_cosine_similarity(e.emb, c.c) AS c_cos
-  FROM e CROSS JOIN c2 c
-), assigned AS (
-  SELECT vec_id, emb, cell_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY vec_id ORDER BY c_cos DESC, cell_id) AS rn
-    FROM scored
-  ) WHERE rn = 1
-), cnt AS (
-  SELECT cell_id, COUNT(*) AS n FROM assigned GROUP BY cell_id
-), ac AS (
-  SELECT a.vec_id, a.emb, a.cell_id,
-         CAST('0x' || substr(md5(CAST(a.vec_id AS VARCHAR)), 1, 8) AS BIGINT)
-             % CAST(ceil(c.n / 256.0) AS BIGINT) AS chunk
-  FROM assigned a JOIN cnt c USING (cell_id)
-), p AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM ac a JOIN ac b
-    ON a.cell_id = b.cell_id AND a.chunk = b.chunk AND a.vec_id < b.vec_id
-  WHERE round(list_cosine_similarity(a.emb, b.emb), 4) >= 0.9
-), sym AS (
+)"""
+        + _standin_duck("cells") + _assign_duck("cells")
+        + _capped_pairs_duck("assigned", "cell_id", 0.9)
+        + """
+, sym AS (
   SELECT id_a AS a, id_b AS b FROM p
   UNION ALL
   SELECT id_b AS a, id_a AS b FROM p
@@ -2762,45 +2720,22 @@ def emb_semantic_dedup(spark, sf_dir):
 
 # --- product quantization (Jegou et al. 2011): the memory-bound ANN
 # compression that completes the similarity stack (exact -> LSH -> IVF
-# -> PQ codes + ADC).  The oracle unrolls the same two Lloyd's
-# iterations PER SUBSPACE by carrying sub_id as a grouping key through
-# the kmeans CTE shape; distances round to 6dp before ranking so both
-# engines iterate on identical values (same argument as _kmeans_oracle:
-# FP summation-order noise is ~1e-15, nine orders below the step).
-
-_PQ_ITER = """
-, s{n} AS (
-  SELECT sv.vec_id, sv.sub_id, c.code,
-         round(list_distance(sv.v, c.c), 6) AS d
-  FROM sv JOIN c{p} c USING (sub_id)
-), a{n} AS (
-  SELECT vec_id, sub_id, code FROM (
-    SELECT vec_id, sub_id, code,
-           row_number() OVER (PARTITION BY vec_id, sub_id
-                              ORDER BY d, code) AS rn
-    FROM s{n}) WHERE rn = 1
-), x{n} AS (
-  SELECT a.sub_id, a.code,
-         unnest(generate_series(1, len(sv.v))) AS pos, sv.v AS v
-  FROM a{n} a JOIN sv USING (vec_id, sub_id)
-), m{n} AS (
-  SELECT sub_id, code, pos, round(avg(v[pos]), 6) AS m
-  FROM x{n} GROUP BY sub_id, code, pos
-), c{n} AS (
-  SELECT sub_id, code, list(m ORDER BY pos) AS c
-  FROM m{n} GROUP BY sub_id, code
-)"""
+# -> PQ codes + ADC).  The oracle runs the k-means Lloyd's iteration
+# PER SUBSPACE by carrying sub_id as a grouping key; distances round to
+# 6dp before ranking so both engines iterate on identical values (same
+# argument as _kmeans_oracle: FP summation-order noise is ~1e-15, nine
+# orders below the step).
 
 
-def _pq_oracle_base() -> str:
-    """Subvector table -> init codebook -> 2 unrolled training
-    iterations -> final assignment a3 (with its distance d) against
-    the trained codebook c2.  M=4 subspaces, K=8 codewords."""
+def _pq_train_duck() -> str:
+    """pq_train + pq_assign over ``e`` (vec_id, emb): the subvector CTE
+    sv (M=4), init codebook c0 = the first 8 vectors' subvectors, 2
+    Lloyd's iterations keyed by sub_id, then the final assignment a3
+    (vec_id, sub_id, code, d) against the trained codebook c2 (K=8)."""
+    l2 = "round(list_distance(x.v, c.c), 6)"
     return (
         """
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), sv AS (
+, sv AS (
   SELECT vec_id, CAST(s AS BIGINT) AS sub_id,
          list_slice(emb, CAST(s AS INT) * (len(emb) // 4) + 1,
                     (CAST(s AS INT) + 1) * (len(emb) // 4)) AS v
@@ -2808,21 +2743,32 @@ WITH e AS (
 ), c0 AS (
   SELECT sub_id, vec_id AS code, v AS c FROM sv WHERE vec_id < 8
 )"""
-        + _PQ_ITER.format(n=1, p=0)
-        + _PQ_ITER.format(n=2, p=1)
-        + """
-, s3 AS (
-  SELECT sv.vec_id, sv.sub_id, c.code,
-         round(list_distance(sv.v, c.c), 6) AS d
-  FROM sv JOIN c2 c USING (sub_id)
-), a3 AS (
-  SELECT vec_id, sub_id, code, d FROM (
-    SELECT vec_id, sub_id, code, d,
-           row_number() OVER (PARTITION BY vec_id, sub_id
-                              ORDER BY d, code) AS rn
-    FROM s3) WHERE rn = 1
-)"""
+        + _lloyd_iter_duck(1, "sv", "v", l2, "code", ("sub_id",))
+        + _lloyd_iter_duck(2, "sv", "v", l2, "code", ("sub_id",))
+        + _lloyd_assign_duck(3, "sv", l2, "code", ("sub_id",))
     )
+
+
+def _adc_topk_duck(q_where: str, probe: str = "") -> str:
+    """_adc_topk over the codes a3 and codebook c2: lut = each query
+    subvector's (``q_where`` on vec_id) 6dp squared distance to every
+    codeword, summed in list order like Spark's _SUB_D2; sc = every
+    other vector's 4dp sum of its codes' LUT entries, restricted by
+    the ``probe`` join over a (candidate codes) and l (LUT rows)."""
+    d2 = ("list_reduce(list_transform(qs.v, (x, i) -> (x - c.c[i]) * "
+          "(x - c.c[i])), (acc, y) -> acc + y)")
+    return f"""
+, qsv AS (
+  SELECT vec_id AS q_id, sub_id, v FROM sv WHERE {q_where}
+), lut AS (
+  SELECT qs.q_id, c.sub_id, c.code, round({d2}, 6) AS d2
+  FROM qsv qs JOIN c2 c USING (sub_id)
+), sc AS (
+  SELECT l.q_id, a.vec_id, round(SUM(l.d2), 4) AS adist
+  FROM a3 a JOIN lut l ON a.sub_id = l.sub_id AND a.code = l.code{probe}
+  WHERE a.vec_id != l.q_id
+  GROUP BY l.q_id, a.vec_id
+)""" + _topk_tail_duck("sc", "adist")
 
 
 def _pq_codebook_table(spark, sf_dir):
@@ -2835,7 +2781,7 @@ def _pq_codebook_table(spark, sf_dir):
 
 @q(
     "emb_pq_codes",
-    _pq_oracle_base()
+    _emb_duck() + _pq_train_duck()
     + """
 SELECT vec_id, sub_id, CAST(code AS BIGINT) AS code FROM a3""",
 )
@@ -2853,26 +2799,7 @@ def emb_pq_codes(spark, sf_dir):
 
 @q(
     "emb_pq_adc_topk",
-    _pq_oracle_base()
-    + """
-, q AS (
-  SELECT vec_id AS q_id, sub_id, v FROM sv WHERE vec_id < 10
-), lut AS (
-  SELECT q.q_id, c.sub_id, c.code,
-         round(power(list_distance(q.v, c.c), 2), 6) AS d2
-  FROM q JOIN c2 c USING (sub_id)
-), sc AS (
-  SELECT l.q_id, a.vec_id, round(SUM(l.d2), 4) AS adist
-  FROM a3 a JOIN lut l ON a.sub_id = l.sub_id AND a.code = l.code
-  GROUP BY l.q_id, a.vec_id
-), r AS (
-  SELECT q_id, vec_id, adist,
-         row_number() OVER (PARTITION BY q_id
-                            ORDER BY adist, vec_id) AS rank
-  FROM sc WHERE vec_id != q_id
-)
-SELECT q_id, vec_id, adist, CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= 5""",
+    _emb_duck() + _pq_train_duck() + _adc_topk_duck("vec_id < 10"),
 )
 def emb_pq_adc_topk(spark, sf_dir):
     """Asymmetric Distance Computation top-k over the codes table:
@@ -2888,7 +2815,7 @@ def emb_pq_adc_topk(spark, sf_dir):
 
 @q(
     "emb_pq_recon_stats",
-    _pq_oracle_base()
+    _emb_duck() + _pq_train_duck()
     + """
 SELECT sub_id, CAST(COUNT(*) AS BIGINT) AS n_vecs,
        round(AVG(d), 4) AS mean_dist
@@ -2914,80 +2841,28 @@ def _ivf_residuals_table(spark, sf_dir):
 
 
 def _ivfpq_oracle() -> str:
-    """The IVFADC composition in SQL: the ivf_assign fragment (coarse
-    cells = first-16-vectors stand-in) -> exact residual subtraction
-    -> the PQ training CTE over residuals -> single-probe ADC within
-    the query's own cell."""
+    """The IVFADC composition in SQL: stand-in cell assignment ->
+    exact residual subtraction (the new ``e``) -> PQ training over the
+    residuals -> single-probe ADC within the query's own cell.  Queries
+    start AFTER the stand-in centroids: vec_id < 16 ARE the centroids,
+    so their residuals are identically zero."""
     return (
-        """
-WITH e0 AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-), cc AS (
-  SELECT vec_id AS cell_id, emb AS c FROM e0 WHERE vec_id < 16
-), sc0 AS (
-  SELECT e0.vec_id, e0.emb, cc.cell_id,
-         list_cosine_similarity(e0.emb, cc.c) AS c_cos
-  FROM e0 CROSS JOIN cc
-), asg AS (
-  SELECT vec_id, emb, cell_id FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY vec_id ORDER BY c_cos DESC, cell_id) AS rn
-    FROM sc0) WHERE rn = 1
-), e AS (
+        _emb_duck("e0") + _standin_duck("cells", "e0")
+        + _assign_duck("cells", "e0")
+        + """
+, e AS (
   SELECT a.vec_id, a.cell_id,
          list_transform(generate_series(1, len(a.emb)),
                         i -> a.emb[i] - c.c[i]) AS emb
-  FROM asg a JOIN cc c USING (cell_id)
-), sv AS (
-  SELECT vec_id, CAST(s AS BIGINT) AS sub_id,
-         list_slice(emb, CAST(s AS INT) * (len(emb) // 4) + 1,
-                    (CAST(s AS INT) + 1) * (len(emb) // 4)) AS v
-  FROM e, (SELECT unnest(range(0, 4)) AS s) t
-), c0 AS (
-  SELECT sub_id, vec_id AS code, v AS c FROM sv WHERE vec_id < 8
+  FROM assigned a JOIN cells c USING (cell_id)
 )"""
-        + _PQ_ITER.format(n=1, p=0)
-        + _PQ_ITER.format(n=2, p=1)
-        + """
-, s3 AS (
-  SELECT sv.vec_id, sv.sub_id, c.code,
-         round(list_distance(sv.v, c.c), 6) AS d
-  FROM sv JOIN c2 c USING (sub_id)
-), a3 AS (
-  SELECT vec_id, sub_id, code FROM (
-    SELECT vec_id, sub_id, code,
-           row_number() OVER (PARTITION BY vec_id, sub_id
-                              ORDER BY d, code) AS rn
-    FROM s3) WHERE rn = 1
-), q AS (
-  -- queries start AFTER the coarse stand-in centroids: vec_id < 16
-  -- ARE the centroids, so their residuals are identically zero
-  SELECT vec_id AS q_id, cell_id FROM e
-  WHERE vec_id >= 16 AND vec_id < 26
-), qsv AS (
-  SELECT vec_id AS q_id, sub_id, v FROM sv
-  WHERE vec_id >= 16 AND vec_id < 26
-), lut AS (
-  SELECT qs.q_id, c.sub_id, c.code,
-         round(power(list_distance(qs.v, c.c), 2), 6) AS d2
-  FROM qsv qs JOIN c2 c USING (sub_id)
-), cand AS (
-  SELECT a3.vec_id, a3.sub_id, a3.code, e.cell_id
-  FROM a3 JOIN e USING (vec_id)
-), sc AS (
-  SELECT q.q_id, cd.vec_id, round(SUM(l.d2), 4) AS adist
-  FROM q JOIN cand cd ON cd.cell_id = q.cell_id AND cd.vec_id != q.q_id
-  JOIN lut l ON l.q_id = q.q_id AND l.sub_id = cd.sub_id
-            AND l.code = cd.code
-  GROUP BY q.q_id, cd.vec_id
-), r AS (
-  SELECT q_id, vec_id, adist,
-         row_number() OVER (PARTITION BY q_id
-                            ORDER BY adist, vec_id) AS rank
-  FROM sc
-)
-SELECT q_id, vec_id, adist, CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= 5"""
+        + _pq_train_duck()
+        + _adc_topk_duck(
+            "vec_id >= 16 AND vec_id < 26",
+            probe="""
+  JOIN e ea ON ea.vec_id = a.vec_id
+  JOIN e eq ON eq.vec_id = l.q_id AND eq.cell_id = ea.cell_id""",
+        )
     )
 
 
@@ -4277,9 +4152,17 @@ def _latest_green_rounds(root: Path) -> Dict[str, int]:
 
 # Queries whose code paths changed after their last green driver row:
 # force a fresh row even though a green (now-stale) one exists.  The
-# three share _PREP_CTES, whose ``clusters`` CTE is now MATERIALIZED.
-_RETOUCHED: set = {"td_corpus_prep", "td_corpus_to_shards",
-                   "td_prep_scrub_score"}
+# td_* three share _PREP_CTES, whose ``clusters`` CTE is now MATERIALIZED;
+# every emb_* oracle is now assembled from the shared similarity fragments
+# (and the ADC LUT sums squared differences directly).
+_RETOUCHED: set = {
+    "td_corpus_prep", "td_corpus_to_shards", "td_prep_scrub_score",
+    "emb_cosine_topk", "emb_ivf_topk", "emb_ivf_multiprobe",
+    "emb_lsh_topk", "emb_lsh_multiprobe", "emb_kmeans_centroids",
+    "emb_kmeans_ivf_topk", "emb_dup_pairs", "emb_semantic_dedup",
+    "emb_pq_codes", "emb_pq_adc_topk", "emb_pq_recon_stats",
+    "emb_ivfpq_topk",
+}
 
 
 def _driver_order(rounds: Dict[str, int]) -> List[str]:

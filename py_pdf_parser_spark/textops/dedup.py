@@ -84,23 +84,6 @@ def shingles(docs: DataFrame, n: int = 3, keep: tuple = ()) -> DataFrame:
     return docs.select("doc_id", F.expr(expr).alias("shingles"), *keep)
 
 
-def hashed_shingles(
-    docs: DataFrame, n: int = 3, keep: tuple = ()
-) -> DataFrame:
-    """Distinct n-gram shingles as 32-bit integer hashes (md5-based).
-
-    Hashing once up front shrinks every downstream payload (minhash
-    permutations, pair joins) from strings to int64s.  NOTE: array
-    results are for API convenience — hot paths should use
-    ``shingle_rows`` (codegen row form; see PLANS.md issues 8-9).
-    """
-    return shingles(docs, n, keep=keep).select(
-        "doc_id",
-        F.expr(f"transform(shingles, s -> {_h('s')})").alias("hs"),
-        *keep,
-    )
-
-
 def shingle_rows(
     docs: DataFrame, n: int = 3, keep: tuple = (), distinct: bool = False
 ) -> DataFrame:

@@ -3,12 +3,21 @@
 * ``cosine_topk`` — brute-force exact top-k: broadcast the (small) query
   set against the corpus; one narrow pass + per-query top-k window.  The
   correctness baseline.
-* ``lsh_topk`` — random-hyperplane LSH bucketing: sign-bit sketch per
-  vector, candidates = same bucket (optionally multi-probe), exact rerank
-  inside buckets.  The scale path: the corpus is hashed once (narrow),
-  the join shuffles on small bucket keys, rerank touches only candidates.
-* ``embedding_dup_pairs`` — near-duplicate pairs by cosine >= threshold,
-  LSH-bucketed so the pair join never goes quadratic.
+* ``lsh_topk`` / ``ivf_topk`` — the same exact rerank, restricted to the
+  query's random-hyperplane LSH bucket(s) or nearest IVF cell(s).  The
+  scale path: the corpus is hashed/assigned once (narrow), the join
+  touches only candidates.
+* ``embedding_dup_pairs`` / ``semantic_dup_pairs`` — near-duplicate pairs
+  by cosine >= threshold within an LSH bucket or IVF cell, chunk-capped
+  so the pair join never goes quadratic.
+* ``kmeans_centroids``, ``pq_*``, ``ivf_residuals``, ``ivfpq_topk`` —
+  Lloyd's codebooks, product quantization and IVF-PQ search.
+
+Each step these share lives in one private helper: ``_top_k`` (the
+per-query rank window), ``_rerank_topk`` (exact cosine rerank),
+``_ivf_scored`` over ``_cells`` (nearest-cell assignment),
+``_capped_pairs`` (the chunk-capped pair join), ``_adc_topk`` (LUT + ADC
+scoring) and ``_lloyd_update`` (Lloyd's mean update).
 
 All vector math is built-in higher-order functions (JVM-side): zip_with +
 aggregate for dot products; elements cast to double for deterministic
@@ -35,6 +44,48 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("_norm", F.expr(_norm(vec_col)))
 
 
+def _top_k(
+    scored: DataFrame, k: int, score: str, ascending: bool = False
+) -> DataFrame:
+    """(q_id, vec_id, score, rank): each query's best ``k`` rows by
+    ``score`` (descending unless ``ascending``), ties broken by vec_id
+    for determinism; rank is a 1-based bigint."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy("q_id").orderBy(order, F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select("q_id", "vec_id", score, "rank")
+    )
+
+
+def _rerank_topk(
+    corpus: DataFrame, queries: DataFrame, k: int, key: str = None
+) -> DataFrame:
+    """Exact cosine rerank: each (broadcast) query against every corpus
+    row sharing its ``key`` (every row when there is none), itself
+    excluded; cos rounded to 4dp, then ``_top_k``.  Both sides carry
+    (vec_id, embedding, _norm[, key])."""
+    keys = [key] if key else []
+    corpus = corpus.select(
+        "vec_id", "embedding", F.col("_norm").alias("n_c"), *keys
+    )
+    queries = queries.select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("_norm").alias("n_q"),
+        *[F.col(c).alias("q_key") for c in keys],
+    )
+    on = corpus[key] == queries["q_key"] if key else None
+    dot = F.expr(DOT.format(a="q_emb", b="embedding"))
+    joined = (
+        corpus.join(F.broadcast(queries), on)
+        .where(F.col("vec_id") != F.col("q_id"))
+        .withColumn("cos", F.round(dot / (F.col("n_c") * F.col("n_q")), 4))
+    )
+    return _top_k(joined, k, "cos")
+
+
 def cosine_topk(
     emb: DataFrame, n_queries: int = 10, k: int = 5
 ) -> DataFrame:
@@ -43,26 +94,8 @@ def cosine_topk(
     Output: (q_id, vec_id, cos, rank) — cos rounded to 4dp, ties broken
     by vec_id for determinism.
     """
-    corpus = with_norm(emb).select(
-        "vec_id", "embedding", F.col("_norm").alias("n_c")
-    )
-    queries = with_norm(emb.where(F.col("vec_id") < n_queries)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("_norm").alias("n_q"),
-    )
-    dot = F.expr(DOT.format(a="q_emb", b="embedding"))
-    joined = (
-        corpus.join(F.broadcast(queries))
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", F.round(dot / (F.col("n_c") * F.col("n_q")), 4))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cos", F.col("rank").cast("long").alias("rank"))
-    )
+    queries = with_norm(emb.where(F.col("vec_id") < n_queries))
+    return _rerank_topk(with_norm(emb), queries, k)
 
 
 N_HYPERPLANES = 8
@@ -111,61 +144,37 @@ def hashed_embeddings(
 N_IVF_CELLS = 16
 
 
-def ivf_assign(emb: DataFrame, n_cells: int = N_IVF_CELLS) -> DataFrame:
-    """IVF coarse quantization: nearest-centroid cell per vector.
-
-    Centroids are the first ``n_cells`` corpus vectors — deterministic
-    (SQL-reproducible) in place of a k-means fit; at deployment the
-    centroid table is the trained codebook and the plan is identical:
-    broadcast the (tiny) centroid set, one narrow argmax pass, no
-    shuffle of the corpus.
-    """
-    cents = with_norm(emb.where(F.col("vec_id") < n_cells)).select(
+def _cells(
+    emb: DataFrame, n_cells: int, centroids: DataFrame = None
+) -> DataFrame:
+    """(cell_id, centroid array<double>): the trained codebook
+    ``centroids`` (kmeans_centroids output) when given, else the
+    deterministic stand-in — the first ``n_cells`` corpus vectors
+    (SQL-reproducible in place of a k-means fit; the plan is the same
+    either way)."""
+    if centroids is not None:
+        return centroids.select("cell_id", "centroid")
+    return emb.where(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cell_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("_norm").alias("n_cent"),
-    )
-    corpus = with_norm(emb)
-    dot = F.expr(DOT.format(a="embedding", b="c_emb"))
-    scored = corpus.join(F.broadcast(cents)).withColumn(
-        "c_cos", dot / (F.col("_norm") * F.col("n_cent"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("c_cos"), F.asc("cell_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "embedding", "_norm", "cell_id")
+        F.expr("transform(embedding, x -> cast(x as double))").alias(
+            "centroid"
+        ),
     )
 
 
 def _ivf_scored(
     emb: DataFrame, n_cells: int, centroids: DataFrame = None
 ) -> DataFrame:
-    """(vec_id, embedding, _norm, cell_id, rn) — every vector scored
-    against every centroid, rn = 1-based nearest-cell rank.  Broadcast
-    centroids + one narrow rank window; no corpus shuffle.
-
-    ``centroids``: optional trained codebook ``(cell_id, centroid)``
-    (kmeans_centroids); default = the deterministic first-n-vectors
-    stand-in."""
-    if centroids is not None:
-        cents = (
-            centroids.select(
-                "cell_id", F.col("centroid").alias("c_emb")
-            )
-            .withColumn("n_cent", F.expr(_norm("c_emb")))
-        )
-    else:
-        cents = with_norm(emb.where(F.col("vec_id") < n_cells)).select(
-            F.col("vec_id").alias("cell_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("_norm").alias("n_cent"),
-        )
-    corpus = with_norm(emb)
-    dot = F.expr(DOT.format(a="embedding", b="c_emb"))
-    scored = corpus.join(F.broadcast(cents)).withColumn(
+    """IVF coarse quantization: (vec_id, embedding, _norm, cell_id, rn)
+    — every vector scored against every ``_cells`` centroid, rn =
+    1-based nearest-cell rank (cosine descending, lowest cell_id on
+    ties); ``rn = 1`` is the vector's cell.  Broadcast centroids + one
+    narrow rank window; no corpus shuffle."""
+    cents = _cells(emb, n_cells, centroids).withColumn(
+        "n_cent", F.expr(_norm("centroid"))
+    )
+    dot = F.expr(DOT.format(a="embedding", b="centroid"))
+    scored = with_norm(emb).join(F.broadcast(cents)).withColumn(
         "c_cos", dot / (F.col("_norm") * F.col("n_cent"))
     )
     w = Window.partitionBy("vec_id").orderBy(
@@ -188,28 +197,36 @@ def ivf_topk(
     ``centroids`` (kmeans_centroids output) to search against the
     trained codebook instead of the first-n-vectors stand-in."""
     scored = _ivf_scored(emb, n_cells, centroids=centroids)
-    corpus = scored.where(F.col("rn") == 1).select(
-        "vec_id", "embedding", "cell_id", F.col("_norm").alias("n_c")
-    )
     queries = scored.where(
         (F.col("vec_id") < n_queries) & (F.col("rn") <= n_probe)
-    ).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("cell_id").alias("q_cell"),
-        F.col("_norm").alias("n_q"),
     )
-    dot = F.expr(DOT.format(a="q_emb", b="embedding"))
-    joined = (
-        corpus.join(F.broadcast(queries), corpus["cell_id"] == queries["q_cell"])
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", F.round(dot / (F.col("n_c") * F.col("n_q")), 4))
+    return _rerank_topk(
+        scored.where(F.col("rn") == 1), queries, k, key="cell_id"
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cos", F.col("rank").cast("long").alias("rank"))
+
+
+def _lloyd_update(
+    assigned: DataFrame, keys: tuple, vec: str, round_dp: int
+) -> DataFrame:
+    """Lloyd's mean update: (*keys, centroid) = the component-wise mean
+    of the ``vec`` arrays assigned to each ``keys`` cell, every
+    component rounded to ``round_dp`` so successive iterations operate
+    on identical values in any engine.  The posexploded components
+    aggregate on (*keys, pos) with map-side partial combine, so each
+    task exchanges at most cells x dim partial rows — bytes, not the
+    corpus.  A cell that captures no vectors drops out (classic
+    Lloyd's; deterministic, identical in the SQL oracle)."""
+    means = (
+        assigned.select(*keys, F.posexplode(vec).alias("pos", "x"))
+        .groupBy(*keys, "pos")
+        .agg(
+            F.round(F.avg(F.col("x").cast("double")), round_dp).alias("m")
+        )
+    )
+    return means.groupBy(*keys).agg(
+        F.expr(
+            "transform(array_sort(collect_list(struct(pos, m))), s -> s.m)"
+        ).alias("centroid")
     )
 
 
@@ -220,7 +237,7 @@ def kmeans_centroids(
     round_dp: int = 6,
 ) -> DataFrame:
     """Distributed Lloyd's k-means over the embedding column — a REAL
-    trained codebook for IVF coarse quantization (upgrades ivf_assign's
+    trained codebook for IVF coarse quantization (upgrades the
     first-n-vectors stand-in; spherical variant: max-cosine assignment,
     per-cell component mean update).
 
@@ -229,32 +246,22 @@ def kmeans_centroids(
     * assignment ranks ``round(cos, round_dp)`` descending with
       ``cell_id`` ascending tie-break (FP summation-order noise is
       ~1e-15 — nine orders below the rounding step),
-    * updated centroid components are ``round()``ed, so successive
-      iterations operate on identical values in any engine.
+    * updated centroid components are ``round()``ed (``_lloyd_update``).
 
     Per iteration the ENTIRE centroid set rides as one broadcast array
     row and the argmax assignment is a pure projection (transform
     scores -> fold to best) — the corpus NEVER moves: no window, no
     per-vector shuffle (a Window.partitionBy(vec_id) form was plan-
     audited at a full corpus exchange per iteration and rejected,
-    PLANS.md r4).  The update aggregates posexploded components on
-    ``(cell_id, pos)`` keys with map-side partial combine, so each task
-    exchanges at most cells x dim partial rows — bytes, not the corpus.
-    At web scale k-means training additionally runs over a
-    deterministic hash sample (dedup.hash_sample) and the codebook is
-    reused corpus-wide.  A cell that captures no vectors drops out
-    (classic Lloyd's; deterministic, identical in the SQL oracle).
+    PLANS.md r4).  At web scale k-means training additionally runs over
+    a deterministic hash sample (dedup.hash_sample) and the codebook is
+    reused corpus-wide.
 
     Returns ``(cell_id, centroid array<double>)``.
     """
     corpus = with_norm(emb).select("vec_id", "embedding", "_norm")
-    cents = corpus.where(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cell_id"),
-        F.expr(
-            "transform(embedding, x -> cast(x as double))"
-        ).alias("c_emb"),
-    )
-    dot = DOT.format(a="embedding", b="c.c_emb")
+    cents = _cells(emb, n_cells)
+    dot = DOT.format(a="embedding", b="c.centroid")
     best_cell = f"""
 aggregate(
   transform(cells, c -> named_struct(
@@ -269,35 +276,19 @@ aggregate(
     # identical to the rank(cos DESC, cell_id ASC) rule the oracle uses.
     for _ in range(n_iters):
         cents_row = (
-            cents.withColumn("n_cent", F.expr(_norm("c_emb")))
+            cents.withColumn("n_cent", F.expr(_norm("centroid")))
             .agg(
                 F.expr(
                     "array_sort(collect_list("
-                    "struct(cell_id, c_emb, n_cent)))"
+                    "struct(cell_id, centroid, n_cent)))"
                 ).alias("cells")
             )
         )
         assigned = corpus.join(F.broadcast(cents_row)).select(
             F.expr(best_cell).alias("cell_id"), "embedding"
         )
-        means = (
-            assigned.select(
-                "cell_id", F.posexplode("embedding").alias("pos", "x")
-            )
-            .groupBy("cell_id", "pos")
-            .agg(
-                F.round(
-                    F.avg(F.col("x").cast("double")), round_dp
-                ).alias("m")
-            )
-        )
-        cents = means.groupBy("cell_id").agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(pos, m))),"
-                " s -> s.m)"
-            ).alias("c_emb")
-        )
-    return cents.select("cell_id", F.col("c_emb").alias("centroid"))
+        cents = _lloyd_update(assigned, ("cell_id",), "embedding", round_dp)
+    return cents
 
 
 def lsh_topk(
@@ -319,39 +310,59 @@ def lsh_topk(
     """
     if hashed is None:
         hashed = hashed_embeddings(emb)
-    corpus = hashed.select(
-        "vec_id", "embedding", "bucket", F.col("_norm").alias("n_c")
-    )
-    queries = hashed.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("_norm").alias("n_q"),
-    )
+    queries = hashed.where(F.col("vec_id") < n_queries)
     if multi_probe:
-        probes = F.array(
-            F.col("q_bucket"),
-            *[
-                F.col("q_bucket").bitwiseXOR(F.lit(1 << h))
-                for h in range(N_HYPERPLANES)
-            ],
-        )
-        queries = queries.withColumn(
-            "q_bucket", F.explode(probes)
-        )
-    dot = F.expr(DOT.format(a="q_emb", b="embedding"))
-    joined = (
-        corpus.join(
-            F.broadcast(queries), corpus["bucket"] == queries["q_bucket"]
-        )
-        .where(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", F.round(dot / (F.col("n_c") * F.col("n_q")), 4))
+        bucket = F.col("bucket")
+        queries = queries.withColumn("bucket", F.explode(F.array(
+            bucket,
+            *[bucket.bitwiseXOR(F.lit(1 << h)) for h in range(N_HYPERPLANES)],
+        )))
+    return _rerank_topk(hashed, queries, k, key="bucket")
+
+
+def _capped_pairs(
+    keyed: DataFrame, key: str, threshold: float, max_bucket: int
+) -> DataFrame:
+    """(id_a, id_b, cos): pairs of ``keyed`` rows (vec_id, embedding,
+    _norm, key) in the same ``key`` group and md5 chunk, id_a < id_b,
+    with round(cos, 4) >= threshold.
+
+    A degenerate group (zero vectors, a boilerplate embedding repeated
+    across a crawl) would make the within-group join quadratic, so a
+    group of n rows splits into ceil(n / ``max_bucket``) chunks by
+    ``md5(vec_id)`` and pairs form only within a chunk — worst-group
+    cost drops from C(n,2) to ~(n/cap)·C(cap,2); groups at or under the
+    cap keep one chunk, i.e. are untouched.  Chunks come from per-group
+    COUNTS (tiny, broadcast) — NOT a rank window: partitionBy(key)
+    ranking would shuffle AND sort the full embedding arrays (measured
+    2.6x the query).  The md5 chunk is deterministic and
+    SQL-reproducible."""
+    counts = keyed.groupBy(key).agg(F.count("*").alias("_n"))
+    chunk = F.expr(
+        "cast(conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10) "
+        "as bigint)"
+    ) % F.ceil(F.col("_n") / F.lit(max_bucket))
+    chunked = (
+        keyed.join(F.broadcast(counts), key)
+        .withColumn("chunk", chunk)
+        .drop("_n")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+    a, b = (
+        chunked.select(
+            F.col("vec_id").alias(f"id_{s}"),
+            F.col("embedding").alias(f"emb_{s}"),
+            F.col("_norm").alias(f"n_{s}"),
+            key, "chunk",
+        )
+        for s in "ab"
+    )
+    dot = F.expr(DOT.format(a="emb_a", b="emb_b"))
     return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", "cos", F.col("rank").cast("long").alias("rank"))
+        a.join(b, [key, "chunk"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .withColumn("cos", F.round(dot / (F.col("n_a") * F.col("n_b")), 4))
+        .where(F.col("cos") >= threshold)
+        .select("id_a", "id_b", "cos")
     )
 
 
@@ -365,48 +376,17 @@ def semantic_dup_pairs(
     inside a cluster, so the candidate space is corpus x cell-size,
     never corpus x corpus.
 
-    Same scale guards as ``embedding_dup_pairs``: per-cell counts are
-    tiny (<= n_cells rows, broadcast) and oversized cells split into
-    deterministic md5 chunks of ~``max_bucket``, bounding the
-    worst-cell join at ~(n/cap)·C(cap,2).  Pass ``centroids``
-    (kmeans_centroids output) to pair within the trained codebook's
-    cells; default = the deterministic first-n-vectors stand-in.
+    Same scale guards as ``embedding_dup_pairs`` (``_capped_pairs``):
+    per-cell counts are tiny (<= n_cells rows, broadcast) and oversized
+    cells split into deterministic md5 chunks of ~``max_bucket``.  Pass
+    ``centroids`` (kmeans_centroids output) to pair within the trained
+    codebook's cells; default = the deterministic first-n-vectors
+    stand-in.
     """
-    assigned = (
-        _ivf_scored(emb, n_cells, centroids=centroids)
-        .where(F.col("rn") == 1)
-        .select("vec_id", "embedding", "_norm", "cell_id")
+    assigned = _ivf_scored(emb, n_cells, centroids=centroids).where(
+        F.col("rn") == 1
     )
-    counts = assigned.groupBy("cell_id").agg(F.count("*").alias("_n"))
-    chunk = F.expr(
-        "cast(conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10) "
-        "as bigint)"
-    ) % F.ceil(F.col("_n") / F.lit(max_bucket))
-    hashed = (
-        assigned.join(F.broadcast(counts), "cell_id")
-        .withColumn("chunk", chunk)
-        .drop("_n")
-    )
-    a = hashed.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("emb_a"),
-        F.col("_norm").alias("n_a"),
-        "cell_id", "chunk",
-    )
-    b = hashed.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("emb_b"),
-        F.col("_norm").alias("n_b"),
-        "cell_id", "chunk",
-    )
-    dot = F.expr(DOT.format(a="emb_a", b="emb_b"))
-    return (
-        a.join(b, ["cell_id", "chunk"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.round(dot / (F.col("n_a") * F.col("n_b")), 4))
-        .where(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
+    return _capped_pairs(assigned, "cell_id", threshold, max_bucket)
 
 
 def semantic_dedup(
@@ -451,20 +431,9 @@ def embedding_dup_pairs(
     emb: DataFrame, threshold: float = 0.95, max_bucket: int = 256,
     hashed: DataFrame = None,
 ) -> DataFrame:
-    """Near-duplicate vector pairs (cosine >= threshold), LSH-bucketed.
-
-    A degenerate bucket (zero vectors, a boilerplate embedding repeated
-    across a crawl) would make the within-bucket join quadratic in that
-    bucket, so oversized buckets are split into deterministic hash
-    chunks of ~``max_bucket`` and pairs form only within a chunk —
-    worst-bucket cost drops from C(n,2) to ~(n/cap)·C(cap,2).
-
-    Chunks come from per-bucket COUNTS (tiny: ≤ 2^N_HYPERPLANES rows,
-    broadcast) + ``md5(vec_id) % ceil(n/cap)`` — NOT a rank window:
-    partitionBy(bucket) ranking would shuffle AND sort the full
-    embedding arrays (measured 2.6x the query).  The md5 chunk is
-    deterministic and SQL-reproducible; buckets at or under the cap get
-    ceil(n/cap)=1 chunk, i.e. are untouched.
+    """Near-duplicate vector pairs (cosine >= threshold), LSH-bucketed
+    and chunk-capped per bucket (``_capped_pairs``; per-bucket counts
+    are ≤ 2^N_HYPERPLANES rows).
 
     ``hashed``: a precomputed/shared ``hashed_embeddings(emb)`` table.
     This query's plan scans the signature projection THREE times
@@ -473,37 +442,7 @@ def embedding_dup_pairs(
     """
     if hashed is None:
         hashed = hashed_embeddings(emb)
-    counts = hashed.groupBy("bucket").agg(F.count("*").alias("_n"))
-    chunk = F.expr(
-        "cast(conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10) "
-        "as bigint)"
-    ) % F.ceil(F.col("_n") / F.lit(max_bucket))
-    chunked = (
-        hashed
-        .join(F.broadcast(counts), "bucket")
-        .withColumn("chunk", chunk)
-        .drop("_n")
-    )
-    a = chunked.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("emb_a"),
-        F.col("_norm").alias("n_a"),
-        "bucket", "chunk",
-    )
-    b = chunked.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("emb_b"),
-        F.col("_norm").alias("n_b"),
-        "bucket", "chunk",
-    )
-    dot = F.expr(DOT.format(a="emb_a", b="emb_b"))
-    return (
-        a.join(b, ["bucket", "chunk"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.round(dot / (F.col("n_a") * F.col("n_b")), 4))
-        .where(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
+    return _capped_pairs(hashed, "bucket", threshold, max_bucket)
 
 
 # ---------------------------------------------------------------------------
@@ -548,6 +487,18 @@ def _pq_subvecs_expr(n_subs: int, vec_col: str = "embedding") -> str:
     return _SUBVECS.format(m1=n_subs - 1, m=n_subs, vec=vec_col)
 
 
+def _pq_subvec_rows(emb: DataFrame, n_subs: int) -> DataFrame:
+    """(vec_id, sub_id bigint, sv): one narrow row per subvector."""
+    return emb.select(
+        "vec_id",
+        F.posexplode(F.expr(_pq_subvecs_expr(n_subs))).alias(
+            "sub_id", "sv"
+        ),
+    ).select(
+        "vec_id", F.col("sub_id").cast("long").alias("sub_id"), "sv"
+    )
+
+
 def _pq_cells_row(codebook: DataFrame) -> DataFrame:
     """The whole codebook as ONE broadcastable row, code-ascending (so
     a strict-< fold keeps the LOWEST code on rounded-distance ties —
@@ -589,23 +540,17 @@ def pq_train(
     Per iteration the corpus subvector table is a narrow posexplode
     (M rows per vector, no exchange), the whole codebook rides as one
     broadcast row, and the argmin assignment is a pure projection; the
-    only shuffles are the (sub_id, code, pos) mean aggregations —
-    M x K x (D/M) = D x K partial rows per task, bytes at any corpus
-    size.  At web scale train over a deterministic ``hash_sample`` and
-    reuse the codebook corpus-wide (same note as kmeans_centroids).
+    only shuffles are the (sub_id, code, pos) mean aggregations
+    (``_lloyd_update``) — M x K x (D/M) = D x K partial rows per task,
+    bytes at any corpus size.  At web scale train over a deterministic
+    ``hash_sample`` and reuse the codebook corpus-wide (same note as
+    kmeans_centroids).
 
     Returns ``(sub_id, code, centroid array<double>)``.  A codeword
     that captures no subvectors drops out (classic Lloyd's; identical
     in the SQL oracle).
     """
-    sv = emb.select(
-        "vec_id",
-        F.posexplode(F.expr(_pq_subvecs_expr(n_subs))).alias(
-            "sub_id", "sv"
-        ),
-    ).select(
-        "vec_id", F.col("sub_id").cast("long").alias("sub_id"), "sv"
-    )
+    sv = _pq_subvec_rows(emb, n_subs)
     cents = sv.where(F.col("vec_id") < n_codes).select(
         "sub_id",
         F.col("vec_id").alias("code"),
@@ -616,20 +561,8 @@ def pq_train(
         assigned = sv.join(F.broadcast(_pq_cells_row(cents))).select(
             "sub_id", F.expr(best).alias("code"), "sv"
         )
-        means = (
-            assigned.select(
-                "sub_id", "code", F.posexplode("sv").alias("pos", "x")
-            )
-            .groupBy("sub_id", "code", "pos")
-            .agg(F.round(F.avg("x"), round_dp).alias("m"))
-        )
-        cents = means.groupBy("sub_id", "code").agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(pos, m))),"
-                " s -> s.m)"
-            ).alias("centroid")
-        )
-    return cents.select("sub_id", "code", "centroid")
+        cents = _lloyd_update(assigned, ("sub_id", "code"), "sv", round_dp)
+    return cents
 
 
 def pq_assign(
@@ -677,6 +610,61 @@ def pq_codes(
     )
 
 
+def _adc_topk(
+    codes: DataFrame,
+    queries: DataFrame,
+    codebook: DataFrame,
+    k: int,
+    n_subs: int,
+    round_dp: int,
+    probe: tuple = (),
+) -> DataFrame:
+    """ADC top-k: (q_id, vec_id, adist, rank).  Each query (vec_id,
+    embedding, *probe) is scored against the codebook ONCE — the M x K
+    LUT of squared subspace distances, rounded to ``round_dp`` — and
+    all queries ride one broadcast row.  Every ``codes`` row (vec_id,
+    *probe, codes) that shares the query's ``probe`` columns, the query
+    itself excluded, then scores as a filter+sum over its codes' LUT
+    entries (adist, 4dp): zero vector math per candidate, and the codes
+    table never shuffles (the only exchange is the ``_top_k`` window,
+    ascending adist)."""
+    d2 = _SUB_D2.format(a="svs[cast(s as int)]", b="cb.c")
+    lut = f"""
+flatten(transform(sequence(0, {n_subs - 1}), s ->
+  transform(filter(cells, cb -> cb.sub_id = s),
+            cb -> named_struct(
+                'sub_id', cb.sub_id, 'code', cb.code,
+                'd2', round({d2}, {round_dp})))))"""
+    q_lut = (
+        queries.withColumn("svs", F.expr(_pq_subvecs_expr(n_subs)))
+        .join(F.broadcast(_pq_cells_row(codebook)))
+        .select(F.col("vec_id").alias("q_id"), *probe, F.expr(lut).alias("lut"))
+    )
+    fields = ", ".join(("q_id", *probe, "lut"))
+    qrow = q_lut.agg(
+        F.expr(f"array_sort(collect_list(struct({fields})))").alias("qs")
+    )
+    match = F.col("vec_id") != F.col("q.q_id")
+    for c in probe:
+        match = match & (F.col(c) == F.col(f"q.{c}"))
+    adist = (
+        "round(aggregate("
+        "filter(q.lut, e -> e.code = codes[cast(e.sub_id as int)]), "
+        "cast(0.0 as double), (acc, e) -> acc + e.d2), 4)"
+    )
+    scored = (
+        codes.join(F.broadcast(qrow))
+        .select("vec_id", *probe, "codes", F.explode("qs").alias("q"))
+        .where(match)
+        .select(
+            "vec_id",
+            F.col("q.q_id").alias("q_id"),
+            F.expr(adist).alias("adist"),
+        )
+    )
+    return _top_k(scored, k, "adist", ascending=True)
+
+
 def pq_adc_topk(
     emb: DataFrame,
     codebook: DataFrame,
@@ -686,13 +674,8 @@ def pq_adc_topk(
     n_subs: int = N_PQ_SUBS,
     round_dp: int = 6,
 ) -> DataFrame:
-    """ADC top-k: approximate nearest neighbors from the codes table
-    alone.  Each query subvector is scored against the codebook ONCE
-    (the M x K LUT of squared subspace distances, rounded to 6dp);
-    every database vector's distance is then a 4-entry filter+sum over
-    the broadcast LUT — zero vector math per candidate, the codes
-    table never shuffles (the only exchange is the per-query top-k
-    window over candidate rows, same shape as ``cosine_topk``).
+    """ADC top-k (``_adc_topk``): approximate nearest neighbors of the
+    first ``n_queries`` vectors from the codes table alone.
 
     Output: (q_id, vec_id, adist, rank) — adist = the ADC
     approximation of squared L2, rounded to 4dp, ties broken by
@@ -700,43 +683,8 @@ def pq_adc_topk(
     """
     if codes is None:
         codes = pq_assign(emb, codebook, n_subs, round_dp)
-    d2 = _SUB_D2.format(a="svs[cast(s as int)]", b="cb.c")
-    lut = f"""
-flatten(transform(sequence(0, {n_subs - 1}), s ->
-  transform(filter(cells, cb -> cb.sub_id = s),
-            cb -> named_struct(
-                'sub_id', cb.sub_id, 'code', cb.code,
-                'd2', round({d2}, {round_dp})))))"""
-    q_lut = (
-        emb.where(F.col("vec_id") < n_queries)
-        .withColumn("svs", F.expr(_pq_subvecs_expr(n_subs)))
-        .join(F.broadcast(_pq_cells_row(codebook)))
-        .select(F.col("vec_id").alias("q_id"), F.expr(lut).alias("lut"))
-    )
-    qrow = q_lut.agg(
-        F.expr("array_sort(collect_list(struct(q_id, lut)))").alias("qs")
-    )
-    adist = (
-        "round(aggregate("
-        "filter(q.lut, e -> e.code = codes[cast(e.sub_id as int)]), "
-        "cast(0.0 as double), (acc, e) -> acc + e.d2), 4)"
-    )
-    scored = (
-        codes.join(F.broadcast(qrow))
-        .select("vec_id", "codes", F.explode("qs").alias("q"))
-        .select(
-            "vec_id",
-            F.col("q.q_id").alias("q_id"),
-            F.expr(adist).alias("adist"),
-        )
-        .where(F.col("vec_id") != F.col("q_id"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", "adist", "rank")
-    )
+    queries = emb.where(F.col("vec_id") < n_queries)
+    return _adc_topk(codes, queries, codebook, k, n_subs, round_dp)
 
 
 def pq_recon_stats(
@@ -750,14 +698,9 @@ def pq_recon_stats(
     decide when to retrain).  Same stationary-corpus shape as
     assignment; the aggregate exchanges M rows."""
     best_d = _pq_best_code("sub_id", "sv", round_dp) + ".d"
-    sv = emb.select(
-        "vec_id",
-        F.posexplode(F.expr(_pq_subvecs_expr(n_subs))).alias(
-            "sub_id", "sv"
-        ),
-    ).select(F.col("sub_id").cast("long").alias("sub_id"), "sv")
     return (
-        sv.join(F.broadcast(_pq_cells_row(codebook)))
+        _pq_subvec_rows(emb, n_subs)
+        .join(F.broadcast(_pq_cells_row(codebook)))
         .select("sub_id", F.expr(best_d).alias("d"))
         .groupBy("sub_id")
         .agg(
@@ -782,22 +725,12 @@ def ivf_residuals(
     assigned = _ivf_scored(emb, n_cells, centroids=centroids).where(
         F.col("rn") == 1
     )
-    if centroids is None:
-        cents = emb.where(F.col("vec_id") < n_cells).select(
-            F.col("vec_id").alias("cell_id"),
-            F.expr(
-                "transform(embedding, x -> cast(x as double))"
-            ).alias("c_emb"),
-        )
-    else:
-        cents = centroids.select(
-            "cell_id", F.col("centroid").alias("c_emb")
-        )
+    cents = _cells(emb, n_cells, centroids)
     return assigned.join(F.broadcast(cents), "cell_id").select(
         "vec_id",
         "cell_id",
         F.expr(
-            "zip_with(embedding, c_emb, (x, y) -> cast(x as double) - y)"
+            "zip_with(embedding, centroid, (x, y) -> cast(x as double) - y)"
         ).alias("embedding"),
     )
 
@@ -819,11 +752,12 @@ def ivfpq_topk(
     coarse-assign every vector to a cell, PQ-encode its RESIDUAL with
     one codebook shared across cells, then answer queries by probing
     the query's own cell and ADC-scoring only that cell's compressed
-    codes.  The web-scale serving shape for 10^12 vectors: the index
-    is (cell_id, M codes) per vector — a few bytes — the codebook and
-    per-query LUTs ride broadcasts, and a query touches ~1/n_cells of
-    the codes table (partition the codes table by cell_id and the
-    probe prunes partitions).
+    codes (``_adc_topk`` with cell_id as the probe).  The web-scale
+    serving shape for 10^12 vectors: the index is (cell_id, M codes)
+    per vector — a few bytes — the codebook and per-query LUTs ride
+    broadcasts, and a query touches ~1/n_cells of the codes table
+    (partition the codes table by cell_id and the probe prunes
+    partitions).
 
     Queries default to the ``n_queries`` vectors AFTER the coarse
     stand-in centroids (``q_lo = n_cells``): the first ``n_cells``
@@ -843,54 +777,11 @@ def ivfpq_topk(
     codes = pq_assign(
         residuals, codebook, n_subs, round_dp, keep=("cell_id",)
     )
-    d2 = _SUB_D2.format(a="svs[cast(s as int)]", b="cb.c")
-    lut = f"""
-flatten(transform(sequence(0, {n_subs - 1}), s ->
-  transform(filter(cells, cb -> cb.sub_id = s),
-            cb -> named_struct(
-                'sub_id', cb.sub_id, 'code', cb.code,
-                'd2', round({d2}, {round_dp})))))"""
     if q_lo is None:
         q_lo = n_cells
-    q_lut = (
-        residuals.where(
-            (F.col("vec_id") >= q_lo)
-            & (F.col("vec_id") < q_lo + n_queries)
-        )
-        .withColumn("svs", F.expr(_pq_subvecs_expr(n_subs)))
-        .join(F.broadcast(_pq_cells_row(codebook)))
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("cell_id").alias("q_cell"),
-            F.expr(lut).alias("lut"),
-        )
+    queries = residuals.where(
+        (F.col("vec_id") >= q_lo) & (F.col("vec_id") < q_lo + n_queries)
     )
-    qrow = q_lut.agg(
-        F.expr(
-            "array_sort(collect_list(struct(q_id, q_cell, lut)))"
-        ).alias("qs")
-    )
-    adist = (
-        "round(aggregate("
-        "filter(q.lut, e -> e.code = codes[cast(e.sub_id as int)]), "
-        "cast(0.0 as double), (acc, e) -> acc + e.d2), 4)"
-    )
-    scored = (
-        codes.join(F.broadcast(qrow))
-        .select("vec_id", "cell_id", "codes", F.explode("qs").alias("q"))
-        .where(
-            (F.col("q.q_cell") == F.col("cell_id"))
-            & (F.col("vec_id") != F.col("q.q_id"))
-        )
-        .select(
-            "vec_id",
-            F.col("q.q_id").alias("q_id"),
-            F.expr(adist).alias("adist"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", "adist", "rank")
+    return _adc_topk(
+        codes, queries, codebook, k, n_subs, round_dp, probe=("cell_id",)
     )

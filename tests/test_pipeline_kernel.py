@@ -117,3 +117,30 @@ def test_any_exception_is_contained_per_document(monkeypatch):
         [parse_elements_arrow_batch(_batch(clean))]
     )
     assert _ipc_bytes(elements) == _ipc_bytes(expected)
+
+
+def test_null_span_offset_is_an_error_row():
+    """A span with a null offset cannot be ordered: its document becomes
+    an error row instead of extracting from a garbage offset, and the
+    batch's other documents come out byte-identical to a clean batch."""
+    clean = [(f"ora-{i:06d}", ora_spans(i)) for i in range(3)]
+    clean.append(("memo-000000", memo_spans(0)))
+    bad = ("ora-000099", [("text", "a", None, 0), ("text", "x", None, None)])
+    poisoned = clean[:2] + [bad] + clean[2:]
+
+    out = pa.Table.from_batches([extract_arrow_batch(_batch(poisoned), [])])
+    rows = {r["doc_id"]: r for r in out.to_pylist()}
+    assert rows["ora-000099"]["status"] == "error"
+    assert rows["ora-000099"]["error"] == "ValueError: null span offset"
+    assert rows["ora-000099"]["n_spans"] == 0
+    kept = out.filter(pa.array([d != "ora-000099" for d in rows]))
+    expected = pa.Table.from_batches([extract_arrow_batch(_batch(clean), [])])
+    assert _ipc_bytes(kept) == _ipc_bytes(expected)
+
+    elements = pa.Table.from_batches(
+        [parse_elements_arrow_batch(_batch(poisoned))]
+    )
+    expected = pa.Table.from_batches(
+        [parse_elements_arrow_batch(_batch(clean))]
+    )
+    assert _ipc_bytes(elements) == _ipc_bytes(expected)

@@ -22,6 +22,7 @@ def _registration_order():
 def test_driver_round_keys_are_registry_names():
     assert Q._DRIVER_ROW_ROUND
     assert set(Q._DRIVER_ROW_ROUND) <= set(Q.REGISTRY)
+    assert Q._RETOUCHED <= set(Q.REGISTRY)
 
 
 def test_green_r05_queries_map_to_round_5():
