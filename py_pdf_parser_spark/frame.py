@@ -193,12 +193,6 @@ class ElementFrame:
         out = joined.where(cond).drop(*[f"a_{c}" for c in _ANCHOR_COLS])
         return self._with(out)
 
-    @staticmethod
-    def _tol_y() -> Column:
-        return F.least(
-            (F.col("a_y1") - F.col("a_y0")) / 2, F.col("_tolerance")
-        )
-
     def to_the_right_of(
         self, anchors: "ElementFrame", inclusive: bool = False,
         tolerance: float = 0.0,

@@ -6,8 +6,12 @@ Design (SURVEY.md §3.1, §4):
   parse + extract is embarrassingly parallel ``mapInArrow`` — no groupBy,
   no join, no shuffle in the hot path.  At 100 TB the only data movement
   is the parquet scan and the partitioned write.
+* **One driver.** Every Doc-building entry point (the spans path here,
+  the PDF-bytes path, ``queries._per_doc``) is one ``mapInArrow`` in
+  ``_map_docs``, whose per-batch body is the plain function perfbench's
+  Spark-free kernel probe times.
 * **Vectorized kernels.** Arrow batches in, numpy per-document kernels
-  inside (``kernel/``), Arrow batches out.  No per-row Python UDFs.
+  inside (``kernel/``), Arrow batches out (schemas from ``schema.py``).
 * **Cheap tasks.** Unpickling a kernel imports this package, which stops
   Spark's per-task re-read of its own archives (``_worker.py``): a reused
   Python worker pays that only on its first task.
@@ -17,11 +21,10 @@ Design (SURVEY.md §3.1, §4):
   ``error='<Class>: msg'``; a poisoned document never kills a stage.
 * **Skew handling.** AQE covers shuffle skew, but pathological documents
   (bigdoc/bigmedia families) skew *kernel compute*, which AQE cannot see:
-  heavy docs (``size(spans) > heavy_threshold``) are split off and
-  round-robin repartitioned so no task gets two of them; light docs flow
-  straight from file splits (no shuffle: a full-corpus repartition
-  measured ~3x slower).  ``extract_spans_rebalanced`` runs one kernel
-  per branch.
+  heavy docs (cost above a threshold) are split off and round-robin
+  repartitioned so no task gets two of them; light docs flow straight
+  from file splits (no shuffle: a full-corpus repartition measured ~3x
+  slower).  ``_rebalanced`` runs one kernel per branch.
 * **Checkpoint/resume.** Docs are routed to ``bucket =
   pmod(xxhash64(doc_id), num_buckets)``; the job runs in a fixed plan of
   waves (wave ``w`` is buckets ``range(w, num_buckets, num_waves)``),
@@ -34,13 +37,16 @@ Design (SURVEY.md §3.1, §4):
 from __future__ import annotations
 
 import time
-from typing import Iterator, List, Optional, Tuple
+from typing import Callable, Iterator, List, Optional, Tuple
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .kernel.parse import doc_from_arrays
 from .kernel.recipes import recipe_for
@@ -50,6 +56,40 @@ from .schema import (
     EXTRACTED_SCHEMA,
     LINEAGE_SCHEMA,
 )
+
+_ELEMENTS_ARROW = to_arrow_schema(ELEMENTS_SCHEMA)
+_EXTRACTED_ARROW = to_arrow_schema(EXTRACTED_SCHEMA)
+
+
+def _map_docs(
+    df: DataFrame,
+    cols: List[str],
+    body: Callable[[pa.RecordBatch], pa.RecordBatch],
+    schema: StructType,
+) -> DataFrame:
+    """The one Doc-building Spark driver: ``body(batch)`` for each Arrow
+    batch of ``df``'s ``cols``, emitted as rows of ``schema``."""
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield body(batch)
+
+    return df.select(*cols).mapInArrow(gen, schema)
+
+
+def _error_text(err: Exception) -> str:
+    return f"{type(err).__name__}: {err}"
+
+
+def _rows_batch(rows: List[tuple], schema: StructType) -> pa.RecordBatch:
+    """Row tuples -> one RecordBatch of ``schema``'s Arrow form."""
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(cols, arrow)],
+        names=arrow.names,
+    )
+
 
 # ---------------------------------------------------------------------------
 # Arrow batch plumbing.  The hot path is mapInArrow: span structs are
@@ -73,62 +113,55 @@ def _flatten_span_batch(batch: pa.RecordBatch):
     return doc_ids, offs, kinds, texts, refs, offsets
 
 
+def _null_text_docs(spans: pa.ListArray, offs: np.ndarray) -> set:
+    """Positions of the documents that hold a ``text`` span whose text
+    is null (media spans carry a null text by design): one Arrow mask
+    over the batch's spans, so a clean batch costs nothing per document."""
+    vals = spans.values
+    hits = pc.indices_nonzero(pc.and_(
+        pc.equal(vals.field("kind"), "text"), pc.is_null(vals.field("text"))
+    )).to_numpy()
+    return set((np.searchsorted(offs, hits, side="right") - 1).tolist())
+
+
 def _iter_docs(batch: pa.RecordBatch, config: dict = None):
-    """Yield (pos, doc_id, Doc-or-exception) per document in the batch."""
+    """Yield (doc_id, Doc-or-exception) per document in the batch.
+
+    A null span text in a ``text`` span is an error, as a null offset is
+    (``doc_from_arrays``)."""
     doc_ids, offs, kinds, texts, refs, offsets = _flatten_span_batch(batch)
+    bad = _null_text_docs(batch.column(1), offs)
     for pos, doc_id in enumerate(doc_ids):
         lo, hi = offs[pos], offs[pos + 1]
         try:
+            if pos in bad:
+                raise ValueError("null text in text span")
             doc = doc_from_arrays(
                 doc_id, kinds[lo:hi], texts[lo:hi], refs[lo:hi],
                 offsets[lo:hi], config=config,
             )
         except Exception as err:  # any bad document, see module docstring
-            yield pos, doc_id, err
-            continue
-        yield pos, doc_id, doc
+            doc = err
+        yield doc_id, doc
 
 
 # ---------------------------------------------------------------------------
 # parse: documents(doc_id, spans) -> exploded elements
 # ---------------------------------------------------------------------------
 
-_ELEMENTS_ARROW = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("idx", pa.int64()),
-        ("page_number", pa.int64()),
-        ("page_width", pa.float64()),
-        ("page_height", pa.float64()),
-        ("x0", pa.float64()),
-        ("x1", pa.float64()),
-        ("y0", pa.float64()),
-        ("y1", pa.float64()),
-        ("text", pa.string()),
-        ("text_raw", pa.string()),
-        ("font_name", pa.string()),
-        ("font_size", pa.float64()),
-        ("font", pa.string()),
-        ("kind", pa.string()),
-        ("media_ref", pa.string()),
-        ("tags", pa.list_(pa.string())),
-        ("ignored", pa.bool_()),
-    ]
-)
-
 
 def pack_elements_batch(docs) -> pa.RecordBatch:
-    """Pack (doc_id, Doc) pairs into one ELEMENTS_SCHEMA RecordBatch.
+    """Pack (doc_id, Doc-or-exception) pairs into one ELEMENTS_SCHEMA
+    RecordBatch; a document that failed to build has no elements (its
+    error surfaces via ``extract_spans`` / ``pdf_parse_status``).
 
     Shared by the spans parse path (parse_elements) and the byte-stream
     loader (sources.pdf_bytes): any producer of kernel Docs gets the
     same Arrow element rows."""
-    cols = {name: [] for name in (
-        "doc_id", "idx", "page_number", "page_width", "page_height",
-        "x0", "x1", "y0", "y1", "text", "text_raw", "font_name",
-        "font_size", "font", "kind", "media_ref",
-    )}
+    cols = {name: [] for name in _ELEMENTS_ARROW.names[:-2]}  # not tags, ignored
     for doc_id, doc in docs:
+        if isinstance(doc, Exception):
+            continue
         n = doc.n
         pw, ph = doc._page_width, doc._page_height
         cols["doc_id"].append(np.full(n, doc_id, dtype=object))
@@ -153,35 +186,28 @@ def pack_elements_batch(docs) -> pa.RecordBatch:
         cols["font"].append(doc.font)
         cols["kind"].append(doc.kind)
         cols["media_ref"].append(doc.media_ref)
-    if cols["doc_id"]:
-        flat = {k: np.concatenate(v) for k, v in cols.items()}
-        n_rows = len(flat["doc_id"])
-    else:
-        flat = {k: np.empty(0, dtype=object) for k in cols}
-        n_rows = 0
     arrays = [
-        pa.array(flat[f.name], type=f.type, from_pandas=True)
-        for f in _ELEMENTS_ARROW
-        if f.name not in ("tags", "ignored")
+        pa.array(
+            np.concatenate(cols[f.name]) if cols[f.name]
+            else np.empty(0, dtype=object),
+            type=f.type, from_pandas=True,
+        )
+        for f in _ELEMENTS_ARROW if f.name in cols
     ]
+    n_rows = len(arrays[0])
     empty_tags = pa.ListArray.from_arrays(
         pa.array(np.zeros(n_rows + 1, dtype=np.int32)),
         pa.array([], type=pa.string()),
     )
     arrays.append(empty_tags)
     arrays.append(pa.array(np.zeros(n_rows, dtype=bool)))
-    return pa.RecordBatch.from_arrays(arrays, schema=_ELEMENTS_ARROW)
+    return pa.RecordBatch.from_arrays(arrays, names=_ELEMENTS_ARROW.names)
 
 
 def parse_elements_arrow_batch(
     batch: pa.RecordBatch, config: dict = None
 ) -> pa.RecordBatch:
-    return pack_elements_batch(
-        (doc_id, doc)
-        for _, doc_id, doc in _iter_docs(batch, config)
-        # parse-stage errors surface via extract_spans status
-        if not isinstance(doc, Exception)
-    )
+    return pack_elements_batch(_iter_docs(batch, config))
 
 
 def parse_elements(docs_df: DataFrame, config: dict = None) -> DataFrame:
@@ -192,47 +218,23 @@ def parse_elements(docs_df: DataFrame, config: dict = None) -> DataFrame:
     ordering UDF hook, components.py:409-413), ``font_mapping`` /
     ``font_mapping_is_regex`` / ``regex_flags`` / ``font_size_precision``.
     """
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            yield parse_elements_arrow_batch(batch, config)
-
-    return docs_df.select("doc_id", "spans").mapInArrow(gen, ELEMENTS_SCHEMA)
+    return _map_docs(
+        docs_df, ["doc_id", "spans"],
+        lambda batch: parse_elements_arrow_batch(batch, config),
+        ELEMENTS_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
 # extract: documents -> output spans (the full per-doc recipe)
 # ---------------------------------------------------------------------------
 
-_EXTRACT_ARROW_FIELDS = [
-    ("doc_id", pa.string()),
-    (
-        "spans",
-        pa.list_(
-            pa.struct(
-                [
-                    ("kind", pa.string()),
-                    ("text", pa.string()),
-                    ("media_ref", pa.string()),
-                    ("order", pa.int32()),
-                ]
-            )
-        ),
-    ),
-    ("n_spans", pa.int64()),
-    ("status", pa.string()),
-    ("error", pa.string()),
-]
-
 
 def extract_arrow_batch(
     batch: pa.RecordBatch, passthrough: List[str]
 ) -> pa.RecordBatch:
     return pack_extracted_batch(
-        ((doc_id, doc) for _pos, doc_id, doc in _iter_docs(batch)),
-        batch.num_rows,
-        batch,
-        passthrough,
+        _iter_docs(batch), batch.num_rows, batch, passthrough
     )
 
 
@@ -263,7 +265,7 @@ def pack_extracted_batch(
         doc_ids.append(doc_id)
         if isinstance(doc, Exception):  # the document failed to build
             statuses.append("error")
-            errors.append(f"{type(doc).__name__}: {doc}")
+            errors.append(_error_text(doc))
         else:
             try:
                 out = recipe_for(doc_id)(doc)
@@ -277,7 +279,7 @@ def pack_extracted_batch(
                 errors.append(None)
             except Exception as err:
                 statuses.append("error")
-                errors.append(f"{type(err).__name__}: {err}")
+                errors.append(_error_text(err))
         list_offs[row + 1] = list_offs[row] + counts[row]
         row += 1
 
@@ -293,7 +295,7 @@ def pack_extracted_batch(
             pa.array(out_ref, type=pa.string()),
             pa.array(order),
         ],
-        names=["kind", "text", "media_ref", "order"],
+        fields=list(_EXTRACTED_ARROW.field("spans").type.value_type),
     )
     spans_arr = pa.ListArray.from_arrays(pa.array(list_offs), struct)
     arrays = [
@@ -303,7 +305,7 @@ def pack_extracted_batch(
         pa.array(statuses, type=pa.string()),
         pa.array(errors, type=pa.string()),
     ]
-    names = [n for n, _ in _EXTRACT_ARROW_FIELDS]
+    names = list(_EXTRACTED_ARROW.names)
     for col in passthrough:
         arrays.append(batch.column(batch.schema.get_field_index(col)))
         names.append(col)
@@ -315,14 +317,11 @@ def extract_spans(
 ) -> DataFrame:
     """documents -> extracted(doc_id, spans, n_spans, status, error)."""
     passthrough = ["bucket"] if with_bucket else []
-    schema = EXTRACTED_BUCKETED_SCHEMA if with_bucket else EXTRACTED_SCHEMA
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            yield extract_arrow_batch(batch, passthrough)
-
-    cols = ["doc_id", "spans"] + passthrough
-    return docs_df.select(*cols).mapInArrow(gen, schema)
+    return _map_docs(
+        docs_df, ["doc_id", "spans"] + passthrough,
+        lambda batch: extract_arrow_batch(batch, passthrough),
+        EXTRACTED_BUCKETED_SCHEMA if with_bucket else EXTRACTED_SCHEMA,
+    )
 
 
 def materialize_elements(
@@ -393,18 +392,31 @@ def tune_scan_splits(
     spark.conf.set("spark.sql.files.openCostInBytes", str(min(split, 4 << 20)))
 
 
-def _doc_cost(docs_df: DataFrame):
-    """Per-document cost for the skew split.
+def _rebalanced(
+    spark: SparkSession,
+    df: DataFrame,
+    cost: Column,
+    threshold: int,
+    extract: Callable[[DataFrame], DataFrame],
+    heavy_partitions: Optional[int],
+) -> DataFrame:
+    """Skew-aware ``extract``: docs with ``cost > threshold`` are
+    round-robin repartitioned, the rest keep their scan splits, and each
+    branch runs its own kernel, unioned AFTER extraction.  One kernel over
+    a pre-kernel union would put the heavy exchange under it, and the two
+    corpus scans would serialize (measured 4x slower than plain on a
+    mildly-skewed corpus); separate branches let the light scan+kernel
+    run concurrently with the heavy scan+shuffle.
 
-    Prefer the ingest-persisted ``n_spans`` top-level column: it is a
-    stats-prunable parquet predicate, so the light and heavy branch
-    scans skip each other's files/row-groups (combined I/O ~= one
-    corpus read).  ``size(spans)`` is the fallback for inputs without
-    it — correct, but each branch then reads the full corpus.
+    An ingest-persisted cost column (``n_spans``, ``n_bytes``) pushes the
+    branch predicates to parquet stats, so the two branches read disjoint
+    row-groups; a computed cost makes each branch read the full corpus.
     """
-    if "n_spans" in docs_df.columns:
-        return F.col("n_spans")
-    return F.size("spans")
+    if heavy_partitions is None:
+        heavy_partitions = spark.sparkContext.defaultParallelism
+    light = df.where(cost <= threshold)
+    heavy = df.where(cost > threshold).repartition(heavy_partitions)
+    return extract(light).unionByName(extract(heavy))
 
 
 def extract_spans_rebalanced(
@@ -414,31 +426,16 @@ def extract_spans_rebalanced(
     heavy_partitions: Optional[int] = None,
     with_bucket: bool = False,
 ) -> DataFrame:
-    """Skew-aware extraction: per-branch kernels, union AFTER extraction.
-
-    Splitting first and running ONE kernel over the union puts the
-    heavy branch's exchange UNDER the union, so the combined kernel
-    stage cannot start until the heavy pre-scan finishes — the two
-    corpus scans serialize (measured 4x slower than plain on a
-    mildly-skewed corpus).  Extracting each
-    branch separately keeps the stages independent: Spark runs the light
-    scan+kernel CONCURRENTLY with the heavy scan+shuffle, so the second
-    scan hides behind the first and only genuinely pathological docs
-    (span count > threshold, ~0.5%% of a crawl) pay a (tiny) shuffle.
-
-    With the ingest-persisted ``n_spans`` column (see ``_doc_cost``),
-    the branch predicates push to parquet stats: the heavy scan opens
-    only row-groups whose max(n_spans) exceeds the threshold and the
-    light scan skips exactly those, so the two branches read DISJOINT
-    bytes — combined I/O is one corpus read, not two.
-    """
-    cost = _doc_cost(docs_df)
-    if heavy_partitions is None:
-        heavy_partitions = spark.sparkContext.defaultParallelism
-    light = docs_df.where(cost <= heavy_threshold)
-    heavy = docs_df.where(cost > heavy_threshold).repartition(heavy_partitions)
-    return extract_spans(spark, light, with_bucket=with_bucket).unionByName(
-        extract_spans(spark, heavy, with_bucket=with_bucket)
+    """``extract_spans`` split by span count (``_rebalanced``): the
+    ingest-persisted ``n_spans`` column when present, else
+    ``size(spans)``."""
+    cost = (
+        F.col("n_spans") if "n_spans" in docs_df.columns else F.size("spans")
+    )
+    return _rebalanced(
+        spark, docs_df, cost, heavy_threshold,
+        lambda df: extract_spans(spark, df, with_bucket=with_bucket),
+        heavy_partitions,
     )
 
 

@@ -19,9 +19,9 @@ from functools import partial
 from pathlib import Path
 from typing import Callable, Dict, List, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .frame import ElementFrame
 from .kernel.doc import Doc
@@ -29,6 +29,7 @@ from .kernel.layout import _MEMO_SPEC  # golden spec
 from .kernel.parse import doc_from_spans
 from .kernel.recipes import ordsum_items_table
 from .kernel.tables import extract_simple_table, extract_table
+from .pipeline import _iter_docs, _map_docs, _rows_batch
 from .pipeline import extract_spans, parse_elements
 from .synth import (
     ensure_borderline_corpus,
@@ -207,21 +208,20 @@ def _per_doc(
     tuples, emitted as rows of ``schema``.  A document whose parse or
     ``rows_of`` raises any exception emits no rows; the rest of its batch
     is unaffected."""
-    columns = [field.split()[0] for field in schema.split(",")]
+    struct = StructType.fromDDL(schema)
 
-    def batches_of(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                try:
-                    doc = doc_from_spans(doc_id, spans)
-                    doc_rows = list(rows_of(doc_id, doc))
-                except Exception:
-                    continue
-                rows += doc_rows
-            yield pd.DataFrame(rows, columns=columns)
+    def body(batch):
+        rows = []
+        for doc_id, doc in _iter_docs(batch):
+            if isinstance(doc, Exception):
+                continue
+            try:
+                rows += list(rows_of(doc_id, doc))
+            except Exception:
+                continue
+        return _rows_batch(rows, struct)
 
-    return docs.mapInPandas(batches_of, schema)
+    return _map_docs(docs, ["doc_id", "spans"], body, struct)
 
 
 def _driver_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2372,10 +2372,10 @@ def td_ngram_jaccard_pairs(spark, sf_dir):
 # WITH of _emb_duck; the top-k tail ends the statement.
 
 
-def _emb_duck(name: str = "e") -> str:
+def _emb_duck(name: str = "e", src: str = "embeddings") -> str:
     return f"""
 WITH {name} AS (
-  SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
+  SELECT vec_id, embedding::DOUBLE[] AS emb FROM {src}
 )"""
 
 
@@ -2543,8 +2543,8 @@ def _sketch_duck(col: str) -> str:
     return " + ".join(bits)
 
 
-def _emb_lsh_cte() -> str:
-    return _emb_duck("e0") + f"""
+def _emb_lsh_cte(src: str = "embeddings") -> str:
+    return _emb_duck("e0", src) + f"""
 , e AS (
   SELECT vec_id, emb, CAST({_sketch_duck("emb")} AS BIGINT) AS bucket FROM e0
 )"""
@@ -2613,10 +2613,8 @@ def _emb_hashed_table(spark, sf_dir):
     per (application, corpus) — the materialized table a deployment
     hashes once and every LSH consumer shares.  The sketch + norm are
     interpreted higher-order expressions (the costliest per-row work in
-    the emb_* family) and emb_dup_pairs alone scans the projection 3x
-    (bucket counts + both self-join sides); without sharing, each scan
-    re-evaluated the sketch over the corpus — the r4 emb_dup_pairs
-    watch-item regression."""
+    the emb_* family); without sharing, each LSH query re-evaluated the
+    sketch over the corpus."""
     return _shared(spark, sf_dir, "__emb_hashed__", lambda: (
         similarity.hashed_embeddings(_emb_table(spark, sf_dir))))
 
@@ -2660,14 +2658,18 @@ def emb_kmeans_ivf_topk(spark, sf_dir):
 
 @q(
     "emb_dup_pairs",
-    _emb_lsh_cte() + _capped_pairs_duck("e", "bucket", 0.9)
+    _emb_lsh_cte("read_parquet('{embdup_path}/*.parquet')")
+    + _capped_pairs_duck("e", "bucket", 0.9)
     + """
 SELECT id_a, id_b, cos FROM p""",
 )
 def emb_dup_pairs(spark, sf_dir):
+    """LSH-bucketed, chunk-capped near-dup pairs over the PLANTED
+    near-dup fixture (see emb_semantic_dedup): the corpus embeddings
+    table has no pair at cos >= 0.9, so over it both engines return
+    nothing and the pair join goes unchecked."""
     return similarity.embedding_dup_pairs(
-        _emb_table(spark, sf_dir), threshold=0.9,
-        hashed=_emb_hashed_table(spark, sf_dir),
+        _embdup_table(spark, sf_dir), threshold=0.9
     )
 
 
@@ -4154,7 +4156,8 @@ def _latest_green_rounds(root: Path) -> Dict[str, int]:
 # force a fresh row even though a green (now-stale) one exists.  The
 # td_* three share _PREP_CTES, whose ``clusters`` CTE is now MATERIALIZED;
 # every emb_* oracle is now assembled from the shared similarity fragments
-# (and the ADC LUT sums squared differences directly).
+# (and the ADC LUT sums squared differences directly); emb_dup_pairs now
+# runs over the planted near-dup fixture instead of the embeddings table.
 _RETOUCHED: set = {
     "td_corpus_prep", "td_corpus_to_shards", "td_prep_scrub_score",
     "emb_cosine_topk", "emb_ivf_topk", "emb_ivf_multiprobe",

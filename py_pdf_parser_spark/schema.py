@@ -130,3 +130,13 @@ LINEAGE_SCHEMA = StructType(
         StructField("wall_ms", LongType()),
     ]
 )
+
+# Per-document PDF parse audit (sources.pdf_bytes.pdf_parse_status).
+PDF_STATUS_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType()),
+        StructField("status", StringType()),
+        StructField("error", StringType()),
+        StructField("n_elements", LongType()),
+    ]
+)

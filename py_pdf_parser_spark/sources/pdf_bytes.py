@@ -20,9 +20,10 @@ preferred; an injected ``extract_pages`` callable overrides both
 (deterministic fakes in tests/test_sources.py).
 
 At 100 TB: one narrow mapInArrow over the (doc_id, pdf_bytes) scan —
-no shuffle; giant PDFs are the task-level skew the pipeline's
-``extract_spans_rebalanced`` already handles (split on byte size at the
-scan, since ``n_spans`` is unknown pre-parse).
+the pipeline's one driver (``pipeline._map_docs``), no shuffle; giant
+PDFs are the task-level skew its one splitter (``pipeline._rebalanced``)
+already handles (split on byte size at the scan, since ``n_spans`` is
+unknown pre-parse).
 """
 
 from __future__ import annotations
@@ -32,8 +33,11 @@ from typing import Any, Callable, Dict, Iterator, List, Optional, Tuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
+from .. import pipeline
 from ..kernel.doc import Doc
+from ..schema import ELEMENTS_SCHEMA, EXTRACTED_SCHEMA, PDF_STATUS_SCHEMA
 
 # Reference loaders.py:11 — pdfminer's own ordering is irrelevant
 # because the Doc re-orders per element_ordering.
@@ -297,8 +301,6 @@ def read_pdf_dir(
     time, before any byte is fetched.  Feed the result straight into
     ``parse_pdf_bytes`` / ``extract_spans_from_pdf``.
     """
-    from pyspark.sql import functions as F
-
     reader = spark.read.format("binaryFile").option(
         "pathGlobFilter", glob
     )
@@ -310,6 +312,16 @@ def read_pdf_dir(
         F.col("length").alias("n_bytes"),
         F.col("modificationTime").alias("mtime"),
     )
+
+
+def _map_pdfs(docs_df, pack, schema, bytes_col, password_col, *args):
+    """``pipeline._map_docs`` over the PDFs of ``docs_df``: ``pack(docs,
+    batch)`` turns a batch's ``_iter_pdf_docs`` pairs into its output;
+    ``args`` are ``_iter_pdf_docs``' remaining arguments."""
+    cols = ["doc_id", bytes_col] + ([password_col] if password_col else [])
+    return pipeline._map_docs(docs_df, cols, lambda batch: pack(
+        _iter_pdf_docs(batch, bytes_col, password_col, *args), batch
+    ), schema)
 
 
 def parse_pdf_bytes(
@@ -330,22 +342,11 @@ def parse_pdf_bytes(
     the spans path drops docs whose build raises; use
     ``pdf_parse_status`` to see which and why.  ``config`` may be a Doc-kwargs dict or a callable
     ``doc_id -> dict`` (per-family configs)."""
-    from ..pipeline import pack_elements_batch
-    from ..schema import ELEMENTS_SCHEMA
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            yield pack_elements_batch(
-                (doc_id, doc)
-                for doc_id, doc in _iter_pdf_docs(
-                    batch, bytes_col, password_col, la_params, config,
-                    extract_pages, include_media,
-                )
-                if not isinstance(doc, Exception)
-            )
-
-    cols = ["doc_id", bytes_col] + ([password_col] if password_col else [])
-    return docs_df.select(*cols).mapInArrow(gen, ELEMENTS_SCHEMA)
+    return _map_pdfs(
+        docs_df, lambda docs, _: pipeline.pack_elements_batch(docs),
+        ELEMENTS_SCHEMA, bytes_col, password_col, la_params, config,
+        extract_pages, include_media,
+    )
 
 
 def extract_spans_from_pdf(
@@ -365,21 +366,12 @@ def extract_spans_from_pdf(
     the pdf_writer's rendered corpora this closes the full round trip:
     spans -> PDF bytes -> parse -> extract == spans-path extract
     (span-sequence equality on kind/text/media_ref/order)."""
-    from ..pipeline import pack_extracted_batch
-    from ..schema import EXTRACTED_SCHEMA
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            yield pack_extracted_batch(
-                _iter_pdf_docs(
-                    batch, bytes_col, password_col, la_params, config,
-                    extract_pages, include_media,
-                ),
-                batch.num_rows,
-            )
-
-    cols = ["doc_id", bytes_col] + ([password_col] if password_col else [])
-    return docs_df.select(*cols).mapInArrow(gen, EXTRACTED_SCHEMA)
+    return _map_pdfs(
+        docs_df,
+        lambda docs, batch: pipeline.pack_extracted_batch(docs, batch.num_rows),
+        EXTRACTED_SCHEMA, bytes_col, password_col, la_params, config,
+        extract_pages, include_media,
+    )
 
 
 def extract_spans_from_pdf_rebalanced(
@@ -390,49 +382,35 @@ def extract_spans_from_pdf_rebalanced(
     bytes_col: str = "pdf_bytes",
     **kwargs: Any,
 ) -> DataFrame:
-    """Skew-aware byte-path extraction (per-branch kernels, union AFTER
-    extraction — same shape as pipeline.extract_spans_rebalanced and
-    for the same reason: a pre-kernel union serializes the scans).
-
-    Cost signal: an ingest-persisted ``n_bytes`` column when present
-    (pushes to parquet row-group stats, so the branch scans read
-    disjoint bytes), else ``length(pdf_bytes)`` computed in the scan
-    stage.  Span counts are unknown before parsing a PDF, so byte size
-    is the only pre-parse skew signal — and the kernel is near-linear
-    in bytes, so byte-bounded branches bound task time (PLANS.md
-    round-1 item 7's analysis applies unchanged)."""
-    from pyspark.sql import functions as F
-
+    """``extract_spans_from_pdf`` split by byte size
+    (``pipeline._rebalanced``): an ingest-persisted ``n_bytes`` column
+    when present, else ``length(pdf_bytes)`` computed in the scan stage.
+    Span counts are unknown before parsing a PDF, so byte size is the
+    only pre-parse skew signal — and the kernel is near-linear in bytes,
+    so byte-bounded branches bound task time (PLANS.md round-1 item 7's
+    analysis applies unchanged)."""
     cost = (
         F.col("n_bytes")
         if "n_bytes" in docs_df.columns
         else F.length(bytes_col)
     )
-    if heavy_partitions is None:
-        heavy_partitions = spark.sparkContext.defaultParallelism
-    light = docs_df.where(cost <= heavy_threshold_bytes)
-    heavy = docs_df.where(cost > heavy_threshold_bytes).repartition(
-        heavy_partitions
-    )
-    return extract_spans_from_pdf(
-        light, bytes_col=bytes_col, **kwargs
-    ).unionByName(
-        extract_spans_from_pdf(heavy, bytes_col=bytes_col, **kwargs)
+    return pipeline._rebalanced(
+        spark, docs_df, cost, heavy_threshold_bytes,
+        lambda df: extract_spans_from_pdf(df, bytes_col=bytes_col, **kwargs),
+        heavy_partitions,
     )
 
 
-PDF_STATUS_SCHEMA = (
-    "doc_id string, status string, error string, n_elements long"
-)
-
-_PDF_STATUS_ARROW = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("status", pa.string()),
-        ("error", pa.string()),
-        ("n_elements", pa.int64()),
-    ]
-)
+def _pack_status(docs: Iterator[Tuple[str, Any]]) -> pa.RecordBatch:
+    return pipeline._rows_batch(
+        [
+            (doc_id, "error", pipeline._error_text(doc), 0)
+            if isinstance(doc, Exception)
+            else (doc_id, "ok", None, doc.n)
+            for doc_id, doc in docs
+        ],
+        PDF_STATUS_SCHEMA,
+    )
 
 
 def pdf_parse_status(
@@ -448,35 +426,8 @@ def pdf_parse_status(
     n_elements) — the byte-stream analogue of extract_spans' status
     columns.  Wrong-password documents show up here as
     ``PDFPasswordIncorrect`` rows instead of failing the job."""
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids: List[str] = []
-            statuses: List[str] = []
-            errors: List[Optional[str]] = []
-            counts: List[int] = []
-            for doc_id, doc in _iter_pdf_docs(
-                batch, bytes_col, password_col, la_params, config,
-                extract_pages, include_media,
-            ):
-                ids.append(doc_id)
-                if isinstance(doc, Exception):
-                    statuses.append("error")
-                    errors.append(f"{type(doc).__name__}: {doc}")
-                    counts.append(0)
-                else:
-                    statuses.append("ok")
-                    errors.append(None)
-                    counts.append(doc.n)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, type=pa.string()),
-                    pa.array(statuses, type=pa.string()),
-                    pa.array(errors, type=pa.string()),
-                    pa.array(counts, type=pa.int64()),
-                ],
-                schema=_PDF_STATUS_ARROW,
-            )
-
-    cols = ["doc_id", bytes_col] + ([password_col] if password_col else [])
-    return docs_df.select(*cols).mapInArrow(gen, PDF_STATUS_SCHEMA)
+    return _map_pdfs(
+        docs_df, lambda docs, _: _pack_status(docs), PDF_STATUS_SCHEMA,
+        bytes_col, password_col, la_params, config, extract_pages,
+        include_media,
+    )

@@ -175,6 +175,12 @@ def test_rows_only_queries_run(spark, name):
     assert len(df.columns) > 0
 
 
+def test_emb_dup_pairs_finds_the_planted_pairs(spark):
+    """emb_dup_pairs runs over the planted near-dup fixture, so its
+    parity case compares real pairs, not two empty sets."""
+    assert QS["emb_dup_pairs"](spark, SF_DIR).count() > 0
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

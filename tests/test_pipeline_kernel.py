@@ -1,12 +1,20 @@
 """Arrow-batch kernel plumbing: error containment, empty batches."""
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 
-from py_pdf_parser_spark.kernel.layout import memo_spans, ora_spans
+from py_pdf_parser_spark.kernel.doc import PageOrdering
+from py_pdf_parser_spark.kernel.layout import (
+    SPAN_BUILDERS,
+    media_spans,
+    memo_spans,
+    ora_spans,
+)
 from py_pdf_parser_spark.pipeline import (
     extract_arrow_batch,
     parse_elements_arrow_batch,
 )
+from py_pdf_parser_spark.sources.pdf_writer import render_pdf
 from py_pdf_parser_spark.synth import SPANS_ARROW_SCHEMA
 
 
@@ -120,21 +128,31 @@ def test_any_exception_is_contained_per_document(monkeypatch):
 
 
 def test_null_span_offset_is_an_error_row():
-    """A span with a null offset cannot be ordered: its document becomes
-    an error row instead of extracting from a garbage offset, and the
-    batch's other documents come out byte-identical to a clean batch."""
+    """A span with a null offset cannot be ordered, and a text span with
+    a null text has nothing to extract: each document becomes an error
+    row instead of extracting garbage, and the batch's other documents
+    come out byte-identical to a clean batch."""
     clean = [(f"ora-{i:06d}", ora_spans(i)) for i in range(3)]
-    clean.append(("memo-000000", memo_spans(0)))
-    bad = ("ora-000099", [("text", "a", None, 0), ("text", "x", None, None)])
-    poisoned = clean[:2] + [bad] + clean[2:]
+    clean += [("memo-000000", memo_spans(0)), ("media-000002", media_spans(2))]
+    bad = {
+        "ora-000099": ([("text", "a", None, 0), ("text", "x", None, None)],
+                       "ValueError: null span offset"),
+        "ora-000098": ([("media", None, "m0", 0), ("text", None, None, 1)],
+                       "ValueError: null text in text span"),
+    }
+    poisoned = clean[:2] + [(d, spans) for d, (spans, _) in bad.items()]
+    poisoned += clean[2:]
 
     out = pa.Table.from_batches([extract_arrow_batch(_batch(poisoned), [])])
     rows = {r["doc_id"]: r for r in out.to_pylist()}
-    assert rows["ora-000099"]["status"] == "error"
-    assert rows["ora-000099"]["error"] == "ValueError: null span offset"
-    assert rows["ora-000099"]["n_spans"] == 0
-    kept = out.filter(pa.array([d != "ora-000099" for d in rows]))
+    for doc_id, (_, error) in bad.items():
+        assert rows[doc_id]["status"] == "error"
+        assert rows[doc_id]["error"] == error
+        assert rows[doc_id]["n_spans"] == 0
+    kept = out.filter(pa.array([d not in bad for d in rows]))
     expected = pa.Table.from_batches([extract_arrow_batch(_batch(clean), [])])
+    # media spans carry a null text by design
+    assert kept.column("status").to_pylist() == ["ok"] * len(clean)
     assert _ipc_bytes(kept) == _ipc_bytes(expected)
 
     elements = pa.Table.from_batches(
@@ -144,3 +162,52 @@ def test_null_span_offset_is_an_error_row():
         [parse_elements_arrow_batch(_batch(clean))]
     )
     assert _ipc_bytes(elements) == _ipc_bytes(expected)
+
+
+def test_raising_ordering_callable_drops_its_documents():
+    """A custom ``element_ordering`` that raises for some documents drops
+    exactly those from the parse; the others parse as with an ordering
+    that never raises."""
+    def order(views):
+        if any(v.text == "TO:" for v in views):
+            raise RuntimeError("ordering bug")
+        return views
+
+    ora = [(f"ora-{i:06d}", ora_spans(i)) for i in range(3)]
+    batch = _batch(ora[:1] + [("memo-000000", memo_spans(0))] + ora[1:])
+    out = parse_elements_arrow_batch(
+        batch, config={"element_ordering": PageOrdering(order)}
+    )
+    expected = parse_elements_arrow_batch(
+        _batch(ora), config={"element_ordering": PageOrdering(lambda v: v)}
+    )
+    assert out.num_rows > 0
+    assert _ipc_bytes(pa.Table.from_batches([out])) == _ipc_bytes(
+        pa.Table.from_batches([expected])
+    )
+
+
+def test_kernel_probe_patch_points_are_on_the_hot_path(tmp_path):
+    """perfbench's Spark-free probe times the kernel by swapping module
+    globals (``pipeline._flatten_span_batch``, ``doc_from_arrays``,
+    ``recipe_for``, ``pdf_bytes.doc_from_pdf_bytes``) for timers: each
+    must still be what the batch body calls, or its layer reads 0."""
+    from perfbench.layers import kernel_probe
+
+    rows = [(f"{fam}-{n:06d}", SPAN_BUILDERS[fam](n))
+            for fam, n in (("ora", 1), ("memo", 0), ("media", 2), ("ordsum", 0))]
+    (tmp_path / "spans").mkdir()
+    pq.write_table(pa.Table.from_batches([_batch(rows)]),
+                   tmp_path / "spans" / "part-0.parquet")
+    (tmp_path / "pdf").mkdir()
+    pq.write_table(pa.table({
+        "doc_id": [d for d, _ in rows],
+        "pdf_bytes": pa.array([render_pdf(d, s) for d, s in rows], pa.binary()),
+    }), tmp_path / "pdf" / "part-0.parquet")
+
+    spans, _ = kernel_probe(str(tmp_path / "spans"), pdf=False)
+    for key in ("kernel.flatten_s", "kernel.parse_s", "kernel.recipe_s"):
+        assert spans[key] > 0, key
+    pdf, _ = kernel_probe(str(tmp_path / "pdf"), pdf=True)
+    assert pdf["sources.pdf_parse_s"] > 0
+    assert pdf["kernel.recipe_s"] > 0

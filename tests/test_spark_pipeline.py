@@ -417,6 +417,64 @@ class TestHotPathPlan:
         assert "Scan parquet" in plan and "MapInArrow" in plan
         assert "Exchange" not in plan
 
+    def test_pdf_and_registry_kernels_run_on_map_in_arrow(self, spark, tmp_path):
+        """The PDF-bytes path and the registry's per-document row kernel
+        (``queries._per_doc``) run on the same Arrow driver."""
+        from py_pdf_parser_spark import queries as Q
+        from py_pdf_parser_spark.sources.pdf_bytes import extract_spans_from_pdf
+        from py_pdf_parser_spark.sources.pdf_writer import render_pdf
+
+        pdfs = spark.createDataFrame(
+            [(f"ora-{i:06d}", render_pdf(f"ora-{i:06d}", ora_spans(i)))
+             for i in range(2)],
+            "doc_id string, pdf_bytes binary",
+        )
+        for name, df in (
+            ("pdf", extract_spans_from_pdf(pdfs)),
+            ("per_doc", Q.pp_set_protocol(spark, str(tmp_path / "sf0.001"))),
+        ):
+            out = str(tmp_path / name)
+            df.write.parquet(out)
+            plan = _executed_plan(spark, out)
+            assert "MapInArrow" in plan and "MapInPandas" not in plan, name
+
+
+class TestPerDoc:
+    def test_failing_documents_emit_no_rows(self, spark):
+        """``queries._per_doc`` skips a document whose ``rows_of`` raises
+        and one that cannot be built (a null span offset); every other
+        document's rows come out."""
+        import pyarrow as pa
+
+        from py_pdf_parser_spark import queries as Q
+        from py_pdf_parser_spark.synth import SPANS_ARROW_SCHEMA
+
+        docs = [(f"ora-{i:06d}", ora_spans(i)) for i in range(4)]
+        unbuildable = ("ora-000099",
+                       [("text", "a", None, 0), ("text", "x", None, None)])
+        table = pa.Table.from_pydict({
+            "doc_id": [d for d, _ in docs + [unbuildable]],
+            "spans": [
+                [{"kind": k, "text": t, "media_ref": m, "offset": o}
+                 for k, t, m, o in spans]
+                for _, spans in docs + [unbuildable]
+            ],
+            "n_spans": [len(spans) for _, spans in docs + [unbuildable]],
+        }, schema=SPANS_ARROW_SCHEMA)
+
+        def rows_of(doc_id, doc):
+            if doc_id == "ora-000002":
+                raise RuntimeError("rows_of bug")
+            return [(doc_id, doc.n)]
+
+        out = Q._per_doc(
+            spark.createDataFrame(table).repartition(2),
+            "doc_id string, n long", rows_of,
+        ).collect()
+        assert sorted((r["doc_id"], r["n"]) for r in out) == [
+            (d, len(spans)) for d, spans in docs if d != "ora-000002"
+        ]
+
 
 class TestWorkerZipCache:
     def test_reused_worker_keeps_spark_archive_directories(self, spark):
