@@ -358,16 +358,17 @@ def materialize_elements(
 # ---------------------------------------------------------------------------
 
 
-def tune_scan_splits(
-    spark: SparkSession, input_path: str, tasks_per_core: int = 4,
-    replicate: int = 1,
-) -> None:
-    """Size parquet scan splits so the job gets ~tasks_per_core tasks/core.
+_TASKS_PER_CORE = 4
+
+
+def tune_scan_splits(spark: SparkSession, input_path: str) -> None:
+    """Size parquet scan splits so the job gets ~_TASKS_PER_CORE tasks
+    per core.
 
     Parallelism comes from scan splits, not a shuffle (see the module
-    docstring).  The split is input bytes / (cores * tasks_per_core),
+    docstring).  The split is input bytes / (cores * _TASKS_PER_CORE),
     clamped to [1 MiB, 128 MiB].  At 100 TB the 128 MiB cap binds (~1M
-    tasks) and this is a no-op.  Below cores * tasks_per_core MiB the
+    tasks) and this is a no-op.  Below cores * _TASKS_PER_CORE MiB the
     1 MiB floor binds: the gated perfbench inputs (~0.4 MB and ~0.18 MB)
     get the same split, plan and tasks at 1, 2 or 4 tasks per core.
     Paired runs on 4 CPUs (``--seconds 10``, seeds 1-3, per-task archive
@@ -385,9 +386,8 @@ def tune_scan_splits(
         for f in files:
             if f.endswith(".parquet"):
                 total += os.path.getsize(os.path.join(root, f))
-    total *= max(replicate, 1)
     cores = spark.sparkContext.defaultParallelism
-    split = max(1 << 20, min(128 << 20, total // max(cores * tasks_per_core, 1)))
+    split = max(1 << 20, min(128 << 20, total // (cores * _TASKS_PER_CORE)))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     spark.conf.set("spark.sql.files.openCostInBytes", str(min(split, 4 << 20)))
 
@@ -398,11 +398,11 @@ def _rebalanced(
     cost: Column,
     threshold: int,
     extract: Callable[[DataFrame], DataFrame],
-    heavy_partitions: Optional[int],
 ) -> DataFrame:
     """Skew-aware ``extract``: docs with ``cost > threshold`` are
-    round-robin repartitioned, the rest keep their scan splits, and each
-    branch runs its own kernel, unioned AFTER extraction.  One kernel over
+    round-robin repartitioned over ``defaultParallelism`` partitions,
+    the rest keep their scan splits, and each branch runs its own
+    kernel, unioned AFTER extraction.  One kernel over
     a pre-kernel union would put the heavy exchange under it, and the two
     corpus scans would serialize (measured 4x slower than plain on a
     mildly-skewed corpus); separate branches let the light scan+kernel
@@ -412,10 +412,10 @@ def _rebalanced(
     branch predicates to parquet stats, so the two branches read disjoint
     row-groups; a computed cost makes each branch read the full corpus.
     """
-    if heavy_partitions is None:
-        heavy_partitions = spark.sparkContext.defaultParallelism
     light = df.where(cost <= threshold)
-    heavy = df.where(cost > threshold).repartition(heavy_partitions)
+    heavy = df.where(cost > threshold).repartition(
+        spark.sparkContext.defaultParallelism
+    )
     return extract(light).unionByName(extract(heavy))
 
 
@@ -423,7 +423,6 @@ def extract_spans_rebalanced(
     spark: SparkSession,
     docs_df: DataFrame,
     heavy_threshold: int = 2048,
-    heavy_partitions: Optional[int] = None,
     with_bucket: bool = False,
 ) -> DataFrame:
     """``extract_spans`` split by span count (``_rebalanced``): the
@@ -435,7 +434,6 @@ def extract_spans_rebalanced(
     return _rebalanced(
         spark, docs_df, cost, heavy_threshold,
         lambda df: extract_spans(spark, df, with_bucket=with_bucket),
-        heavy_partitions,
     )
 
 

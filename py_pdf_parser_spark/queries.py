@@ -108,6 +108,23 @@ sh AS (
   FROM t)"""
 
 
+def _topk_tail_duck(src: str, order: str, k: int = 5, part: str = "q_id",
+                    tie: str = "vec_id", cols: str = None) -> str:
+    """similarity._top_k: the best ``k`` rows of ``src`` per ``part``
+    (over all rows when empty) by ``order`` (the score column,
+    optionally DESC), ties by ``tie``; selects ``cols`` (default: part,
+    tie, score, rank) with rank a bigint.  Ends the statement."""
+    score = order.split()[0]
+    over = f"PARTITION BY {part} " if part else ""
+    return f"""
+, r AS (
+  SELECT *, CAST(row_number() OVER ({over}ORDER BY {order}, {tie})
+                 AS BIGINT) AS rank
+  FROM {src}
+)
+SELECT {cols or f"{part}, {tie}, {score}, rank"} FROM r WHERE rank <= {k}"""
+
+
 # ---------------------------------------------------------------------------
 # Spark-side helpers
 # ---------------------------------------------------------------------------
@@ -1448,6 +1465,112 @@ def mm_frame_samples(spark, sf_dir):
 
 
 # -- text analysis (driver documents table) ----------------------------------------
+#
+# The fixed-point td_* oracles are assembled from one DuckDB fragment per
+# analysis.py helper: the micro-bit log2 (_micro_log2), the unigram LM
+# CTE chain (unigram_lm), the bits-per-token select (_bits_per_token), the
+# inverse-CDF quantile (_inverse_cdf), the idf (_idf) and the top-k tail
+# (_top_k), plus the substring-dedup chain (dedup.substring_dedup).  CTE
+# fragments open with ", name AS (" so they chain after a WITH.
+
+
+def _micro_log2_duck(num: str, den: str) -> str:
+    """_micro_log2: round(log2(num / den) * 1e6) as a BIGINT."""
+    return f"CAST(round(log2(({num}) / ({den})) * 1000000) AS BIGINT)"
+
+
+def _unigram_lm_duck(toks: str) -> str:
+    """unigram_lm over the token rows ``toks`` (..., tok): c (tok, c),
+    s (n_total, v_size) and lm (tok, lp)."""
+    lp = _micro_log2_duck("c + 1.0", "n_total + v_size")
+    return f"""
+, c AS (SELECT tok, COUNT(*) AS c FROM {toks} GROUP BY tok),
+s AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total,
+             CAST(COUNT(*) AS BIGINT) AS v_size FROM c),
+lm AS (SELECT tok, {lp} AS lp FROM c, s)"""
+
+
+def _bits_per_token_duck(src: str, doc: str = "doc_id") -> str:
+    """_bits_per_token: (doc_id, n_tokens, bits_per_token) over the
+    (``doc``, lp) rows of ``src``."""
+    return f"""
+SELECT {doc},
+       CAST(COUNT(*) AS BIGINT) AS n_tokens,
+       round(-CAST(SUM(lp) AS BIGINT) / COUNT(*) / 1000000.0, 4)
+           AS bits_per_token
+FROM {src}
+GROUP BY {doc}"""
+
+
+def _inverse_cdf_duck(src: str, part: str, value: str, frac: str,
+                      fracs: tuple, d: int) -> str:
+    """_inverse_cdf over ``src``: iq (part, frac, total, value) holds,
+    per ``part`` and fraction f/``d`` (f in ``fracs``, column
+    ``frac``), the smallest ``value`` whose cumulative count reaches
+    ceil(f * total / d)."""
+    values = ",".join(f"({f})" for f in fracs)
+    return f"""
+, vc AS (SELECT {part}, {value}, COUNT(*) AS cnt
+         FROM {src} GROUP BY {part}, {value}),
+cm AS (SELECT {part}, {value},
+              SUM(cnt) OVER (PARTITION BY {part} ORDER BY {value}) AS cum,
+              SUM(cnt) OVER (PARTITION BY {part}) AS total
+       FROM vc),
+fr AS (SELECT * FROM (VALUES {values}) AS fr({frac})),
+iq AS (SELECT {part}, {frac}, MIN(total) AS total, MIN({value}) AS {value}
+       FROM cm, fr WHERE cum >= ({frac} * total + {d - 1}) // {d}
+       GROUP BY {part}, {frac})"""
+
+
+def _idf_duck(postings: str) -> str:
+    """_idf over the distinct (doc_id, tok) rows of ``postings``: nd
+    (n_docs, tot) corpus stats, dfq (tok, df), idf (tok, n_docs, tot,
+    idf_micro)."""
+    idf = _micro_log2_duck("n_docs + 1.0", "df + 1.0")
+    return f"""
+, nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+                CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS tot
+         FROM documents),
+dfq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df
+        FROM {postings} GROUP BY tok),
+idf AS (SELECT tok, n_docs, tot, {idf} AS idf_micro FROM dfq, nd)"""
+
+
+def _substring_dedup_duck(words: str) -> str:
+    """dedup.substring_dedup (k=5) over ``words`` (doc_id, w = the
+    whitespace tokens): sd (doc_id, n_tokens, dup_tokens, clean_text),
+    a token being a dup when a 5-gram covering it occurs in >= 2
+    distinct documents."""
+    return f"""
+, tx AS (SELECT doc_id, w, unnest(range(1, len(w) + 1)) AS p FROM {words}),
+toks AS (SELECT doc_id, CAST(p - 1 AS BIGINT) AS pos, w[p] AS tok FROM tx),
+kx AS (SELECT doc_id, w, unnest(range(0, len(w) - 4)) AS j FROM {words}),
+kg AS (
+  SELECT doc_id, CAST(j AS BIGINT) AS pos,
+         CAST('0x' || substr(md5(array_to_string(w[j + 1: j + 5], '_')),
+                             1, 15) AS BIGINT) AS h
+  FROM kx),
+dup_h AS (SELECT h FROM kg GROUP BY h HAVING MIN(doc_id) <> MAX(doc_id)),
+cx AS (SELECT kg.doc_id, unnest(range(kg.pos, kg.pos + 5)) AS cp
+       FROM kg JOIN dup_h USING (h)),
+cov AS (SELECT DISTINCT doc_id, CAST(cp AS BIGINT) AS cpos FROM cx),
+f AS (
+  SELECT toks.doc_id, toks.pos, toks.tok, cov.cpos IS NOT NULL AS is_dup
+  FROM toks LEFT JOIN cov
+    ON toks.doc_id = cov.doc_id AND toks.pos = cov.cpos),
+sd AS (
+  SELECT doc_id,
+         CAST(COUNT(*) AS BIGINT) AS n_tokens,
+         CAST(SUM(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT)
+             AS dup_tokens,
+         COALESCE(string_agg(CASE WHEN NOT is_dup THEN tok END,
+                             ' ' ORDER BY pos), '') AS clean_text
+  FROM f GROUP BY doc_id)"""
+
+
+_TOKENS_DUCK = """
+WITH t AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)"""
 
 
 @q(
@@ -1463,29 +1586,10 @@ def td_token_count(spark, sf_dir):
 @q(
     "td_substring_dedup",
     """
-WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-tx AS (SELECT doc_id, w, unnest(range(1, len(w) + 1)) AS p FROM d),
-toks AS (SELECT doc_id, CAST(p - 1 AS BIGINT) AS pos, w[p] AS tok FROM tx),
-kx AS (SELECT doc_id, w, unnest(range(0, len(w) - 4)) AS j FROM d),
-kg AS (
-  SELECT doc_id, CAST(j AS BIGINT) AS pos,
-         CAST('0x' || substr(md5(array_to_string(w[j + 1: j + 5], '_')),
-                             1, 15) AS BIGINT) AS h
-  FROM kx),
-dup_h AS (SELECT h FROM kg GROUP BY h HAVING MIN(doc_id) <> MAX(doc_id)),
-cx AS (SELECT kg.doc_id, unnest(range(kg.pos, kg.pos + 5)) AS cp
-       FROM kg JOIN dup_h USING (h)),
-cov AS (SELECT DISTINCT doc_id, CAST(cp AS BIGINT) AS cpos FROM cx),
-f AS (
-  SELECT toks.doc_id, toks.pos, toks.tok, cov.cpos IS NOT NULL AS is_dup
-  FROM toks LEFT JOIN cov
-    ON toks.doc_id = cov.doc_id AND toks.pos = cov.cpos)
-SELECT doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_tokens,
-       CAST(SUM(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT) AS dup_tokens,
-       COALESCE(string_agg(CASE WHEN NOT is_dup THEN tok END,
-                           ' ' ORDER BY pos), '') AS clean_text
-FROM f GROUP BY doc_id""",
+WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)"""
+    + _substring_dedup_duck("d")
+    + """
+SELECT * FROM sd""",
 )
 def td_substring_dedup(spark, sf_dir):
     """Exact substring (duplicated-span) dedup, the k-gram-hash
@@ -1499,23 +1603,9 @@ def td_substring_dedup(spark, sf_dir):
 
 @q(
     "td_lm_perplexity",
-    """
-WITH t AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-c AS (SELECT tok, COUNT(*) AS c FROM t GROUP BY tok),
-s AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total,
-             CAST(COUNT(*) AS BIGINT) AS v_size FROM c),
-lm AS (
-  SELECT tok,
-         CAST(round(log2((c + 1.0) / (n_total + v_size)) * 1000000)
-              AS BIGINT) AS lp
-  FROM c, s)
-SELECT t.doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_tokens,
-       round(-CAST(SUM(lp) AS BIGINT) / COUNT(*) / 1000000.0, 4)
-           AS bits_per_token
-FROM t JOIN lm USING (tok)
-GROUP BY t.doc_id""",
+    _TOKENS_DUCK
+    + _unigram_lm_duck("t")
+    + _bits_per_token_duck("t JOIN lm USING (tok)", "t.doc_id"),
 )
 def td_lm_perplexity(spark, sf_dir):
     """CCNet-style unigram-LM quality score: per-doc bits-per-token
@@ -1531,20 +1621,14 @@ def td_lm_perplexity(spark, sf_dir):
     """
 WITH l AS (
   SELECT source, length(string_split(text, ' ')) AS n_tokens
-  FROM documents),
-c AS (SELECT source, n_tokens, COUNT(*) AS cnt
-      FROM l GROUP BY source, n_tokens),
-cm AS (SELECT source, n_tokens,
-              SUM(cnt) OVER (PARTITION BY source
-                             ORDER BY n_tokens) AS cum,
-              SUM(cnt) OVER (PARTITION BY source) AS total
-       FROM c),
-qs AS (SELECT * FROM (VALUES (25),(50),(75),(95),(99)) AS t(q))
+  FROM documents)"""
+    + _inverse_cdf_duck("l", "source", "n_tokens", "q",
+                        (25, 50, 75, 95, 99), 100)
+    + """
 SELECT source, CAST(q AS BIGINT) AS q,
-       CAST(MIN(total) AS BIGINT) AS n_docs,
-       CAST(MIN(n_tokens) AS BIGINT) AS ntok_q
-FROM cm, qs WHERE cum >= (q * total + 99) // 100
-GROUP BY source, q""",
+       CAST(total AS BIGINT) AS n_docs,
+       CAST(n_tokens AS BIGINT) AS ntok_q
+FROM iq""",
 )
 def td_length_quantiles(spark, sf_dir):
     """Exact per-source token-length quantiles (p25/p50/p75/p95/p99)
@@ -1557,38 +1641,20 @@ def td_length_quantiles(spark, sf_dir):
 
 @q(
     "td_ppl_buckets",
-    """
-WITH t AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-c AS (SELECT tok, COUNT(*) AS c FROM t GROUP BY tok),
-s AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total,
-             CAST(COUNT(*) AS BIGINT) AS v_size FROM c),
-lm AS (
-  SELECT tok,
-         CAST(round(log2((c + 1.0) / (n_total + v_size)) * 1000000)
-              AS BIGINT) AS lp
-  FROM c, s),
-sc AS (SELECT t.doc_id,
-              round(-CAST(SUM(lp) AS BIGINT) / COUNT(*) / 1000000.0, 4)
-                  AS bits_per_token
-       FROM t JOIN lm USING (tok) GROUP BY t.doc_id),
+    _TOKENS_DUCK
+    + _unigram_lm_duck("t")
+    + """,
+sc AS ("""
+    + _bits_per_token_duck("t JOIN lm USING (tok)", "t.doc_id")
+    + """),
 sl AS (SELECT d.doc_id, d.lang, sc.bits_per_token
-       FROM documents d JOIN sc USING (doc_id)),
-cnt AS (SELECT lang, bits_per_token, COUNT(*) AS cnt
-        FROM sl GROUP BY lang, bits_per_token),
-cm AS (SELECT lang, bits_per_token,
-              SUM(cnt) OVER (PARTITION BY lang
-                             ORDER BY bits_per_token) AS cum,
-              SUM(cnt) OVER (PARTITION BY lang) AS total
-       FROM cnt),
-ks AS (SELECT * FROM (VALUES (1),(2)) AS kt(k)),
-th AS (SELECT lang, k, MIN(bits_per_token) AS t
-       FROM cm, ks WHERE cum >= (k * total + 2) // 3
-       GROUP BY lang, k),
+       FROM documents d JOIN sc USING (doc_id))"""
+    + _inverse_cdf_duck("sl", "lang", "bits_per_token", "k", (1, 2), 3)
+    + """,
 tp AS (SELECT lang,
-              MIN(CASE WHEN k = 1 THEN t END) AS t1,
-              MIN(CASE WHEN k = 2 THEN t END) AS t2
-       FROM th GROUP BY lang)
+              MIN(CASE WHEN k = 1 THEN bits_per_token END) AS t1,
+              MIN(CASE WHEN k = 2 THEN bits_per_token END) AS t2
+       FROM iq GROUP BY lang)
 SELECT sl.doc_id, sl.lang, sl.bits_per_token,
        CASE WHEN sl.bits_per_token <= tp.t1 THEN 'head'
             WHEN sl.bits_per_token <= tp.t2 THEN 'middle'
@@ -1614,11 +1680,8 @@ def td_ppl_buckets(spark, sf_dir):
     """
 WITH t AS (
   SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
-c AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM t GROUP BY tok),
-r AS (SELECT tok, c,
-             row_number() OVER (ORDER BY c DESC, tok) AS rank
-      FROM c)
-SELECT CAST(rank AS BIGINT) AS rank, tok, c FROM r WHERE rank <= 100""",
+c AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS c FROM t GROUP BY tok)"""
+    + _topk_tail_duck("c", "c DESC", 100, "", "tok", "rank, tok, c"),
 )
 def td_vocab_topk(spark, sf_dir):
     """Vocabulary head (tokenizer-training count table): top-100 corpus
@@ -1631,25 +1694,17 @@ def td_vocab_topk(spark, sf_dir):
 
 @q(
     "td_tfidf_topk",
-    """
-WITH t AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+    _TOKENS_DUCK
+    + """,
 tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
-       FROM t GROUP BY doc_id, tok),
-nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-dfq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY tok),
-idf AS (SELECT tok,
-               CAST(round(log2((n_docs + 1.0) / (df + 1.0)) * 1000000)
-                    AS BIGINT) AS idf_micro
-        FROM dfq, nd),
+       FROM t GROUP BY doc_id, tok)"""
+    + _idf_duck("tf")
+    + """,
 s AS (SELECT tf.doc_id, tf.tok, tf.tf,
              CAST(tf.tf * idf.idf_micro AS BIGINT) AS score_micro
-      FROM tf JOIN idf USING (tok)),
-r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-                                   ORDER BY score_micro DESC, tok) AS rank
-      FROM s)
-SELECT doc_id, tok, tf, score_micro, CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= 3""",
+      FROM tf JOIN idf USING (tok))"""
+    + _topk_tail_duck("s", "score_micro DESC", 3, "doc_id", "tok",
+                      "doc_id, tok, tf, score_micro, rank"),
 )
 def td_tfidf_topk(spark, sf_dir):
     """Per-document tf-idf keywords (top-3): salient-term extraction
@@ -1673,13 +1728,9 @@ p AS (SELECT substring(word, CAST(i AS INTEGER), 1) AS sym_a,
              substring(word, CAST(i AS INTEGER) + 1, 1) AS sym_b, wcount
       FROM ix),
 c AS (SELECT sym_a, sym_b, CAST(SUM(wcount) AS BIGINT) AS pair_count
-      FROM p GROUP BY sym_a, sym_b),
-r AS (SELECT sym_a, sym_b, pair_count,
-             row_number() OVER (ORDER BY pair_count DESC, sym_a, sym_b)
-               AS rank
-      FROM c)
-SELECT sym_a, sym_b, pair_count, CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= 50""",
+      FROM p GROUP BY sym_a, sym_b)"""
+    + _topk_tail_duck("c", "pair_count DESC", 50, "", "sym_a, sym_b",
+                      "sym_a, sym_b, pair_count, rank"),
 )
 def td_bpe_merge_counts(spark, sf_dir):
     """First BPE-trainer iteration (Sennrich et al. 2016): top-50
@@ -1702,15 +1753,9 @@ t AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl,
       FROM documents),
 p AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf, MAX(dl) AS dl
       FROM t WHERE tok IN (SELECT DISTINCT tok FROM q)
-      GROUP BY doc_id, tok),
-st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-              CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS tot
-       FROM documents),
-dfq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM p GROUP BY tok),
-idf AS (SELECT tok, n_docs, tot,
-               CAST(round(log2((n_docs + 1.0) / (df + 1.0)) * 1000000)
-                    AS BIGINT) AS idf_micro
-        FROM dfq, st),
+      GROUP BY doc_id, tok)"""
+    + _idf_duck("p")
+    + """,
 c AS (SELECT q.q_id, p.doc_id,
              CAST(round(idf.idf_micro * (p.tf * 2.2)
                   / (p.tf + 1.2 * (0.25 + 0.75 * (p.dl
@@ -1718,13 +1763,10 @@ c AS (SELECT q.q_id, p.doc_id,
                   AS BIGINT) AS c_micro
       FROM p JOIN idf USING (tok) JOIN q USING (tok)),
 s AS (SELECT q_id, doc_id, CAST(SUM(c_micro) AS BIGINT) AS score_micro
-      FROM c GROUP BY q_id, doc_id),
-r AS (SELECT *, row_number() OVER (PARTITION BY q_id
-                                   ORDER BY score_micro DESC, doc_id) AS rank
-      FROM s)
-SELECT CAST(q_id AS BIGINT) AS q_id, doc_id, score_micro,
-       CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= 10""",
+      FROM c GROUP BY q_id, doc_id)"""
+    + _topk_tail_duck("s", "score_micro DESC", 10, "q_id", "doc_id",
+                      "CAST(q_id AS BIGINT) AS q_id, doc_id, score_micro, "
+                      "rank"),
 )
 def td_bm25_topk(spark, sf_dir):
     """Okapi BM25 retrieval: top-10 corpus documents per seed query —
@@ -1981,10 +2023,8 @@ tot AS (SELECT CAST(SUM(c_raw) AS BIGINT) AS n_raw,
                CAST(SUM(c_tgt) AS BIGINT) AS n_tgt FROM c),
 m AS (
   SELECT f,
-         CAST(round(log2((c_tgt + 1.0) / (n_tgt + 1024)) * 1000000)
-              AS BIGINT)
-         - CAST(round(log2((c_raw + 1.0) / (n_raw + 1024)) * 1000000)
-                AS BIGINT) AS lr
+         {_micro_log2_duck("c_tgt + 1.0", "n_tgt + 1024")}
+         - {_micro_log2_duck("c_raw + 1.0", "n_raw + 1024")} AS lr
   FROM c, tot)
 SELECT tk.doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_tokens,
@@ -2365,10 +2405,10 @@ def td_ngram_jaccard_pairs(spark, sf_dir):
 # The emb_* oracles are assembled from one DuckDB fragment per step, each
 # the mirror of one similarity.py helper: the stand-in cells (_cells), the
 # nearest-cell assignment (_ivf_scored), the cosine rerank (_rerank_topk)
-# and top-k tail (_top_k), the chunk-capped pair join (_capped_pairs), one
-# Lloyd's iteration keyed by its grouping columns (_lloyd_update), the PQ
-# subvector CTE + training (pq_train / pq_assign) and the ADC LUT + scoring
-# (_adc_topk).  Fragments open with ", name AS (" so they chain after the
+# and top-k tail (_top_k, shared with the td_* retrieval oracles), the
+# chunk-capped pair join (_capped_pairs), one Lloyd's iteration keyed by
+# its grouping columns (_lloyd_update), the PQ subvector CTE + training
+# (pq_train / pq_assign) and the ADC LUT + scoring (_adc_topk).  Fragments open with ", name AS (" so they chain after the
 # WITH of _emb_duck; the top-k tail ends the statement.
 
 
@@ -2377,20 +2417,6 @@ def _emb_duck(name: str = "e", src: str = "embeddings") -> str:
 WITH {name} AS (
   SELECT vec_id, embedding::DOUBLE[] AS emb FROM {src}
 )"""
-
-
-def _topk_tail_duck(src: str, order: str) -> str:
-    """_top_k: the best 5 rows of ``src`` (q_id, vec_id, score) per
-    query by ``order`` (the score column, optionally DESC), ties by
-    vec_id."""
-    score = order.split()[0]
-    return f"""
-, r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY {order}, vec_id)
-      AS rank
-  FROM {src}
-)
-SELECT q_id, vec_id, {score}, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5"""
 
 
 def _rerank_duck(corpus: str, key: str = None, q_from: str = None,
@@ -2729,24 +2755,29 @@ def emb_semantic_dedup(spark, sf_dir):
 # orders below the step).
 
 
-def _pq_train_duck() -> str:
+def _pq_train_duck(train: str = "true") -> str:
     """pq_train + pq_assign over ``e`` (vec_id, emb): the subvector CTE
-    sv (M=4), init codebook c0 = the first 8 vectors' subvectors, 2
-    Lloyd's iterations keyed by sub_id, then the final assignment a3
-    (vec_id, sub_id, code, d) against the trained codebook c2 (K=8)."""
+    sv (M=4), the training rows st (``train`` on vec_id), init codebook
+    c0 = the subvectors of the first 8 training vec_ids, 2 Lloyd's
+    iterations over st keyed by sub_id, then the final assignment a3
+    (vec_id, sub_id, code, d) of all of sv against the trained codebook
+    c2 (K=8)."""
     l2 = "round(list_distance(x.v, c.c), 6)"
     return (
-        """
+        f"""
 , sv AS (
   SELECT vec_id, CAST(s AS BIGINT) AS sub_id,
          list_slice(emb, CAST(s AS INT) * (len(emb) // 4) + 1,
                     (CAST(s AS INT) + 1) * (len(emb) // 4)) AS v
   FROM e, (SELECT unnest(range(0, 4)) AS s) t
+), st AS (
+  SELECT * FROM sv WHERE {train}
 ), c0 AS (
-  SELECT sub_id, vec_id AS code, v AS c FROM sv WHERE vec_id < 8
+  SELECT sub_id, vec_id AS code, v AS c FROM st
+  WHERE vec_id IN (SELECT DISTINCT vec_id FROM st ORDER BY vec_id LIMIT 8)
 )"""
-        + _lloyd_iter_duck(1, "sv", "v", l2, "code", ("sub_id",))
-        + _lloyd_iter_duck(2, "sv", "v", l2, "code", ("sub_id",))
+        + _lloyd_iter_duck(1, "st", "v", l2, "code", ("sub_id",))
+        + _lloyd_iter_duck(2, "st", "v", l2, "code", ("sub_id",))
         + _lloyd_assign_duck(3, "sv", l2, "code", ("sub_id",))
     )
 
@@ -2845,9 +2876,9 @@ def _ivf_residuals_table(spark, sf_dir):
 def _ivfpq_oracle() -> str:
     """The IVFADC composition in SQL: stand-in cell assignment ->
     exact residual subtraction (the new ``e``) -> PQ training over the
-    residuals -> single-probe ADC within the query's own cell.  Queries
-    start AFTER the stand-in centroids: vec_id < 16 ARE the centroids,
-    so their residuals are identically zero."""
+    residuals -> single-probe ADC within the query's own cell.  Training
+    and queries start AFTER the stand-in centroids: vec_id < 16 ARE the
+    centroids, so their residuals are identically zero."""
     return (
         _emb_duck("e0") + _standin_duck("cells", "e0")
         + _assign_duck("cells", "e0")
@@ -2858,7 +2889,7 @@ def _ivfpq_oracle() -> str:
                         i -> a.emb[i] - c.c[i]) AS emb
   FROM assigned a JOIN cells c USING (cell_id)
 )"""
-        + _pq_train_duck()
+        + _pq_train_duck("vec_id >= 16")
         + _adc_topk_duck(
             "vec_id >= 16 AND vec_id < 26",
             probe="""
@@ -3358,8 +3389,8 @@ def td_corpus_to_shards(spark, sf_dir):
 
 
 def _prep_scrub_score_oracle() -> str:
-    """corpus-prep CTE chain -> substring-scrub CTEs (renamed to avoid
-    collisions) -> unigram-LM CTEs over the scrubbed text."""
+    """corpus-prep CTE chain -> substring-scrub CTEs -> unigram-LM CTEs
+    over the scrubbed text."""
     body = (
         _lsh_pairs_cte(_SURV_SHINGLES_DUCK)
         + _PREP_CTES
@@ -3368,50 +3399,18 @@ final AS (
   SELECT k.doc_id, k.text FROM kept k JOIN qual q USING (doc_id)
   WHERE q.n_tokens >= 5 AND q.punct_ratio <= 0.2
 ),
-d2 AS (SELECT doc_id, string_split(text, ' ') AS w FROM final),
-tx2 AS (SELECT doc_id, w, unnest(range(1, len(w) + 1)) AS p FROM d2),
-tk2 AS (SELECT doc_id, CAST(p - 1 AS BIGINT) AS pos, w[p] AS tok FROM tx2),
-kx2 AS (SELECT doc_id, w, unnest(range(0, len(w) - 4)) AS j FROM d2),
-kg2 AS (
-  SELECT doc_id, CAST(j AS BIGINT) AS pos,
-         CAST('0x' || substr(md5(array_to_string(w[j + 1: j + 5], '_')),
-                             1, 15) AS BIGINT) AS h
-  FROM kx2),
-dh2 AS (SELECT h FROM kg2 GROUP BY h HAVING MIN(doc_id) <> MAX(doc_id)),
-cx2 AS (SELECT kg2.doc_id, unnest(range(kg2.pos, kg2.pos + 5)) AS cp
-        FROM kg2 JOIN dh2 USING (h)),
-cov2 AS (SELECT DISTINCT doc_id, CAST(cp AS BIGINT) AS cpos FROM cx2),
-f2 AS (
-  SELECT tk2.doc_id, tk2.pos, tk2.tok, cov2.cpos IS NOT NULL AS is_dup
-  FROM tk2 LEFT JOIN cov2
-    ON tk2.doc_id = cov2.doc_id AND tk2.pos = cov2.cpos),
-scrub AS (
-  SELECT doc_id,
-         CAST(SUM(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT)
-             AS dup_tokens,
-         COALESCE(string_agg(CASE WHEN NOT is_dup THEN tok END,
-                             ' ' ORDER BY pos), '') AS clean_text
-  FROM f2 GROUP BY doc_id),
+d AS (SELECT doc_id, string_split(text, ' ') AS w FROM final)"""
+        + _substring_dedup_duck("d")
+        + """,
 t3 AS (
-  SELECT doc_id, unnest(string_split(clean_text, ' ')) AS tok FROM scrub),
-c3 AS (SELECT tok, COUNT(*) AS c FROM t3 GROUP BY tok),
-s3 AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total,
-              CAST(COUNT(*) AS BIGINT) AS v_size FROM c3),
-lm3 AS (
-  SELECT tok,
-         CAST(round(log2((c + 1.0) / (n_total + v_size)) * 1000000)
-              AS BIGINT) AS lp
-  FROM c3, s3),
-score AS (
-  SELECT t3.doc_id,
-         CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         round(-CAST(SUM(lp) AS BIGINT) / COUNT(*) / 1000000.0, 4)
-             AS bits_per_token
-  FROM t3 JOIN lm3 USING (tok)
-  GROUP BY t3.doc_id)
-SELECT score.doc_id, score.n_tokens, scrub.dup_tokens,
-       score.bits_per_token
-FROM score JOIN scrub USING (doc_id)"""
+  SELECT doc_id, unnest(string_split(clean_text, ' ')) AS tok FROM sd)"""
+        + _unigram_lm_duck("t3")
+        + """,
+score AS ("""
+        + _bits_per_token_duck("t3 JOIN lm USING (tok)", "t3.doc_id")
+        + """)
+SELECT score.doc_id, score.n_tokens, sd.dup_tokens, score.bits_per_token
+FROM score JOIN sd USING (doc_id)"""
     )
     return body.replace("WITH surv AS", "WITH RECURSIVE surv AS", 1)
 
@@ -3441,30 +3440,21 @@ WITH t AS (
 x AS (SELECT doc_id, unnest(range(1, len(toks) + 1)) AS pos, toks FROM t),
 p AS (SELECT doc_id, pos, toks[pos] AS tok,
              CASE WHEN pos > 1 THEN toks[pos - 1] END AS prev
-      FROM x),
-c1 AS (SELECT tok, COUNT(*) AS c FROM p GROUP BY tok),
-s AS (SELECT CAST(SUM(c) AS BIGINT) AS n_total,
-             CAST(COUNT(*) AS BIGINT) AS v_size FROM c1),
+      FROM x)"""
+    + _unigram_lm_duck("p")
+    + f""",
 c2 AS (SELECT prev, tok, COUNT(*) AS c2
        FROM p WHERE pos > 1 GROUP BY prev, tok),
-lp1 AS (SELECT tok,
-               CAST(round(log2((c + 1.0) / (n_total + v_size)) * 1000000)
-                    AS BIGINT) AS lp
-        FROM c1, s),
 lp2 AS (SELECT c2.prev, c2.tok,
-               CAST(round(log2((c2.c2 + 1.0) / (c1.c + s.v_size)) * 1000000)
-                    AS BIGINT) AS lp
-        FROM c2 JOIN c1 ON c2.prev = c1.tok, s),
+               {_micro_log2_duck("c2.c2 + 1.0", "c.c + s.v_size")} AS lp
+        FROM c2 JOIN c ON c2.prev = c.tok, s),
 sc AS (
   SELECT p.doc_id,
-         CASE WHEN p.pos = 1 THEN lp1.lp ELSE lp2.lp END AS lp
+         CASE WHEN p.pos = 1 THEN lm.lp ELSE lp2.lp END AS lp
   FROM p
-  LEFT JOIN lp1 ON p.pos = 1 AND p.tok = lp1.tok
-  LEFT JOIN lp2 ON p.pos > 1 AND p.prev = lp2.prev AND p.tok = lp2.tok)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-       round(-CAST(SUM(lp) AS BIGINT) / COUNT(*) / 1000000.0, 4)
-           AS bits_per_token
-FROM sc GROUP BY doc_id""",
+  LEFT JOIN lm ON p.pos = 1 AND p.tok = lm.tok
+  LEFT JOIN lp2 ON p.pos > 1 AND p.prev = lp2.prev AND p.tok = lp2.tok)"""
+    + _bits_per_token_duck("sc"),
 )
 def td_bigram_perplexity(spark, sf_dir):
     """CCNet-style bits-per-token under a corpus-trained add-one
@@ -4158,6 +4148,12 @@ def _latest_green_rounds(root: Path) -> Dict[str, int]:
 # every emb_* oracle is now assembled from the shared similarity fragments
 # (and the ADC LUT sums squared differences directly); emb_dup_pairs now
 # runs over the planted near-dup fixture instead of the embeddings table.
+# The PQ codebook seeds from the first 8 vec_ids of its training input,
+# and emb_ivfpq_topk trains on vec_id >= 16 (non-zero residuals).  The
+# fixed-point td_* oracles are assembled from the text-statistics
+# fragments (_unigram_lm_duck, _bits_per_token_duck, _inverse_cdf_duck,
+# _idf_duck, _topk_tail_duck, _substring_dedup_duck, _micro_log2_duck),
+# and td_bm25_topk's engine side is bm25_score over bm25_model.
 _RETOUCHED: set = {
     "td_corpus_prep", "td_corpus_to_shards", "td_prep_scrub_score",
     "emb_cosine_topk", "emb_ivf_topk", "emb_ivf_multiprobe",
@@ -4165,6 +4161,10 @@ _RETOUCHED: set = {
     "emb_kmeans_ivf_topk", "emb_dup_pairs", "emb_semantic_dedup",
     "emb_pq_codes", "emb_pq_adc_topk", "emb_pq_recon_stats",
     "emb_ivfpq_topk",
+    "td_substring_dedup", "td_lm_perplexity", "td_length_quantiles",
+    "td_ppl_buckets", "td_vocab_topk", "td_tfidf_topk",
+    "td_bpe_merge_counts", "td_bm25_topk", "td_dsir_weights",
+    "td_bigram_perplexity",
 }
 
 

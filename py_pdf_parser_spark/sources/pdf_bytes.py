@@ -378,7 +378,6 @@ def extract_spans_from_pdf_rebalanced(
     spark,
     docs_df: DataFrame,
     heavy_threshold_bytes: int = 256 * 1024,
-    heavy_partitions: Optional[int] = None,
     bytes_col: str = "pdf_bytes",
     **kwargs: Any,
 ) -> DataFrame:
@@ -397,7 +396,6 @@ def extract_spans_from_pdf_rebalanced(
     return pipeline._rebalanced(
         spark, docs_df, cost, heavy_threshold_bytes,
         lambda df: extract_spans_from_pdf(df, bytes_col=bytes_col, **kwargs),
-        heavy_partitions,
     )
 
 

@@ -17,6 +17,7 @@ Content is a pure function of (kind, scale): regeneration is idempotent.
 
 from __future__ import annotations
 
+import itertools
 import os
 import zlib
 from typing import Iterable, Iterator, List, Tuple
@@ -57,7 +58,10 @@ SPANS_ARROW_SCHEMA = pa.schema(
     ]
 )
 
-Row = Tuple[str, list]
+# (doc_id, text) corpora: borderline-Jaccard and PII.
+TEXT_ARROW_SCHEMA = pa.schema([("doc_id", pa.string()), ("text", pa.string())])
+
+Row = Tuple[str, list, int]  # (doc_id, spans, n_spans)
 
 
 def _iter_rows(family: str, count: int, start: int = 0) -> Iterator[Row]:
@@ -68,37 +72,26 @@ def _iter_rows(family: str, count: int, start: int = 0) -> Iterator[Row]:
             {"kind": k, "text": t, "media_ref": m, "offset": o}
             for (k, t, m, o) in builder(i)
         ]
-        yield (doc_id, spans)
+        yield (doc_id, spans, len(spans))
 
 
-def _write_dataset(rows: Iterable[Row], out_dir: str) -> str:
-    """Chunked multi-file write; memory bounded at DOCS_PER_FILE docs."""
+def _write_dataset(
+    rows: Iterable[tuple], out_dir: str, schema: pa.Schema = SPANS_ARROW_SCHEMA
+) -> str:
+    """Chunked multi-file write of ``rows`` (tuples in ``schema`` field
+    order), one part file per DOCS_PER_FILE rows, so memory is bounded
+    at one file's rows."""
     tmp_dir = out_dir + ".tmp"
     os.makedirs(tmp_dir, exist_ok=True)
-    buf: List[Row] = []
-    file_no = 0
-
-    def flush():
-        nonlocal file_no
-        if not buf:
-            return
+    it = iter(rows)
+    for file_no in itertools.count():
+        chunk = list(itertools.islice(it, DOCS_PER_FILE))
+        if not chunk:
+            break
         table = pa.Table.from_pydict(
-            {
-                "doc_id": [r[0] for r in buf],
-                "spans": [r[1] for r in buf],
-                "n_spans": [len(r[1]) for r in buf],
-            },
-            schema=SPANS_ARROW_SCHEMA,
+            dict(zip(schema.names, map(list, zip(*chunk)))), schema=schema
         )
         pq.write_table(table, f"{tmp_dir}/part-{file_no:05d}.parquet")
-        buf.clear()
-        file_no += 1
-
-    for row in rows:
-        buf.append(row)
-        if len(buf) >= DOCS_PER_FILE:
-            flush()
-    flush()
     os.rename(tmp_dir, out_dir)  # atomic-ish publish: cache hit == complete
     return out_dir
 
@@ -373,22 +366,11 @@ def ensure_borderline_corpus(sf: float) -> str:
     if os.path.exists(path):
         return path
     n_docs = max(60, int(60000 * sf)) // 3 * 3
-    tmp_dir = path + ".tmp"
-    os.makedirs(tmp_dir, exist_ok=True)
-    for file_no, start in enumerate(range(0, n_docs, DOCS_PER_FILE)):
-        idx = range(start, min(start + DOCS_PER_FILE, n_docs))
-        table = pa.Table.from_pydict(
-            {
-                "doc_id": [f"bl-{i:06d}" for i in idx],
-                "text": [borderline_text(i) for i in idx],
-            },
-            schema=pa.schema(
-                [("doc_id", pa.string()), ("text", pa.string())]
-            ),
-        )
-        pq.write_table(table, f"{tmp_dir}/part-{file_no:05d}.parquet")
-    os.rename(tmp_dir, path)
-    return path
+    return _write_dataset(
+        ((f"bl-{i:06d}", borderline_text(i)) for i in range(n_docs)),
+        path,
+        TEXT_ARROW_SCHEMA,
+    )
 
 
 def html_corpus_path(sf: float) -> str:
@@ -401,20 +383,11 @@ def ensure_html_corpus(sf: float) -> str:
     if os.path.exists(path):
         return path
     n_docs = max(50, int(60000 * sf))
-    tmp_dir = path + ".tmp"
-    os.makedirs(tmp_dir, exist_ok=True)
-    for file_no, start in enumerate(range(0, n_docs, DOCS_PER_FILE)):
-        idx = range(start, min(start + DOCS_PER_FILE, n_docs))
-        table = pa.Table.from_pydict(
-            {
-                "doc_id": [f"html-{i:06d}" for i in idx],
-                "html": [html_doc(i) for i in idx],
-            },
-            schema=HTML_ARROW_SCHEMA,
-        )
-        pq.write_table(table, f"{tmp_dir}/part-{file_no:05d}.parquet")
-    os.rename(tmp_dir, path)
-    return path
+    return _write_dataset(
+        ((f"html-{i:06d}", html_doc(i)) for i in range(n_docs)),
+        path,
+        HTML_ARROW_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -447,9 +420,6 @@ def pii_text(i: int) -> str:
     return " ".join(words)
 
 
-PII_ARROW_SCHEMA = pa.schema([("doc_id", pa.string()), ("text", pa.string())])
-
-
 def pii_corpus_path(sf: float) -> str:
     return os.path.join(SYNTH_DIR, f"pii_sf{sf}")
 
@@ -460,20 +430,11 @@ def ensure_pii_corpus(sf: float) -> str:
     if os.path.exists(path):
         return path
     n_docs = max(50, int(60000 * sf))
-    tmp_dir = path + ".tmp"
-    os.makedirs(tmp_dir, exist_ok=True)
-    for file_no, start in enumerate(range(0, n_docs, DOCS_PER_FILE)):
-        idx = range(start, min(start + DOCS_PER_FILE, n_docs))
-        table = pa.Table.from_pydict(
-            {
-                "doc_id": [f"pii-{i:06d}" for i in idx],
-                "text": [pii_text(i) for i in idx],
-            },
-            schema=PII_ARROW_SCHEMA,
-        )
-        pq.write_table(table, f"{tmp_dir}/part-{file_no:05d}.parquet")
-    os.rename(tmp_dir, path)
-    return path
+    return _write_dataset(
+        ((f"pii-{i:06d}", pii_text(i)) for i in range(n_docs)),
+        path,
+        TEXT_ARROW_SCHEMA,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -531,17 +492,8 @@ def ensure_embdup_corpus(sf: float) -> str:
     if os.path.exists(path):
         return path
     n_vecs = max(120, int(50000 * sf)) // 3 * 3
-    tmp_dir = path + ".tmp"
-    os.makedirs(tmp_dir, exist_ok=True)
-    for file_no, start in enumerate(range(0, n_vecs, DOCS_PER_FILE)):
-        idx = range(start, min(start + DOCS_PER_FILE, n_vecs))
-        table = pa.Table.from_pydict(
-            {
-                "vec_id": list(idx),
-                "embedding": [embdup_vector(i) for i in idx],
-            },
-            schema=EMBDUP_ARROW_SCHEMA,
-        )
-        pq.write_table(table, f"{tmp_dir}/part-{file_no:05d}.parquet")
-    os.rename(tmp_dir, path)
-    return path
+    return _write_dataset(
+        ((i, embdup_vector(i)) for i in range(n_vecs)),
+        path,
+        EMBDUP_ARROW_SCHEMA,
+    )

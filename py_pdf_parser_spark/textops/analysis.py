@@ -12,6 +12,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .similarity import _top_k
+
 PUNCT_CLASS = "[.,!?;:]"
 
 # Tiny deterministic stopword sets for the n-gram language heuristic.
@@ -333,6 +335,79 @@ def blocklist_filter(
 
 LM_MICRO = 1_000_000  # fixed-point scale for per-token log-probs
 
+# The fixed-point text statistics (unigram/bigram LM, tf-idf and BM25
+# idf, DSIR ratios, perplexity, quantiles) share these steps, each
+# mirrored by one DuckDB fragment in ``queries``: ``_micro_log2`` (the
+# one float op per distinct value), ``_bits_per_token`` (the per-doc
+# exact-integer sum), ``_inverse_cdf`` (the Type-1 quantile over a
+# bounded value table), ``_idf`` and ``similarity._top_k`` (the
+# per-partition rank tail).
+
+
+def _micro_log2(num, den):
+    """round(log2(num / den) * LM_MICRO) as a BIGINT, both sides cast
+    to double: the one float op of a fixed-point statistic, evaluated
+    once per distinct value so every downstream sum is exact integer
+    arithmetic (partition-order-free, identical in any engine)."""
+    return F.round(
+        F.log2(num.cast("double") / den.cast("double")) * F.lit(LM_MICRO)
+    ).cast("long")
+
+
+def _bits_per_token(lps: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, bits_per_token) over one (doc_id, lp) row per
+    scored token: minus the exact micro-bit sum per token, 4dp."""
+    return lps.groupBy("doc_id").agg(
+        F.count("*").cast("long").alias("n_tokens"),
+        F.round(
+            -F.sum("lp") / F.count("*") / F.lit(float(LM_MICRO)), 4
+        ).alias("bits_per_token"),
+    )
+
+
+def _inverse_cdf(
+    values: DataFrame, part: str, value: str, frac: str, fracs, d: int
+) -> DataFrame:
+    """Type-1 (inverse-CDF) quantiles -> (part, frac, total, value): for
+    each ``part`` group of ``values`` and each fraction f/``d`` in
+    ``fracs`` (column ``frac``), the smallest ``value`` v with
+    |{rows: value <= v}| >= ceil(f * total / d), ceil in exact integer
+    arithmetic.  Runs over the (part, value) count table, whose size is
+    bounded by the value's cardinality, not the row count."""
+    cum = (
+        values.groupBy(part, value)
+        .agg(F.count("*").alias("cnt"))
+        .select(
+            part,
+            value,
+            F.sum("cnt")
+            .over(Window.partitionBy(part).orderBy(value))
+            .alias("cum"),
+            F.sum("cnt").over(Window.partitionBy(part)).alias("total"),
+        )
+    )
+    fr = values.sparkSession.createDataFrame(
+        pa.table({frac: [int(f) for f in fracs]}), f"{frac} long"
+    )
+    return (
+        cum.crossJoin(F.broadcast(fr))
+        .where(F.col("cum") >= F.expr(f"({frac} * total + {d - 1}) div {d}"))
+        .groupBy(part, frac)
+        .agg(F.min("total").alias("total"), F.min(value).alias(value))
+    )
+
+
+def _idf(dfq: DataFrame, stats: DataFrame) -> DataFrame:
+    """(tok, *stats columns, idf_micro): the micro-bit idf
+    round(log2((N+1)/(df+1)) * 1e6) of each (tok, df) row against the
+    1-row corpus ``stats`` (n_docs, ...), broadcast."""
+    return dfq.crossJoin(F.broadcast(stats)).select(
+        "tok",
+        *stats.columns,
+        _micro_log2(F.col("n_docs") + F.lit(1), F.col("df") + F.lit(1))
+        .alias("idf_micro"),
+    )
+
 
 def unigram_lm(docs: DataFrame) -> DataFrame:
     """Corpus-trained unigram language model: (tok, lp) where lp is the
@@ -360,15 +435,9 @@ def unigram_lm(docs: DataFrame) -> DataFrame:
     )
     return counts.crossJoin(F.broadcast(totals)).select(
         "tok",
-        F.round(
-            F.log2(
-                (F.col("c") + F.lit(1)).cast("double")
-                / (F.col("n_total") + F.col("v_size")).cast("double")
-            )
-            * F.lit(LM_MICRO)
-        )
-        .cast("long")
-        .alias("lp"),
+        _micro_log2(
+            F.col("c") + F.lit(1), F.col("n_total") + F.col("v_size")
+        ).alias("lp"),
     )
 
 
@@ -426,30 +495,15 @@ def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
     )
-    n_docs = docs.agg(F.count("*").alias("n_docs"))
-    df_tbl = tf.groupBy("tok").agg(F.count("*").alias("df"))
-    idf = df_tbl.crossJoin(F.broadcast(n_docs)).select(
-        "tok",
-        F.round(
-            F.log2(
-                (F.col("n_docs") + F.lit(1)).cast("double")
-                / (F.col("df") + F.lit(1)).cast("double")
-            )
-            * F.lit(LM_MICRO)
-        )
-        .cast("long")
-        .alias("idf_micro"),
+    idf = _idf(
+        tf.groupBy("tok").agg(F.count("*").alias("df")),
+        docs.agg(F.count("*").alias("n_docs")),
     )
     scored = tf.join(F.broadcast(idf), "tok").withColumn(
         "score_micro", (F.col("tf") * F.col("idf_micro")).cast("long")
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("score_micro"), F.asc("tok")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("doc_id", "tok", "tf", "score_micro", "rank")
+    return _top_k(
+        scored, k, "score_micro", part="doc_id", tie="tok", keep=("tf",)
     )
 
 
@@ -526,16 +580,7 @@ def lm_perplexity(docs: DataFrame, lm: DataFrame = None) -> DataFrame:
     toks = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
-    return (
-        toks.join(F.broadcast(model), "tok")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_tokens"),
-            F.round(
-                -F.sum("lp") / F.count("*") / F.lit(float(LM_MICRO)), 4
-            ).alias("bits_per_token"),
-        )
-    )
+    return _bits_per_token(toks.join(F.broadcast(model), "tok"))
 
 
 def length_quantiles(
@@ -558,33 +603,14 @@ def length_quantiles(
     quantile shuffles the corpus; approx_percentile is inexact and
     engine-specific (un-oracle-able).
     """
-    counts = (
-        docs.select(
-            "source",
-            F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
-        )
-        .groupBy("source", "n_tokens")
-        .agg(F.count("*").alias("cnt"))
+    lengths = docs.select(
+        "source", F.size(F.split(F.col("text"), " ")).alias("n_tokens")
     )
-    cum = counts.select(
+    return _inverse_cdf(lengths, "source", "n_tokens", "q", qs, 100).select(
         "source",
-        "n_tokens",
-        F.sum("cnt")
-        .over(Window.partitionBy("source").orderBy("n_tokens"))
-        .alias("cum"),
-        F.sum("cnt").over(Window.partitionBy("source")).alias("total"),
-    )
-    qdf = docs.sparkSession.createDataFrame(
-        pa.table({"q": [int(q) for q in qs]}), "q long"
-    )
-    return (
-        cum.crossJoin(F.broadcast(qdf))
-        .where(F.col("cum") >= F.expr("(q * total + 99) div 100"))
-        .groupBy("source", "q")
-        .agg(
-            F.min("total").alias("n_docs"),
-            F.min("n_tokens").cast("long").alias("ntok_q"),
-        )
+        "q",
+        F.col("total").alias("n_docs"),
+        F.col("n_tokens").cast("long").alias("ntok_q"),
     )
 
 
@@ -633,28 +659,13 @@ def perplexity_thresholds(scores: DataFrame) -> DataFrame:
     deployment fits once on a reference corpus and then applies to
     every ingest batch (see ``streaming.stream_quality_gate``).
     Runs entirely over the bounded distinct-score table."""
-    cum = (
-        scores.groupBy("lang", "bits_per_token")
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            "lang",
-            "bits_per_token",
-            F.sum("cnt")
-            .over(Window.partitionBy("lang").orderBy("bits_per_token"))
-            .alias("cum"),
-            F.sum("cnt").over(Window.partitionBy("lang")).alias("total"),
-        )
-    )
-    ks = scores.sparkSession.createDataFrame(pa.table({"k": [1, 2]}), "k long")
+    t = F.col("bits_per_token")
     return (
-        cum.crossJoin(F.broadcast(ks))
-        .where(F.col("cum") >= F.expr("(k * total + 2) div 3"))
-        .groupBy("lang", "k")
-        .agg(F.min("bits_per_token").alias("t"))
+        _inverse_cdf(scores, "lang", "bits_per_token", "k", (1, 2), 3)
         .groupBy("lang")
         .agg(
-            F.min(F.when(F.col("k") == 1, F.col("t"))).alias("t1"),
-            F.min(F.when(F.col("k") == 2, F.col("t"))).alias("t2"),
+            F.min(F.when(F.col("k") == 1, t)).alias("t1"),
+            F.min(F.when(F.col("k") == 2, t)).alias("t2"),
         )
     )
 
@@ -845,19 +856,15 @@ def dsir_model(
     totals = counts.agg(
         F.sum("c_raw").alias("n_raw"), F.sum("c_tgt").alias("n_tgt")
     )
-    lp = lambda c, n: F.round(  # noqa: E731
-        F.log2(
-            (c + F.lit(1)).cast("double")
-            / (n + F.lit(n_buckets)).cast("double")
+
+    def lp(side):
+        return _micro_log2(
+            F.col(f"c_{side}") + F.lit(1),
+            F.col(f"n_{side}") + F.lit(n_buckets),
         )
-        * F.lit(LM_MICRO)
-    ).cast("long")
+
     return counts.crossJoin(F.broadcast(totals)).select(
-        "f",
-        (
-            lp(F.col("c_tgt"), F.col("n_tgt"))
-            - lp(F.col("c_raw"), F.col("n_raw"))
-        ).alias("lr"),
+        "f", (lp("tgt") - lp("raw")).alias("lr")
     )
 
 
@@ -924,15 +931,9 @@ def bigram_lm(docs: DataFrame) -> DataFrame:
         .select(
             "prev",
             "tok",
-            F.round(
-                F.log2(
-                    (F.col("c2") + F.lit(1)).cast("double")
-                    / (F.col("c") + F.col("v_size")).cast("double")
-                )
-                * F.lit(LM_MICRO)
-            )
-            .cast("long")
-            .alias("lp"),
+            _micro_log2(
+                F.col("c2") + F.lit(1), F.col("c") + F.col("v_size")
+            ).alias("lp"),
         )
     )
 
@@ -973,16 +974,7 @@ def bigram_perplexity(docs: DataFrame) -> DataFrame:
         .join(big, ["prev", "tok"])
         .select("doc_id", "lp")
     )
-    return (
-        first.unionByName(rest)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_tokens"),
-            F.round(
-                -F.sum("lp") / F.count("*") / F.lit(float(LM_MICRO)), 4
-            ).alias("bits_per_token"),
-        )
-    )
+    return _bits_per_token(first.unionByName(rest))
 
 
 def dataset_split(
@@ -1110,86 +1102,14 @@ def bm25_topk(
     other direction from ``decontaminate``: keep lookalikes instead
     of dropping overlaps).
 
-    Scoring (Robertson-Sparck Jones, public): per matched term,
-    ``idf * tf*(k1+1) / (tf + k1*(1-b + b*dl/avgdl))``.  idf uses
-    ``tfidf_topk``'s fixed-point discipline — micro-bit BIGINT
-    ``round(log2((N+1)/(df+1)) * 1e6)``, one float log2 per distinct
-    query term — and each term contribution is rounded to an integer
-    BEFORE the per-(query, doc) sum, so the aggregate is exact integer
-    arithmetic: partition-order-free and engine-portable.  Every float
-    step is a single fixed expression tree evaluated identically by
-    both engines.  Deterministic tie-break: score desc, doc_id asc.
-
-    Scale shape — the posting-list plan: the corpus is scanned once,
-    tokens explode THROUGH a pushed ``tok IN (terms)`` literal filter
-    (query vocabularies are tiny), so the only corpus-keyed shuffle
-    carries query-term postings, not the corpus; ``dl`` rides the
-    posting rows (no separate doc-length join); ``df``/corpus stats
-    reduce to term-count/1-row tables that join back as broadcasts;
-    the top-k window partitions by q_id over candidates bounded by
-    posting-list size.
+    The corpus scored against a model trained on itself:
+    ``bm25_score(docs, bm25_model(docs, queries), k1, b)`` (formula and
+    fixed-point discipline there), then each query's top ``k`` by
+    score_micro desc, doc_id asc.  The top-k window partitions by q_id
+    over candidates bounded by posting-list size.
     """
-    all_terms = sorted({t for _, ts in queries for t in ts})
-    qterms = _query_terms(docs, queries)
-    stats = docs.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.size(_tokens())).cast("long").alias("total_tokens"),
-    )
-    postings = (
-        docs.select(
-            "doc_id",
-            F.size(_tokens()).cast("long").alias("dl"),
-            F.explode(_tokens()).alias("tok"),
-        )
-        .where(F.col("tok").isin(all_terms))
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").cast("long").alias("tf"), F.max("dl").alias("dl"))
-    )
-    dfq = postings.groupBy("tok").agg(F.count("*").cast("long").alias("df"))
-    idf = dfq.crossJoin(F.broadcast(stats)).select(
-        "tok",
-        "n_docs",
-        "total_tokens",
-        F.round(
-            F.log2(
-                (F.col("n_docs") + F.lit(1)).cast("double")
-                / (F.col("df") + F.lit(1)).cast("double")
-            )
-            * F.lit(LM_MICRO)
-        )
-        .cast("long")
-        .alias("idf_micro"),
-    )
-    avgdl = F.col("total_tokens").cast("double") / F.col(
-        "n_docs"
-    ).cast("double")
-    denom = F.col("tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * (F.col("dl") / avgdl)
-    )
-    contrib = (
-        postings.join(F.broadcast(idf), "tok")
-        .join(F.broadcast(qterms), "tok")
-        .select(
-            "q_id",
-            "doc_id",
-            F.round(
-                F.col("idf_micro") * (F.col("tf") * F.lit(k1 + 1.0)) / denom
-            )
-            .cast("long")
-            .alias("c_micro"),
-        )
-    )
-    scored = contrib.groupBy("q_id", "doc_id").agg(
-        F.sum("c_micro").cast("long").alias("score_micro")
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.desc("score_micro"), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("q_id", "doc_id", "score_micro", "rank")
-    )
+    scores = bm25_score(docs, bm25_model(docs, queries), k1, b)
+    return _top_k(scores, k, "score_micro", tie="doc_id")
 
 
 def bm25_model(
@@ -1200,9 +1120,14 @@ def bm25_model(
     term, the whole table a few KB regardless of corpus size, so a
     deployment broadcasts it and scores arriving documents without
     ever touching the training corpus again (``bm25_score`` /
-    ``streaming.stream_bm25_gate``).  Same fixed-point idf and corpus
-    stats as ``bm25_topk`` — scoring a corpus against a model trained
-    on it reproduces bm25_topk's scores exactly."""
+    ``streaming.stream_bm25_gate``).
+
+    idf uses ``tfidf_topk``'s fixed-point discipline (``_idf``): one
+    float log2 per distinct query term.  Scale shape: tokens explode
+    THROUGH a pushed ``tok IN (terms)`` literal filter (query
+    vocabularies are tiny), so the df shuffle carries query-term
+    postings, not the corpus; the corpus stats are one 1-row aggregate
+    broadcast onto the term-sized df table."""
     all_terms = sorted({t for _, ts in queries for t in ts})
     qterms = _query_terms(docs, queries)
     stats = docs.agg(
@@ -1217,21 +1142,7 @@ def bm25_model(
         .groupBy("tok")
         .agg(F.count("*").cast("long").alias("df"))
     )
-    idf = dfq.crossJoin(F.broadcast(stats)).select(
-        "tok",
-        "n_docs",
-        "total_tokens",
-        F.round(
-            F.log2(
-                (F.col("n_docs") + F.lit(1)).cast("double")
-                / (F.col("df") + F.lit(1)).cast("double")
-            )
-            * F.lit(LM_MICRO)
-        )
-        .cast("long")
-        .alias("idf_micro"),
-    )
-    return F.broadcast(qterms).join(idf, "tok").select(
+    return F.broadcast(qterms).join(_idf(dfq, stats), "tok").select(
         "q_id", "tok", "idf_micro", "n_docs", "total_tokens"
     )
 
@@ -1244,7 +1155,13 @@ def bm25_score(
 ) -> DataFrame:
     """Score documents against a FIXED ``bm25_model`` artifact ->
     (doc_id, q_id, score_micro), one row per (document, query) with at
-    least one matching term.  df/idf/avgdl are frozen in the model
+    least one matching term.
+
+    Scoring (Robertson-Sparck Jones, public): per matched term,
+    ``idf * tf*(k1+1) / (tf + k1*(1-b + b*dl/avgdl))``, each term
+    contribution rounded to an integer BEFORE the per-(doc, query) sum,
+    so the aggregate is exact integer arithmetic: partition-order-free
+    and engine-portable.  df/idf/avgdl are frozen in the model
     (the deployment contract: arriving documents must not shift the
     ranking function), so this is explode -> broadcast join -> exact
     integer per-(doc, query) sum — stateless, corpus-parallel, and the

@@ -45,17 +45,24 @@ def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
 
 def _top_k(
-    scored: DataFrame, k: int, score: str, ascending: bool = False
+    scored: DataFrame,
+    k: int,
+    score: str,
+    ascending: bool = False,
+    part: str = "q_id",
+    tie: str = "vec_id",
+    keep: tuple = (),
 ) -> DataFrame:
-    """(q_id, vec_id, score, rank): each query's best ``k`` rows by
-    ``score`` (descending unless ``ascending``), ties broken by vec_id
-    for determinism; rank is a 1-based bigint."""
+    """(part, tie, *keep, score, rank): each ``part`` group's best ``k``
+    rows by ``score`` (descending unless ``ascending``), ties broken by
+    ``tie`` ascending for determinism; rank is a 1-based bigint.  Also
+    the rank tail of the text-retrieval operators (``analysis``)."""
     order = F.asc(score) if ascending else F.desc(score)
-    w = Window.partitionBy("q_id").orderBy(order, F.asc("vec_id"))
+    w = Window.partitionBy(part).orderBy(order, F.asc(tie))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= k)
-        .select("q_id", "vec_id", score, "rank")
+        .select(part, tie, *keep, score, "rank")
     )
 
 
@@ -546,12 +553,15 @@ def pq_train(
     ``hash_sample`` and reuse the codebook corpus-wide (same note as
     kmeans_centroids).
 
-    Returns ``(sub_id, code, centroid array<double>)``.  A codeword
-    that captures no subvectors drops out (classic Lloyd's; identical
-    in the SQL oracle).
+    The codebook is seeded from the subvectors of the first
+    ``n_codes`` vec_ids of ``emb`` (code = that vec_id).  Returns
+    ``(sub_id, code, centroid array<double>)``.  A codeword that
+    captures no subvectors drops out (classic Lloyd's; identical in the
+    SQL oracle).
     """
     sv = _pq_subvec_rows(emb, n_subs)
-    cents = sv.where(F.col("vec_id") < n_codes).select(
+    seeds = emb.select("vec_id").orderBy("vec_id").limit(n_codes)
+    cents = sv.join(F.broadcast(seeds), "vec_id").select(
         "sub_id",
         F.col("vec_id").alias("code"),
         F.col("sv").alias("centroid"),
@@ -759,10 +769,12 @@ def ivfpq_topk(
     (partition the codes table by cell_id and the probe prunes
     partitions).
 
-    Queries default to the ``n_queries`` vectors AFTER the coarse
-    stand-in centroids (``q_lo = n_cells``): the first ``n_cells``
-    vectors ARE the centroids, so their residuals are exactly zero and
-    every query would build the identical LUT — a degenerate probe.
+    The first ``n_cells`` vectors ARE the coarse stand-in centroids, so
+    their residuals are exactly zero: a codebook trained or seeded on
+    them collapses to one zero codeword per subspace, and a query among
+    them builds a degenerate LUT.  So the codebook (unless supplied)
+    trains on ``vec_id >= n_cells``, and queries default to the
+    ``n_queries`` vectors after the centroids (``q_lo = n_cells``).
 
     Output: (q_id, vec_id, adist, rank) — ADC approximation of the
     residual-space squared L2 within the probed cell, 4dp, vec_id
@@ -771,7 +783,9 @@ def ivfpq_topk(
         residuals = ivf_residuals(emb, n_cells)
     if codebook is None:
         codebook = pq_train(
-            residuals.select("vec_id", "embedding"),
+            residuals.where(F.col("vec_id") >= n_cells).select(
+                "vec_id", "embedding"
+            ),
             n_subs, n_codes, n_iters, round_dp,
         )
     codes = pq_assign(

@@ -1977,6 +1977,41 @@ class TestIvfPq:
         for ranks in per_q.values():
             assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
+    def test_codebook_does_not_collapse_on_zero_residuals(self, spark):
+        """The first n_cells vectors are the coarse centroids, so their
+        residuals are zero.  Training seeds from the first n_codes
+        vec_ids of the TRAINING input (vec_id >= n_cells), so a subspace
+        keeps more than one codeword and a query's top-k ADC distances
+        are not all one value."""
+        import numpy as np
+
+        rng = np.random.RandomState(23)
+        base = rng.randn(4, 8) * 3
+        vecs = np.array(
+            [base[i % 4] + 0.3 * rng.randn(8) for i in range(64)]
+        )
+        emb = spark.createDataFrame(
+            [(i, [float(x) for x in vecs[i]]) for i in range(64)],
+            "vec_id long, embedding array<double>",
+        )
+        res = similarity.ivf_residuals(emb, n_cells=4)
+        cb = similarity.pq_train(
+            res.where(F.col("vec_id") >= 4).select("vec_id", "embedding"),
+            n_codes=4,
+        ).collect()
+        per_sub = {}
+        for r in cb:
+            per_sub.setdefault(r.sub_id, set()).add(r.code)
+        assert any(len(codes) > 1 for codes in per_sub.values())
+        out = similarity.ivfpq_topk(
+            emb, residuals=res, n_cells=4, n_queries=4, k=3, n_codes=4
+        ).collect()
+        dists = {}
+        for r in out:
+            dists.setdefault(r.q_id, set()).add(r.adist)
+        assert len(dists) == 4
+        assert any(len(d) > 1 for d in dists.values())
+
 
 def _round_half_up(x: float, dp: int) -> float:
     """Spark's round() on a double: HALF_UP on the shortest decimal repr."""
@@ -2284,3 +2319,79 @@ class TestDedupAgainstIndex:
         assert fresh == frozen and len(fresh) > 0
         for _, _, j in fresh:
             assert j >= 0.5
+
+
+class TestTextStatInvariants:
+    """Oracle-independent properties of the fixed-point text-statistics
+    building blocks (analysis._micro_log2, _inverse_cdf)."""
+
+    def test_unigram_probabilities_sum_to_one(self, spark):
+        """Add-one smoothing over the observed vocab is a distribution:
+        sum 2^(lp / 1e6) = 1 up to the micro-bit rounding."""
+        docs = spark.read.parquet(
+            "/root/testdata/sf0.001/documents.parquet"
+        ).select("doc_id", "text")
+        lps = [r.lp for r in analysis.unigram_lm(docs).collect()]
+        assert len(lps) > 10
+        total = sum(2.0 ** (lp / analysis.LM_MICRO) for lp in lps)
+        assert abs(total - 1.0) < 1e-4
+
+    @staticmethod
+    def _check_type1(values, t, f, d):
+        """t is the Type-1 quantile f/d of values: at least ceil(f*n/d)
+        values are <= t and fewer than that are < t."""
+        need = -(-f * len(values) // d)
+        assert sum(v <= t for v in values) >= need
+        assert sum(v < t for v in values) < need
+
+    def test_length_quantiles_type1_rule(self, spark):
+        """Every q in 1..100 on sources of 30, 31 and 32 docs (each
+        residue of n mod 3), checked against the raw token counts."""
+        import random
+
+        rng = random.Random(13)
+        rows = []
+        for src, n in (("a", 30), ("b", 31), ("c", 32)):
+            for _ in range(n):
+                text = " ".join("w" for _ in range(rng.randint(1, 60)))
+                rows.append((len(rows), text, src))
+        docs = spark.createDataFrame(
+            rows, "doc_id long, text string, source string"
+        )
+        lens = {}
+        for _, text, src in rows:
+            lens.setdefault(src, []).append(len(text.split(" ")))
+        qs = tuple(range(1, 101))
+        out = analysis.length_quantiles(docs, qs=qs).collect()
+        assert len(out) == 3 * len(qs)
+        for r in out:
+            assert r.n_docs == len(lens[r.source])
+            self._check_type1(lens[r.source], r.ntok_q, r.q, 100)
+
+    def test_perplexity_thresholds_are_terciles(self, spark):
+        """Per language: #{score <= t_k} >= ceil(k*n/3) > #{score < t_k}
+        over the engine's own scores (n = 30, 31, 32 per language)."""
+        import random
+
+        rng = random.Random(17)
+        vocab = [f"w{i}" for i in range(40)]
+        rows = []
+        for lang, n in (("en", 30), ("de", 31), ("fr", 32)):
+            for _ in range(n):
+                text = " ".join(rng.choice(vocab)
+                                for _ in range(rng.randint(3, 20)))
+                rows.append((len(rows), text, lang))
+        docs = spark.createDataFrame(
+            rows, "doc_id long, text string, lang string"
+        )
+        scores = analysis.lm_perplexity(docs.select("doc_id", "text")).join(
+            docs.select("doc_id", "lang"), "doc_id"
+        )
+        by_lang = {}
+        for r in scores.collect():
+            by_lang.setdefault(r.lang, []).append(r.bits_per_token)
+        thr = analysis.perplexity_thresholds(scores).collect()
+        assert {r.lang for r in thr} == {"en", "de", "fr"}
+        for r in thr:
+            self._check_type1(by_lang[r.lang], r.t1, 1, 3)
+            self._check_type1(by_lang[r.lang], r.t2, 2, 3)
