@@ -94,16 +94,20 @@ OrderingSpec = Union[
 ]
 
 
+def _check_box(x0, x1, y0, y1) -> None:
+    if x1 < x0:
+        raise InvalidCoordinatesError(f"x1 ({x1}) must be >= x0 ({x0})")
+    if y1 < y0:
+        raise InvalidCoordinatesError(f"y1 ({y1}) must be >= y0 ({y0})")
+
+
 class BBox:
     """Axis-aligned rectangle, y increases upward (common.py:4-57)."""
 
     __slots__ = ("x0", "x1", "y0", "y1")
 
     def __init__(self, x0: float, x1: float, y0: float, y1: float):
-        if x1 < x0:
-            raise InvalidCoordinatesError(f"x1 ({x1}) must be >= x0 ({x0})")
-        if y1 < y0:
-            raise InvalidCoordinatesError(f"y1 ({y1}) must be >= y0 ({y0})")
+        _check_box(x0, x1, y0, y1)
         self.x0, self.x1, self.y0, self.y1 = x0, x1, y0, y1
 
     @property
@@ -229,12 +233,172 @@ def _flatten_payload(payload):
     return lengths, {"values": flat}
 
 
+def _sorted_order(page, x0, y0, offset, ordering, doc_of=None) -> np.ndarray:
+    """Element order for a preset name or key function: pages ascending,
+    then the per-page key tuple, ties broken by input offset (stable,
+    matches Python sorted).  With ``doc_of`` (each row's document) a whole
+    batch is ordered at once, each document's rows kept together."""
+    if callable(ordering):
+        keys = ordering(x0, y0)
+    else:
+        try:
+            keys = ORDER_PRESETS[ordering](x0, y0)
+        except KeyError:
+            raise ValueError(f"unknown element_ordering preset: {ordering}")
+    # np.lexsort: last key is primary.
+    lex_keys = (offset,) + tuple(np.asarray(k) for k in reversed(keys)) + (page,)
+    if doc_of is not None:
+        lex_keys += (doc_of,)
+    return np.lexsort(lex_keys)
+
+
+def _stack_rows(page, x0, x1, y0, y1) -> np.ndarray:
+    """Geometry rows ``(page, -page, x1, -x0, y1, -y0)``: an element lies
+    partially within a probe box (closed intervals, components.py:286-304)
+    iff every row is >= the box's thresholds ``(p, -p, box.x0, -box.x1,
+    box.y0, -box.y1)`` — one comparison for the page test and all four
+    edges."""
+    return np.array([page, -page, x1, -x0, y1, -y0], dtype=np.float64)
+
+
+def _objects(values) -> np.ndarray:
+    if isinstance(values, np.ndarray):
+        return values
+    return np.asarray(list(values), dtype=object)
+
+
+def _strip_texts(texts: np.ndarray) -> np.ndarray:
+    """Python ``str.strip`` (all unicode whitespace) over a flat text
+    column; a null text stays null."""
+    return np.asarray(
+        [t.strip() if isinstance(t, str) else t for t in texts], dtype=object
+    )
+
+
+class _Gathered(dict):
+    """``columns`` in ``order``, each column gathered on first use."""
+
+    def __init__(self, columns: dict, order: np.ndarray):
+        super().__init__(_rows=order)
+        self.columns = columns
+
+    def __missing__(self, name: str) -> np.ndarray:
+        col = self[name] = self.columns[name][self["_rows"]]
+        return col
+
+
+class ElementBatch:
+    """The element columns of a batch of documents, built once per batch.
+
+    Document ``d`` owns input rows ``bounds[d]:bounds[d+1]`` of every
+    column.  Text is stripped once over the flat text column, and a preset
+    ordering is one stable ``np.lexsort`` over the batch with the document
+    position as the most significant key, so a ``Doc`` is slices of the
+    ordered columns (``Doc.from_batch``).  Callable orderings and
+    ``PageOrdering`` run per document, in ``Doc``.  ``Doc(...)`` is the
+    batch of one.
+
+    ``arrow`` optionally holds the Arrow ``kind`` / ``media_ref`` columns
+    the numpy ones came from, which the default recipe's output columns
+    reuse (``recipes.default_columns``).
+    """
+
+    def __init__(
+        self,
+        bounds,
+        *,
+        page, x0, x1, y0, y1, text,
+        kind=None,
+        media_ref=None,
+        offset=None,
+        font_name=None,
+        font_size=None,
+        ordering: OrderingSpec = "L2R_T2B",
+        arrow: Optional[Dict[str, object]] = None,
+    ):
+        bounds = np.asarray(bounds, dtype=np.int64)
+        self.bounds = bounds.tolist()
+        self.size = n = self.bounds[-1]
+        x0, x1 = np.asarray(x0, dtype=np.float64), np.asarray(x1, dtype=np.float64)
+        y0, y1 = np.asarray(y0, dtype=np.float64), np.asarray(y1, dtype=np.float64)
+        text = _objects(text)
+        self.columns = {
+            "page": np.asarray(page, dtype=np.int64),
+            "x0": x0, "x1": x1, "y0": y0, "y1": y1,
+            "offset": (
+                np.arange(n, dtype=np.int64) if offset is None
+                else np.asarray(offset, dtype=np.int64)
+            ),
+            "text_raw": text,
+            "text_stripped": _strip_texts(text),
+            "kind": (
+                np.full(n, "text", dtype=object) if kind is None
+                else _objects(kind)
+            ),
+            "media_ref": (
+                np.full(n, None, dtype=object) if media_ref is None
+                else _objects(media_ref)
+            ),
+            "_rows": np.arange(n, dtype=np.int64),
+        }
+        self.font_name = None if font_name is None else _objects(font_name)
+        self.font_size = (
+            font_size if font_size is None or isinstance(font_size, np.ndarray)
+            else np.asarray(list(font_size), dtype=object)
+        )
+        self.arrow = arrow
+        self.output_columns = None  # recipes.default_columns, on first use
+        doc_of = np.repeat(
+            np.arange(len(bounds) - 1, dtype=np.int64), np.diff(bounds)
+        )
+        bad = (x1 < x0) | (y1 < y0)
+        self.invalid = set(doc_of[bad].tolist()) if bad.any() else set()
+        self.ordering = ordering
+        self.order = self.ordered = None
+        if isinstance(ordering, str) and ordering in ORDER_PRESETS:
+            self.order = _sorted_order(
+                self.columns["page"], x0, y0, self.columns["offset"],
+                ordering, doc_of,
+            )
+            self.ordered = _Gathered(self.columns, self.order)
+        self._stack = None
+
+    @property
+    def stack(self) -> np.ndarray:
+        """``Doc.stack`` over the whole ordered batch, built on first use."""
+        if self._stack is None:
+            o = self.ordered
+            self._stack = _stack_rows(o["page"], o["x0"], o["x1"], o["y0"], o["y1"])
+        return self._stack
+
+
 class Doc:
     """One document's elements as parallel numpy arrays, sorted by idx.
 
     Construction applies per-page ordering and assigns the global ``idx``
-    exactly like ``PDFDocument.__init__`` (components.py:406-438).
+    exactly like ``PDFDocument.__init__`` (components.py:406-438).  The
+    arrays are slices of an ``ElementBatch``, taken on first use: a batch
+    of one here, the whole Arrow batch on the pipeline path
+    (``Doc.from_batch``).
     """
+
+    # Lazily computed, per document (class-level defaults keep the
+    # per-document build to the columns it always needs).
+    _font_name = None
+    _font_size = None
+    _font_size_repr_memo = None
+    _font = None
+    _tags = None
+    _sectioning = None
+    _page_numbers = None
+    _page_set = None
+    _geo = None
+    _stack = None
+    _fits_page = None
+    _text_index = None
+    _span = None  # slice of the batch's ordered rows, for a preset ordering
+    _all = None
+    _any_ignored = False
 
     def __init__(
         self,
@@ -262,59 +426,70 @@ class Doc:
         element_ordering: OrderingSpec = "L2R_T2B",
         all_page_numbers: Optional[Sequence[int]] = None,
     ):
+        batch = ElementBatch(
+            [0, len(x0)], page=page, x0=x0, x1=x1, y0=y0, y1=y1, text=text,
+            kind=kind, media_ref=media_ref, offset=offset,
+            font_name=font_name, font_size=font_size,
+            ordering=element_ordering,
+        )
+        self._bind(
+            doc_id, batch, 0,
+            char_fonts=char_fonts, char_sizes=char_sizes,
+            page_width=page_width, page_height=page_height,
+            font_mapping=font_mapping,
+            font_mapping_is_regex=font_mapping_is_regex,
+            regex_flags=regex_flags, font_size_precision=font_size_precision,
+            element_ordering=element_ordering,
+            all_page_numbers=all_page_numbers,
+        )
+
+    @classmethod
+    def from_batch(cls, doc_id: str, batch: ElementBatch, pos: int, **settings):
+        """Document ``pos`` of ``batch``; ``settings`` are ``Doc``'s
+        keyword settings (font mapping, ordering, page sizes, ...)."""
+        doc = cls.__new__(cls)
+        doc._bind(doc_id, batch, pos, **settings)
+        return doc
+
+    def _bind(
+        self,
+        doc_id: str,
+        batch: ElementBatch,
+        pos: int,
+        *,
+        char_fonts=None,
+        char_sizes=None,
+        page_width: Union[float, Dict[int, float]] = 100.0,
+        page_height: Union[float, Dict[int, float]] = 100.0,
+        font_mapping: Optional[Dict[str, str]] = None,
+        font_mapping_is_regex: bool = False,
+        regex_flags: int = 0,
+        font_size_precision: int = 1,
+        element_ordering: OrderingSpec = "L2R_T2B",
+        all_page_numbers: Optional[Sequence[int]] = None,
+    ) -> None:
         self.doc_id = doc_id
-        n = len(x0)
-        page_arr = np.asarray(page, dtype=np.int64)
-        x0a = np.asarray(x0, dtype=np.float64)
-        x1a = np.asarray(x1, dtype=np.float64)
-        y0a = np.asarray(y0, dtype=np.float64)
-        y1a = np.asarray(y1, dtype=np.float64)
-        if (x1a < x0a).any() or (y1a < y0a).any():
+        if pos in batch.invalid:
             raise InvalidCoordinatesError(f"doc {doc_id}: box with x1<x0 or y1<y0")
-        offset_arr = (
-            np.arange(n, dtype=np.int64)
-            if offset is None
-            else np.asarray(offset, dtype=np.int64)
-        )
-
-        if not isinstance(text, np.ndarray):
-            text = np.asarray(list(text), dtype=object)
-
-        order = self._order_indexes(
-            page_arr, x0a, y0a, offset_arr, element_ordering,
-            x1=x1a, y1=y1a, text=text,
-        )
-
-        self.page = page_arr[order]
-        self.x0 = x0a[order]
-        self.x1 = x1a[order]
-        self.y0 = y0a[order]
-        self.y1 = y1a[order]
-        self.offset = offset_arr[order]
-        self.text_raw = text[order]
-        # a PageOrdering callable may DROP elements (reference: the doc
-        # is built from exactly what the callable returns) — size the
-        # default fills by the ordered length, not the input length.
-        n_out = len(order)
-        if kind is None:
-            self.kind = np.full(n_out, "text", dtype=object)
+        lo, hi = batch.bounds[pos], batch.bounds[pos + 1]
+        self._batch = batch
+        self._lo = lo
+        if batch.order is not None and element_ordering == batch.ordering:
+            self._columns = batch.ordered
+            self._select = self._span = slice(lo, hi)
+            self.n = hi - lo
         else:
-            if not isinstance(kind, np.ndarray):
-                kind = np.asarray(list(kind), dtype=object)
-            self.kind = kind[order]
-        if media_ref is None:
-            self.media_ref = np.full(n_out, None, dtype=object)
-        else:
-            if not isinstance(media_ref, np.ndarray):
-                media_ref = np.asarray(list(media_ref), dtype=object)
-            self.media_ref = media_ref[order]
-
-        # Fonts are computed lazily (most recipes never touch them) —
-        # exactly like the reference's memoized properties
-        # (components.py:171-183,197-211,228-238), but batched.
-        self._order = order
-        self._font_name_in = font_name
-        self._font_size_in = font_size
+            src = batch.columns
+            self._columns = src
+            self._select = lo + self._order_indexes(
+                src["page"][lo:hi], src["x0"][lo:hi], src["y0"][lo:hi],
+                src["offset"][lo:hi], element_ordering,
+                x1=src["x1"][lo:hi], y1=src["y1"][lo:hi],
+                text=src["text_raw"][lo:hi],
+            )
+            # a PageOrdering callable may DROP elements (reference: the
+            # doc is built from exactly what the callable returns).
+            self.n = len(self._select)
         # Optional per-character payloads (input order, list per element):
         # when present, font_name/font_size are the per-element MODE over
         # characters (components.py:160-211), not the layout's value.
@@ -324,49 +499,58 @@ class Doc:
         self._font_mapping_is_regex = font_mapping_is_regex
         self._regex_flags = regex_flags
         self._font_size_precision = font_size_precision
-        self._font_name = None
-        self._font_size = None
-        self._font_size_repr_memo = None
-        self._font = None
-        self._tags = None
-        self._text_stripped = None
-        self._sectioning = None
-        self._page_numbers = None
-
-        self.n = n_out  # == n unless a PageOrdering callable dropped rows
-        self.ignored = np.zeros(n_out, dtype=bool)
-
         # Page registry: width/height per page + NoElementsOnPageError for
         # declared-but-empty pages (components.py:426-429).  The scan is
         # only needed when pages are declared explicitly.
         self._page_width = page_width
         self._page_height = page_height
         if all_page_numbers is not None:
-            present = set(int(p) for p in self.page)
+            present = set(self.page.tolist())
             for p in sorted(set(int(p) for p in all_page_numbers)):
                 if p not in present:
                     raise NoElementsOnPageError(
                         f"No elements on page {p}, please exclude this page"
                     )
 
+    def __getattr__(self, name: str):
+        # Only reached for an attribute not set yet: the element columns
+        # (page, x0, x1, y0, y1, offset, text_raw, text_stripped, kind,
+        # media_ref, and _rows, each element's row in the batch columns)
+        # are sliced from the batch on first use, since a default-recipe
+        # document reads none but _rows; ``ignored`` starts all False.
+        columns = self.__dict__.get("_columns")
+        if columns is not None and name in self.__dict__["_batch"].columns:
+            value = columns[name][self._select]
+        elif name == "ignored" and columns is not None:
+            value = np.zeros(self.n, dtype=bool)
+        else:
+            raise AttributeError(
+                f"{type(self).__name__!r} object has no attribute {name!r}"
+            )
+        self.__dict__[name] = value
+        return value
+
     # -- lazy memoized columns ------------------------------------------------
 
     @property
     def page_numbers(self) -> list:
         if self._page_numbers is None:
-            self._page_numbers = [int(p) for p in np.unique(self.page)]
+            self._page_numbers = sorted(set(self.page.tolist()))
         return self._page_numbers
+
+    @property
+    def _order(self) -> np.ndarray:
+        """Each element's position in the document's input order."""
+        return self._rows - self._lo
 
     @property
     def font_name(self) -> np.ndarray:
         if self._font_name is None:
-            fn = self._font_name_in
+            fn = self._batch.font_name
             if fn is None:
                 base = np.full(self.n, "fake_font", dtype=object)
             else:
-                if not isinstance(fn, np.ndarray):
-                    fn = np.asarray(list(fn), dtype=object)
-                base = fn[self._order]
+                base = fn[self._rows]
             cf = self._char_fonts_in
             if cf is not None:
                 # Mode of per-char fontnames, first-seen tie-break
@@ -374,19 +558,17 @@ class Doc:
                 # falls back to the layout value.
                 lengths, kwargs = _flatten_payload(cf)
                 modes = _modes_first_seen_flat(lengths=lengths, **kwargs)
-                base = np.where(
-                    lengths[self._order] > 0, modes[self._order], base
-                )
+                order = self._order
+                base = np.where(lengths[order] > 0, modes[order], base)
             self._font_name = base
         return self._font_name
 
     def _rounded_sizes(self) -> list:
-        sizes = self._font_size_in
+        sizes = self._batch.font_size
         if sizes is None:
             sizes = [10] * self.n
         else:
-            sizes = list(sizes)
-        sizes = [sizes[i] for i in self._order]
+            sizes = list(sizes[self._rows])
         cs = self._char_sizes_in
         if cs is not None:
             # Mode of RAW per-char heights first, THEN round the winner
@@ -395,7 +577,7 @@ class Doc:
             modes = _modes_first_seen_flat(lengths=lengths, **kwargs)
             sizes = [
                 modes[i] if lengths[i] else sizes[pos]
-                for pos, i in enumerate(self._order)
+                for pos, i in enumerate(self._order.tolist())
             ]
         # Python round: half-to-even; int input stays int (load-bearing for
         # the font string, components.py:208-210,231).
@@ -430,16 +612,6 @@ class Doc:
         if self._tags is None:
             self._tags = [set() for _ in range(self.n)]
         return self._tags
-
-    @property
-    def text_stripped(self) -> np.ndarray:
-        # text(stripped=True): Python str.strip (unicode whitespace).
-        if self._text_stripped is None:
-            self._text_stripped = np.asarray(
-                [t.strip() if isinstance(t, str) else t for t in self.text_raw],
-                dtype=object,
-            )
-        return self._text_stripped
 
     @property
     def sectioning(self):
@@ -480,79 +652,98 @@ class Doc:
                     out.extend(v._i for v in ordering.fn(views))
                     start = end
             return np.asarray(out, dtype=np.int64)
-        if callable(ordering):
-            keys = ordering(x0, y0)
-        else:
-            try:
-                keys = ORDER_PRESETS[ordering](x0, y0)
-            except KeyError:
-                raise ValueError(f"unknown element_ordering preset: {ordering}")
-        # np.lexsort: last key is primary.  Page is most significant (pages
-        # ascending), then the per-page key tuple, then input offset (stable).
-        lex_keys = (offset,) + tuple(np.asarray(k) for k in reversed(keys)) + (page,)
-        return np.lexsort(lex_keys)
+        return _sorted_order(page, x0, y0, offset, ordering)
 
     def _map_fonts(
         self, mapping: Dict[str, str], is_regex: bool, flags: int
     ) -> np.ndarray:
         """font strings after font_mapping (components.py:213-238)."""
-        raw = np.asarray(
-            [
-                f"{name},{size_repr}"
-                for name, size_repr in zip(self.font_name, self._font_size_repr)
-            ],
-            dtype=object,
-        )
-        if not mapping:
-            return raw
-        out = raw.copy()
-        resolved = np.zeros(len(raw), dtype=bool)
-        if is_regex:
-            # Ordered vectorized passes: one compiled regex per mapping entry,
-            # applied only to not-yet-matched rows (first hit wins).
-            for pattern, mapped in mapping.items():
-                rx = re.compile(pattern, flags)
-                todo = ~resolved
-                if not todo.any():
-                    break
-                hits = np.asarray(
-                    [bool(rx.match(f)) if t else False for f, t in zip(raw, todo)]
-                )
-                out[hits] = mapped
-                resolved |= hits
-        # Exact lookup for unresolved rows; falsy mapped value falls back to
-        # the raw font (``.get(font) or font``, components.py:237).  Plain
-        # dict lookups: per-document element counts are tens of rows, where
-        # pandas Series construction costs more than the lookups themselves
-        # (measured 2.6x on the ordsum family kernel path).
-        todo = ~resolved
-        if todo.any():
-            idx = np.nonzero(todo)[0]
-            out[idx] = [mapping.get(f) or f for f in out[idx]]
-        return out
+        raw = [
+            f"{name},{size_repr}"
+            for name, size_repr in zip(self.font_name.tolist(), self._font_size_repr)
+        ]
+        out = list(raw)
+        if mapping:
+            todo = list(range(len(raw)))
+            if is_regex:
+                # Ordered passes: one compiled regex per mapping entry,
+                # tried on the not-yet-matched rows (first hit wins).
+                for pattern, mapped in mapping.items():
+                    if not todo:
+                        break
+                    rx = re.compile(pattern, flags)
+                    left = []
+                    for j in todo:
+                        if rx.match(raw[j]):
+                            out[j] = mapped
+                        else:
+                            left.append(j)
+                    todo = left
+            # Exact lookup for unresolved rows; falsy mapped value falls
+            # back to the raw font (``.get(font) or font``,
+            # components.py:237).
+            for j in todo:
+                out[j] = mapping.get(raw[j]) or raw[j]
+        return np.asarray(out, dtype=object)
 
     # -- page info ------------------------------------------------------------
 
-    def page_width(self, page_number: int) -> float:
-        if page_number not in self.page_numbers:
+    def _page_size(self, sizes, page_number):
+        if self._page_set is None:
+            self._page_set = frozenset(self.page_numbers)
+        if page_number not in self._page_set:
             raise PageNotFoundError(f"Could not find page {page_number}")
-        if isinstance(self._page_width, dict):
-            return self._page_width[page_number]
-        return self._page_width
+        return sizes[page_number] if isinstance(sizes, dict) else sizes
+
+    def page_width(self, page_number: int) -> float:
+        return self._page_size(self._page_width, page_number)
 
     def page_height(self, page_number: int) -> float:
-        if page_number not in self.page_numbers:
-            raise PageNotFoundError(f"Could not find page {page_number}")
-        if isinstance(self._page_height, dict):
-            return self._page_height[page_number]
-        return self._page_height
+        return self._page_size(self._page_height, page_number)
+
+    # -- geometry for the directional operators --------------------------------
+
+    @property
+    def geo(self) -> tuple:
+        """The page, x0, x1, y0 and y1 columns as lists of Python numbers:
+        the probe-box arithmetic runs on scalars, not numpy scalars."""
+        if self._geo is None:
+            self._geo = (
+                self.page.tolist(), self.x0.tolist(), self.x1.tolist(),
+                self.y0.tolist(), self.y1.tolist(),
+            )
+        return self._geo
+
+    @property
+    def stack(self) -> np.ndarray:
+        """``_stack_rows`` of this document's elements."""
+        if self._stack is None:
+            if self._span is not None:
+                self._stack = self._batch.stack[:, self._span]
+            else:
+                self._stack = _stack_rows(self.page, self.x0, self.x1, self.y0, self.y1)
+        return self._stack
+
+    @property
+    def fits_page(self) -> np.ndarray:
+        """Elements overlapping the full height of their own page — the
+        probe on every other page with ``all_pages``."""
+        if self._fits_page is None:
+            ph = self._page_height
+            if isinstance(ph, dict):
+                ph = np.asarray([ph[p] for p in self.page.tolist()])
+            self._fits_page = (self.y1 >= 0) & (self.y0 <= ph)
+        return self._fits_page
 
     # -- element access ---------------------------------------------------
 
     @property
     def elements(self) -> "Elems":
         """All (non-ignored) elements (components.py:444-452)."""
-        return Elems(self, np.arange(self.n, dtype=np.int64), _presorted=True)
+        if self._all is None:
+            self._all = np.arange(self.n, dtype=np.int64)
+            self._all.setflags(write=False)
+        return Elems(self, self._all, _presorted=True)
 
     def fonts(self) -> set:
         """Distinct fonts over non-ignored elements (components.py:464-472)."""
@@ -569,6 +760,80 @@ class Doc:
 
     def ignore(self, i: int) -> None:
         self.ignored[i] = True
+        self._any_ignored = True
+
+    def _indexes_of_text(self, stripped: bool) -> dict:
+        """text -> ascending element indexes, over the whole document."""
+        if self._text_index is None:
+            self._text_index = {}
+        index = self._text_index.get(stripped)
+        if index is None:
+            index = self._text_index[stripped] = {}
+            column = self.text_stripped if stripped else self.text_raw
+            for i, t in enumerate(column.tolist()):
+                index.setdefault(t, []).append(i)
+        return index
+
+
+_INF = float("inf")
+_HORIZONTAL = ("right", "left", "horizontal")
+
+
+def _probe_limits(doc, how, anchor, tolerance, all_pages, span):
+    """The probe of directional operator ``how`` from an ``anchor``
+    element ``(page, x0, x1, y0, y1)``, as thresholds against
+    ``Doc.stack`` (an element is in a box iff each of its stack rows is
+    >= the threshold):
+
+    * ``(p, -p, x0, -x1, y0, -y1)``: the box on the anchor's page;
+    * ``(q_lo, -q_hi, x0, -x1)``: a range of pages probed over the full
+      page height (``Doc.fits_page``) — the pages after (below) or before
+      (above) the anchor's with ``all_pages``; for ``vertical``, whose box
+      is the full height anyway, the anchor's page, with ``all_pages``
+      widened to ``span``, the pages of the probed list's first and last
+      elements (filtering.py:637-650).
+
+    ``inf`` as a box's page or a range's first page leaves it out.  The
+    tolerance shrinks the box, capped at half the anchor's height or
+    width (filtering.py:398,443,495,563,628,686); an inverted box (an
+    anchor past the page edge) raises ``InvalidCoordinatesError``.
+    """
+    p, x0, x1, y0, y1 = anchor
+    if how in _HORIZONTAL:
+        tolerance = min((y1 - y0) / 2, tolerance)
+        y0, y1 = y0 + tolerance, y1 - tolerance
+        if how == "right":
+            x0, x1 = x1, doc.page_width(p)
+        elif how == "left":
+            x0, x1 = 0, x0
+        else:
+            x0, x1 = 0, doc.page_width(p)
+        _check_box(x0, x1, y0, y1)
+        return (p, -p, x0, -x1, y0, -y1, _INF, _INF, x0, -x1)
+    tolerance = min((x1 - x0) / 2, tolerance)
+    x0, x1 = x0 + tolerance, x1 - tolerance
+    box = (_INF,) * 6
+    q_lo = q_hi = _INF
+    if how == "below":
+        _check_box(x0, x1, 0, y0)
+        box = (p, -p, x0, -x1, 0, -y0)
+        if all_pages:
+            q_lo = p + 1
+    elif how == "above":
+        top = doc.page_height(p)
+        _check_box(x0, x1, y1, top)
+        box = (p, -p, x0, -x1, y1, -top)
+        if all_pages:
+            q_lo, q_hi = -_INF, p - 1
+    else:
+        top = doc.page_height(p)
+        _check_box(x0, x1, 0, top)
+        q_lo = q_hi = p
+        if span is not None:
+            q_lo, q_hi = span
+            if not q_lo <= p <= q_hi:  # the own page's box as well
+                box = (p, -p, x0, -x1, 0, -top)
+    return box + (q_lo, -q_hi, x0, -x1)
 
 
 class Elems:
@@ -578,18 +843,20 @@ class Elems:
     Hashable/immutable so table extraction can use sets of rows/columns.
     """
 
-    __slots__ = ("doc", "idx")
+    __slots__ = ("doc", "idx", "_stack")
 
     def __init__(self, doc: Doc, idx: np.ndarray, _presorted: bool = False):
         arr = np.asarray(idx, dtype=np.int64)
         if not _presorted:
             arr = np.unique(arr)
-        live = ~doc.ignored[arr]
-        if not live.all():
-            arr = arr[live]
+        if doc._any_ignored:
+            live = ~doc.ignored[arr]
+            if not live.all():
+                arr = arr[live]
         self.doc = doc
         self.idx = arr
         self.idx.setflags(write=False)
+        self._stack = None
 
     # -- internals ----------------------------------------------------------
 
@@ -696,6 +963,8 @@ class Elems:
 
     def ignore_elements(self) -> None:
         self.doc.ignored[self.idx] = True
+        if len(self.idx):
+            self.doc._any_ignored = True
 
     # -- text / font / page filters (filtering.py:107-269) -------------------
 
@@ -708,6 +977,11 @@ class Elems:
         return src[self.idx]
 
     def filter_by_text_equal(self, text: str, stripped: bool = True) -> "Elems":
+        if len(self.idx) == self.doc.n:
+            return Elems(
+                self.doc, self.doc._indexes_of_text(stripped).get(text, ()),
+                _presorted=True,
+            )
         mask = np.asarray([t == text for t in self._texts(stripped)], dtype=bool)
         return self._mask_to_elems(mask)
 
@@ -742,7 +1016,10 @@ class Elems:
         return self.filter_by_fonts(font)
 
     def filter_by_fonts(self, *fonts: str) -> "Elems":
-        mask = np.isin(self.doc.font[self.idx], list(fonts))
+        wanted = set(fonts)
+        mask = np.asarray(
+            [f in wanted for f in self.doc.font[self.idx].tolist()], dtype=bool
+        )
         return self._mask_to_elems(mask)
 
     def filter_by_font_size(self, font_size: float) -> "Elems":
@@ -762,32 +1039,30 @@ class Elems:
         mask = np.isin(self.doc.page[self.idx], list(page_numbers))
         return self._mask_to_elems(mask)
 
+    def _in_sections(self, sections) -> "Elems":
+        """Elements inside any of ``sections`` (index intervals)."""
+        mask = np.zeros(len(self.idx), dtype=bool)
+        for section in sections:
+            mask |= (self.idx >= section.start_idx) & (self.idx <= section.end_idx)
+        return self._mask_to_elems(mask)
+
     def filter_by_section_name(self, name: str) -> "Elems":
-        acc = np.empty(0, dtype=np.int64)
-        for section in self.doc.sectioning.get_sections_with_name(name):
-            acc = np.union1d(acc, section.elements().idx)
-        return self._wrap(np.intersect1d(self.idx, acc))
+        return self.filter_by_section_names(name)
 
     def filter_by_section_names(self, *names: str) -> "Elems":
-        acc = np.empty(0, dtype=np.int64)
-        for name in names:
-            for section in self.doc.sectioning.get_sections_with_name(name):
-                acc = np.union1d(acc, section.elements().idx)
-        return self._wrap(np.intersect1d(self.idx, acc))
+        sectioning = self.doc.sectioning
+        return self._in_sections(
+            s for name in names for s in sectioning.get_sections_with_name(name)
+        )
 
     def filter_by_section(self, unique_name: str) -> "Elems":
-        section = self.doc.sectioning.sections_dict.get(unique_name)
-        if section is None:
-            return self._wrap(np.empty(0, dtype=np.int64))
-        return self._wrap(np.intersect1d(self.idx, section.elements().idx))
+        return self.filter_by_sections(unique_name)
 
     def filter_by_sections(self, *unique_names: str) -> "Elems":
-        acc = np.empty(0, dtype=np.int64)
-        for unique_name in unique_names:
-            section = self.doc.sectioning.sections_dict.get(unique_name)
-            if section is not None:
-                acc = np.union1d(acc, section.elements().idx)
-        return self._wrap(np.intersect1d(self.idx, acc))
+        sections = self.doc.sectioning.sections_dict
+        return self._in_sections(
+            sections[n] for n in unique_names if n in sections
+        )
 
     def filter_out_header(self, bottom_of_header_y: float) -> "Elems":
         return self._mask_to_elems(self.doc.y0[self.idx] < bottom_of_header_y)
@@ -797,63 +1072,93 @@ class Elems:
 
     # -- geometry (components.py:256-304, filtering.py:698-715) --------------
 
-    def _geom(self):
-        """(page, x0, x1, y0, y1) for this list's elements — the gather
-        is skipped when the list covers the whole document (the common
-        case in recipes: directional ops probe from doc.elements)."""
-        d = self.doc
-        if len(self.idx) == d.n:
-            return d.page, d.x0, d.x1, d.y0, d.y1
-        ii = self.idx
-        return d.page[ii], d.x0[ii], d.x1[ii], d.y0[ii], d.y1[ii]
+    def _geometry(self) -> np.ndarray:
+        """``Doc.stack`` over this list's elements, gathered once — not at
+        all when the list covers the whole document (the common case in
+        recipes: directional ops probe from doc.elements)."""
+        if self._stack is None:
+            stack = self.doc.stack
+            self._stack = (
+                stack if len(self.idx) == self.doc.n else stack[:, self.idx]
+            )
+        return self._stack
 
     def filter_partially_within_bounding_box(
         self, box: BBox, page_number: int
     ) -> "Elems":
-        page, x0, x1, y0, y1 = self._geom()
-        mask = (
-            (page == page_number)
-            & (box.x0 <= x1)
-            & (box.x1 >= x0)
-            & (box.y0 <= y1)
-            & (box.y1 >= y0)
-        )
-        return self._mask_to_elems(mask)
+        p = float(page_number)
+        limits = np.array((p, -p, box.x0, -box.x1, box.y0, -box.y1))
+        return self._mask_to_elems((self._geometry() >= limits[:, None]).all(0))
 
     def filter_entirely_within_bounding_box(
         self, box: BBox, page_number: int
     ) -> "Elems":
-        page, x0, x1, y0, y1 = self._geom()
+        d, ii = self.doc, self.idx
         mask = (
-            (page == page_number)
-            & (x0 >= box.x0)
-            & (x1 <= box.x1)
-            & (y0 >= box.y0)
-            & (y1 <= box.y1)
+            (d.page[ii] == page_number)
+            & (d.x0[ii] >= box.x0)
+            & (d.x1[ii] <= box.x1)
+            & (d.y0[ii] >= box.y0)
+            & (d.y1[ii] <= box.y1)
         )
         return self._mask_to_elems(mask)
 
     # -- directional operators (filtering.py:366-696) -------------------------
 
+    def _probe(
+        self, how: str, anchors, tolerance: float = 0.0, all_pages: bool = False
+    ) -> np.ndarray:
+        """``(len(anchors), len(self))`` mask: the elements of this list
+        that each anchor's ``how`` operator returns, the anchor included
+        and elements ignored since this list was made left out.  A fixed,
+        small set of numpy calls for any number of anchors: one comparison
+        against ``Doc.stack`` for the page test and four edges of the
+        boxes, and one for the page ranges (``_probe_limits``)."""
+        d = self.doc
+        page, x0, x1, y0, y1 = d.geo
+        span = None
+        if how == "vertical" and all_pages and len(self.idx):
+            span = (page[self.idx[0]], page[self.idx[-1]])
+        rows = [
+            _probe_limits(
+                d, how, (page[i], x0[i], x1[i], y0[i], y1[i]),
+                tolerance, all_pages, span,
+            )
+            for i in anchors
+        ]
+        limits = np.array(rows, dtype=np.float64).reshape(-1, 10).T[:, :, None]
+        geometry = self._geometry()[:, None, :]
+        mask = None
+        if how != "vertical" or any(r[0] != _INF for r in rows):
+            mask = (geometry >= limits[:6]).all(0)
+        if how == "vertical" or (all_pages and how in ("below", "above")):
+            fits = d.fits_page
+            if len(self.idx) != d.n:
+                fits = fits[self.idx]
+            pages = (geometry[:4] >= limits[6:]).all(0) & fits
+            mask = pages if mask is None else mask | pages
+        if d._any_ignored:
+            mask &= ~d.ignored[self.idx]
+        return mask
+
+    def _directional(self, how, i, inclusive, tolerance, all_pages=False):
+        mask = self._probe(how, (i,), tolerance, all_pages)[0]
+        if not inclusive:  # drop the anchor itself
+            n = len(self.idx)
+            pos = i if n == self.doc.n else int(np.searchsorted(self.idx, i))
+            if 0 <= pos < n and self.idx[pos] == i:
+                mask[pos] = False
+        return self._mask_to_elems(mask)
+
     def to_the_right_of(
         self, i: int, inclusive: bool = False, tolerance: float = 0.0
     ) -> "Elems":
-        d = self.doc
-        p = int(d.page[i])
-        tolerance = min((d.y1[i] - d.y0[i]) / 2, tolerance)
-        box = BBox(d.x1[i], d.page_width(p), d.y0[i] + tolerance, d.y1[i] - tolerance)
-        out = self.filter_partially_within_bounding_box(box, p)
-        return out if inclusive else out.remove_element(i)
+        return self._directional("right", i, inclusive, tolerance)
 
     def to_the_left_of(
         self, i: int, inclusive: bool = False, tolerance: float = 0.0
     ) -> "Elems":
-        d = self.doc
-        p = int(d.page[i])
-        tolerance = min((d.y1[i] - d.y0[i]) / 2, tolerance)
-        box = BBox(0, d.x0[i], d.y0[i] + tolerance, d.y1[i] - tolerance)
-        out = self.filter_partially_within_bounding_box(box, p)
-        return out if inclusive else out.remove_element(i)
+        return self._directional("left", i, inclusive, tolerance)
 
     def below(
         self,
@@ -862,20 +1167,7 @@ class Elems:
         all_pages: bool = False,
         tolerance: float = 0.0,
     ) -> "Elems":
-        d = self.doc
-        p = int(d.page[i])
-        tolerance = min((d.x1[i] - d.x0[i]) / 2, tolerance)
-        box = BBox(d.x0[i] + tolerance, d.x1[i] - tolerance, 0, d.y0[i])
-        out = self.filter_partially_within_bounding_box(box, p)
-        if all_pages:
-            for q in d.page_numbers:
-                if q <= p:
-                    continue
-                box_q = BBox(
-                    d.x0[i] + tolerance, d.x1[i] - tolerance, 0, d.page_height(q)
-                )
-                out = out | self.filter_partially_within_bounding_box(box_q, q)
-        return out if inclusive else out.remove_element(i)
+        return self._directional("below", i, inclusive, tolerance, all_pages)
 
     def above(
         self,
@@ -884,22 +1176,7 @@ class Elems:
         all_pages: bool = False,
         tolerance: float = 0.0,
     ) -> "Elems":
-        d = self.doc
-        p = int(d.page[i])
-        tolerance = min((d.x1[i] - d.x0[i]) / 2, tolerance)
-        box = BBox(
-            d.x0[i] + tolerance, d.x1[i] - tolerance, d.y1[i], d.page_height(p)
-        )
-        out = self.filter_partially_within_bounding_box(box, p)
-        if all_pages:
-            for q in d.page_numbers:
-                if q >= p:
-                    continue
-                box_q = BBox(
-                    d.x0[i] + tolerance, d.x1[i] - tolerance, 0, d.page_height(q)
-                )
-                out = out | self.filter_partially_within_bounding_box(box_q, q)
-        return out if inclusive else out.remove_element(i)
+        return self._directional("above", i, inclusive, tolerance, all_pages)
 
     def vertically_in_line_with(
         self,
@@ -908,34 +1185,12 @@ class Elems:
         all_pages: bool = False,
         tolerance: float = 0.0,
     ) -> "Elems":
-        d = self.doc
-        p = int(d.page[i])
-        tolerance = min((d.x1[i] - d.x0[i]) / 2, tolerance)
-        box = BBox(d.x0[i] + tolerance, d.x1[i] - tolerance, 0, d.page_height(p))
-        out = self.filter_partially_within_bounding_box(box, p)
-        if all_pages and len(self.idx):
-            # Page range bounded by this list's own first/last element
-            # (filtering.py:637-650).
-            first_p = int(d.page[self.idx[0]])
-            last_p = int(d.page[self.idx[-1]])
-            for q in range(first_p, last_p + 1):
-                if q == p or q not in d.page_numbers:
-                    continue
-                box_q = BBox(
-                    d.x0[i] + tolerance, d.x1[i] - tolerance, 0, d.page_height(q)
-                )
-                out = out | self.filter_partially_within_bounding_box(box_q, q)
-        return out if inclusive else out.remove_element(i)
+        return self._directional("vertical", i, inclusive, tolerance, all_pages)
 
     def horizontally_in_line_with(
         self, i: int, inclusive: bool = False, tolerance: float = 0.0
     ) -> "Elems":
-        d = self.doc
-        p = int(d.page[i])
-        tolerance = min((d.y1[i] - d.y0[i]) / 2, tolerance)
-        box = BBox(0, d.page_width(p), d.y0[i] + tolerance, d.y1[i] - tolerance)
-        out = self.filter_partially_within_bounding_box(box, p)
-        return out if inclusive else out.remove_element(i)
+        return self._directional("horizontal", i, inclusive, tolerance)
 
     # -- order-based operators (filtering.py:717-942) -------------------------
 

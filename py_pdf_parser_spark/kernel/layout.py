@@ -69,30 +69,9 @@ def ora_spans(i: int) -> List[Span]:
 _ORA_FONT_NAMES = np.asarray(["f0", "f1", "f2"], dtype=object)
 
 
-_ORA_LAYOUT_CACHE: Dict = {}
-
-
-def ora_layout(i: int, offsets: np.ndarray) -> Dict[str, np.ndarray]:
-    """Memoized: every output depends only on (i mod 33, offsets) —
-    i%3 drives y0/font_name, i%11 drives font_size — and consumers
-    treat layout arrays as read-only (Doc copies via fancy indexing)."""
-    key = (int(i) % 33, offsets.tobytes())
-    hit = _ORA_LAYOUT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    out = _ora_layout(i, offsets)
-    # Cached arrays are shared across every Doc with the same (i%33,
-    # offsets) class — freeze them so an accidental in-place mutation
-    # fails loudly instead of corrupting all sharers.
-    for v in out.values():
-        if isinstance(v, np.ndarray):
-            v.setflags(write=False)
-    if len(_ORA_LAYOUT_CACHE) < 4096:
-        _ORA_LAYOUT_CACHE[key] = out
-    return out
-
-
-def _ora_layout(i: int, offsets: np.ndarray) -> Dict[str, np.ndarray]:
+def ora_layout(i, offsets: np.ndarray) -> Dict[str, np.ndarray]:
+    """``i`` is the doc number, or one per span when a batch of documents
+    is laid out together (``parse.parse_batch``)."""
     o = offsets.astype(np.int64)
     r = (o % 6) // 3
     c = (o % 6) % 3
@@ -110,6 +89,41 @@ def _ora_layout(i: int, offsets: np.ndarray) -> Dict[str, np.ndarray]:
         font_name=font_name, font_size=font_size,
         page_width=100.0, page_height=100.0,
     )
+
+
+# ---------------------------------------------------------------------------
+# spec families (memo, ordsum, gridmerge, colmerge, duphdr): fixed geometry,
+# one spec row per span offset.  Each spec becomes numpy columns once, at
+# import, so a layout is one gather per column for any number of spans.
+# ---------------------------------------------------------------------------
+
+def _spec_columns(spec, page=None, font_name=None, font_size=None):
+    """Spec rows ``(text, x0, x1, y0, y1, ...)`` -> layout columns."""
+    n = len(spec)
+    _, x0, x1, y0, y1 = list(zip(*spec))[:5]
+    return dict(
+        page=np.asarray(page or [1] * n, dtype=np.int64),
+        x0=np.asarray(x0, dtype=np.float64),
+        x1=np.asarray(x1, dtype=np.float64),
+        y0=np.asarray(y0, dtype=np.float64),
+        y1=np.asarray(y1, dtype=np.float64),
+        font_name=np.asarray(font_name or ["fake_font"] * n, dtype=object),
+        # object: sizes stay Python ints, as the font string expects.
+        font_size=np.asarray(font_size or [10] * n, dtype=object),
+    )
+
+
+def _spec_layout(columns: Dict[str, np.ndarray], offsets) -> Dict[str, np.ndarray]:
+    """The spec rows at ``offsets``, indexed like a Python list: a negative
+    offset counts from the end, and one outside the spec raises
+    ``IndexError``."""
+    o = np.asarray(offsets, dtype=np.int64)
+    n = len(columns["x0"])
+    if ((o < -n) | (o >= n)).any():
+        raise IndexError("list index out of range")
+    out = {name: col[o] for name, col in columns.items()}
+    out.update(page_width=100.0, page_height=100.0)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -138,18 +152,11 @@ def memo_spans(i: int) -> List[Span]:
     return [("text", row[0], None, o) for o, row in enumerate(_MEMO_SPEC)]
 
 
-def memo_layout(i: int, offsets: np.ndarray) -> Dict[str, np.ndarray]:
-    rows = [_MEMO_SPEC[int(o)] for o in offsets]
-    return dict(
-        page=np.ones(len(rows), dtype=np.int64),
-        x0=np.asarray([r[1] for r in rows], dtype=np.float64),
-        x1=np.asarray([r[2] for r in rows], dtype=np.float64),
-        y0=np.asarray([r[3] for r in rows], dtype=np.float64),
-        y1=np.asarray([r[4] for r in rows], dtype=np.float64),
-        font_name=np.asarray(["fake_font"] * len(rows), dtype=object),
-        font_size=[10] * len(rows),
-        page_width=100.0, page_height=100.0,
-    )
+_MEMO_COLUMNS = _spec_columns(_MEMO_SPEC)
+
+
+def memo_layout(i, offsets: np.ndarray) -> Dict[str, np.ndarray]:
+    return _spec_layout(_MEMO_COLUMNS, offsets)
 
 
 # ---------------------------------------------------------------------------
@@ -203,18 +210,15 @@ def ordsum_spans(i: int) -> List[Span]:
     return [("text", row[0], None, o) for o, row in enumerate(_ORDSUM_SPEC)]
 
 
-def ordsum_layout(i: int, offsets: np.ndarray) -> Dict[str, np.ndarray]:
-    rows = [_ORDSUM_SPEC[int(o)] for o in offsets]
-    return dict(
-        page=np.ones(len(rows), dtype=np.int64),
-        x0=np.asarray([r[1] for r in rows], dtype=np.float64),
-        x1=np.asarray([r[2] for r in rows], dtype=np.float64),
-        y0=np.asarray([r[3] for r in rows], dtype=np.float64),
-        y1=np.asarray([r[4] for r in rows], dtype=np.float64),
-        font_name=np.asarray([r[5] for r in rows], dtype=object),
-        font_size=[r[6] for r in rows],
-        page_width=100.0, page_height=100.0,
-    )
+_ORDSUM_COLUMNS = _spec_columns(
+    _ORDSUM_SPEC,
+    font_name=[r[5] for r in _ORDSUM_SPEC],
+    font_size=[r[6] for r in _ORDSUM_SPEC],
+)
+
+
+def ordsum_layout(i, offsets: np.ndarray) -> Dict[str, np.ndarray]:
+    return _spec_layout(_ORDSUM_COLUMNS, offsets)
 
 
 # ---------------------------------------------------------------------------
@@ -234,18 +238,11 @@ def gridmerge_spans(i: int) -> List[Span]:
     return [("text", row[0], None, o) for o, row in enumerate(_GRIDMERGE_SPEC)]
 
 
-def gridmerge_layout(i: int, offsets: np.ndarray) -> Dict[str, np.ndarray]:
-    rows = [_GRIDMERGE_SPEC[int(o)] for o in offsets]
-    return dict(
-        page=np.ones(len(rows), dtype=np.int64),
-        x0=np.asarray([r[1] for r in rows], dtype=np.float64),
-        x1=np.asarray([r[2] for r in rows], dtype=np.float64),
-        y0=np.asarray([r[3] for r in rows], dtype=np.float64),
-        y1=np.asarray([r[4] for r in rows], dtype=np.float64),
-        font_name=np.asarray(["fake_font"] * len(rows), dtype=object),
-        font_size=[10] * len(rows),
-        page_width=100.0, page_height=100.0,
-    )
+_GRIDMERGE_COLUMNS = _spec_columns(_GRIDMERGE_SPEC)
+
+
+def gridmerge_layout(i, offsets: np.ndarray) -> Dict[str, np.ndarray]:
+    return _spec_layout(_GRIDMERGE_COLUMNS, offsets)
 
 
 # ---------------------------------------------------------------------------
@@ -269,18 +266,11 @@ def colmerge_spans(i: int) -> List[Span]:
     return [("text", row[0], None, o) for o, row in enumerate(_COLMERGE_SPEC)]
 
 
-def colmerge_layout(i: int, offsets: np.ndarray) -> Dict[str, np.ndarray]:
-    rows = [_COLMERGE_SPEC[int(o)] for o in offsets]
-    return dict(
-        page=np.ones(len(rows), dtype=np.int64),
-        x0=np.asarray([r[1] for r in rows], dtype=np.float64),
-        x1=np.asarray([r[2] for r in rows], dtype=np.float64),
-        y0=np.asarray([r[3] for r in rows], dtype=np.float64),
-        y1=np.asarray([r[4] for r in rows], dtype=np.float64),
-        font_name=np.asarray(["fake_font"] * len(rows), dtype=object),
-        font_size=[10] * len(rows),
-        page_width=100.0, page_height=100.0,
-    )
+_COLMERGE_COLUMNS = _spec_columns(_COLMERGE_SPEC)
+
+
+def colmerge_layout(i, offsets: np.ndarray) -> Dict[str, np.ndarray]:
+    return _spec_layout(_COLMERGE_COLUMNS, offsets)
 
 
 # ---------------------------------------------------------------------------
@@ -423,18 +413,13 @@ def duphdr_spans(i: int) -> List[Span]:
     return [("text", row[0], None, o) for o, row in enumerate(_DUPHDR_SPEC)]
 
 
-def duphdr_layout(i: int, offsets: np.ndarray) -> Dict[str, np.ndarray]:
-    rows = [_DUPHDR_SPEC[int(o)] for o in offsets]
-    return dict(
-        page=np.asarray([r[5] for r in rows], dtype=np.int64),
-        x0=np.asarray([r[1] for r in rows], dtype=np.float64),
-        x1=np.asarray([r[2] for r in rows], dtype=np.float64),
-        y0=np.asarray([r[3] for r in rows], dtype=np.float64),
-        y1=np.asarray([r[4] for r in rows], dtype=np.float64),
-        font_name=np.asarray(["fake_font"] * len(rows), dtype=object),
-        font_size=[10] * len(rows),
-        page_width=100.0, page_height=100.0,
-    )
+_DUPHDR_COLUMNS = _spec_columns(
+    _DUPHDR_SPEC, page=[r[5] for r in _DUPHDR_SPEC]
+)
+
+
+def duphdr_layout(i, offsets: np.ndarray) -> Dict[str, np.ndarray]:
+    return _spec_layout(_DUPHDR_COLUMNS, offsets)
 
 
 # ---------------------------------------------------------------------------

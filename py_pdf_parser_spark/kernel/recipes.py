@@ -17,29 +17,101 @@ Recipes exercise the full operator stack:
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from typing import Callable, List, Optional, Tuple
 
-from .doc import Doc
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from .doc import Doc, ElementBatch
 from .layout import family_of
 from .tables import add_header_to_table, extract_simple_table
 
 OutSpan = Tuple[str, Optional[str], Optional[str]]  # kind, text, media_ref
 
 
-def default_recipe(doc: Doc) -> List[OutSpan]:
-    # Arrays are already in idx order; the non-ignored mask is almost
-    # always all-true at parse time, so take the vectorized fast path.
-    if doc.ignored.any():
-        live = ~doc.ignored
-        kinds = doc.kind[live]
-        texts = doc.text_stripped[live]
-        refs = doc.media_ref[live]
-    else:
-        kinds, texts, refs = doc.kind, doc.text_stripped, doc.media_ref
-    return [
-        (k, None, m) if k == "media" else (k, t, None)
-        for k, t, m in zip(kinds, texts, refs)
-    ]
+def _default_arrow(kind, text, ref) -> Tuple[pa.Array, pa.Array, pa.Array]:
+    """kind, text and media_ref columns (Arrow or numpy) -> the default
+    recipe's output: kind, the stripped text (null for media) and the
+    media_ref (null for non-media)."""
+    kind, text, ref = (
+        col.cast(pa.string()) if isinstance(col, pa.Array)
+        else pa.array(col, type=pa.string())
+        for col in (kind, text, ref)
+    )
+    media = pc.fill_null(pc.equal(kind, "media"), False)
+    null = pa.scalar(None, pa.string())
+    return kind, pc.if_else(media, null, text), pc.if_else(media, ref, null)
+
+
+def default_columns(
+    batches: Sequence[ElementBatch],
+) -> Tuple[pa.Array, pa.Array, pa.Array]:
+    """The default recipe's output as Arrow columns over the rows of
+    ``batches``, one batch after another, each in input order.  One
+    batch's columns are built once, from the Arrow kind and media_ref it
+    came from when it has them; several batches (one per document on the
+    PDF path) are concatenated first, so the columns are built once."""
+    if len(batches) > 1:
+        return _default_arrow(*(
+            np.concatenate([b.columns[name] for b in batches])
+            for name in ("kind", "text_stripped", "media_ref")
+        ))
+    batch = batches[0]
+    if batch.output_columns is None:
+        arrow = batch.arrow or {}
+        batch.output_columns = _default_arrow(
+            arrow.get("kind", batch.columns["kind"]),
+            batch.columns["text_stripped"],
+            arrow.get("media_ref", batch.columns["media_ref"]),
+        )
+    return batch.output_columns
+
+
+class LiveRows(Sequence):
+    """``default_recipe``'s value: a document's live (non-ignored)
+    elements in idx order as ``(kind, text, media_ref)`` rows, held as
+    positions into its batch's ``default_columns``.  The pack gathers
+    every such document of a batch with one ``take`` per column; anything
+    else reads it as the list of tuples."""
+
+    __slots__ = ("batch", "rows", "_tuples")
+
+    def __init__(self, doc: Doc):
+        self.batch = doc._batch
+        self.rows = doc._rows[~doc.ignored] if doc._any_ignored else doc._rows
+        self._tuples = None
+
+    def tuples(self) -> List[OutSpan]:
+        if self._tuples is None:
+            self._tuples = list(zip(*(
+                col.take(self.rows).to_pylist()
+                for col in default_columns([self.batch])
+            )))
+        return self._tuples
+
+    def __len__(self) -> int:
+        return len(self.rows)
+
+    def __getitem__(self, key):
+        return self.tuples()[key]
+
+    def __eq__(self, other) -> bool:
+        if isinstance(other, LiveRows):
+            other = other.tuples()
+        return self.tuples() == other if isinstance(other, list) else NotImplemented
+
+    __hash__ = None
+
+    def __repr__(self) -> str:
+        return repr(self.tuples())
+
+
+def default_recipe(doc: Doc) -> LiveRows:
+    """Ordered re-emission of all non-ignored elements (text stripped,
+    media passed through)."""
+    return LiveRows(doc)
 
 
 def memo_recipe(doc: Doc) -> List[OutSpan]:

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from typing import Any, Dict, List, Optional
 
+import numpy as np
+
 from ..errors import (
     InvalidTableError,
     InvalidTableHeaderError,
@@ -35,53 +37,45 @@ def extract_simple_table(
     """Reference-row/column scan (tables.py:18-138)."""
     if reference_element is None:
         reference_element = elements[0]
-    reference_row = elements.horizontally_in_line_with(
-        reference_element, inclusive=True, tolerance=tolerance
+    # The reference element's row and column (inclusive), then cell (r, c)
+    # = reference row r ∩ reference column c, with a single-element check
+    # (tables.py:100-119): two anchor × element masks, then per cell the
+    # element count and the sum of element indexes (the index itself
+    # wherever the count is 1).
+    idx = elements.idx
+    reference_row = idx[elements._probe(
+        "horizontal", (reference_element,), tolerance=tolerance
+    )[0]]
+    reference_column = idx[elements._probe(
+        "vertical", (reference_element,), tolerance=tolerance, all_pages=True
+    )[0]]
+    in_col = elements._probe(
+        "vertical", reference_row, tolerance=tolerance, all_pages=True
     )
-    reference_column = elements.vertically_in_line_with(
-        reference_element, inclusive=True, tolerance=tolerance, all_pages=True
-    )
-
-    reference_columns = [
-        elements.vertically_in_line_with(
-            e, inclusive=True, tolerance=tolerance, all_pages=True
+    in_row = elements._probe(
+        "horizontal", reference_column, tolerance=tolerance
+    ).astype(np.float64)
+    counts = in_row @ in_col.T
+    sums = (in_row * idx) @ in_col.T
+    bad = counts > 1 if allow_gaps else counts != 1
+    if bad.any():
+        r, c = divmod(int(bad.argmax()), bad.shape[1])
+        if counts[r, c]:
+            raise TableExtractionError(
+                "Multiple elements appear to be in the place of one cell in the "
+                "table. Please try extract_table() instead."
+            )
+        raise TableExtractionError(
+            "Element not found, there appears to be a gap in the table. "
+            "If this is expected, pass allow_gaps=True."
         )
-        for e in reference_row
-    ]
-    reference_rows = [
-        elements.horizontally_in_line_with(e, inclusive=True, tolerance=tolerance)
-        for e in reference_column
+    single = counts == 1
+    table: List[List] = [
+        [int(v) if one else None for v, one in zip(row, ones)]
+        for row, ones in zip(sums.tolist(), single.tolist())
     ]
 
-    # Cell assembly = row ∩ col with a single-element check (tables.py:
-    # 100-119).  Tables are tiny (tens of elements), where numpy set-op
-    # call overhead dominates — plain Python int-sets are ~10x faster
-    # here and semantically identical (idx sets are exact).
-    col_sets = [set(c.idx.tolist()) for c in reference_columns]
-    table: List[List] = []
-    for current_row in reference_rows:
-        row_set = set(current_row.idx.tolist())
-        row: List = []
-        for col_set in col_sets:
-            cell = row_set & col_set
-            if len(cell) == 1:
-                row.append(next(iter(cell)))
-            elif not cell:
-                if allow_gaps:
-                    row.append(None)
-                else:
-                    raise TableExtractionError(
-                        "Element not found, there appears to be a gap in the table. "
-                        "If this is expected, pass allow_gaps=True."
-                    )
-            else:
-                raise TableExtractionError(
-                    "Multiple elements appear to be in the place of one cell in the "
-                    "table. Please try extract_table() instead."
-                )
-        table.append(row)
-
-    table_size = sum(len([e for e in row if e is not None]) for row in table)
+    table_size = int(single.sum())
     if table_size != len(elements):
         raise TableExtractionError(
             f"Number of elements in table ({table_size}) does not match number of "
@@ -207,10 +201,8 @@ def get_text_from_table(
 ) -> List[List[str]]:
     """tables.py:309-330 — None cells become ''."""
     _validate_table_shape(table)
-    return [
-        [doc.text_of(i, strip_text) if i is not None else "" for i in row]
-        for row in table
-    ]
+    texts = (doc.text_stripped if strip_text else doc.text_raw).tolist()
+    return [[texts[i] if i is not None else "" for i in row] for row in table]
 
 
 def _validate_table_shape(table: List[List[Any]]) -> None:

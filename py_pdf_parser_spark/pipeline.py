@@ -10,8 +10,12 @@ Design (SURVEY.md §3.1, §4):
   the PDF-bytes path, ``queries._per_doc``) is one ``mapInArrow`` in
   ``_map_docs``, whose per-batch body is the plain function perfbench's
   Spark-free kernel probe times.
-* **Vectorized kernels.** Arrow batches in, numpy per-document kernels
-  inside (``kernel/``), Arrow batches out (schemas from ``schema.py``).
+* **Vectorized kernels.** Arrow batches in, Arrow batches out (schemas
+  from ``schema.py``).  A batch's layout, element order and stripped text
+  are computed once over its flat span columns (``kernel.parse_batch``)
+  and each ``Doc`` is slices of them; default-recipe output is gathered
+  batch-wide with one Arrow ``take`` per column; the layout operators
+  inside the other recipes are a fixed handful of numpy calls each.
 * **Cheap tasks.** Unpickling a kernel imports this package, which stops
   Spark's per-task re-read of its own archives (``_worker.py``): a reused
   Python worker pays that only on its first task.
@@ -48,8 +52,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from .kernel.parse import doc_from_arrays
-from .kernel.recipes import recipe_for
+from .kernel.parse import doc_from_arrays, parse_batch
+from .kernel.recipes import LiveRows, default_columns, recipe_for
 from .schema import (
     ELEMENTS_SCHEMA,
     EXTRACTED_BUCKETED_SCHEMA,
@@ -93,53 +97,65 @@ def _rows_batch(rows: List[tuple], schema: StructType) -> pa.RecordBatch:
 
 # ---------------------------------------------------------------------------
 # Arrow batch plumbing.  The hot path is mapInArrow: span structs are
-# flattened to columnar arrays ONCE per batch (C-level); per-document
-# kernels get numpy slices; output span sequences are reassembled into a
-# ListArray(StructArray) directly from flat arrays — zero per-span Python
-# objects in either direction.
+# flattened to columnar arrays ONCE per batch (C-level); the batch's
+# layout, element order and stripped text are computed once over those
+# flat columns (``parse_batch``), and each Doc is slices of them; output
+# span sequences are reassembled into a ListArray(StructArray) from flat
+# arrays, default-recipe documents by one Arrow ``take`` per column.
 # ---------------------------------------------------------------------------
 
 
 def _flatten_span_batch(batch: pa.RecordBatch):
-    """-> (doc_ids, list_offsets, kind/text/ref/off flat arrays)."""
+    """-> (doc_ids, list_offsets, kind/text/ref/off flat arrays, the flat
+    span StructArray), list offsets starting at 0."""
     doc_ids = batch.column(0).to_pylist()
     spans = batch.column(1)
     offs = spans.offsets.to_numpy()
     vals = spans.values
+    if len(offs) and (offs[0] or offs[-1] != len(vals)):
+        # A sliced batch: copy its spans out, since pyarrow's if_else
+        # mishandles sliced string inputs (recipes.default_columns).
+        vals = pa.concat_arrays([vals.slice(offs[0], offs[-1] - offs[0])])
+        offs = offs - offs[0]
     kinds = vals.field("kind").to_numpy(zero_copy_only=False)
     texts = vals.field("text").to_numpy(zero_copy_only=False)
     refs = vals.field("media_ref").to_numpy(zero_copy_only=False)
     offsets = vals.field("offset").to_numpy(zero_copy_only=False)
-    return doc_ids, offs, kinds, texts, refs, offsets
+    return doc_ids, offs, kinds, texts, refs, offsets, vals
 
 
-def _null_text_docs(spans: pa.ListArray, offs: np.ndarray) -> set:
-    """Positions of the documents that hold a ``text`` span whose text
-    is null (media spans carry a null text by design): one Arrow mask
-    over the batch's spans, so a clean batch costs nothing per document."""
-    vals = spans.values
-    hits = pc.indices_nonzero(pc.and_(
-        pc.equal(vals.field("kind"), "text"), pc.is_null(vals.field("text"))
-    )).to_numpy()
-    return set((np.searchsorted(offs, hits, side="right") - 1).tolist())
+def _null_span_docs(vals: pa.StructArray, offs: np.ndarray) -> dict:
+    """Document position -> error, for the documents holding a span with
+    a null kind, or a ``text`` span whose text is null (media spans carry
+    a null text by design): Arrow masks over the batch's spans, so a clean
+    batch costs nothing per document."""
+    kind = vals.field("kind")
+    bad = {}
+    for mask, message in (
+        (pc.is_null(kind), "null span kind"),
+        (pc.and_(pc.equal(kind, "text"), pc.is_null(vals.field("text"))),
+         "null text in text span"),
+    ):
+        hits = pc.indices_nonzero(mask).to_numpy()
+        for pos in np.unique(np.searchsorted(offs, hits, side="right") - 1).tolist():
+            bad.setdefault(pos, ValueError(message))
+    return bad
 
 
 def _iter_docs(batch: pa.RecordBatch, config: dict = None):
     """Yield (doc_id, Doc-or-exception) per document in the batch.
 
-    A null span text in a ``text`` span is an error, as a null offset is
-    (``doc_from_arrays``)."""
-    doc_ids, offs, kinds, texts, refs, offsets = _flatten_span_batch(batch)
-    bad = _null_text_docs(batch.column(1), offs)
+    A null span kind, a null span text in a ``text`` span and a null
+    offset are errors of their document (``parse_batch``)."""
+    doc_ids, offs, kinds, texts, refs, offsets, vals = _flatten_span_batch(batch)
+    parsed = parse_batch(
+        doc_ids, offs, kinds, texts, refs, offsets, config=config,
+        errors=_null_span_docs(vals, offs),
+        arrow={"kind": vals.field("kind"), "media_ref": vals.field("media_ref")},
+    )
     for pos, doc_id in enumerate(doc_ids):
-        lo, hi = offs[pos], offs[pos + 1]
         try:
-            if pos in bad:
-                raise ValueError("null text in text span")
-            doc = doc_from_arrays(
-                doc_id, kinds[lo:hi], texts[lo:hi], refs[lo:hi],
-                offsets[lo:hi], config=config,
-            )
+            doc = doc_from_arrays(doc_id, parsed, pos)
         except Exception as err:  # any bad document, see module docstring
             doc = err
         yield doc_id, doc
@@ -249,52 +265,59 @@ def pack_extracted_batch(
     Shared by the spans path (extract_arrow_batch) and the byte-stream
     path (sources.pdf_bytes.extract_spans_from_pdf): one recipe run per
     document, per-doc error isolation, output order = position in the
-    recipe's emitted sequence."""
+    recipe's emitted sequence.  A default-recipe document's output
+    (``LiveRows``) is row positions into its batch's ``default_columns``;
+    the rows other recipes emit go after those columns, and one ``take``
+    per column assembles the batch's output spans in document order."""
     passthrough = passthrough or []
     doc_ids: List[str] = []
     statuses: List[str] = []
     errors: List[Optional[str]] = []
+    counts = np.zeros(num_rows, dtype=np.int64)
+    # per output document: (source ElementBatch, rows) or (None, (lo, hi))
+    # into the emitted rows below.
+    parts: list = []
     out_kind: List[str] = []
     out_text: List[Optional[str]] = []
     out_ref: List[Optional[str]] = []
-    list_offs = np.zeros(num_rows + 1, dtype=np.int32)
-    counts = np.zeros(num_rows, dtype=np.int64)
 
-    row = 0
-    for doc_id, doc in pairs:
+    for row, (doc_id, doc) in enumerate(pairs):
         doc_ids.append(doc_id)
         if isinstance(doc, Exception):  # the document failed to build
             statuses.append("error")
             errors.append(_error_text(doc))
-        else:
-            try:
-                out = recipe_for(doc_id)(doc)
-                if out:
-                    ks, ts, ms = zip(*out)
-                    out_kind.extend(ks)
-                    out_text.extend(ts)
-                    out_ref.extend(ms)
-                    counts[row] = len(out)
-                statuses.append("ok")
-                errors.append(None)
-            except Exception as err:
-                statuses.append("error")
-                errors.append(_error_text(err))
-        list_offs[row + 1] = list_offs[row] + counts[row]
-        row += 1
+            continue
+        try:
+            out = recipe_for(doc_id)(doc)
+            if isinstance(out, LiveRows):
+                parts.append((out.batch, out.rows))
+            elif out:
+                ks, ts, ms = zip(*out)
+                parts.append((None, (len(out_kind), len(out_kind) + len(ks))))
+                out_kind.extend(ks)
+                out_text.extend(ts)
+                out_ref.extend(ms)
+            counts[row] = len(out)
+            statuses.append("ok")
+            errors.append(None)
+        except Exception as err:
+            statuses.append("error")
+            errors.append(_error_text(err))
 
+    (kinds, texts, refs), index = _gather_plan(parts)
+    kinds.append(pa.array(out_kind, type=pa.string()))
+    texts.append(pa.array(out_text, type=pa.string()))
+    refs.append(pa.array(out_ref, type=pa.string()))
+    list_offs = np.zeros(num_rows + 1, dtype=np.int32)
+    np.cumsum(counts, out=list_offs[1:])
     total = int(list_offs[-1])
     # order = position within each document's output sequence.
     order = np.arange(total, dtype=np.int32) - np.repeat(
         list_offs[:-1].astype(np.int64), counts
     ).astype(np.int32)
     struct = pa.StructArray.from_arrays(
-        [
-            pa.array(out_kind, type=pa.string()),
-            pa.array(out_text, type=pa.string()),
-            pa.array(out_ref, type=pa.string()),
-            pa.array(order),
-        ],
+        [pa.concat_arrays(cols).take(index) for cols in (kinds, texts, refs)]
+        + [pa.array(order)],
         fields=list(_EXTRACTED_ARROW.field("spans").type.value_type),
     )
     spans_arr = pa.ListArray.from_arrays(pa.array(list_offs), struct)
@@ -310,6 +333,30 @@ def pack_extracted_batch(
         arrays.append(batch.column(batch.schema.get_field_index(col)))
         names.append(col)
     return pa.RecordBatch.from_arrays(arrays, names=names)
+
+
+def _gather_plan(parts: list):
+    """-> the kind, text and media_ref source columns (every batch the
+    ``parts`` gather from, then the rows emitted by other recipes) and
+    the gather index over them, in output order."""
+    bases: dict = {}
+    sources: list = []
+    size = 0
+    for source, _ in parts:
+        if source is not None and id(source) not in bases:
+            bases[id(source)] = size
+            sources.append(source)
+            size += source.size
+    pieces = []
+    for source, rows in parts:
+        if source is None:
+            pieces.append(np.arange(size + rows[0], size + rows[1]))
+        else:
+            base = bases[id(source)]
+            pieces.append(rows + base if base else rows)
+    index = np.concatenate(pieces) if pieces else np.empty(0, dtype=np.int64)
+    columns = [[col] for col in default_columns(sources)] if sources else [[], [], []]
+    return columns, index
 
 
 def extract_spans(

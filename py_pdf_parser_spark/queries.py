@@ -2755,13 +2755,13 @@ def emb_semantic_dedup(spark, sf_dir):
 # orders below the step).
 
 
-def _pq_train_duck(train: str = "true") -> str:
+def _pq_train_duck(train: str = "true", n_codes: int = 8) -> str:
     """pq_train + pq_assign over ``e`` (vec_id, emb): the subvector CTE
     sv (M=4), the training rows st (``train`` on vec_id), init codebook
-    c0 = the subvectors of the first 8 training vec_ids, 2 Lloyd's
-    iterations over st keyed by sub_id, then the final assignment a3
-    (vec_id, sub_id, code, d) of all of sv against the trained codebook
-    c2 (K=8)."""
+    c0 = the subvectors of the first ``n_codes`` training vec_ids, 2
+    Lloyd's iterations over st keyed by sub_id, then the final
+    assignment a3 (vec_id, sub_id, code, d) of all of sv against the
+    trained codebook c2 (K=``n_codes``)."""
     l2 = "round(list_distance(x.v, c.c), 6)"
     return (
         f"""
@@ -2774,7 +2774,7 @@ def _pq_train_duck(train: str = "true") -> str:
   SELECT * FROM sv WHERE {train}
 ), c0 AS (
   SELECT sub_id, vec_id AS code, v AS c FROM st
-  WHERE vec_id IN (SELECT DISTINCT vec_id FROM st ORDER BY vec_id LIMIT 8)
+  WHERE vec_id IN (SELECT DISTINCT vec_id FROM st ORDER BY vec_id LIMIT {n_codes})
 )"""
         + _lloyd_iter_duck(1, "st", "v", l2, "code", ("sub_id",))
         + _lloyd_iter_duck(2, "st", "v", l2, "code", ("sub_id",))
@@ -2873,12 +2873,21 @@ def _ivf_residuals_table(spark, sf_dir):
         similarity.ivf_residuals(_emb_table(spark, sf_dir))))
 
 
+# emb_ivfpq_topk's codebook size.  With the default 8 codewords per
+# subspace, the ~30 vectors of a cell share few code tuples: on sf0.01
+# half of the 10 queries had one distance across their top 5, so the
+# ranking was vec_id tie-breaking.  32 gives every query 4-5 distinct
+# distances there.
+_IVFPQ_CODES = 32
+
+
 def _ivfpq_oracle() -> str:
     """The IVFADC composition in SQL: stand-in cell assignment ->
     exact residual subtraction (the new ``e``) -> PQ training over the
-    residuals -> single-probe ADC within the query's own cell.  Training
-    and queries start AFTER the stand-in centroids: vec_id < 16 ARE the
-    centroids, so their residuals are identically zero."""
+    residuals (``_IVFPQ_CODES`` codewords) -> single-probe ADC within the
+    query's own cell.  Training and queries start AFTER the stand-in
+    centroids: vec_id < 16 ARE the centroids, so their residuals are
+    identically zero."""
     return (
         _emb_duck("e0") + _standin_duck("cells", "e0")
         + _assign_duck("cells", "e0")
@@ -2889,7 +2898,7 @@ def _ivfpq_oracle() -> str:
                         i -> a.emb[i] - c.c[i]) AS emb
   FROM assigned a JOIN cells c USING (cell_id)
 )"""
-        + _pq_train_duck("vec_id >= 16")
+        + _pq_train_duck("vec_id >= 16", n_codes=_IVFPQ_CODES)
         + _adc_topk_duck(
             "vec_id >= 16 AND vec_id < 26",
             probe="""
@@ -2908,7 +2917,9 @@ def emb_ivfpq_topk(spark, sf_dir):
     serving shape (index = cell_id + M bytes/vector, codebook + LUTs
     ride broadcasts, a probe touches ~1/n_cells of the codes)."""
     res = _ivf_residuals_table(spark, sf_dir)
-    return similarity.ivfpq_topk(_emb_table(spark, sf_dir), residuals=res)
+    return similarity.ivfpq_topk(
+        _emb_table(spark, sf_dir), residuals=res, n_codes=_IVFPQ_CODES
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4149,9 +4160,10 @@ def _latest_green_rounds(root: Path) -> Dict[str, int]:
 # (and the ADC LUT sums squared differences directly); emb_dup_pairs now
 # runs over the planted near-dup fixture instead of the embeddings table.
 # The PQ codebook seeds from the first 8 vec_ids of its training input,
-# and emb_ivfpq_topk trains on vec_id >= 16 (non-zero residuals).  The
-# fixed-point td_* oracles are assembled from the text-statistics
-# fragments (_unigram_lm_duck, _bits_per_token_duck, _inverse_cdf_duck,
+# and emb_ivfpq_topk trains on vec_id >= 16 (non-zero residuals) with 32
+# codewords per subspace.  The fixed-point td_* oracles are assembled
+# from the text-statistics fragments (_unigram_lm_duck,
+# _bits_per_token_duck, _inverse_cdf_duck,
 # _idf_duck, _topk_tail_duck, _substring_dedup_duck, _micro_log2_duck),
 # and td_bm25_topk's engine side is bm25_score over bm25_model.
 _RETOUCHED: set = {

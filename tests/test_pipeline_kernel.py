@@ -1,5 +1,6 @@
 """Arrow-batch kernel plumbing: error containment, empty batches."""
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
@@ -10,8 +11,10 @@ from py_pdf_parser_spark.kernel.layout import (
     memo_spans,
     ora_spans,
 )
+from py_pdf_parser_spark.kernel.parse import doc_from_spans
 from py_pdf_parser_spark.pipeline import (
     extract_arrow_batch,
+    pack_elements_batch,
     parse_elements_arrow_batch,
 )
 from py_pdf_parser_spark.sources.pdf_writer import render_pdf
@@ -28,13 +31,13 @@ def _batch(rows):
         {
             "doc_id": [r[0] for r in rows],
             "spans": [
-                [
+                None if r[1] is None else [
                     {"kind": k, "text": t, "media_ref": m, "offset": o}
                     for k, t, m, o in r[1]
                 ]
                 for r in rows
             ],
-            "n_spans": [len(r[1]) for r in rows],
+            "n_spans": [len(r[1] or ()) for r in rows],
         },
         schema=SPANS_ARROW_SCHEMA,
     ).to_batches()[0]
@@ -128,10 +131,11 @@ def test_any_exception_is_contained_per_document(monkeypatch):
 
 
 def test_null_span_offset_is_an_error_row():
-    """A span with a null offset cannot be ordered, and a text span with
-    a null text has nothing to extract: each document becomes an error
-    row instead of extracting garbage, and the batch's other documents
-    come out byte-identical to a clean batch."""
+    """A span with a null offset cannot be ordered, a span with a null
+    kind cannot be classified, and a text span with a null text has
+    nothing to extract: each document becomes an error row instead of
+    extracting garbage, and the batch's other documents come out
+    byte-identical to a clean batch."""
     clean = [(f"ora-{i:06d}", ora_spans(i)) for i in range(3)]
     clean += [("memo-000000", memo_spans(0)), ("media-000002", media_spans(2))]
     bad = {
@@ -139,6 +143,7 @@ def test_null_span_offset_is_an_error_row():
                        "ValueError: null span offset"),
         "ora-000098": ([("media", None, "m0", 0), ("text", None, None, 1)],
                        "ValueError: null text in text span"),
+        "ora-000097": ([(None, "tok7", None, 2)], "ValueError: null span kind"),
     }
     poisoned = clean[:2] + [(d, spans) for d, (spans, _) in bad.items()]
     poisoned += clean[2:]
@@ -211,3 +216,103 @@ def test_kernel_probe_patch_points_are_on_the_hot_path(tmp_path):
     pdf, _ = kernel_probe(str(tmp_path / "pdf"), pdf=True)
     assert pdf["sources.pdf_parse_s"] > 0
     assert pdf["kernel.recipe_s"] > 0
+
+
+def _model_doc(doc_id, spans, config=None):
+    """The per-document model of the batch parse: the pipeline's null
+    span rules, then ``doc_from_spans``."""
+    spans = spans or []
+    if any(k is None for k, _, _, _ in spans):
+        raise ValueError("null span kind")
+    if any(k == "text" and t is None for k, t, _, _ in spans):
+        raise ValueError("null text in text span")
+    if any(o is None for _, _, _, o in spans):
+        raise ValueError("null span offset")
+    return doc_from_spans(doc_id, spans, config)
+
+
+def _differential_rows():
+    rows = []
+    for family, build in sorted(SPAN_BUILDERS.items()):
+        for n in (0, 1, 7):
+            spans = build(n)
+            rows.append((f"{family}-{n:06d}", spans[:40]))
+    rows += [
+        ("ora-000050", []),
+        ("ora-000051", None),
+        ("ora-000052", [("text", "a", None, 0), ("text", "x", None, None)]),
+        ("ora-000053", [("media", None, "m0", 0), ("text", None, None, 1)]),
+        ("ora-000054", [("text", "a", None, 0), (None, "tok7", None, 2)]),
+        ("memo-000055", [("text", "TO:", None, 0), ("text", "x", None, 99)]),
+        ("ora-000056", [("text", "  padded\t", None, 0),
+                        ("text", "\u2003em\u2003", None, 1),
+                        ("media", None, "m://56/2", 2)]),
+        ("memo-000057", memo_spans(57)),  # its recipe raises, below
+        ("zzz-000001", [("text", "a", None, 0)]),
+    ]
+    return rows
+
+
+def test_batch_kernel_equals_per_document_model(monkeypatch):
+    """One Arrow batch of every family plus empty, null and malformed
+    documents: ``extract_arrow_batch`` equals ``recipe_for(d)`` applied
+    to each document's own ``doc_from_spans``, and
+    ``parse_elements_arrow_batch`` equals the per-document parse, under
+    a ``PageOrdering``, a key-function ordering, a regex font mapping and
+    per-character fonts."""
+    from py_pdf_parser_spark import pipeline
+
+    def raises(doc):
+        raise RuntimeError("recipe bug")
+
+    real_recipe_for = pipeline.recipe_for
+    monkeypatch.setattr(
+        pipeline, "recipe_for",
+        lambda doc_id: raises if doc_id == "memo-000057"
+        else real_recipe_for(doc_id),
+    )
+    rows = _differential_rows()
+    batch = _batch(rows)
+
+    got = extract_arrow_batch(batch, []).to_pylist()
+    want = []
+    for doc_id, spans in rows:
+        try:
+            out = list(pipeline.recipe_for(doc_id)(_model_doc(doc_id, spans)))
+            row = ("ok", None, out)
+        except Exception as err:
+            row = ("error", f"{type(err).__name__}: {err}", [])
+        want.append({
+            "doc_id": doc_id,
+            "spans": [
+                {"kind": k, "text": t, "media_ref": m, "order": o}
+                for o, (k, t, m) in enumerate(row[2])
+            ],
+            "n_spans": len(row[2]),
+            "status": row[0],
+            "error": row[1],
+        })
+    assert got == want
+    statuses = {r["doc_id"]: r["error"] for r in got}
+    assert statuses["ora-000054"] == "ValueError: null span kind"
+    assert statuses["memo-000057"] == "RuntimeError: recipe bug"
+    assert statuses["memo-000055"] == "IndexError: list index out of range"
+
+    for config in (
+        None,
+        {"element_ordering": PageOrdering(lambda views: views[::-1])},
+        {"element_ordering": lambda x0, y0: (np.floor(x0 / 20), -y0)},
+        {"font_mapping": {"^f0": "heading", "^f[12],(9|10)": "big"},
+         "font_mapping_is_regex": True},
+        {"char_fonts_from_text": True},
+    ):
+        got = pa.Table.from_batches([parse_elements_arrow_batch(batch, config)])
+        per_doc = []
+        for doc_id, spans in rows:
+            try:
+                doc = _model_doc(doc_id, spans, config)
+            except Exception as err:
+                doc = err
+            per_doc.append(pack_elements_batch([(doc_id, doc)]))
+        want = pa.Table.from_batches(per_doc, schema=got.schema)
+        assert got.equals(want.combine_chunks()), config

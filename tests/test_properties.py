@@ -281,3 +281,198 @@ class TestChunkCapProperty:
             assert all(len(c) <= cap for c in chunks.values())
             if len(docs) <= cap:
                 assert len(chunks) == 1  # under the cap: untouched
+
+
+# ---------------------------------------------------------------------------
+# Layout operators against a naive per-element definition: every
+# directional op, inclusive or not, any tolerance sign, multi-page
+# documents with all_pages, ignored elements and inverted probe boxes
+# (filtering.py:366-696, components.py:286-304), and extract_simple_table
+# as reference row ∩ reference column (tables.py:18-138).
+# ---------------------------------------------------------------------------
+
+from py_pdf_parser_spark.errors import (  # noqa: E402
+    InvalidCoordinatesError,
+    TableExtractionError,
+)
+from py_pdf_parser_spark.kernel.tables import extract_simple_table  # noqa: E402
+
+_OPS = (
+    "to_the_right_of", "to_the_left_of", "horizontally_in_line_with",
+    "below", "above", "vertically_in_line_with",
+)
+_PAGED = ("below", "above", "vertically_in_line_with")
+
+# (page, x0, y0, w, h) on integral coordinates, so touching edges occur;
+# the small page sizes put some elements past the page edge.
+paged_box = st.tuples(
+    st.integers(1, 3), st.integers(0, 30), st.integers(0, 30),
+    st.integers(0, 10), st.integers(0, 10),
+)
+tolerances = st.sampled_from([0.0, 0.5, 1.0, 2.5, 7.0, -1.0, -3.5])
+
+
+def _paged_doc(boxes, widths, heights):
+    x0 = np.asarray([b[1] for b in boxes], dtype=np.float64)
+    y0 = np.asarray([b[2] for b in boxes], dtype=np.float64)
+    return Doc(
+        "prop-000001",
+        page=[b[0] for b in boxes],
+        x0=x0, x1=x0 + [b[3] for b in boxes],
+        y0=y0, y1=y0 + [b[4] for b in boxes],
+        text=[f"t{i}" for i in range(len(boxes))],
+        page_width=dict(zip((1, 2, 3), widths)),
+        page_height=dict(zip((1, 2, 3), heights)),
+    )
+
+
+def _naive(doc, live, op, a, inclusive=False, tolerance=0.0, all_pages=False):
+    """The reference's definition, one element at a time: the probe box
+    on the anchor's page, full-height boxes on the other pages, an
+    inverted box raising, the anchor dropped unless inclusive."""
+    p = int(doc.page[a])
+    x0, x1, y0, y1 = doc.x0[a], doc.x1[a], doc.y0[a], doc.y1[a]
+    if op in ("to_the_right_of", "to_the_left_of", "horizontally_in_line_with"):
+        t = min((y1 - y0) / 2, tolerance)
+        by = (y0 + t, y1 - t)
+        bx = {
+            "to_the_right_of": (x1, doc.page_width(p)),
+            "to_the_left_of": (0, x0),
+            "horizontally_in_line_with": (0, doc.page_width(p)),
+        }[op]
+    else:
+        t = min((x1 - x0) / 2, tolerance)
+        bx = (x0 + t, x1 - t)
+        by = {
+            "below": (0, y0),
+            "above": (y1, doc.page_height(p)),
+            "vertically_in_line_with": (0, doc.page_height(p)),
+        }[op]
+    if bx[1] < bx[0] or by[1] < by[0]:
+        return InvalidCoordinatesError
+
+    def hit(i, q, box_y):
+        return (
+            int(doc.page[i]) == q
+            and bx[0] <= doc.x1[i] and bx[1] >= doc.x0[i]
+            and box_y[0] <= doc.y1[i] and box_y[1] >= doc.y0[i]
+        )
+
+    out = {i for i in live if hit(i, p, by)}
+    if all_pages and op in _PAGED:
+        if op == "below":
+            others = [q for q in doc.page_numbers if q > p]
+        elif op == "above":
+            others = [q for q in doc.page_numbers if q < p]
+        elif live:
+            first, last = int(doc.page[min(live)]), int(doc.page[max(live)])
+            others = [
+                q for q in range(first, last + 1)
+                if q != p and q in doc.page_numbers
+            ]
+        else:
+            others = []
+        for q in others:
+            out |= {i for i in live if hit(i, q, (0, doc.page_height(q)))}
+    if not inclusive:
+        out.discard(a)
+    return out
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(paged_box, min_size=1, max_size=14),
+    st.lists(st.sampled_from([25.0, 200.0]), min_size=3, max_size=3),
+    st.lists(st.sampled_from([25.0, 200.0]), min_size=3, max_size=3),
+    st.data(),
+)
+def test_every_directional_op_matches_naive(boxes, widths, heights, data):
+    doc = _paged_doc(boxes, widths, heights)
+    ignored = data.draw(st.sets(st.integers(0, doc.n - 1), max_size=doc.n // 2))
+    for i in ignored:
+        doc.ignore(i)
+    live = set(range(doc.n)) - ignored
+    op = data.draw(st.sampled_from(_OPS))
+    anchor = data.draw(st.integers(0, doc.n - 1))
+    kwargs = {
+        "inclusive": data.draw(st.booleans()),
+        "tolerance": data.draw(tolerances),
+    }
+    if op in _PAGED:
+        kwargs["all_pages"] = data.draw(st.booleans())
+    want = _naive(doc, live, op, anchor, **kwargs)
+    if want is InvalidCoordinatesError:
+        with pytest.raises(InvalidCoordinatesError):
+            getattr(doc.elements, op)(anchor, **kwargs)
+    else:
+        assert set(getattr(doc.elements, op)(anchor, **kwargs)) == want
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.integers(1, 4), st.integers(1, 4),
+    st.lists(st.tuples(st.integers(-2, 2), st.integers(-2, 2))),
+    st.sets(st.integers(0, 15)),
+    st.lists(st.tuples(st.integers(0, 45), st.integers(0, 45)), max_size=2),
+    st.booleans(),
+    tolerances,
+    st.sets(st.integers(0, 17), max_size=2),
+)
+def test_extract_simple_table_is_row_and_column_intersection(
+    n_rows, n_cols, jitter, dropped, extra, allow_gaps, tolerance, ignored
+):
+    """A grid of 8x4 cells 12 apart, each cell nudged by up to 2 and some
+    dropped, plus stray elements: the table is, per reference row and
+    reference column of the first element, their single common element
+    — or the reference's error.  Elements ignored after the element list
+    was made are in no row or column, but still in its length
+    (filtering.py:95)."""
+    boxes = []
+    for r in range(n_rows):
+        for c in range(n_cols):
+            if r * n_cols + c in dropped:
+                continue
+            dx, dy = jitter[len(boxes) % len(jitter)] if jitter else (0, 0)
+            boxes.append((1, c * 12 + dx, 60 - r * 12 + dy, 8, 4))
+    boxes += [(1, x, y, 8, 4) for x, y in extra]
+    if not boxes:
+        return
+    doc = _paged_doc(boxes, [100.0] * 3, [100.0] * 3)
+    elements = doc.elements
+    for i in ignored & set(range(doc.n)):
+        doc.ignore(i)
+    live = set(range(doc.n)) - ignored
+    ref = 0
+
+    def naive_table():
+        row = sorted(_naive(doc, live, "horizontally_in_line_with", ref,
+                            True, tolerance))
+        col = sorted(_naive(doc, live, "vertically_in_line_with", ref,
+                            True, tolerance, True))
+        cols = [_naive(doc, live, "vertically_in_line_with", e, True,
+                       tolerance, True) for e in row]
+        table = []
+        for e in col:
+            in_row = _naive(doc, live, "horizontally_in_line_with", e, True,
+                            tolerance)
+            cells = []
+            for in_col in cols:
+                cell = in_row & in_col
+                if len(cell) > 1 or (not cell and not allow_gaps):
+                    return TableExtractionError
+                cells.append(next(iter(cell)) if cell else None)
+            table.append(cells)
+        if sum(c is not None for r in table for c in r) != len(elements):
+            return TableExtractionError
+        return table
+
+    want = naive_table()
+    if want is TableExtractionError:
+        with pytest.raises(TableExtractionError):
+            extract_simple_table(
+                elements, allow_gaps=allow_gaps, tolerance=tolerance
+            )
+    else:
+        assert extract_simple_table(
+            elements, allow_gaps=allow_gaps, tolerance=tolerance
+        ) == want

@@ -1977,6 +1977,18 @@ class TestIvfPq:
         for ranks in per_q.values():
             assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
+    def test_registry_query_ranks_by_distance(self, spark):
+        """The registry's emb_ivfpq_topk on sf0.01: every query's top 5
+        holds at least two distinct ADC distances, so the rank order
+        checks the distance ranking, not only the vec_id tie-break."""
+        from py_pdf_parser_spark.queries import emb_ivfpq_topk
+
+        per_q = {}
+        for r in emb_ivfpq_topk(spark, "/root/testdata/sf0.01").collect():
+            per_q.setdefault(r.q_id, set()).add(r.adist)
+        assert len(per_q) == 10
+        assert all(len(dists) >= 2 for dists in per_q.values()), per_q
+
     def test_codebook_does_not_collapse_on_zero_residuals(self, spark):
         """The first n_cells vectors are the coarse centroids, so their
         residuals are zero.  Training seeds from the first n_codes
