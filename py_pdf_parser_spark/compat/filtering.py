@@ -12,6 +12,7 @@ that per-element call IS the published extension point (tests patch it).
 import re
 from typing import Callable, FrozenSet, Iterable, Iterator, Optional, Set, Union
 
+from ..kernel.doc import probe
 from .common import BoundingBox
 from .exceptions import (
     ElementOutOfRangeError,
@@ -157,40 +158,43 @@ class ElementList(Iterable):
         }
         return ElementList(self.document, self.indexes & hits)
 
-    def to_the_right_of(
-        self, element, inclusive: bool = False, tolerance: float = 0.0
+    def _directional(
+        self, how, element, inclusive, tolerance, all_pages=False
     ) -> "ElementList":
-        page = self.document.get_page(element.page_number)
-        tol = min(element.bounding_box.height / 2, tolerance)
-        probe = BoundingBox(
-            element.bounding_box.x1,
-            page.width,
-            element.bounding_box.y0 + tol,
-            element.bounding_box.y1 - tol,
+        """``kernel.doc.probe``'s box on the element's page, plus a
+        full-height box on each page of its range, each tested per
+        element with ``partially_within``; an inverted box raises
+        InvalidCoordinatesError."""
+        p, b = element.page_number, element.bounding_box
+        page = self.document.get_page(p)
+        (x0, x1, y0, y1), pages = probe(
+            how, (p, b.x0, b.x1, b.y0, b.y1), page.width, page.height,
+            tolerance, all_pages,
         )
         results = self.filter_partially_within_bounding_box(
-            probe, element.page_number
+            BoundingBox(x0, x1, y0, y1), p
         )
+        if pages is not None:
+            q_lo, q_hi = pages
+            for page in self.document.pages:
+                q = page.page_number
+                if q != p and q_lo <= q <= q_hi:
+                    results = results | self.filter_partially_within_bounding_box(
+                        BoundingBox(x0, x1, 0, page.height), q
+                    )
         if not inclusive:
             results = results.remove_element(element)
         return results
 
+    def to_the_right_of(
+        self, element, inclusive: bool = False, tolerance: float = 0.0
+    ) -> "ElementList":
+        return self._directional("right", element, inclusive, tolerance)
+
     def to_the_left_of(
         self, element, inclusive: bool = False, tolerance: float = 0.0
     ) -> "ElementList":
-        tol = min(element.bounding_box.height / 2, tolerance)
-        probe = BoundingBox(
-            0,
-            element.bounding_box.x0,
-            element.bounding_box.y0 + tol,
-            element.bounding_box.y1 - tol,
-        )
-        results = self.filter_partially_within_bounding_box(
-            probe, element.page_number
-        )
-        if not inclusive:
-            results = results.remove_element(element)
-        return results
+        return self._directional("left", element, inclusive, tolerance)
 
     def below(
         self,
@@ -199,32 +203,7 @@ class ElementList(Iterable):
         all_pages: bool = False,
         tolerance: float = 0.0,
     ) -> "ElementList":
-        tol = min(element.bounding_box.width / 2, tolerance)
-        probe = BoundingBox(
-            element.bounding_box.x0 + tol,
-            element.bounding_box.x1 - tol,
-            0,
-            element.bounding_box.y0,
-        )
-        results = self.filter_partially_within_bounding_box(
-            probe, element.page_number
-        )
-        if all_pages:
-            for page in self.document.pages:
-                if page.page_number <= element.page_number:
-                    continue
-                probe = BoundingBox(
-                    element.bounding_box.x0 + tol,
-                    element.bounding_box.x1 - tol,
-                    0,
-                    page.height,
-                )
-                results = results | self.filter_partially_within_bounding_box(
-                    probe, page.page_number
-                )
-        if not inclusive:
-            results = results.remove_element(element)
-        return results
+        return self._directional("below", element, inclusive, tolerance, all_pages)
 
     def above(
         self,
@@ -233,33 +212,7 @@ class ElementList(Iterable):
         all_pages: bool = False,
         tolerance: float = 0.0,
     ) -> "ElementList":
-        page = self.document.get_page(element.page_number)
-        tol = min(element.bounding_box.width / 2, tolerance)
-        probe = BoundingBox(
-            element.bounding_box.x0 + tol,
-            element.bounding_box.x1 - tol,
-            element.bounding_box.y1,
-            page.height,
-        )
-        results = self.filter_partially_within_bounding_box(
-            probe, element.page_number
-        )
-        if all_pages:
-            for page in self.document.pages:
-                if page.page_number >= element.page_number:
-                    continue
-                probe = BoundingBox(
-                    element.bounding_box.x0 + tol,
-                    element.bounding_box.x1 - tol,
-                    0,
-                    page.height,
-                )
-                results = results | self.filter_partially_within_bounding_box(
-                    probe, page.page_number
-                )
-        if not inclusive:
-            results = results.remove_element(element)
-        return results
+        return self._directional("above", element, inclusive, tolerance, all_pages)
 
     def vertically_in_line_with(
         self,
@@ -268,53 +221,14 @@ class ElementList(Iterable):
         all_pages: bool = False,
         tolerance: float = 0.0,
     ) -> "ElementList":
-        page = self.document.get_page(element.page_number)
-        tol = min(element.bounding_box.width / 2, tolerance)
-        probe = BoundingBox(
-            element.bounding_box.x0 + tol,
-            element.bounding_box.x1 - tol,
-            0,
-            page.height,
+        return self._directional(
+            "vertical", element, inclusive, tolerance, all_pages
         )
-        results = self.filter_partially_within_bounding_box(
-            probe, element.page_number
-        )
-        if all_pages:
-            # bounded by THIS list's own page span (filtering.py:636-650)
-            for page_num in range(self[0].page_number, self[-1].page_number + 1):
-                page = self.document.get_page(page_num)
-                if page.page_number == element.page_number:
-                    continue
-                probe = BoundingBox(
-                    element.bounding_box.x0 + tol,
-                    element.bounding_box.x1 - tol,
-                    0,
-                    page.height,
-                )
-                results = results | self.filter_partially_within_bounding_box(
-                    probe, page.page_number
-                )
-        if not inclusive:
-            results = results.remove_element(element)
-        return results
 
     def horizontally_in_line_with(
         self, element, inclusive: bool = False, tolerance: float = 0.0
     ) -> "ElementList":
-        page = self.document.get_page(element.page_number)
-        tol = min(element.bounding_box.height / 2, tolerance)
-        probe = BoundingBox(
-            0,
-            page.width,
-            element.bounding_box.y0 + tol,
-            element.bounding_box.y1 - tol,
-        )
-        results = self.filter_partially_within_bounding_box(
-            probe, element.page_number
-        )
-        if not inclusive:
-            results = results.remove_element(element)
-        return results
+        return self._directional("horizontal", element, inclusive, tolerance)
 
     # -- order-based ops (filtering.py:717-942) -------------------------------
 

@@ -20,6 +20,12 @@ scan the same ``bucketBy(doc_id)`` layout, so the sort-merge path is
 co-located — zero Exchange (see tests/test_spark_pipeline.py bucketed-join
 test and PLANS.md).
 
+Each directional operator's box and page range come from
+``kernel.doc.probe``, the definition the kernel uses.  Where the kernel
+raises ``InvalidCoordinatesError`` for an anchor whose probe box is
+inverted (an anchor past the page edge), the frame drops that anchor: it
+contributes no rows, as ``move_from`` drops out-of-range anchors.
+
 Exactness note (SURVEY.md §7 hard parts): ``filter_by_regex`` uses a
 vectorized pandas UDF running Python ``re.match`` — Spark's ``rlike`` is
 Java-regex and unanchored, which is a semantic near-miss, not a match.
@@ -38,6 +44,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from .kernel.doc import probe
+
 _ANCHOR_COLS = ["idx", "page_number", "x0", "x1", "y0", "y1",
                 "page_width", "page_height"]
 
@@ -48,6 +56,33 @@ def _as_anchor(df: DataFrame) -> DataFrame:
         "doc_id", *[F.col(c).alias(f"a_{c}") for c in _ANCHOR_COLS]
     )
     return out
+
+
+def _overlaps(box) -> Column:
+    """The element lies partially within ``box = (x0, x1, y0, y1)`` —
+    closed intervals, touching counts (components.py:286-304)."""
+    x0, x1, y0, y1 = box
+    return (
+        (F.lit(x0) <= F.col("x1"))
+        & (F.lit(x1) >= F.col("x0"))
+        & (F.lit(y0) <= F.col("y1"))
+        & (F.lit(y1) >= F.col("y0"))
+    )
+
+
+def _matches(box, pages) -> Column:
+    """The element is in an anchor's ``probe(...)``: partially within
+    ``box`` on the anchor's page, or on a page in ``pages`` and
+    overlapping its own page's full height.  An inverted box matches
+    nothing."""
+    x0, x1, y0, y1 = box
+    hit = (F.col("page_number") == F.col("a_page_number")) & _overlaps(box)
+    if pages is not None:
+        hit = hit | (
+            F.col("page_number").between(*pages)
+            & _overlaps((x0, x1, 0.0, F.col("page_height")))
+        )
+    return (F.lit(x0) <= x1) & (F.lit(y0) <= y1) & hit
 
 
 class ElementFrame:
@@ -163,11 +198,7 @@ class ElementFrame:
     ) -> "ElementFrame":
         """Closed-interval overlap — touching counts (components.py:286-304)."""
         return self.where(
-            (F.col("page_number") == page)
-            & (F.lit(x0) <= F.col("x1"))
-            & (F.lit(x1) >= F.col("x0"))
-            & (F.lit(y0) <= F.col("y1"))
-            & (F.lit(y1) >= F.col("y0"))
+            (F.col("page_number") == page) & _overlaps((x0, x1, y0, y1))
         )
 
     def filter_entirely_within(
@@ -193,108 +224,75 @@ class ElementFrame:
         out = joined.where(cond).drop(*[f"a_{c}" for c in _ANCHOR_COLS])
         return self._with(out)
 
+    def _directional(
+        self, how: str, anchors: "ElementFrame", inclusive: bool,
+        tolerance: float, all_pages: bool = False,
+    ) -> "ElementFrame":
+        """The elements in each anchor's ``kernel.doc.probe``; an anchor
+        whose probe box is inverted (past the page edge) contributes no
+        rows — the frame's analogue of the kernel's
+        ``InvalidCoordinatesError``."""
+        anchor = [F.col(f"a_{c}") for c in ("page_number", "x0", "x1", "y0", "y1")]
+        box, pages = probe(
+            how, anchor, F.col("a_page_width"), F.col("a_page_height"),
+            F.lit(float(tolerance)), all_pages, F.least,
+        )
+        return self._anchor_join(anchors, _matches(box, pages), inclusive)
+
     def to_the_right_of(
         self, anchors: "ElementFrame", inclusive: bool = False,
         tolerance: float = 0.0,
     ) -> "ElementFrame":
-        tol = F.least(F.lit(float(tolerance)), (F.col("a_y1") - F.col("a_y0")) / 2)
-        cond = (
-            (F.col("page_number") == F.col("a_page_number"))
-            & (F.col("a_x1") <= F.col("x1"))
-            & (F.col("a_page_width") >= F.col("x0"))
-            & (F.col("a_y0") + tol <= F.col("y1"))
-            & (F.col("a_y1") - tol >= F.col("y0"))
-        )
-        return self._anchor_join(anchors, cond, inclusive)
+        return self._directional("right", anchors, inclusive, tolerance)
 
     def to_the_left_of(
         self, anchors: "ElementFrame", inclusive: bool = False,
         tolerance: float = 0.0,
     ) -> "ElementFrame":
-        tol = F.least(F.lit(float(tolerance)), (F.col("a_y1") - F.col("a_y0")) / 2)
-        cond = (
-            (F.col("page_number") == F.col("a_page_number"))
-            & (F.lit(0.0) <= F.col("x1"))
-            & (F.col("a_x0") >= F.col("x0"))
-            & (F.col("a_y0") + tol <= F.col("y1"))
-            & (F.col("a_y1") - tol >= F.col("y0"))
-        )
-        return self._anchor_join(anchors, cond, inclusive)
+        return self._directional("left", anchors, inclusive, tolerance)
 
     def below(
         self, anchors: "ElementFrame", inclusive: bool = False,
         all_pages: bool = False, tolerance: float = 0.0,
     ) -> "ElementFrame":
-        tol = F.least(F.lit(float(tolerance)), (F.col("a_x1") - F.col("a_x0")) / 2)
-        x_overlap = (F.col("a_x0") + tol <= F.col("x1")) & (
-            F.col("a_x1") - tol >= F.col("x0")
-        )
-        same_page = (
-            (F.col("page_number") == F.col("a_page_number"))
-            & (F.col("a_y0") >= F.col("y0"))
-        )
-        cond = same_page
-        if all_pages:
-            cond = cond | (F.col("page_number") > F.col("a_page_number"))
-        return self._anchor_join(anchors, x_overlap & cond, inclusive)
+        return self._directional("below", anchors, inclusive, tolerance, all_pages)
 
     def above(
         self, anchors: "ElementFrame", inclusive: bool = False,
         all_pages: bool = False, tolerance: float = 0.0,
     ) -> "ElementFrame":
-        tol = F.least(F.lit(float(tolerance)), (F.col("a_x1") - F.col("a_x0")) / 2)
-        x_overlap = (F.col("a_x0") + tol <= F.col("x1")) & (
-            F.col("a_x1") - tol >= F.col("x0")
-        )
-        same_page = (
-            (F.col("page_number") == F.col("a_page_number"))
-            & (F.col("a_y1") <= F.col("y1"))
-        )
-        cond = same_page
-        if all_pages:
-            cond = cond | (F.col("page_number") < F.col("a_page_number"))
-        return self._anchor_join(anchors, x_overlap & cond, inclusive)
+        return self._directional("above", anchors, inclusive, tolerance, all_pages)
 
     def vertically_in_line_with(
         self, anchors: "ElementFrame", inclusive: bool = False,
         all_pages: bool = False, tolerance: float = 0.0,
     ) -> "ElementFrame":
-        tol = F.least(F.lit(float(tolerance)), (F.col("a_x1") - F.col("a_x0")) / 2)
-        x_overlap = (F.col("a_x0") + tol <= F.col("x1")) & (
-            F.col("a_x1") - tol >= F.col("x0")
+        return self._directional(
+            "vertical", anchors, inclusive, tolerance, all_pages
         )
-        cond = x_overlap
-        if not all_pages:
-            cond = cond & (F.col("page_number") == F.col("a_page_number"))
-        return self._anchor_join(anchors, cond, inclusive)
 
     def horizontally_in_line_with(
         self, anchors: "ElementFrame", inclusive: bool = False,
         tolerance: float = 0.0,
     ) -> "ElementFrame":
-        tol = F.least(F.lit(float(tolerance)), (F.col("a_y1") - F.col("a_y0")) / 2)
-        cond = (
-            (F.col("page_number") == F.col("a_page_number"))
-            & (F.col("a_y0") + tol <= F.col("y1"))
-            & (F.col("a_y1") - tol >= F.col("y0"))
-        )
-        return self._anchor_join(anchors, cond, inclusive)
+        return self._directional("horizontal", anchors, inclusive, tolerance)
 
     # -- order ops (filtering.py:717-787) -------------------------------------
 
-    def before(self, anchors: "ElementFrame", inclusive: bool = False) -> "ElementFrame":
-        op = F.col("idx") <= F.col("a_idx") if inclusive else F.col("idx") < F.col("a_idx")
+    def _idx_join(self, anchors: "ElementFrame", cond: Column) -> "ElementFrame":
+        """Elements whose ``idx`` meets ``cond`` against an anchor's ``a_idx``."""
         a = anchors.df.select("doc_id", F.col("idx").alias("a_idx"))
         return self._with(
-            self.df.join(a, on="doc_id").where(op).drop("a_idx")
+            self.df.join(a, on="doc_id").where(cond).drop("a_idx")
         )
 
+    def before(self, anchors: "ElementFrame", inclusive: bool = False) -> "ElementFrame":
+        idx, a_idx = F.col("idx"), F.col("a_idx")
+        return self._idx_join(anchors, idx <= a_idx if inclusive else idx < a_idx)
+
     def after(self, anchors: "ElementFrame", inclusive: bool = False) -> "ElementFrame":
-        op = F.col("idx") >= F.col("a_idx") if inclusive else F.col("idx") > F.col("a_idx")
-        a = anchors.df.select("doc_id", F.col("idx").alias("a_idx"))
-        return self._with(
-            self.df.join(a, on="doc_id").where(op).drop("a_idx")
-        )
+        idx, a_idx = F.col("idx"), F.col("a_idx")
+        return self._idx_join(anchors, idx >= a_idx if inclusive else idx > a_idx)
 
     def between(
         self, start: "ElementFrame", end: "ElementFrame", inclusive: bool = False
@@ -310,21 +308,21 @@ class ElementFrame:
 
     # -- per-doc order extrema: window ops (SURVEY.md §2.10 windows) ----------
 
+    def _ranked(self, descending: bool = False) -> DataFrame:
+        """This frame with ``_rn``, each element's 1-based position in its
+        document's ``idx`` order (reversed when ``descending``)."""
+        order = F.col("idx").desc() if descending else F.col("idx").asc()
+        w = Window.partitionBy("doc_id").orderBy(order)
+        return self.df.withColumn("_rn", F.row_number().over(w))
+
+    def _at_ranks(self, cond: Column, descending: bool = False) -> "ElementFrame":
+        return self._with(self._ranked(descending).where(cond).drop("_rn"))
+
     def first_per_doc(self) -> "ElementFrame":
-        w = Window.partitionBy("doc_id").orderBy(F.col("idx").asc())
-        return self._with(
-            self.df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        return self._at_ranks(F.col("_rn") == 1)
 
     def last_per_doc(self) -> "ElementFrame":
-        w = Window.partitionBy("doc_id").orderBy(F.col("idx").desc())
-        return self._with(
-            self.df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        return self._at_ranks(F.col("_rn") == 1, descending=True)
 
     def move_from(
         self, anchors: "ElementFrame", count: int = 1, capped: bool = False
@@ -336,8 +334,7 @@ class ElementFrame:
         ``capped=True`` the target clamps to the frame's first/last
         element per doc (filtering.py:905-911,936-942).  Window
         row_number + join on the shifted rank."""
-        w = Window.partitionBy("doc_id").orderBy(F.col("idx").asc())
-        ranked = self.df.withColumn("_rn", F.row_number().over(w))
+        ranked = self._ranked()
         target = F.col("_rn") + count
         if capped:
             n = F.max("_rn").over(Window.partitionBy("doc_id"))
@@ -373,24 +370,14 @@ class ElementFrame:
 
     def nth_per_doc(self, n: int) -> "ElementFrame":
         """0-based __getitem__ analogue (filtering.py:1041-1053)."""
-        w = Window.partitionBy("doc_id").orderBy(F.col("idx").asc())
-        return self._with(
-            self.df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == n + 1)
-            .drop("_rn")
-        )
+        return self._at_ranks(F.col("_rn") == n + 1)
 
     def slice_per_doc(self, start: int, stop: int) -> "ElementFrame":
         """``list[start:stop]`` analogue (filtering.py:1041-1053,
         non-negative bounds): elements at per-doc sorted positions
         [start, stop) within this frame."""
-        w = Window.partitionBy("doc_id").orderBy(F.col("idx").asc())
-        return self._with(
-            self.df.withColumn("_rn", F.row_number().over(w))
-            .where(
-                (F.col("_rn") >= start + 1) & (F.col("_rn") <= stop)
-            )
-            .drop("_rn")
+        return self._at_ranks(
+            (F.col("_rn") >= start + 1) & (F.col("_rn") <= stop)
         )
 
     # -- set algebra on (doc_id, idx) (filtering.py:1077-1100) ----------------
@@ -432,16 +419,15 @@ class ElementFrame:
 
     # -- sections (SURVEY.md §1.6: per-doc sections table + range join) -------
 
-    def filter_by_section_name(
-        self, sections: DataFrame, name: str
+    def _in_sections(
+        self, sections: DataFrame, column: str, value: str
     ) -> "ElementFrame":
-        """Elements in ANY section with this base name
-        (filtering.py:271-287): range-join membership
-        ``start_idx <= idx <= end_idx`` under a doc_id equi-join.  The
-        sections side is per-doc-tiny; the equi key keeps the join
-        co-located over the bucketed elements table (elements can be in
-        multiple sections, hence the key-dedup)."""
-        s = sections.where(F.col("name") == name).select(
+        """Elements inside any section whose ``column`` is ``value``:
+        range-join membership ``start_idx <= idx <= end_idx`` under a
+        doc_id equi-join.  The sections side is per-doc-tiny; the equi
+        key keeps the join co-located over the bucketed elements table
+        (elements can be in multiple sections, hence the key-dedup)."""
+        s = sections.where(F.col(column) == value).select(
             "doc_id", "start_idx", "end_idx"
         )
         joined = (
@@ -455,25 +441,20 @@ class ElementFrame:
         )
         return self._with(joined)
 
+    def filter_by_section_name(
+        self, sections: DataFrame, name: str
+    ) -> "ElementFrame":
+        """Elements in ANY section with this base name
+        (filtering.py:271-287)."""
+        return self._in_sections(sections, "name", name)
+
     def filter_by_section(
         self, sections: DataFrame, unique_name: str
     ) -> "ElementFrame":
         """Elements of ONE section by unique name (filtering.py:289-305);
         missing section -> empty frame (the reference's documented
         missing-section behavior at list level)."""
-        s = sections.where(F.col("unique_name") == unique_name).select(
-            "doc_id", "start_idx", "end_idx"
-        )
-        joined = (
-            self.df.join(s, on="doc_id")
-            .where(
-                (F.col("idx") >= F.col("start_idx"))
-                & (F.col("idx") <= F.col("end_idx"))
-            )
-            .drop("start_idx", "end_idx")
-            .dropDuplicates(self._KEY)
-        )
-        return self._with(joined)
+        return self._in_sections(sections, "unique_name", unique_name)
 
     # -- terminal helpers ------------------------------------------------------
 

@@ -16,8 +16,9 @@ Semantics intentionally preserved (see SURVEY.md §2, §7 "hard parts"):
     exact ``.get(font) or font`` lookup (components.py:213-238).
   * geometry predicates use closed intervals — touching counts
     (components.py:286-304).
-  * directional operators shrink the probe box by ``tolerance`` capped at
-    half the element's height/width (filtering.py:398,443,495,563,628,686).
+  * directional operators shrink the probe box (``probe``) by
+    ``tolerance`` capped at half the element's height/width
+    (filtering.py:398,443,495,563,628,686).
   * every newly created element set re-drops ignored elements
     (filtering.py:95).
   * Python ``re.match`` (anchored, not fullmatch) and ``str.strip``
@@ -99,6 +100,51 @@ def _check_box(x0, x1, y0, y1) -> None:
         raise InvalidCoordinatesError(f"x1 ({x1}) must be >= x0 ({x0})")
     if y1 < y0:
         raise InvalidCoordinatesError(f"y1 ({y1}) must be >= y0 ({y0})")
+
+
+_INF = float("inf")
+
+
+def probe(direction, anchor, width, height, tolerance, all_pages, least=min):
+    """The probe of a directional operator (filtering.py:366-696) — the
+    one definition the kernel, ``ElementFrame``, compat and the oracles'
+    rule share.
+
+    ``direction`` is ``"right"``, ``"left"``, ``"horizontal"``,
+    ``"below"``, ``"above"`` or ``"vertical"``; ``anchor`` is the anchor
+    element's ``(page, x0, x1, y0, y1)`` on a ``width`` x ``height`` page.
+    Returns ``(box, pages)``: ``box = (x0, x1, y0, y1)`` on the anchor's
+    page, and ``pages = (q_lo, q_hi)``, the pages probed over their full
+    height (with ``all_pages``: the later pages below, the earlier ones
+    above, every page vertically), or None.  The tolerance shrinks the
+    box, capped at half the anchor's height or width
+    (filtering.py:398,443,495,563,628,686).  An element is in the probe
+    iff it lies partially within (closed intervals, components.py:286-304)
+    the box on the anchor's page or the full height of a probed page.
+    An inverted box — an anchor past the page edge — is no probe; each
+    caller rejects it.
+
+    Only ``+``, ``-``, ``/`` and ``least`` touch the operands, so the
+    same code runs on Python numbers (``min``) and on Spark Columns
+    (``F.least``).
+    """
+    p, x0, x1, y0, y1 = anchor
+    if direction in ("right", "left", "horizontal"):
+        t = least((y1 - y0) / 2, tolerance)
+        if direction == "right":
+            x0, x1 = x1, width
+        elif direction == "left":
+            x0, x1 = 0, x0
+        else:
+            x0, x1 = 0, width
+        return (x0, x1, y0 + t, y1 - t), None
+    t = least((x1 - x0) / 2, tolerance)
+    x0, x1 = x0 + t, x1 - t
+    if direction == "below":
+        return (x0, x1, 0, y0), (p + 1, _INF) if all_pages else None
+    if direction == "above":
+        return (x0, x1, y1, height), (-_INF, p - 1) if all_pages else None
+    return (x0, x1, 0, height), (-_INF, _INF) if all_pages else None
 
 
 class BBox:
@@ -775,65 +821,27 @@ class Doc:
         return index
 
 
-_INF = float("inf")
-_HORIZONTAL = ("right", "left", "horizontal")
-
-
-def _probe_limits(doc, how, anchor, tolerance, all_pages, span):
-    """The probe of directional operator ``how`` from an ``anchor``
-    element ``(page, x0, x1, y0, y1)``, as thresholds against
-    ``Doc.stack`` (an element is in a box iff each of its stack rows is
-    >= the threshold):
-
-    * ``(p, -p, x0, -x1, y0, -y1)``: the box on the anchor's page;
-    * ``(q_lo, -q_hi, x0, -x1)``: a range of pages probed over the full
-      page height (``Doc.fits_page``) — the pages after (below) or before
-      (above) the anchor's with ``all_pages``; for ``vertical``, whose box
-      is the full height anyway, the anchor's page, with ``all_pages``
-      widened to ``span``, the pages of the probed list's first and last
-      elements (filtering.py:637-650).
-
-    ``inf`` as a box's page or a range's first page leaves it out.  The
-    tolerance shrinks the box, capped at half the anchor's height or
-    width (filtering.py:398,443,495,563,628,686); an inverted box (an
-    anchor past the page edge) raises ``InvalidCoordinatesError``.
-    """
-    p, x0, x1, y0, y1 = anchor
-    if how in _HORIZONTAL:
-        tolerance = min((y1 - y0) / 2, tolerance)
-        y0, y1 = y0 + tolerance, y1 - tolerance
-        if how == "right":
-            x0, x1 = x1, doc.page_width(p)
-        elif how == "left":
-            x0, x1 = 0, x0
-        else:
-            x0, x1 = 0, doc.page_width(p)
-        _check_box(x0, x1, y0, y1)
+def _probe_limits(doc, how, anchor, tolerance, all_pages):
+    """``probe`` from an ``anchor`` element ``(page, x0, x1, y0, y1)`` as
+    thresholds against ``Doc.stack`` (an element is in a box iff each of
+    its stack rows is >= the threshold): ``(p, -p, x0, -x1, y0, -y1)``
+    for the box on the anchor's page, then ``(q_lo, -q_hi, x0, -x1)`` for
+    the pages probed over their full height (``Doc.fits_page``).  ``inf``
+    as a box's page or a range's first page leaves it out; a range over
+    the anchor's own page leaves the box out too, as only
+    ``vertically_in_line_with``'s does and its box is the full height.
+    An inverted box raises ``InvalidCoordinatesError``."""
+    p = anchor[0]
+    (x0, x1, y0, y1), pages = probe(
+        how, anchor, doc.page_width(p), doc.page_height(p), tolerance, all_pages
+    )
+    _check_box(x0, x1, y0, y1)
+    if pages is None:
         return (p, -p, x0, -x1, y0, -y1, _INF, _INF, x0, -x1)
-    tolerance = min((x1 - x0) / 2, tolerance)
-    x0, x1 = x0 + tolerance, x1 - tolerance
-    box = (_INF,) * 6
-    q_lo = q_hi = _INF
-    if how == "below":
-        _check_box(x0, x1, 0, y0)
-        box = (p, -p, x0, -x1, 0, -y0)
-        if all_pages:
-            q_lo = p + 1
-    elif how == "above":
-        top = doc.page_height(p)
-        _check_box(x0, x1, y1, top)
-        box = (p, -p, x0, -x1, y1, -top)
-        if all_pages:
-            q_lo, q_hi = -_INF, p - 1
-    else:
-        top = doc.page_height(p)
-        _check_box(x0, x1, 0, top)
-        q_lo = q_hi = p
-        if span is not None:
-            q_lo, q_hi = span
-            if not q_lo <= p <= q_hi:  # the own page's box as well
-                box = (p, -p, x0, -x1, 0, -top)
-    return box + (q_lo, -q_hi, x0, -x1)
+    q_lo, q_hi = pages
+    if q_lo <= p <= q_hi:
+        return (_INF,) * 6 + (q_lo, -q_hi, x0, -x1)
+    return (p, -p, x0, -x1, y0, -y1, q_lo, -q_hi, x0, -x1)
 
 
 class Elems:
@@ -1116,22 +1124,21 @@ class Elems:
         boxes, and one for the page ranges (``_probe_limits``)."""
         d = self.doc
         page, x0, x1, y0, y1 = d.geo
-        span = None
-        if how == "vertical" and all_pages and len(self.idx):
-            span = (page[self.idx[0]], page[self.idx[-1]])
         rows = [
             _probe_limits(
                 d, how, (page[i], x0[i], x1[i], y0[i], y1[i]),
-                tolerance, all_pages, span,
+                tolerance, all_pages,
             )
             for i in anchors
         ]
         limits = np.array(rows, dtype=np.float64).reshape(-1, 10).T[:, :, None]
         geometry = self._geometry()[:, None, :]
+        # Every anchor of one call gets the same kind of probe: the first
+        # row tells whether there are boxes and page ranges to test.
         mask = None
-        if how != "vertical" or any(r[0] != _INF for r in rows):
+        if not rows or rows[0][0] != _INF:
             mask = (geometry >= limits[:6]).all(0)
-        if how == "vertical" or (all_pages and how in ("below", "above")):
+        if rows and rows[0][6] != _INF:
             fits = d.fits_page
             if len(self.idx) != d.n:
                 fits = fits[self.idx]

@@ -859,13 +859,43 @@ def pp_between(spark, sf_dir):
 # -- geometric joins -----------------------------------------------------------
 
 
+def _probe_duck(direction: str, all_pages: bool, anchor: str) -> str:
+    """The directional-operator rule (``kernel.doc.probe`` and the match
+    every engine applies to it), stated again in SQL: element ``e`` is in
+    anchor ``anchor``'s probe and is not the anchor.  Tolerance 0 on the
+    ora corpus's 100 x 100 pages.  The probe box lies on the anchor's
+    page; with ``all_pages`` the later (below), earlier (above) or every
+    (vertical) page is probed over its full height.  An anchor whose box
+    is inverted — past the page edge — matches nothing."""
+    a = anchor
+    x0, x1, y0, y1 = {
+        "right": (f"{a}.x1", "100.0", f"{a}.y0", f"{a}.y1"),
+        "left": ("0.0", f"{a}.x0", f"{a}.y0", f"{a}.y1"),
+        "horizontal": ("0.0", "100.0", f"{a}.y0", f"{a}.y1"),
+        "below": (f"{a}.x0", f"{a}.x1", "0.0", f"{a}.y0"),
+        "above": (f"{a}.x0", f"{a}.x1", f"{a}.y1", "100.0"),
+        "vertical": (f"{a}.x0", f"{a}.x1", "0.0", "100.0"),
+    }[direction]
+    hit = f"(e.page_number = {a}.page_number AND {y0} <= e.y1 AND {y1} >= e.y0)"
+    if all_pages:
+        pages = {
+            "below": f"e.page_number > {a}.page_number",
+            "above": f"e.page_number < {a}.page_number",
+            "vertical": "TRUE",
+        }[direction]
+        hit = f"({hit}\n       OR ({pages} AND 0.0 <= e.y1 AND 100.0 >= e.y0))"
+    return f"""{x0} <= {x1} AND {y0} <= {y1}
+  AND {x0} <= e.x1 AND {x1} >= e.x0
+  AND {hit}
+  AND e.idx != {a}.idx"""
+
+
 @q(
     "pp_to_the_right_of",
     _ora_cte()
-    + """
+    + f"""
 SELECT e.doc_id, e.idx FROM elements e JOIN hdr a ON e.doc_id = a.doc_id
-WHERE e.page_number = a.page_number AND a.x1 <= e.x1 AND 100.0 >= e.x0
-  AND a.y0 <= e.y1 AND a.y1 >= e.y0 AND e.idx != a.idx""",
+WHERE {_probe_duck("right", False, "a")}""",
 )
 def pp_to_the_right_of(spark, sf_dir):
     ef = _ef(spark, sf_dir)
@@ -875,10 +905,9 @@ def pp_to_the_right_of(spark, sf_dir):
 @q(
     "pp_to_the_left_of",
     _ora_cte()
-    + """
+    + f"""
 SELECT e.doc_id, e.idx FROM elements e JOIN val a ON e.doc_id = a.doc_id
-WHERE e.page_number = a.page_number AND 0.0 <= e.x1 AND a.x0 >= e.x0
-  AND a.y0 <= e.y1 AND a.y1 >= e.y0 AND e.idx != a.idx""",
+WHERE {_probe_duck("left", False, "a")}""",
 )
 def pp_to_the_left_of(spark, sf_dir):
     ef = _ef(spark, sf_dir)
@@ -888,12 +917,9 @@ def pp_to_the_left_of(spark, sf_dir):
 @q(
     "pp_below_all_pages",
     _ora_cte()
-    + """
+    + f"""
 SELECT e.doc_id, e.idx FROM elements e JOIN hdr a ON e.doc_id = a.doc_id
-WHERE a.x0 <= e.x1 AND a.x1 >= e.x0
-  AND (e.page_number > a.page_number
-       OR (e.page_number = a.page_number AND e.y0 <= a.y0))
-  AND e.idx != a.idx""",
+WHERE {_probe_duck("below", True, "a")}""",
 )
 def pp_below_all_pages(spark, sf_dir):
     ef = _ef(spark, sf_dir)
@@ -905,12 +931,9 @@ def pp_below_all_pages(spark, sf_dir):
 @q(
     "pp_above_all_pages",
     _ora_cte()
-    + """
+    + f"""
 SELECT e.doc_id, e.idx FROM elements e JOIN endm a ON e.doc_id = a.doc_id
-WHERE a.x0 <= e.x1 AND a.x1 >= e.x0
-  AND (e.page_number < a.page_number
-       OR (e.page_number = a.page_number AND e.y1 >= a.y1))
-  AND e.idx != a.idx""",
+WHERE {_probe_duck("above", True, "a")}""",
 )
 def pp_above_all_pages(spark, sf_dir):
     ef = _ef(spark, sf_dir)
@@ -920,9 +943,9 @@ def pp_above_all_pages(spark, sf_dir):
 @q(
     "pp_vertically_in_line_with",
     _ora_cte()
-    + """
+    + f"""
 SELECT e.doc_id, e.idx FROM elements e JOIN val a ON e.doc_id = a.doc_id
-WHERE a.x0 <= e.x1 AND a.x1 >= e.x0 AND e.idx != a.idx""",
+WHERE {_probe_duck("vertical", True, "a")}""",
 )
 def pp_vertically_in_line_with(spark, sf_dir):
     ef = _ef(spark, sf_dir)
@@ -934,10 +957,9 @@ def pp_vertically_in_line_with(spark, sf_dir):
 @q(
     "pp_horizontally_in_line_with",
     _ora_cte()
-    + """
+    + f"""
 SELECT e.doc_id, e.idx FROM elements e JOIN val a ON e.doc_id = a.doc_id
-WHERE e.page_number = a.page_number AND a.y0 <= e.y1 AND a.y1 >= e.y0
-  AND e.idx != a.idx""",
+WHERE {_probe_duck("horizontal", False, "a")}""",
 )
 def pp_horizontally_in_line_with(spark, sf_dir):
     ef = _ef(spark, sf_dir)
@@ -950,11 +972,10 @@ def pp_horizontally_in_line_with(spark, sf_dir):
 @q(
     "pp_set_xor",
     _ora_cte()
-    + """
+    + f"""
 , r AS (
   SELECT e.doc_id, e.idx FROM elements e JOIN hdr a ON e.doc_id = a.doc_id
-  WHERE e.page_number = a.page_number AND a.x1 <= e.x1 AND 100.0 >= e.x0
-    AND a.y0 <= e.y1 AND a.y1 >= e.y0 AND e.idx != a.idx
+  WHERE {_probe_duck("right", False, "a")}
 ), f AS (
   SELECT doc_id, idx FROM elements WHERE font = 'f1,8'
 )
@@ -4165,7 +4186,9 @@ def _latest_green_rounds(root: Path) -> Dict[str, int]:
 # from the text-statistics fragments (_unigram_lm_duck,
 # _bits_per_token_duck, _inverse_cdf_duck,
 # _idf_duck, _topk_tail_duck, _substring_dedup_duck, _micro_log2_duck),
-# and td_bm25_topk's engine side is bm25_score over bm25_model.
+# and td_bm25_topk's engine side is bm25_score over bm25_model.  The
+# seven directional pp_* oracles are assembled from _probe_duck, with the
+# page-edge clauses they lacked.
 _RETOUCHED: set = {
     "td_corpus_prep", "td_corpus_to_shards", "td_prep_scrub_score",
     "emb_cosine_topk", "emb_ivf_topk", "emb_ivf_multiprobe",
@@ -4177,6 +4200,9 @@ _RETOUCHED: set = {
     "td_ppl_buckets", "td_vocab_topk", "td_tfidf_topk",
     "td_bpe_merge_counts", "td_bm25_topk", "td_dsir_weights",
     "td_bigram_perplexity",
+    "pp_to_the_right_of", "pp_to_the_left_of", "pp_below_all_pages",
+    "pp_above_all_pages", "pp_vertically_in_line_with",
+    "pp_horizontally_in_line_with", "pp_set_xor",
 }
 
 

@@ -1,7 +1,10 @@
 """Spark-layer tests: parse stage, ElementFrame vs kernel differential,
 extraction pipeline, checkpoint/resume."""
 
+import functools
+import operator
 import os
+import random
 import shutil
 
 import pytest
@@ -11,6 +14,7 @@ from py_pdf_parser_spark.kernel.parse import doc_from_spans
 
 pyspark = pytest.importorskip("pyspark")
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from py_pdf_parser_spark.frame import ElementFrame  # noqa: E402
@@ -81,6 +85,76 @@ class TestParseElements:
                 assert r["x0"] == doc.x0[pos]
                 assert r["text"] == doc.text_stripped[pos]
                 assert r["font"] == doc.font[pos]
+
+
+_DIRECTIONAL = (
+    ("to_the_right_of", False), ("to_the_left_of", False),
+    ("horizontally_in_line_with", False),
+    ("below", False), ("below", True), ("above", False), ("above", True),
+    ("vertically_in_line_with", False), ("vertically_in_line_with", True),
+)
+
+
+def _seeded_layout_docs(n_docs=60, seed=7):
+    """doc_id -> kernel Doc: up to three pages of 25 or 200 units a side,
+    elements at integral coordinates in [-5, 40], one element's text "A"
+    (the anchor) and another's "B"."""
+    from py_pdf_parser_spark.kernel.doc import Doc
+
+    rng = random.Random(seed)
+    docs = {}
+    for d in range(n_docs):
+        n = rng.randint(2, 14)
+        page = [rng.randint(1, 3) for _ in range(n)]
+        x0 = [float(rng.randint(-5, 30)) for _ in range(n)]
+        y0 = [float(rng.randint(-5, 30)) for _ in range(n)]
+        a, b = rng.sample(range(n), 2)
+        text = ["A" if i == a else "B" if i == b else f"t{i}" for i in range(n)]
+        doc_id = f"lay-{d:06d}"
+        docs[doc_id] = Doc(
+            doc_id,
+            page=page,
+            x0=x0, x1=[x + rng.randint(0, 10) for x in x0],
+            y0=y0, y1=[y + rng.randint(0, 10) for y in y0],
+            text=text,
+            page_width={p: rng.choice([25.0, 200.0]) for p in (1, 2, 3)},
+            page_height={p: rng.choice([25.0, 200.0]) for p in (1, 2, 3)},
+        )
+    return docs
+
+
+def _elements_frame(spark, docs) -> ElementFrame:
+    """The documents' elements, in document order, as one DataFrame."""
+    import pyarrow as pa
+
+    cols = {name: [] for name in (
+        "doc_id", "idx", "page_number", "page_width", "page_height",
+        "x0", "x1", "y0", "y1", "text",
+    )}
+    for d, doc in docs.items():
+        pages = doc.page.tolist()
+        cols["doc_id"] += [d] * doc.n
+        cols["idx"] += list(range(doc.n))
+        cols["page_number"] += pages
+        cols["page_width"] += [float(doc.page_width(p)) for p in pages]
+        cols["page_height"] += [float(doc.page_height(p)) for p in pages]
+        for name in ("x0", "x1", "y0", "y1"):
+            cols[name] += getattr(doc, name).tolist()
+        cols["text"] += doc.text_raw.tolist()
+    return ElementFrame(spark.createDataFrame(pa.table(cols)))
+
+
+def _collect_tagged(frames) -> dict:
+    """config -> the (doc_id, idx) keys of its ElementFrame, all configs
+    tagged in one union and collected once."""
+    tagged = [
+        f.df.select(F.lit(config).alias("config"), "doc_id", "idx")
+        for config, f in frames.items()
+    ]
+    out = {config: set() for config in frames}
+    for r in functools.reduce(DataFrame.unionByName, tagged).collect():
+        out[r["config"]].add((r["doc_id"], r["idx"]))
+    return out
 
 
 class TestElementFrameDifferential:
@@ -178,6 +252,94 @@ class TestElementFrameDifferential:
         }
         docs = self._kernel_docs()
         assert lasts == {d: doc.n - 1 for d, doc in docs.items()}
+
+    def test_seeded_layouts_match_kernel_and_naive(self, spark):
+        """Seeded multi-page documents on 25- or 200-unit pages with
+        integral coordinates in [-5, 40], so edges touch and elements —
+        anchors among them — lie past the page edge.  Per document, every
+        directional operator (tolerance 0, > 0 and < 0, with and without
+        all_pages), the order operators and the set operators return from
+        ElementFrame what the kernel returns; an anchor the kernel rejects
+        with InvalidCoordinatesError contributes no frame rows.  The
+        kernel side is also checked against the naive per-element
+        definition, so a misreading both engines share cannot pass."""
+        from py_pdf_parser_spark.errors import InvalidCoordinatesError
+        from tests.test_properties import _naive
+
+        docs = _seeded_layout_docs()
+        ef = _elements_frame(spark, docs)
+        first, second = ef.filter_by_text_equal("A"), ef.filter_by_text_equal("B")
+        marks = {
+            d: (doc.text_raw.tolist().index("A"), doc.text_raw.tolist().index("B"))
+            for d, doc in docs.items()
+        }
+        # config -> its ElementFrame, and -> (doc_id, Doc) -> kernel result
+        frames, kernel = {}, {}
+        rejected = set()
+
+        def directional(op, kwargs):
+            def run(d, doc):
+                a = marks[d][0]
+                want = _naive(doc, set(range(doc.n)), op, a, **kwargs)
+                if want is InvalidCoordinatesError:
+                    with pytest.raises(InvalidCoordinatesError):
+                        getattr(doc.elements, op)(a, **kwargs)
+                    rejected.add(op)
+                    return set()
+                got = set(getattr(doc.elements, op)(a, **kwargs))
+                assert got == want, (d, op, kwargs)
+                return got
+            return run
+
+        for op, all_pages in _DIRECTIONAL:
+            for tolerance in (0.0, 2.5, -1.0):
+                kwargs = {"inclusive": tolerance > 0, "tolerance": tolerance}
+                if all_pages:
+                    kwargs["all_pages"] = True
+                config = f"{op} {kwargs}"
+                frames[config] = getattr(ef, op)(first, **kwargs)
+                kernel[config] = directional(op, kwargs)
+
+        for inclusive in (False, True):
+            frames[f"before {inclusive}"] = ef.before(first, inclusive)
+            kernel[f"before {inclusive}"] = (
+                lambda d, doc, inc=inclusive: doc.elements.before(marks[d][0], inc)
+            )
+            frames[f"after {inclusive}"] = ef.after(first, inclusive)
+            kernel[f"after {inclusive}"] = (
+                lambda d, doc, inc=inclusive: doc.elements.after(marks[d][0], inc)
+            )
+            frames[f"between {inclusive}"] = ef.between(first, second, inclusive)
+            kernel[f"between {inclusive}"] = (
+                lambda d, doc, inc=inclusive: doc.elements.between(*marks[d], inc)
+            )
+
+        left = ef.after(first)
+        right = ef.vertically_in_line_with(first, all_pages=True, tolerance=1.0)
+
+        def operands(d, doc):
+            a = marks[d][0]
+            return doc.elements.after(a), doc.elements.vertically_in_line_with(
+                a, all_pages=True, tolerance=1.0
+            )
+
+        for name, kernel_op in (
+            ("union", operator.or_), ("intersect", operator.and_),
+            ("subtract", operator.sub), ("xor", operator.xor),
+        ):
+            frames[name] = getattr(left, name)(right)
+            kernel[name] = (
+                lambda d, doc, f=kernel_op: f(*operands(d, doc))
+            )
+
+        got = _collect_tagged(frames)
+        for config, kernel_of in kernel.items():
+            want = {
+                (d, int(i)) for d, doc in docs.items() for i in kernel_of(d, doc)
+            }
+            assert got[config] == want, config
+        # the seeds reach every page-edge rejection the operators have
+        assert rejected == {"to_the_right_of", "to_the_left_of", "below", "above"}
 
 
 class TestMoveFrom:
