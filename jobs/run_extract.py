@@ -4,12 +4,15 @@
 Launch (cluster):
   zip -r pkg.zip py_pdf_parser_spark
   spark-submit --py-files pkg.zip jobs/run_extract.py \\
-      --input  <iceberg-table-or-parquet-path> \\
+      --input  <parquet-path-or-uri> \\
       --output <output-dir> --buckets 4096 --waves 64
 
 Local sandbox:
-  python jobs/run_extract.py --input synthdata/mixed_flat_sf0.01/documents.parquet \\
-      --output /tmp/extract_out
+  python jobs/run_extract.py --input synthdata/mixed_flat_sf0.001 \\
+      --output /tmp/extract_out --cores 4
+
+The input is a parquet file or directory (a plain path, ``file://`` or
+cluster URI; hive partition directories are read as Spark reads them).
 
 The job is resume-safe: re-running with the same --output continues from
 the checkpoint lineage (completed buckets are skipped; failed or missing

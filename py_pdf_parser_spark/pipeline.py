@@ -36,20 +36,27 @@ Design (SURVEY.md §3.1, §4):
   plus a lineage row per bucket.  A run reads the lineage once and
   filters completed buckets out of their waves — completed splits are
   never reprocessed, and a failed wave is replayed whole (BASELINE.md).
+  Lineage is bookkeeping, not a Catalyst concern: it is read and
+  appended on the driver (``pyarrow``), and the input schema comes from
+  a parquet footer, so a resume runs only its wave's Spark jobs.
 """
 
 from __future__ import annotations
 
+import os
 import time
+import uuid
 from typing import Callable, Iterator, List, Optional, Tuple
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.errors import AnalysisException
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructType
 
 from .kernel.parse import doc_from_arrays, parse_batch
@@ -63,6 +70,7 @@ from .schema import (
 
 _ELEMENTS_ARROW = to_arrow_schema(ELEMENTS_SCHEMA)
 _EXTRACTED_ARROW = to_arrow_schema(EXTRACTED_SCHEMA)
+_LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 
 def _map_docs(
@@ -385,8 +393,7 @@ def materialize_elements(
     pages/fonts for free.  Optionally bucketed by doc_id so per-doc
     set-algebra joins co-locate without a shuffle.
     """
-    tune_scan_splits(spark, docs_path)
-    elements = parse_elements(spark.read.parquet(docs_path))
+    elements = parse_elements(_scan_parquet(spark, docs_path))
     if bucket_by_doc:
         (
             elements.write.mode("overwrite")
@@ -408,7 +415,50 @@ def materialize_elements(
 _TASKS_PER_CORE = 4
 
 
-def tune_scan_splits(spark: SparkSession, input_path: str) -> None:
+def _fs_path(path: str) -> Tuple[pafs.FileSystem, str]:
+    """``path`` (a plain path, ``file://`` or cluster URI) as a
+    ``pyarrow.fs`` filesystem and the path within it."""
+    try:
+        return pafs.FileSystem.from_uri(path)
+    except pa.ArrowInvalid:  # a relative local path
+        return pafs.FileSystem.from_uri(os.path.abspath(path))
+
+
+def _parquet_files(path: str) -> Tuple[pafs.FileSystem, List[pafs.FileInfo]]:
+    """The parquet files a Spark scan of ``path`` reads: ``path`` itself,
+    or the ``.parquet`` files below it, skipping any path part that
+    Spark's file index hides (``.``-prefixed, or ``_``-prefixed without
+    ``=``)."""
+    fs, root = _fs_path(path)
+    info = fs.get_file_info(root)
+    if info.type == pafs.FileType.File:
+        return fs, [info]
+    listing = pafs.FileSelector(root, allow_not_found=True, recursive=True)
+    return fs, [
+        f for f in fs.get_file_info(listing)
+        if f.type == pafs.FileType.File and f.path.endswith(".parquet")
+        and not any(
+            p.startswith(".") or (p.startswith("_") and "=" not in p)
+            for p in f.path[len(root):].split("/")
+        )
+    ]
+
+
+def _scan_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with tuned scan splits and no
+    schema-inference job: the schema is read from a footer on the
+    driver, and hive partition columns are left to Spark's inference
+    from the directory names."""
+    fs, files = tune_scan_splits(spark, path)
+    if not files:
+        raise FileNotFoundError(f"no parquet files under {path}")
+    schema = pq.read_schema(files[0].path, filesystem=fs)
+    return spark.read.schema(from_arrow_schema(schema)).parquet(path)
+
+
+def tune_scan_splits(
+    spark: SparkSession, input_path: str
+) -> Tuple[pafs.FileSystem, List[pafs.FileInfo]]:
     """Size parquet scan splits so the job gets ~_TASKS_PER_CORE tasks
     per core.
 
@@ -423,20 +473,17 @@ def tune_scan_splits(spark: SparkSession, input_path: str) -> None:
     and skew_checkpoint 401 / 436 / 516 docs/s (medians at 1 / 2 / 4):
     run-to-run noise, no value winning both, so the default stays 4.
 
-    Local paths only use os.walk; on a cluster the same computation runs
-    against the Hadoop FileSystem listing.
+    Input bytes come from the ``pyarrow.fs`` listing of ``_parquet_files``
+    (returned), so a plain path, a ``file://`` URI and a cluster URI size
+    alike.
     """
-    import os
-
-    total = 0
-    for root, _, files in os.walk(input_path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
+    fs, files = _parquet_files(input_path)
+    total = sum(f.size for f in files)
     cores = spark.sparkContext.defaultParallelism
     split = max(1 << 20, min(128 << 20, total // (cores * _TASKS_PER_CORE)))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     spark.conf.set("spark.sql.files.openCostInBytes", str(min(split, 4 << 20)))
+    return fs, files
 
 
 def _rebalanced(
@@ -492,30 +539,28 @@ def extract_spans_rebalanced(
 def _lineage_state(spark: SparkSession, output_dir: str) -> Tuple[set, dict]:
     """-> (buckets with an ``ok`` lineage row, last attempt per bucket).
 
-    One read with the schema given (no inference job) and one collect.
-    A lineage that does not exist yet is an empty state; any other read
-    error raises, since treating an unreadable lineage as empty would
-    silently reprocess every completed bucket and restart attempts at 1.
+    The ``_lineage`` part files are a few rows each, so they are read on
+    the driver (``pyarrow.dataset`` with ``LINEAGE_SCHEMA``, ``.``- and
+    ``_``-prefixed files skipped as Spark does): no Spark job.  ``spark``
+    is unused; it keeps ``completed_buckets``' signature.  A lineage that
+    does not exist yet is an empty state; any other read error raises,
+    since treating an unreadable lineage as empty would silently
+    reprocess every completed bucket and restart attempts at 1.
     """
+    fs, path = _fs_path(f"{output_dir}/_lineage")
     try:
-        rows = (
-            spark.read.schema(LINEAGE_SCHEMA)
-            .parquet(f"{output_dir}/_lineage")
-            .groupBy("bucket")
-            .agg(
-                F.max("attempt").alias("attempt"),
-                F.max(F.col("status") == "ok").alias("ok"),
-            )
-            .collect()
+        dataset = ds.dataset(
+            path, schema=_LINEAGE_ARROW, format="parquet", filesystem=fs
         )
-    except AnalysisException as err:
-        if err.getCondition() != "PATH_NOT_FOUND":
-            raise
+    except FileNotFoundError:
         return set(), {}
-    return (
-        {r["bucket"] for r in rows if r["ok"]},
-        {r["bucket"]: r["attempt"] for r in rows},
-    )
+    rows = dataset.to_table(columns=["bucket", "status", "attempt"])
+    done, attempts = set(), {}
+    for b, status, attempt in zip(*(c.to_pylist() for c in rows.columns)):
+        attempts[b] = max(attempts.get(b, 0), attempt)
+        if status == "ok":
+            done.add(b)
+    return done, attempts
 
 
 def completed_buckets(spark: SparkSession, output_dir: str) -> List[int]:
@@ -523,19 +568,19 @@ def completed_buckets(spark: SparkSession, output_dir: str) -> List[int]:
     return sorted(_lineage_state(spark, output_dir)[0])
 
 
-def _append_lineage(
-    spark: SparkSession, output_dir: str, rows: List[tuple]
-) -> None:
-    """Append ``LINEAGE_SCHEMA`` rows as one part file.
-
-    The rows go in as a ``pyarrow.Table``: the plan is a
-    ``LocalTableScan`` in the JVM, where a Python list would become a
-    PythonRDD whose 1-task job starts a Python worker to unpickle them.
-    """
-    table = pa.table(dict(zip(LINEAGE_SCHEMA.names, zip(*rows))))
-    spark.createDataFrame(table, LINEAGE_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(f"{output_dir}/_lineage")
+def _append_lineage(output_dir: str, rows: List[tuple]) -> None:
+    """Append ``LINEAGE_SCHEMA`` rows as one parquet part file, written
+    on the driver (no Spark job) under a ``.``-prefixed name, which every
+    reader skips, and then moved into place."""
+    fs, path = _fs_path(f"{output_dir}/_lineage")
+    fs.create_dir(path)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    table = pa.Table.from_pydict(
+        dict(zip(_LINEAGE_ARROW.names, map(list, zip(*rows)))),
+        schema=_LINEAGE_ARROW,
+    )
+    pq.write_table(table, f"{path}/.{name}", filesystem=fs)
+    fs.move(f"{path}/.{name}", f"{path}/{name}")
 
 
 def run_job(
@@ -561,8 +606,7 @@ def run_job(
     Returns run stats {processed_buckets, skipped_buckets, docs, errors}.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    tune_scan_splits(spark, input_path)
-    docs = spark.read.parquet(input_path).withColumn(
+    docs = _scan_parquet(spark, input_path).withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
     )
 
@@ -628,9 +672,9 @@ def run_job(
             stats["errors"] += sum(r[3] for r in lineage_rows)
         except Exception:
             wall_ms = int((time.time() - t0) * 1000)
-            _append_lineage(spark, output_dir, [
+            _append_lineage(output_dir, [
                 (b, 0, 0, 0, "failed", attempt_nums[b], wall_ms) for b in wave
             ])
             raise
-        _append_lineage(spark, output_dir, lineage_rows)
+        _append_lineage(output_dir, lineage_rows)
     return stats

@@ -448,11 +448,25 @@ class TestExtract:
 def _executed_plan(spark, marker):
     """The physical plan of the session's last SQL execution that mentions
     ``marker`` (e.g. its output path), read from the status store."""
+    return _executions(spark, marker)[-1][0]
+
+
+def _wait_for_listeners(spark):
+    """Block until the status store has seen every event so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def _executions(spark, marker):
+    """``(physical plan, job ids)`` of the session's SQL executions whose
+    plan mentions ``marker``, oldest first."""
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    plans = [
-        execs.apply(i).physicalPlanDescription() for i in range(execs.size())
-    ]
-    return [p for p in plans if marker in p][-1]
+    out = []
+    for e in (execs.apply(i) for i in range(execs.size())):
+        plan = e.physicalPlanDescription()
+        if marker in plan:
+            jobs = e.jobs().keySet().mkString(",")
+            out.append((plan, {int(j) for j in jobs.split(",") if j}))
+    return out
 
 
 def _lineage_waves(spark, out_dir):
@@ -558,15 +572,109 @@ class TestCheckpointResume:
             )
         assert not os.path.exists(f"{out_dir}/extracted")
 
-    def test_lineage_append_plans_as_local_table_scan(self, spark, tmp_path):
-        """Driver-side lineage rows stay in the JVM: a LocalTableScan, not a
-        PythonRDD scan whose job starts a Python worker."""
-        from py_pdf_parser_spark.pipeline import _append_lineage
+    def test_lineage_io_runs_on_the_driver(self, spark, tmp_path):
+        """Lineage appends and reads launch no Spark job; driver-written
+        part files read back through Spark, sit beside Spark-written ones,
+        and a stray ``.``-prefixed temp file is skipped."""
+        from py_pdf_parser_spark.pipeline import _append_lineage, _lineage_state
+        from py_pdf_parser_spark.schema import LINEAGE_SCHEMA
 
         out_dir = str(tmp_path / "job_out")
-        _append_lineage(spark, out_dir, [(3, 0, 0, 0, "failed", 1, 5)])
-        plan = _executed_plan(spark, f"{out_dir}/_lineage")
-        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        failed = [(3, 0, 0, 0, "failed", 1, 5), (7, 0, 0, 0, "failed", 1, 5)]
+        ok = [(3, 10, 100, 1, "ok", 2, 9)]
+        spark.sparkContext.setJobGroup("lineage-io", "lineage-io")
+        _append_lineage(out_dir, failed)
+        _append_lineage(out_dir, ok)
+        state = _lineage_state(spark, out_dir)
+        _wait_for_listeners(spark)
+        tracker = spark.sparkContext.statusTracker()
+        assert list(tracker.getJobIdsForGroup("lineage-io")) == []
+        spark.sparkContext.setJobGroup("lineage-io-check", "lineage-io-check")
+        assert state == ({3}, {3: 2, 7: 1})
+
+        def spark_rows():
+            df = spark.read.schema(LINEAGE_SCHEMA).parquet(f"{out_dir}/_lineage")
+            return sorted(tuple(r) for r in df.collect())
+
+        assert spark_rows() == sorted(failed + ok)
+        # A part file written by Spark (with its _SUCCESS and .crc files).
+        spark_written = (7, 20, 200, 0, "ok", 2, 11)
+        spark.createDataFrame([spark_written], LINEAGE_SCHEMA).write.mode(
+            "append"
+        ).parquet(f"{out_dir}/_lineage")
+        assert _lineage_state(spark, out_dir) == ({3, 7}, {3: 2, 7: 2})
+        # An append cut short leaves only its temp name behind.
+        with open(f"{out_dir}/_lineage/.part-cut.parquet", "wb") as f:
+            f.write(b"not parquet")
+        assert _lineage_state(spark, out_dir) == ({3, 7}, {3: 2, 7: 2})
+        assert spark_rows() == sorted(failed + ok + [spark_written])
+
+    def test_resume_runs_only_the_waves_jobs(self, spark, tmp_path):
+        """The job budget of a resume: every Spark job is the failed
+        wave's write of ``extracted`` (its heavy-branch shuffle and the
+        write), none reads or writes the lineage or infers the input
+        schema; the write still pushes the n_spans split to the scan."""
+        path = ensure_mixed_corpus(0.001, skew=True)
+        out_dir = str(tmp_path / "job_out")
+        with pytest.raises(RuntimeError):
+            run_job(spark, path, out_dir, num_buckets=8, num_waves=4,
+                    fail_buckets=[3])
+        spark.sparkContext.setJobGroup("resume", "resume")
+        stats = run_job(spark, path, out_dir, num_buckets=8, num_waves=4)
+        spark.sparkContext.setJobGroup("resume-check", "resume-check")
+        assert stats["processed_buckets"] == 2 and stats["skipped_buckets"] == 6
+        _wait_for_listeners(spark)
+        jobs = set(spark.sparkContext.statusTracker().getJobIdsForGroup("resume"))
+        writes = _executions(spark, f"{out_dir}/extracted")
+        assert jobs and jobs <= writes[-1][1]
+        assert "GreaterThan(n_spans,2048)" in writes[-1][0]
+        assert "LessThanOrEqual(n_spans,2048)" in writes[-1][0]
+
+
+class TestScanInput:
+    """run_job's input scan: schema from a footer, splits from a
+    ``pyarrow.fs`` listing."""
+
+    @pytest.fixture(scope="class")
+    def hive_copy(self, spark, tmp_path_factory):
+        out = str(tmp_path_factory.mktemp("hive") / "docs")
+        spark.read.parquet(ensure_mixed_corpus(0.001, skew=True)).withColumn(
+            "part", F.pmod(F.xxhash64("doc_id"), F.lit(3)).cast("int")
+        ).withColumn("tag", F.lit("x")).write.partitionBy("part", "tag").parquet(out)
+        # Left behind by a failed writer: hidden from Spark's file index.
+        for stray in ("_temporary/0", ".staging"):
+            os.makedirs(f"{out}/{stray}")
+            with open(f"{out}/{stray}/part-0.parquet", "wb") as f:
+                f.write(b"not parquet")
+        return out
+
+    def test_footer_schema_equals_inferred_schema(self, spark, hive_copy):
+        from py_pdf_parser_spark.pipeline import _scan_parquet
+
+        for path in (
+            ensure_mixed_corpus(0.001),
+            ensure_mixed_corpus(0.001, skew=True),
+            hive_copy,
+        ):
+            inferred = spark.read.parquet(path).schema
+            assert _scan_parquet(spark, path).schema == inferred, path
+        assert inferred.names[-2:] == ["part", "tag"]
+
+    def test_listing_matches_spark_for_paths_and_uris(self, spark, hive_copy):
+        """``_parquet_files`` lists what Spark's file index reads (no
+        ``_SUCCESS``, ``.crc`` or hidden strays), and a plain path and its
+        ``file://`` URI size alike."""
+        from urllib.parse import urlparse
+
+        from py_pdf_parser_spark.pipeline import _parquet_files
+
+        for path in (ensure_mixed_corpus(0.001), hive_copy):
+            plain = _parquet_files(path)[1]
+            uri = _parquet_files(f"file://{path}")[1]
+            assert sum(f.size for f in plain) == sum(f.size for f in uri) > 0
+            assert sorted(f.path for f in plain) == sorted(
+                urlparse(u).path for u in spark.read.parquet(path).inputFiles()
+            )
 
 
 class TestHotPathPlan:
