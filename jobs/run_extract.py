@@ -11,8 +11,11 @@ Local sandbox:
   python jobs/run_extract.py --input synthdata/mixed_flat_sf0.001 \\
       --output /tmp/extract_out --cores 4
 
-The input is a parquet file or directory (a plain path, ``file://`` or
-cluster URI; hive partition directories are read as Spark reads them).
+The input is a parquet file or directory (hive partition directories are
+read as Spark reads them).  Input and output are plain paths or
+``file://``, ``s3://`` (also ``s3a://``/``s3n://``), ``gs://``,
+``hdfs://`` or ``viewfs://`` URIs: the checkpoint lineage and the input
+listing go through ``pyarrow.fs``, which resolves only these schemes.
 
 The job is resume-safe: re-running with the same --output continues from
 the checkpoint lineage (completed buckets are skipped; failed or missing

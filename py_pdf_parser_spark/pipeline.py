@@ -47,6 +47,7 @@ import os
 import time
 import uuid
 from typing import Callable, Iterator, List, Optional, Tuple
+from urllib.parse import urlparse
 
 import numpy as np
 import pyarrow as pa
@@ -415,20 +416,44 @@ def materialize_elements(
 _TASKS_PER_CORE = 4
 
 
+# Hadoop scheme aliases of the schemes ``pyarrow.fs`` resolves.
+_FS_SCHEMES = {"s3a": "s3", "s3n": "s3"}
+
+
 def _fs_path(path: str) -> Tuple[pafs.FileSystem, str]:
-    """``path`` (a plain path, ``file://`` or cluster URI) as a
-    ``pyarrow.fs`` filesystem and the path within it."""
+    """``path`` as a ``pyarrow.fs`` filesystem and the path within it.
+
+    A path without a scheme is local (made absolute).  A URI must use a
+    scheme ``pyarrow.fs`` resolves: ``file``, ``s3`` (also ``s3a``,
+    ``s3n``; credentials come from the AWS default chain, not Hadoop's
+    ``fs.s3a.*`` settings), ``gs``/``gcs``, ``hdfs`` or ``viewfs``.  Any
+    other scheme raises rather than resolving to a local path.
+    """
+    scheme = urlparse(path).scheme
+    if not scheme:
+        return pafs.FileSystem.from_uri(os.path.abspath(path))
+    if scheme in _FS_SCHEMES:
+        path = _FS_SCHEMES[scheme] + path[len(scheme):]
     try:
         return pafs.FileSystem.from_uri(path)
-    except pa.ArrowInvalid:  # a relative local path
-        return pafs.FileSystem.from_uri(os.path.abspath(path))
+    except pa.ArrowInvalid as e:
+        raise ValueError(
+            f"{path}: unsupported filesystem scheme {scheme!r} ({e})"
+        ) from e
+
+
+def _hidden(part: str) -> bool:
+    """Whether Spark's file index skips a path part of this name."""
+    return (
+        part.startswith(".") or (part.startswith("_") and "=" not in part)
+        or part.endswith("._COPYING_")
+    )
 
 
 def _parquet_files(path: str) -> Tuple[pafs.FileSystem, List[pafs.FileInfo]]:
-    """The parquet files a Spark scan of ``path`` reads: ``path`` itself,
-    or the ``.parquet`` files below it, skipping any path part that
-    Spark's file index hides (``.``-prefixed, or ``_``-prefixed without
-    ``=``)."""
+    """The files a Spark scan of ``path`` reads: ``path`` itself, or every
+    file below it (whatever its extension) with no path part that Spark's
+    file index hides (``_hidden``)."""
     fs, root = _fs_path(path)
     info = fs.get_file_info(root)
     if info.type == pafs.FileType.File:
@@ -436,11 +461,8 @@ def _parquet_files(path: str) -> Tuple[pafs.FileSystem, List[pafs.FileInfo]]:
     listing = pafs.FileSelector(root, allow_not_found=True, recursive=True)
     return fs, [
         f for f in fs.get_file_info(listing)
-        if f.type == pafs.FileType.File and f.path.endswith(".parquet")
-        and not any(
-            p.startswith(".") or (p.startswith("_") and "=" not in p)
-            for p in f.path[len(root):].split("/")
-        )
+        if f.type == pafs.FileType.File
+        and not any(map(_hidden, f.path[len(root):].split("/")))
     ]
 
 
@@ -451,7 +473,7 @@ def _scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     from the directory names."""
     fs, files = tune_scan_splits(spark, path)
     if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
+        raise FileNotFoundError(f"no input files under {path}")
     schema = pq.read_schema(files[0].path, filesystem=fs)
     return spark.read.schema(from_arrow_schema(schema)).parquet(path)
 
@@ -474,8 +496,8 @@ def tune_scan_splits(
     run-to-run noise, no value winning both, so the default stays 4.
 
     Input bytes come from the ``pyarrow.fs`` listing of ``_parquet_files``
-    (returned), so a plain path, a ``file://`` URI and a cluster URI size
-    alike.
+    (returned), so a plain path and a URI (any scheme ``_fs_path``
+    resolves) size alike.
     """
     fs, files = _parquet_files(input_path)
     total = sum(f.size for f in files)
@@ -536,16 +558,15 @@ def extract_spans_rebalanced(
 # ---------------------------------------------------------------------------
 
 
-def _lineage_state(spark: SparkSession, output_dir: str) -> Tuple[set, dict]:
+def _lineage_state(output_dir: str) -> Tuple[set, dict]:
     """-> (buckets with an ``ok`` lineage row, last attempt per bucket).
 
     The ``_lineage`` part files are a few rows each, so they are read on
     the driver (``pyarrow.dataset`` with ``LINEAGE_SCHEMA``, ``.``- and
-    ``_``-prefixed files skipped as Spark does): no Spark job.  ``spark``
-    is unused; it keeps ``completed_buckets``' signature.  A lineage that
-    does not exist yet is an empty state; any other read error raises,
-    since treating an unreadable lineage as empty would silently
-    reprocess every completed bucket and restart attempts at 1.
+    ``_``-prefixed files skipped as Spark does): no Spark job.  A
+    lineage that does not exist yet is an empty state; any other read
+    error raises, since treating an unreadable lineage as empty would
+    silently reprocess every completed bucket and restart attempts at 1.
     """
     fs, path = _fs_path(f"{output_dir}/_lineage")
     try:
@@ -565,7 +586,7 @@ def _lineage_state(spark: SparkSession, output_dir: str) -> Tuple[set, dict]:
 
 def completed_buckets(spark: SparkSession, output_dir: str) -> List[int]:
     """Buckets with an ``ok`` lineage row, ascending."""
-    return sorted(_lineage_state(spark, output_dir)[0])
+    return sorted(_lineage_state(output_dir)[0])
 
 
 def _append_lineage(output_dir: str, rows: List[tuple]) -> None:
@@ -610,7 +631,7 @@ def run_job(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(num_buckets)).cast("int")
     )
 
-    done, attempts = _lineage_state(spark, output_dir)
+    done, attempts = _lineage_state(output_dir)
     waves = [
         [b for b in range(w, num_buckets, num_waves) if b not in done]
         for w in range(num_waves)

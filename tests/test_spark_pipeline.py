@@ -548,14 +548,14 @@ class TestCheckpointResume:
     def test_lineage_state(self, spark, tmp_path):
         from py_pdf_parser_spark.pipeline import _lineage_state
 
-        assert _lineage_state(spark, str(tmp_path / "missing")) == (set(), {})
+        assert _lineage_state(str(tmp_path / "missing")) == (set(), {})
         out_dir = str(tmp_path / "job_out")
         _write_lineage(out_dir, [
             (0, 0, 0, 0, "failed", 1, 5),
             (0, 10, 100, 0, "ok", 2, 7),
             (1, 0, 0, 0, "failed", 1, 5),
         ])
-        assert _lineage_state(spark, out_dir) == ({0}, {0: 2, 1: 1})
+        assert _lineage_state(out_dir) == ({0}, {0: 2, 1: 1})
 
     def test_unreadable_lineage_raises(self, spark, tmp_path):
         """A corrupt lineage part file must fail the job, not read as an
@@ -585,7 +585,7 @@ class TestCheckpointResume:
         spark.sparkContext.setJobGroup("lineage-io", "lineage-io")
         _append_lineage(out_dir, failed)
         _append_lineage(out_dir, ok)
-        state = _lineage_state(spark, out_dir)
+        state = _lineage_state(out_dir)
         _wait_for_listeners(spark)
         tracker = spark.sparkContext.statusTracker()
         assert list(tracker.getJobIdsForGroup("lineage-io")) == []
@@ -602,11 +602,11 @@ class TestCheckpointResume:
         spark.createDataFrame([spark_written], LINEAGE_SCHEMA).write.mode(
             "append"
         ).parquet(f"{out_dir}/_lineage")
-        assert _lineage_state(spark, out_dir) == ({3, 7}, {3: 2, 7: 2})
+        assert _lineage_state(out_dir) == ({3, 7}, {3: 2, 7: 2})
         # An append cut short leaves only its temp name behind.
         with open(f"{out_dir}/_lineage/.part-cut.parquet", "wb") as f:
             f.write(b"not parquet")
-        assert _lineage_state(spark, out_dir) == ({3, 7}, {3: 2, 7: 2})
+        assert _lineage_state(out_dir) == ({3, 7}, {3: 2, 7: 2})
         assert spark_rows() == sorted(failed + ok + [spark_written])
 
     def test_resume_runs_only_the_waves_jobs(self, spark, tmp_path):
@@ -646,6 +646,12 @@ class TestScanInput:
             os.makedirs(f"{out}/{stray}")
             with open(f"{out}/{stray}/part-0.parquet", "wb") as f:
                 f.write(b"not parquet")
+        part = f"{out}/part=0/tag=x"
+        with open(f"{part}/part-9.parquet._COPYING_", "wb") as f:
+            f.write(b"not parquet")
+        # A data file without an extension, as Hive writes them: read.
+        first = min(n for n in os.listdir(part) if n.endswith(".parquet"))
+        shutil.copy(f"{part}/{first}", f"{part}/000000_0")
         return out
 
     def test_footer_schema_equals_inferred_schema(self, spark, hive_copy):
@@ -662,7 +668,8 @@ class TestScanInput:
 
     def test_listing_matches_spark_for_paths_and_uris(self, spark, hive_copy):
         """``_parquet_files`` lists what Spark's file index reads (no
-        ``_SUCCESS``, ``.crc`` or hidden strays), and a plain path and its
+        ``_SUCCESS``, ``.crc``, ``._COPYING_`` or hidden strays; a file
+        without an extension is read), and a plain path and its
         ``file://`` URI size alike."""
         from urllib.parse import urlparse
 
@@ -675,6 +682,28 @@ class TestScanInput:
             assert sorted(f.path for f in plain) == sorted(
                 urlparse(u).path for u in spark.read.parquet(path).inputFiles()
             )
+
+
+    def test_fs_path_never_reads_a_uri_as_local(self, monkeypatch, tmp_path):
+        """Only a path without a scheme is local; ``s3a``/``s3n`` map to
+        ``s3``, and a scheme ``pyarrow.fs`` does not know raises."""
+        from types import SimpleNamespace
+
+        from py_pdf_parser_spark import pipeline
+
+        for uri in ("wasbs://c@a.blob.core.windows.net/out", "dbfs:/out"):
+            with pytest.raises(ValueError, match="unsupported filesystem"):
+                pipeline._fs_path(uri)
+        # Stands in for from_uri: an s3 filesystem would contact AWS.
+        fake = SimpleNamespace(FileSystem=SimpleNamespace(
+            from_uri=lambda uri: (None, uri)
+        ))
+        monkeypatch.setattr(pipeline, "pafs", fake)
+        monkeypatch.chdir(tmp_path)
+        assert pipeline._fs_path("rel/x")[1] == f"{tmp_path}/rel/x"
+        assert pipeline._fs_path("s3a://b/x")[1] == "s3://b/x"
+        assert pipeline._fs_path("s3n://b/x")[1] == "s3://b/x"
+        assert pipeline._fs_path("hdfs://nn/x")[1] == "hdfs://nn/x"
 
 
 class TestHotPathPlan:
