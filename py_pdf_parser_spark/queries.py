@@ -97,15 +97,153 @@ WITH sp AS (
 
 _H_DUCK = "CAST('0x' || substr(md5({s}), 1, 8) AS BIGINT)"
 
-_SHINGLES_DUCK = """
-WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+# The near-dup td_* oracles are assembled from one DuckDB fragment per
+# dedup.py building block: the hashed shingle sets (shingle_rows), the
+# MinHash mins (minhash_wide) and bands (minhash_banded), the band-salted
+# chunk rank (_chunk_capped), the capped self-join (_capped_self_join),
+# the exact Jaccard check (_verified_pairs), the length-block candidates
+# (ngram_jaccard_pairs) and the connected components (dup_clusters).
+# Each is an independent SQL statement of its rule; the WITH opens with
+# _shingles_duck's ``corpus``.
+
+
+def _shingles_duck(corpus: str) -> str:
+    """shingle_rows over the ``corpus`` SELECT of (doc_id, text) rows:
+    opens the WITH with ``corpus``; sh (doc_id, shingles) holds each
+    doc's distinct 3-word shingles ('_'-joined, none below 3 words) and
+    hsh (doc_id, hs) their 32-bit md5 hashes."""
+    return f"""
+WITH corpus AS ({corpus}),
+t AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
 sh AS (
   SELECT doc_id,
          CASE WHEN len(w) >= 3
               THEN list_distinct(list_transform(range(1, len(w) - 1),
                    i -> w[i] || '_' || w[i+1] || '_' || w[i+2]))
               ELSE CAST([] AS VARCHAR[]) END AS shingles
-  FROM t)"""
+  FROM t),
+hsh AS (
+  SELECT doc_id, list_transform(shingles, s -> {_H_DUCK.format(s="s")}) AS hs
+  FROM sh)"""
+
+
+_SHINGLES_DUCK = _shingles_duck("SELECT doc_id, text FROM documents")
+
+
+def _minhash_duck() -> str:
+    """minhash_wide: wide (doc_id, m0..m31), m_k the min of (a_k * h +
+    b_k) mod 2^31-1 over a doc's shingle hashes h; a doc without
+    shingles has no row.  The hashes are computed ONCE in hsh, so the
+    32 mins are cheap affine arithmetic over the int list."""
+    mins = ", ".join(
+        f"CAST(list_min(list_transform(hs, "
+        f"x -> ({a} * x + {b}) % {dedup.MERSENNE})) AS BIGINT) AS m{k}"
+        for k, (a, b) in enumerate(dedup.MINHASH_PARAMS)
+    )
+    return f"""
+, wide AS (SELECT doc_id, {mins} FROM hsh WHERE len(hs) > 0)"""
+
+
+def _bands_duck() -> str:
+    """minhash_banded: banded (doc_id, band, bucket), band b's bucket the
+    md5 of its MINHASH_ROWS_PER_BAND mins, ','-joined in k order."""
+    rows_per_band = dedup.MINHASH_ROWS_PER_BAND
+    bands = "\nUNION ALL\n".join(
+        f"SELECT doc_id, {band} AS band, md5("
+        + " || ',' || ".join(
+            f"m{band * rows_per_band + j}::VARCHAR"
+            for j in range(rows_per_band)
+        )
+        + ") AS bucket FROM wide"
+        for band in range(dedup.MINHASH_BANDS)
+    )
+    return f"""
+, banded AS ({bands})"""
+
+
+def _capped_duck(src: str, key: str, max_bucket: int) -> str:
+    """_chunk_capped: capped (the ``src`` columns, chunk), chunk = the
+    row's 0-based rank in its (band, ``key``) bucket by md5(band:doc_id)
+    then doc_id, integer-divided by ``max_bucket``."""
+    return f"""
+, capped AS (
+  SELECT *,
+         (row_number() OVER (PARTITION BY band, {key}
+              ORDER BY md5(band::VARCHAR || ':' || doc_id), doc_id) - 1)
+             // {max_bucket} AS chunk
+  FROM {src})"""
+
+
+def _capped_join_duck(key: str) -> str:
+    """_capped_self_join: FROM + WHERE of the capped row pairs a, b that
+    share (band, ``key``, chunk), a.doc_id < b.doc_id."""
+    return f"""
+FROM capped a JOIN capped b
+  ON a.band = b.band AND a.{key} = b.{key} AND a.chunk = b.chunk
+WHERE a.doc_id < b.doc_id"""
+
+
+def _jaccard_duck(name: str, cands: str) -> str:
+    """_verified_pairs: ``name`` (doc_a, doc_b, jaccard) keeps the
+    ``cands`` (doc_a, doc_b) pairs whose hsh sets have a 4-dp Jaccard
+    >= 0.5."""
+    return f"""
+, {name} AS (
+  SELECT * FROM (
+    SELECT doc_a, doc_b, round(ni / (na + nb - ni), 4) AS jaccard
+    FROM (
+      SELECT c.doc_a, c.doc_b, len(list_intersect(a.hs, b.hs)) AS ni,
+             len(a.hs) AS na, len(b.hs) AS nb
+      FROM {cands} c
+      JOIN hsh a ON a.doc_id = c.doc_a
+      JOIN hsh b ON b.doc_id = c.doc_b))
+  WHERE jaccard >= 0.5)"""
+
+
+# ngram_jaccard_pairs' candidates: bp (doc_a, doc_b), every corpus pair
+# in the same or adjacent 16-char length blocks.
+_BLOCK_PAIRS_DUCK = """
+, blk AS (SELECT doc_id, length(text) // 16 AS blk FROM corpus),
+bp AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM blk a JOIN blk b ON abs(a.blk - b.blk) <= 1 AND a.doc_id < b.doc_id)"""
+
+
+def _lsh_pairs_cte(shingles: str = _SHINGLES_DUCK,
+                   max_bucket: int = 256) -> str:
+    """WITH body ending in pairs (doc_a, doc_b) — lsh_candidate_pairs
+    over the ``shingles`` CTE (a _shingles_duck): minhash mins, bands,
+    capped self-join."""
+    join = _capped_join_duck("bucket")
+    return (
+        shingles + _minhash_duck() + _bands_duck()
+        + _capped_duck("banded", "bucket", max_bucket)
+        + f"""
+, pairs AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b{join})"""
+    )
+
+
+# dup_clusters' connected components over ``pairs``: clusters (doc_id,
+# cluster_id = min reachable doc_id) for every corpus doc, by a
+# recursive transitive closure (the WITH must be RECURSIVE).
+# Materialized: without it DuckDB 1.0 runs out of memory joining two
+# CTEs derived from the recursive reach (td_prep_scrub_score's final
+# and cx2), even with 2 GB and a spill directory.
+_CLUSTERS_DUCK = """
+, sym AS (
+  SELECT doc_a AS a, doc_b AS b FROM pairs
+  UNION ALL
+  SELECT doc_b AS a, doc_a AS b FROM pairs
+),
+reach AS (
+  SELECT doc_id AS src, doc_id AS dst FROM corpus
+  UNION
+  SELECT r.src, s.b AS dst FROM reach r JOIN sym s ON r.dst = s.a
+),
+clusters AS MATERIALIZED (
+  SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src
+)"""
 
 
 def _topk_tail_duck(src: str, order: str, k: int = 5, part: str = "q_id",
@@ -261,7 +399,7 @@ def _emb_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_rows(spark: SparkSession, sf_dir: str, corpus) -> DataFrame:
     """Distinct 3-gram shingle rows of ``corpus(spark, sf_dir)``."""
     return _shared(spark, sf_dir, f"{corpus.__name__}.rows", lambda: (
-        dedup.shingle_rows(corpus(spark, sf_dir), 3, distinct=True)))
+        dedup.shingle_rows(corpus(spark, sf_dir), distinct=True)))
 
 
 def _minhash_wide(spark: SparkSession, sf_dir: str, corpus) -> DataFrame:
@@ -1824,10 +1962,9 @@ WITH t AS (
 @q(
     "td_decontaminate",
     _SHINGLES_DUCK
-    + f""",
-r AS (
-  SELECT DISTINCT doc_id, {_H_DUCK.format(s="s")} AS h
-  FROM (SELECT doc_id, unnest(shingles) AS s FROM sh)
+    + """
+, r AS (
+  SELECT DISTINCT doc_id, h FROM (SELECT doc_id, unnest(hs) AS h FROM hsh)
 ), b AS (
   SELECT DISTINCT h FROM r WHERE doc_id % 97 = 0
 ), o AS (
@@ -2329,22 +2466,9 @@ def td_exact_dups(spark, sf_dir):
 
 
 def _minhash_oracle() -> str:
-    h = _H_DUCK.format(s="s")
-    selects = []
-    for k, (a, b) in enumerate(dedup.MINHASH_PARAMS):
-        selects.append(
-            f"SELECT doc_id, CAST({k} AS BIGINT) AS k, "
-            f"CAST(list_min(list_transform(hs, "
-            f"x -> ({a} * x + {b}) % {dedup.MERSENNE})) AS BIGINT) AS minhash "
-            f"FROM mh0"
-        )
-    return (
-        _SHINGLES_DUCK
-        + f""",
-mh0 AS (SELECT doc_id, list_transform(shingles, s -> {h}) AS hs
-        FROM sh WHERE len(shingles) > 0)
-"""
-        + "\nUNION ALL\n".join(selects)
+    return _SHINGLES_DUCK + _minhash_duck() + "\n" + "\nUNION ALL\n".join(
+        f"SELECT doc_id, CAST({k} AS BIGINT) AS k, m{k} AS minhash FROM wide"
+        for k in range(len(dedup.MINHASH_PARAMS))
     )
 
 
@@ -2393,26 +2517,8 @@ def td_simhash(spark, sf_dir):
 
 @q(
     "td_ngram_jaccard_pairs",
-    _SHINGLES_DUCK
-    + f""",
-hsh AS (
-  SELECT doc_id,
-         list_transform(shingles, s -> {_H_DUCK.format(s='s')}) AS hs
-  FROM sh
-),
-blk AS (
-  SELECT h.doc_id, h.hs, length(d.text) // 16 AS blk
-  FROM hsh h JOIN documents d ON h.doc_id = d.doc_id
-),
-pairs AS (
-  -- adjacent blocks too: near-dups straddling a block boundary
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         len(list_intersect(a.hs, b.hs)) AS ni,
-         len(a.hs) AS na, len(b.hs) AS nb
-  FROM blk a JOIN blk b ON abs(a.blk - b.blk) <= 1 AND a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b, round(ni / (na + nb - ni), 4) AS jaccard
-FROM pairs WHERE round(ni / (na + nb - ni), 4) >= 0.5""",
+    _SHINGLES_DUCK + _BLOCK_PAIRS_DUCK + _jaccard_duck("jac", "bp")
+    + "\nSELECT doc_a, doc_b, jaccard FROM jac",
 )
 def td_ngram_jaccard_pairs(spark, sf_dir):
     return dedup.ngram_jaccard_pairs(
@@ -3023,85 +3129,18 @@ def ev_json_props(spark, sf_dir):
     return events_ops.json_prop_stats(_events_table(spark, sf_dir))
 
 
-def _lsh_pairs_cte(source_cte: str = _SHINGLES_DUCK,
-                   max_bucket: int = 256) -> str:
-    """WITH body ending in capped(doc_id, band, bucket, chunk) — the
-    shared prefix of the LSH pair/cluster oracles.
-
-    Shingles are md5-hashed ONCE into ``mh0.hs``; the k min-aggregates
-    then run cheap affine arithmetic over the int list (with 32
-    permutations, inlining md5 into each aggregate would run it 32x
-    per shingle)."""
-    h = _H_DUCK.format(s="s")
-    mins = ", ".join(
-        f"CAST(list_min(list_transform(hs, "
-        f"x -> ({a} * x + {b}) % {dedup.MERSENNE})) AS BIGINT) AS m{k}"
-        for k, (a, b) in enumerate(dedup.MINHASH_PARAMS)
-    )
-    rows_per_band = dedup.MINHASH_ROWS_PER_BAND
-    n_bands = len(dedup.MINHASH_PARAMS) // rows_per_band
-    bands = "\nUNION ALL\n".join(
-        f"SELECT doc_id, {band} AS band, md5("
-        + " || ',' || ".join(
-            f"m{band * rows_per_band + j}::VARCHAR"
-            for j in range(rows_per_band)
-        )
-        + ") AS bucket FROM wide"
-        for band in range(n_bands)
-    )
-    return f"""{source_cte},
-mh0 AS (SELECT doc_id, list_transform(shingles, s -> {h}) AS hs
-        FROM sh WHERE len(shingles) > 0),
-wide AS (SELECT doc_id, {mins} FROM mh0),
-banded AS ({bands}),
-capped AS (
-  SELECT doc_id, band, bucket,
-         (row_number() OVER (PARTITION BY band, bucket
-              ORDER BY md5(band::VARCHAR || ':' || doc_id), doc_id) - 1)
-             // {max_bucket} AS chunk
-  FROM banded)"""
-
-
-def _lsh_pairs_oracle(source_cte: str = _SHINGLES_DUCK,
+def _lsh_pairs_oracle(shingles: str = _SHINGLES_DUCK,
                       max_bucket: int = 256) -> str:
-    """DuckDB mirror of dedup.lsh_candidate_pairs: wide minhash mins in
-    k order → per-band md5 buckets → chunk-capped bucket self-join."""
-    return (
-        _lsh_pairs_cte(source_cte, max_bucket)
-        + """
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM capped a JOIN capped b
-  ON a.band = b.band AND a.bucket = b.bucket AND a.chunk = b.chunk
-WHERE a.doc_id < b.doc_id"""
-    )
+    """lsh_candidate_pairs: distinct (doc_a, doc_b) capped LSH pairs."""
+    return (_lsh_pairs_cte(shingles, max_bucket)
+            + "\nSELECT doc_a, doc_b FROM pairs")
 
 
 def _dup_clusters_oracle() -> str:
-    """Connected components over the capped LSH pair graph via a
-    recursive transitive closure; cluster_id = min reachable doc_id."""
-    body = (
-        _lsh_pairs_cte()
-        + """,
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM capped a JOIN capped b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.chunk = b.chunk
-  WHERE a.doc_id < b.doc_id
-),
-sym AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-reach AS (
-  SELECT doc_id AS src, doc_id AS dst FROM documents
-  UNION
-  SELECT r.src, s.b AS dst FROM reach r JOIN sym s ON r.dst = s.a
-)
-SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src"""
-    )
-    # the reach member is recursive: the whole WITH list needs RECURSIVE
-    return body.replace("WITH t AS", "WITH RECURSIVE t AS", 1)
+    """dup_clusters: connected components over the capped LSH pairs."""
+    body = (_lsh_pairs_cte() + _CLUSTERS_DUCK
+            + "\nSELECT doc_id, cluster_id FROM clusters")
+    return body.replace("WITH corpus AS", "WITH RECURSIVE corpus AS", 1)
 
 
 @q("td_lsh_candidate_pairs", _lsh_pairs_oracle())
@@ -3112,31 +3151,11 @@ def td_lsh_candidate_pairs(spark, sf_dir):
     )
 
 
-def _jaccard_lsh_oracle(source_cte: str = _SHINGLES_DUCK) -> str:
-    """DuckDB mirror of dedup.jaccard_lsh_verified: the capped LSH
-    candidate CTE (shared with td_lsh_candidate_pairs), then exact
-    hashed-shingle Jaccard on candidates only."""
-    h = _H_DUCK.format(s="s")
-    return f"""{_lsh_pairs_cte(source_cte)},
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM capped a JOIN capped b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.chunk = b.chunk
-  WHERE a.doc_id < b.doc_id
-),
-hsh AS (
-  SELECT doc_id, list_transform(shingles, s -> {h}) AS hs FROM sh
-),
-pairs AS (
-  SELECT c.doc_a, c.doc_b,
-         len(list_intersect(a.hs, b.hs)) AS ni,
-         len(a.hs) AS na, len(b.hs) AS nb
-  FROM cand c
-  JOIN hsh a ON a.doc_id = c.doc_a
-  JOIN hsh b ON b.doc_id = c.doc_b
-)
-SELECT doc_a, doc_b, round(ni / (na + nb - ni), 4) AS jaccard
-FROM pairs WHERE round(ni / (na + nb - ni), 4) >= 0.5"""
+def _jaccard_lsh_oracle(shingles: str = _SHINGLES_DUCK) -> str:
+    """jaccard_lsh_verified: the capped LSH pairs, then the exact
+    hashed-shingle Jaccard check on those candidates only."""
+    return (_lsh_pairs_cte(shingles) + _jaccard_duck("jac", "pairs")
+            + "\nSELECT doc_a, doc_b, jaccard FROM jac")
 
 
 @q("td_jaccard_lsh_verified", _jaccard_lsh_oracle())
@@ -3153,42 +3172,27 @@ def td_jaccard_lsh_verified(spark, sf_dir):
 
 
 def _dedup_incremental_oracle() -> str:
-    """DuckDB mirror of dedup.dedup_against_index over a doc_id % 4
-    split of the corpus: the shared minhash/band CTE prefix, index
-    reps capped per (band, bucket) by the same band-salted md5 order,
-    new-vs-reps candidate join, exact hashed-shingle Jaccard, best
-    index match per flagged new doc."""
-    h = _H_DUCK.format(s="s")
+    """dedup_against_index over a doc_id % 4 split of the corpus: index
+    reps = the chunk-0 rows of the capped index bands, new-vs-reps
+    candidates, the exact Jaccard check, best index match per flagged
+    new doc."""
     return (
-        _lsh_pairs_cte()
-        + f""",
-newd AS (SELECT doc_id FROM documents WHERE doc_id % 4 = 0),
-idx AS (SELECT doc_id FROM documents WHERE doc_id % 4 <> 0),
-reps AS (
-  SELECT doc_id, band, bucket FROM (
-    SELECT b.doc_id, b.band, b.bucket,
-           row_number() OVER (PARTITION BY b.band, b.bucket
-               ORDER BY md5(b.band::VARCHAR || ':' || b.doc_id),
-                        b.doc_id) AS rn
-    FROM banded b JOIN idx USING (doc_id))
-  WHERE rn <= 256),
+        _SHINGLES_DUCK + _minhash_duck() + _bands_duck()
+        + """
+, newd AS (SELECT doc_id FROM documents WHERE doc_id % 4 = 0),
+idx AS (SELECT doc_id FROM documents WHERE doc_id % 4 <> 0)"""
+        + _capped_duck("banded JOIN idx USING (doc_id)", "bucket", 256)
+        + """
+, reps AS (SELECT doc_id, band, bucket FROM capped WHERE chunk = 0),
 cand AS (
-  SELECT DISTINCT nb.doc_id AS doc_id, r.doc_id AS dup_of
+  SELECT DISTINCT nb.doc_id AS doc_a, r.doc_id AS doc_b
   FROM banded nb JOIN newd USING (doc_id)
-  JOIN reps r ON nb.band = r.band AND nb.bucket = r.bucket),
-hsh AS (SELECT doc_id, list_transform(shingles, s -> {h}) AS hs FROM sh),
-pairs AS (
-  SELECT c.doc_id, c.dup_of,
-         len(list_intersect(a.hs, b.hs)) AS ni,
-         len(a.hs) AS na, len(b.hs) AS nb
-  FROM cand c
-  JOIN hsh a ON a.doc_id = c.doc_id
-  JOIN hsh b ON b.doc_id = c.dup_of),
-jj AS (SELECT doc_id, dup_of, round(ni / (na + nb - ni), 4) AS jaccard
-       FROM pairs WHERE round(ni / (na + nb - ni), 4) >= 0.5),
-best AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-             ORDER BY jaccard DESC, dup_of) AS rn FROM jj)
-SELECT doc_id, dup_of, jaccard FROM best WHERE rn = 1"""
+  JOIN reps r ON nb.band = r.band AND nb.bucket = r.bucket)"""
+        + _jaccard_duck("jj", "cand")
+        + """
+, best AS (SELECT *, row_number() OVER (PARTITION BY doc_a
+               ORDER BY jaccard DESC, doc_b) AS rn FROM jj)
+SELECT doc_a AS doc_id, doc_b AS dup_of, jaccard FROM best WHERE rn = 1"""
     )
 
 
@@ -3228,49 +3232,17 @@ def td_dup_clusters(spark, sf_dir):
     )
 
 
-_SURV_SHINGLES_DUCK = """
-WITH surv AS (
-  SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-), corpus AS (
-  SELECT d.doc_id, d.text FROM documents d JOIN surv s ON d.doc_id = s.doc_id
-),
-t AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
-sh AS (
-  SELECT doc_id,
-         CASE WHEN len(w) >= 3
-              THEN list_distinct(list_transform(range(1, len(w) - 1),
-                   i -> w[i] || '_' || w[i+1] || '_' || w[i+2]))
-              ELSE CAST([] AS VARCHAR[]) END AS shingles
-  FROM t)"""
+_SURV_SHINGLES_DUCK = _shingles_duck("""
+  SELECT d.doc_id, d.text FROM documents d
+  JOIN (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)) s
+    ON d.doc_id = s.doc_id""")
 
 
 # The corpus-prep CTE chain (exact-dedup survivors -> LSH candidate
-# pairs -> recursive transitive closure -> cluster representatives ->
-# quality columns), shared by td_corpus_prep and the composed
+# pairs -> connected components -> cluster representatives -> quality
+# columns), shared by td_corpus_prep and the composed
 # td_corpus_to_shards oracle.
-_PREP_CTES = """,
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM capped a JOIN capped b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.chunk = b.chunk
-  WHERE a.doc_id < b.doc_id
-),
-sym AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-reach AS (
-  SELECT doc_id AS src, doc_id AS dst FROM corpus
-  UNION
-  SELECT r.src, s.b AS dst FROM reach r JOIN sym s ON r.dst = s.a
-),
--- Materialized: without it DuckDB 1.0 runs out of memory joining two
--- CTEs derived from the recursive reach (td_prep_scrub_score's final
--- and cx2), even with 2 GB and a spill directory.
-clusters AS MATERIALIZED (
-  SELECT src AS doc_id, MIN(dst) AS cluster_id FROM reach GROUP BY src
-),
+_PREP_CTES = _CLUSTERS_DUCK + """,
 kept AS (
   SELECT c.doc_id, c.text FROM corpus c
   JOIN clusters cl ON c.doc_id = cl.doc_id AND cl.doc_id = cl.cluster_id
@@ -3293,7 +3265,7 @@ def _corpus_prep_oracle() -> str:
 SELECT doc_id, n_tokens, n_chars FROM qual
 WHERE n_tokens >= 5 AND punct_ratio <= 0.2"""
     )
-    return body.replace("WITH surv AS", "WITH RECURSIVE surv AS", 1)
+    return body.replace("WITH corpus AS", "WITH RECURSIVE corpus AS", 1)
 
 
 @q("td_corpus_prep", _corpus_prep_oracle())
@@ -3355,7 +3327,7 @@ SELECT st.shard_id, st.n_chunks, st.token_sum, st.fill,
        (stot.shard_tokens = tot.corpus_tokens) AS reconciled
 FROM st, tot, stot"""
     )
-    return body.replace("WITH surv AS", "WITH RECURSIVE surv AS", 1)
+    return body.replace("WITH corpus AS", "WITH RECURSIVE corpus AS", 1)
 
 
 @q("td_corpus_to_shards", _corpus_to_shards_oracle())
@@ -3444,7 +3416,7 @@ score AS ("""
 SELECT score.doc_id, score.n_tokens, sd.dup_tokens, score.bits_per_token
 FROM score JOIN sd USING (doc_id)"""
     )
-    return body.replace("WITH surv AS", "WITH RECURSIVE surv AS", 1)
+    return body.replace("WITH corpus AS", "WITH RECURSIVE corpus AS", 1)
 
 
 @q("td_prep_scrub_score", _prep_scrub_score_oracle())
@@ -3581,22 +3553,12 @@ _PATHO_CAP = 32
 
 _PATHO_BASE = 10_000_000  # patho ids sort after every real doc_id
 
-_PATHO_SHINGLES_DUCK = f"""
-WITH corpus AS (
+_PATHO_SHINGLES_DUCK = _shingles_duck(f"""
   SELECT doc_id, text FROM documents
   UNION ALL
   SELECT {_PATHO_BASE} + i AS doc_id,
          (SELECT text FROM documents ORDER BY doc_id LIMIT 1) AS text
-  FROM range({_PATHO_COPIES}) t(i)
-),
-t AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
-sh AS (
-  SELECT doc_id,
-         CASE WHEN len(w) >= 3
-              THEN list_distinct(list_transform(range(1, len(w) - 1),
-                   i -> w[i] || '_' || w[i+1] || '_' || w[i+2]))
-              ELSE CAST([] AS VARCHAR[]) END AS shingles
-  FROM t)"""
+  FROM range({_PATHO_COPIES}) t(i)""")
 
 
 def _patho_corpus(spark, sf_dir):
@@ -3657,20 +3619,14 @@ def _simhash_pairs_oracle(max_hamming: int = 3, max_bucket: int = 256) -> str:
         f"& {(1 << width) - 1} <> 0)"
         for j in range(n_bands - 1)
     )
-    return f"""{_simhash_cte()},
-banded AS ({bands}),
-capped AS (
-  SELECT doc_id, simhash, band, bval,
-         (row_number() OVER (PARTITION BY band, bval
-              ORDER BY md5(band::VARCHAR || ':' || doc_id), doc_id) - 1)
-             // {max_bucket} AS chunk
-  FROM banded)
+    return (
+        f"{_simhash_cte()},\nbanded AS ({bands})"
+        + _capped_duck("banded", "bval", max_bucket)
+        + f"""
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST({ham} AS BIGINT) AS hamming
-FROM capped a JOIN capped b
-  ON a.band = b.band AND a.bval = b.bval AND a.chunk = b.chunk
-WHERE a.doc_id < b.doc_id AND {ham} <= {max_hamming}
-  AND {lowest_band}"""
+       CAST({ham} AS BIGINT) AS hamming{_capped_join_duck("bval")}
+  AND {ham} <= {max_hamming} AND {lowest_band}"""
+    )
 
 
 @q("td_simhash_pairs", _simhash_pairs_oracle())
@@ -4039,8 +3995,8 @@ def html_link_stats(spark, sf_dir):
 # 16-band config is itself a hash-checked output value.
 # ---------------------------------------------------------------------------
 
-_BL_SHINGLES_DUCK = _SHINGLES_DUCK.replace(
-    "FROM documents", "FROM read_parquet('{borderline_path}/*.parquet')"
+_BL_SHINGLES_DUCK = _shingles_duck(
+    "SELECT doc_id, text FROM read_parquet('{borderline_path}/*.parquet')"
 )
 
 
@@ -4083,40 +4039,16 @@ def td_jaccard_borderline(spark, sf_dir):
 
 
 def _bl_recall_oracle() -> str:
-    h = _H_DUCK.format(s="s")
-    bl_path = "read_parquet('{borderline_path}/*.parquet')"
-    return f"""{_lsh_pairs_cte(_BL_SHINGLES_DUCK)},
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM capped a JOIN capped b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.chunk = b.chunk
-  WHERE a.doc_id < b.doc_id
-),
-hsh AS (SELECT doc_id, list_transform(shingles, s -> {h}) AS hs FROM sh),
-lshp AS (
-  SELECT c.doc_a, c.doc_b
-  FROM cand c
-  JOIN hsh a ON a.doc_id = c.doc_a
-  JOIN hsh b ON b.doc_id = c.doc_b
-  WHERE round(len(list_intersect(a.hs, b.hs)) /
-        (len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs))), 4)
-        >= 0.5
-),
-blk AS (
-  SELECT h.doc_id, h.hs, length(d.text) // 16 AS blk
-  FROM hsh h JOIN {bl_path} d ON h.doc_id = d.doc_id
-),
-exact AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM blk a JOIN blk b ON abs(a.blk - b.blk) <= 1 AND a.doc_id < b.doc_id
-  WHERE round(len(list_intersect(a.hs, b.hs)) /
-        (len(a.hs) + len(b.hs) - len(list_intersect(a.hs, b.hs))), 4)
-        >= 0.5
-)
+    """Exact length-block Jaccard pairs vs the LSH-verified ones."""
+    return (
+        _lsh_pairs_cte(_BL_SHINGLES_DUCK) + _jaccard_duck("lshp", "pairs")
+        + _BLOCK_PAIRS_DUCK + _jaccard_duck("exact", "bp")
+        + """
 SELECT CAST(count(*) AS BIGINT) AS n_exact,
        CAST(count(l.doc_a) AS BIGINT) AS n_found,
        round(count(l.doc_a) / count(*), 4) AS recall
 FROM exact e LEFT JOIN lshp l ON e.doc_a = l.doc_a AND e.doc_b = l.doc_b"""
+    )
 
 
 @q("td_lsh_recall_borderline", _bl_recall_oracle())
@@ -4174,21 +4106,11 @@ def _latest_green_rounds(root: Path) -> Dict[str, int]:
     return rounds
 
 
-# Queries whose code paths changed after their last green driver row:
-# force a fresh row even though a green (now-stale) one exists.  The
-# td_* three share _PREP_CTES, whose ``clusters`` CTE is now MATERIALIZED;
-# every emb_* oracle is now assembled from the shared similarity fragments
-# (and the ADC LUT sums squared differences directly); emb_dup_pairs now
-# runs over the planted near-dup fixture instead of the embeddings table.
-# The PQ codebook seeds from the first 8 vec_ids of its training input,
-# and emb_ivfpq_topk trains on vec_id >= 16 (non-zero residuals) with 32
-# codewords per subspace.  The fixed-point td_* oracles are assembled
-# from the text-statistics fragments (_unigram_lm_duck,
-# _bits_per_token_duck, _inverse_cdf_duck,
-# _idf_duck, _topk_tail_duck, _substring_dedup_duck, _micro_log2_duck),
-# and td_bm25_topk's engine side is bm25_score over bm25_model.  The
-# seven directional pp_* oracles are assembled from _probe_duck, with the
-# page-edge clauses they lacked.
+# Queries whose oracle SQL or engine path changed after their last green
+# driver row: they sort at effective round 0, so the driver's first-50
+# sample re-checks them even though a green (now stale) row exists.  A
+# query leaves the set once a CORRECTNESS round has a green row for its
+# current code.  Keep it at 50 names or fewer, the size of that sample.
 _RETOUCHED: set = {
     "td_corpus_prep", "td_corpus_to_shards", "td_prep_scrub_score",
     "emb_cosine_topk", "emb_ivf_topk", "emb_ivf_multiprobe",
@@ -4203,6 +4125,11 @@ _RETOUCHED: set = {
     "pp_to_the_right_of", "pp_to_the_left_of", "pp_below_all_pages",
     "pp_above_all_pages", "pp_vertically_in_line_with",
     "pp_horizontally_in_line_with", "pp_set_xor",
+    "td_minhash_signatures", "td_ngram_jaccard_pairs",
+    "td_lsh_candidate_pairs", "td_jaccard_lsh_verified",
+    "td_dedup_incremental", "td_dup_clusters", "td_lsh_pairs_capped",
+    "td_simhash_pairs", "td_jaccard_borderline",
+    "td_lsh_recall_borderline", "td_decontaminate",
 }
 
 

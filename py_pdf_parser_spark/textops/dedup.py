@@ -8,18 +8,31 @@ Scale notes:
   * Pairwise Jaccard runs ONLY within LSH/blocking buckets — never a full
     cross join.
 
+Each near-dup rule lives in one private helper: ``_gram_rows`` (the
+token posexplode + ``lead``-window gram build under ``shingle_rows`` and
+``substring_dedup``), ``_chunk_capped`` (the band-salted bucket rank,
+also ``index_bucket_reps``' cap), ``_capped_self_join`` (the chunk-capped
+bucket self-join of ``lsh_candidate_pairs`` and ``simhash_pairs``) and
+``_verified_pairs`` over ``_jaccard_kept`` (exact hashed-shingle Jaccard,
+shared by ``jaccard_lsh_verified``, ``dedup_against_index`` and
+``ngram_jaccard_pairs``).  The shingle width is ``SHINGLE_N``; the
+banding is ``MINHASH_BANDS`` x ``MINHASH_ROWS_PER_BAND`` over
+``MINHASH_PARAMS``, applied in one place, ``minhash_banded`` — a consumer
+that wants another banding passes its output as ``banded=``.
+
 All hash math is md5-based so a SQL oracle (DuckDB) can reproduce it
 bit-for-bit: H(s) = int(first 8 hex chars of md5(s)) in [0, 2^32).
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import Callable, List, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+SHINGLE_N = 3  # words per shingle, for every shingle-based operator
 MERSENNE = 2147483647  # 2^31 - 1
 # MinHash banding configuration — ONE surface.  The LSH recall curve is
 # P(candidate | J=t) = 1 - (1 - t^rows)^bands; with 16 bands x 2 rows
@@ -68,27 +81,19 @@ def dedup_survivors(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingles(docs: DataFrame, n: int = 3, keep: tuple = ()) -> DataFrame:
-    """Distinct n-gram word shingles per doc (joined with '_');
-    ``keep`` passes extra projected columns through."""
-    toks = "split(text, ' ')"
-    parts = ", ".join(f"{toks}[i - 1 + {j}]" for j in range(n))
-    # Guard: sequence(1, 0) would generate a DESCENDING [1, 0] in Spark,
-    # so short docs take the empty-array branch explicitly.
-    expr = (
-        f"IF(size({toks}) >= {n}, "
-        f"array_distinct(transform(sequence(1, size({toks}) - {n - 1}), "
-        f"i -> concat_ws('_', {parts}))), "
-        f"cast(array() as array<string>))"
+def _tokens(docs: DataFrame, keep: tuple = ()) -> DataFrame:
+    """(doc_id[, keep...], pos, tok): one row per space-split token."""
+    return docs.select(
+        "doc_id", *keep,
+        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok"),
     )
-    return docs.select("doc_id", F.expr(expr).alias("shingles"), *keep)
 
 
-def shingle_rows(
-    docs: DataFrame, n: int = 3, keep: tuple = (), distinct: bool = False
-) -> DataFrame:
-    """Exploded shingle-hash rows (doc_id[, keep...], h) — 100%
-    whole-stage codegen.
+def _gram_rows(docs: DataFrame, width: int, hash_sql: Callable[[str], str],
+               keep: tuple = ()) -> DataFrame:
+    """(doc_id[, keep...], pos, h): one row per ``width``-token gram
+    (tokens joined with '_') starting at token ``pos``, hashed by the
+    SQL builder ``hash_sql``.  100% whole-stage codegen.
 
     The array-typed formulations (``transform``/``array_distinct`` +
     ``explode``) run interpreted (higher-order functions have no
@@ -96,34 +101,36 @@ def shingle_rows(
     infer a ``size(arr) > 0`` filter with the entire array expression
     inlined into it — the shingle+md5 pipeline evaluated 3x per row
     (measured ~9s for 260k shingles).  This shape has no array at all:
-    posexplode the tokens, build each n-gram with ``lead`` windows over
-    (doc_id, pos), hash per row with scalar md5 — every operator
-    codegen-friendly, one shuffle (the window's hash partition by
-    doc_id, which downstream doc-level aggregations then reuse).
-    """
+    posexplode the tokens, build each gram with ``lead`` windows over
+    (doc_id, pos) — null past the doc tail, so a doc shorter than
+    ``width`` has no grams — and hash per row with scalar md5: every
+    operator codegen-friendly, one shuffle (the window's hash partition
+    by doc_id, which downstream doc-level aggregations then reuse)."""
     w = Window.partitionBy("doc_id").orderBy("pos")
-    toks = docs.select(
-        "doc_id", *keep,
-        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok"),
+    gram = F.col("tok")
+    for j in range(1, width):
+        gram = F.concat(gram, F.lit("_"), F.lead("tok", j).over(w))
+    return (
+        _tokens(docs, keep).withColumn("g", gram)
+        .where(F.col("g").isNotNull())
+        .select("doc_id", *keep, "pos", F.expr(hash_sql("g")).alias("h"))
     )
-    parts = [F.col("tok")] + [
-        F.lead("tok", j).over(w) for j in range(1, n)
-    ]
-    gram = parts[0]
-    for p in parts[1:]:
-        gram = F.concat(gram, F.lit("_"), p)  # null-propagating concat
-    rows = (
-        toks.withColumn("s", gram)
-        .where(F.col("s").isNotNull())
-        .select("doc_id", *keep, F.expr(_h("s")).alias("h"))
-    )
+
+
+def shingle_rows(
+    docs: DataFrame, keep: tuple = (), distinct: bool = False
+) -> DataFrame:
+    """Exploded shingle-hash rows (doc_id[, keep...], h): the 32-bit
+    ``_h`` of every ``SHINGLE_N``-word shingle (``_gram_rows``), one row
+    per occurrence, or per distinct hash with ``distinct``."""
+    rows = _gram_rows(docs, SHINGLE_N, _h, keep).drop("pos")
     if distinct:
         rows = rows.dropDuplicates(["doc_id", "h"])
     return rows
 
 
 def minhash_wide(
-    docs: DataFrame, n: int = 3, rows: Optional[DataFrame] = None
+    docs: DataFrame, rows: Optional[DataFrame] = None
 ) -> DataFrame:
     """Wide MinHash signatures (doc_id, m0..m{k-1}), one row per doc.
 
@@ -143,12 +150,12 @@ def minhash_wide(
         for k, (a, b) in enumerate(MINHASH_PARAMS)
     ]
     if rows is None:
-        rows = shingle_rows(docs, n)
+        rows = shingle_rows(docs)
     return rows.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_signatures(
-    docs: DataFrame, n: int = 3, rows: Optional[DataFrame] = None,
+    docs: DataFrame, rows: Optional[DataFrame] = None,
     wide: Optional[DataFrame] = None,
 ) -> DataFrame:
     """MinHash signature rows (doc_id, k, minhash).
@@ -160,7 +167,7 @@ def minhash_signatures(
     carries k ints per doc per partition.
     """
     if wide is None:
-        wide = minhash_wide(docs, n, rows=rows)
+        wide = minhash_wide(docs, rows=rows)
     sig_cols = [
         F.struct(
             F.lit(k).alias("k"), F.col(f"m{k}").cast("long").alias("minhash")
@@ -173,35 +180,49 @@ def minhash_signatures(
     )
 
 
-def _chunk_capped(banded: DataFrame, keys: List[str], salt: str,
+def _chunk_capped(banded: DataFrame, key: str,
                   max_bucket: int) -> DataFrame:
-    """Split oversized buckets into deterministic chunks of ``max_bucket``.
+    """``banded`` plus ``chunk``: each (band, ``key``) bucket split into
+    deterministic chunks of ``max_bucket`` rows.
 
     A degenerate bucket (crawl boilerplate: thousands of identical docs)
     makes a within-bucket self-join quadratic IN THAT BUCKET.  Chunking by
     rank caps every join group at ``max_bucket`` members: pairs form only
     within a chunk, so the worst bucket costs ``(n/cap)·C(cap,2)`` instead
     of ``C(n,2)`` — linear in bucket size.  Buckets at or under the cap are
-    untouched.  Use ``bucket_cap_stats`` to audit what the cap split.
+    one chunk.  Use ``bucket_cap_stats`` to audit what the cap split.
 
-    Rank order is SALTED PER BAND: docs sort by md5(<salt>:doc_id) (with a
-    doc_id tiebreak), ``salt`` being the band column.  Under a plain
-    doc_id order, a cluster that co-buckets in EVERY band (identical
-    docs) would get identical chunk boundaries in all bands — cross-chunk
-    pairs dropped in every band, so connected components permanently
-    splits one semantic cluster into ceil(n/cap) pieces.  Band-keyed
-    salting de-correlates chunk boundaries across bands: a cross-chunk
-    pair in one band lands within-chunk in another, and the CC pass
-    re-merges the cluster.  Still fully deterministic and
-    SQL-reproducible (md5 string order on both engines).
+    Rank order is SALTED PER BAND: docs sort by md5(<band>:doc_id) (with a
+    doc_id tiebreak).  Under a plain doc_id order, a cluster that
+    co-buckets in EVERY band (identical docs) would get identical chunk
+    boundaries in all bands — cross-chunk pairs dropped in every band, so
+    connected components permanently splits one semantic cluster into
+    ceil(n/cap) pieces.  Band-keyed salting de-correlates chunk
+    boundaries across bands: a cross-chunk pair in one band lands
+    within-chunk in another, and the CC pass re-merges the cluster.
+    Still fully deterministic and SQL-reproducible (md5 string order on
+    both engines).
     """
     order_col = F.md5(
-        F.concat_ws(":", F.col(salt).cast("string"), F.col("doc_id"))
+        F.concat_ws(":", F.col("band").cast("string"), F.col("doc_id"))
     )
-    w = Window.partitionBy(*keys).orderBy(order_col, F.col("doc_id"))
+    w = Window.partitionBy("band", key).orderBy(order_col, F.col("doc_id"))
     return banded.withColumn(
         "chunk",
         ((F.row_number().over(w) - 1) / F.lit(max_bucket)).cast("long"),
+    )
+
+
+def _capped_self_join(banded: DataFrame, key: str,
+                      max_bucket: int) -> DataFrame:
+    """Pairs of ``banded`` rows (aliased ``a`` and ``b``, a.doc_id <
+    b.doc_id) that share a (band, ``key``) bucket and its
+    ``_chunk_capped`` chunk — the candidate join of every banded
+    operator, never quadratic in a hot bucket."""
+    capped = _chunk_capped(banded, key, max_bucket)
+    return (
+        capped.alias("a").join(capped.alias("b"), ["band", key, "chunk"])
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
     )
 
 
@@ -235,9 +256,11 @@ def minhash_banded(
     """(doc_id, band, bucket) rows from the wide signature table: one
     md5 bucket per band over that band's signature slice, in k order —
     NOT via ``collect_list`` (whose post-shuffle ordering is
-    nondeterministic at scale).  No shuffle: a narrow explode over the
-    wide table.  Exposed for audits (``bucket_cap_stats``) as well as
-    the candidate join."""
+    nondeterministic at scale: two docs with identical signatures could
+    concat in different orders and miss each other).  No shuffle: a
+    narrow explode over the wide table.  The one place the banding is
+    chosen; exposed for audits (``bucket_cap_stats``) and as the
+    ``banded=`` table of every LSH consumer."""
     if len(MINHASH_PARAMS) % rows_per_band:
         raise ValueError(
             f"rows_per_band={rows_per_band} does not divide the "
@@ -270,40 +293,31 @@ def minhash_banded(
 
 
 def lsh_candidate_pairs(
-    docs: DataFrame, rows_per_band: int = MINHASH_ROWS_PER_BAND,
-    max_bucket: int = 256,
+    docs: DataFrame, max_bucket: int = 256,
     rows: Optional[DataFrame] = None, wide: Optional[DataFrame] = None,
     banded: Optional[DataFrame] = None,
 ) -> DataFrame:
     """LSH banding: docs sharing any band bucket become candidate pairs.
 
     Shuffle is on (band, bucket) — tiny keys — then a self-join within
-    buckets, chunk-capped at ``max_bucket`` members per join group (see
-    ``_chunk_capped``) so one hot bucket can never go quadratic.
+    buckets, chunk-capped at ``max_bucket`` members per join group
+    (``_capped_self_join``) so one hot bucket can never go quadratic.
     Returns distinct (doc_a, doc_b) with doc_a < doc_b.
 
-    Buckets are built from the wide signature columns in k order — NOT
-    via ``collect_list`` (whose post-shuffle ordering is nondeterministic
-    at scale: two docs with identical signatures could concat in
-    different orders and miss each other) — and with no second groupBy
-    shuffle.
+    ``rows``/``wide``/``banded``: precomputed shingle_rows /
+    minhash_wide / minhash_banded outputs — in a deployment these are
+    materialized shingle, signature and band-bucket tables shared by
+    every LSH consumer (pairs, verified-jaccard, clusters); recomputing
+    the signature aggregate or the 16-band explode per join branch is
+    avoidable cost (and, for banding, avoidable per-query plan
+    analysis).
     """
     if banded is None:
-        # ``wide``/``banded``: precomputed minhash_wide / minhash_banded
-        # outputs — in a deployment these are materialized signature and
-        # band-bucket tables shared by every LSH consumer (pairs,
-        # verified-jaccard, clusters); recomputing the signature
-        # aggregate or the 16-band explode per join branch is avoidable
-        # cost (and, for banding, avoidable per-query plan analysis).
         if wide is None:
             wide = minhash_wide(docs, rows=rows)
-        banded = minhash_banded(wide, rows_per_band)
-    capped = _chunk_capped(banded, ["band", "bucket"], "band", max_bucket)
-    a = capped.alias("a")
-    b = capped.alias("b")
+        banded = minhash_banded(wide)
     return (
-        a.join(b, ["band", "bucket", "chunk"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        _capped_self_join(banded, "bucket", max_bucket)
         .select(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
@@ -311,11 +325,52 @@ def lsh_candidate_pairs(
     )
 
 
+def _jaccard_kept(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) of the ``pairs`` (doc_a, doc_b, ni, na,
+    nb) — ni = |A ∩ B|, na = |A|, nb = |B| — whose Jaccard, rounded to
+    4 dp, is >= ``threshold``."""
+    jaccard = F.round(
+        F.col("ni") / (F.col("na") + F.col("nb") - F.col("ni")), 4
+    )
+    return (
+        pairs.select("doc_a", "doc_b", jaccard.alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def _verified_pairs(cands: DataFrame, rows_a: DataFrame, rows_b: DataFrame,
+                    threshold: float) -> DataFrame:
+    """Exact hashed-shingle Jaccard check of the candidate pairs
+    ``cands`` (doc_a, doc_b): doc_a's set is its (doc_id, h) rows in
+    ``rows_a``, doc_b's in ``rows_b`` (distinct shingle_rows) ->
+    ``_jaccard_kept``.  Shuffles: two (doc, h) joins bounded by the
+    candidate set, plus the per-doc set sizes — never corpus-quadratic;
+    a false candidate costs one join row, never a wrong pair."""
+    def sizes(rows, side):
+        return rows.groupBy(F.col("doc_id").alias(f"doc_{side}")).agg(
+            F.count("*").alias(f"n{side}")
+        )
+
+    inter = (
+        cands.join(rows_a.select(F.col("doc_id").alias("doc_a"), "h"),
+                   "doc_a")
+        .join(rows_b.select(F.col("doc_id").alias("doc_b"), "h"),
+              ["doc_b", "h"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("ni"))
+    )
+    return _jaccard_kept(
+        inter.join(sizes(rows_a, "a"), "doc_a")
+        .join(sizes(rows_b, "b"), "doc_b"),
+        threshold,
+    )
+
+
 def ngram_jaccard_pairs(
-    docs: DataFrame, n: int = 3, threshold: float = 0.5,
+    docs: DataFrame, threshold: float = 0.5,
     block_chars: int = 16, rows: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """Near-dup pairs by n-gram Jaccard within cheap length blocks.
+    """Near-dup pairs by shingle Jaccard within cheap length blocks.
 
     Blocking key = n_chars // block_chars, matched against the SAME and
     ADJACENT blocks: near-identical docs have near-identical lengths, so
@@ -345,7 +400,7 @@ def ngram_jaccard_pairs(
         rows = rows.join(docs.select("doc_id", oblk), "doc_id")
     else:
         blocked = docs.withColumn("oblk", oblk)
-        rows = shingle_rows(blocked, n, keep=("oblk",), distinct=True)
+        rows = shingle_rows(blocked, keep=("oblk",), distinct=True)
     ex = (
         rows.withColumn(
             "nd", F.count("*").over(Window.partitionBy("doc_id"))
@@ -373,25 +428,17 @@ def ngram_jaccard_pairs(
             F.first("b.nd").alias("nb"),
         )
     )
-    return (
-        pairs.withColumn(
-            "jaccard",
-            F.round(F.col("ni") / (F.col("na") + F.col("nb") - F.col("ni")), 4),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_kept(pairs, threshold)
 
 
 def jaccard_lsh_verified(
-    docs: DataFrame, n: int = 3, threshold: float = 0.5,
-    rows_per_band: int = MINHASH_ROWS_PER_BAND, max_bucket: int = 256,
+    docs: DataFrame, threshold: float = 0.5, max_bucket: int = 256,
     rows: Optional[DataFrame] = None, wide: Optional[DataFrame] = None,
     banded: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """Near-dup pairs: LSH banding proposes candidates, exact n-gram
-    Jaccard verifies them — the at-scale default for corpus-wide
-    near-dup pair mining.
+    """Near-dup pairs: LSH banding proposes candidates, exact shingle
+    Jaccard verifies them (``_verified_pairs``) — the at-scale default
+    for corpus-wide near-dup pair mining.
 
     ``ngram_jaccard_pairs`` is exact but blocks on LENGTH, so its
     (blk, h) self-join output grows with block density: at web scale a
@@ -405,55 +452,17 @@ def jaccard_lsh_verified(
     synth.borderline_text) by tests/test_borderline.py and the
     td_lsh_recall_borderline driver query, plus 100% agreement with
     the exact operator at sf0.1 (PLANS.md, "Round 3: jaccard A/B/C").
-    Shuffles: small candidate keys +
-    two hash joins against the shingle rows on (doc, h) — never
-    corpus-quadratic.
     """
     if rows is None:
-        rows = shingle_rows(docs, n, distinct=True)
+        rows = shingle_rows(docs, distinct=True)
     cands = lsh_candidate_pairs(
-        docs, rows_per_band, max_bucket, rows=rows, wide=wide,
-        banded=banded,
+        docs, max_bucket, rows=rows, wide=wide, banded=banded
     )
-    counts = rows.groupBy("doc_id").agg(F.count("*").alias("nd"))
-    inter = (
-        cands.join(
-            rows.select(F.col("doc_id").alias("doc_a"), "h"), "doc_a"
-        )
-        .join(
-            rows.select(F.col("doc_id").alias("doc_b"), "h"),
-            ["doc_b", "h"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("ni"))
-    )
-    return (
-        inter.join(
-            counts.select(
-                F.col("doc_id").alias("doc_a"), F.col("nd").alias("na")
-            ),
-            "doc_a",
-        )
-        .join(
-            counts.select(
-                F.col("doc_id").alias("doc_b"), F.col("nd").alias("nb")
-            ),
-            "doc_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("ni") / (F.col("na") + F.col("nb") - F.col("ni")), 4
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _verified_pairs(cands, rows, rows, threshold)
 
 
 def dup_clusters(
-    docs: DataFrame, rows_per_band: int = MINHASH_ROWS_PER_BAND,
-    max_bucket: int = 256,
+    docs: DataFrame, max_bucket: int = 256,
     max_iter: int = 25, checkpoint_dir: Optional[str] = None,
     stats: Optional[dict] = None, rows: Optional[DataFrame] = None,
     wide: Optional[DataFrame] = None, banded: Optional[DataFrame] = None,
@@ -470,8 +479,7 @@ def dup_clusters(
     pointer jumping) over the LSH candidate graph.
     """
     edges = lsh_candidate_pairs(
-        docs, rows_per_band, max_bucket, rows=rows, wide=wide,
-        banded=banded,
+        docs, max_bucket, rows=rows, wide=wide, banded=banded
     )
     return connected_components(
         docs.select("doc_id").distinct(), edges,
@@ -661,9 +669,6 @@ def simhash_pairs(
         "doc_id", "simhash",
         F.col("bb.band").alias("band"), F.col("bb.bval").alias("bval"),
     )
-    capped = _chunk_capped(banded, ["band", "bval"], "band", max_bucket)
-    a = capped.alias("a")
-    b = capped.alias("b")
     mask = (1 << width) - 1
     lowest_band = F.expr(
         " AND ".join(
@@ -673,8 +678,8 @@ def simhash_pairs(
         )
     )
     return (
-        a.join(b, ["band", "bval", "chunk"])
-        .where((F.col("a.doc_id") < F.col("b.doc_id")) & lowest_band)
+        _capped_self_join(banded, "bval", max_bucket)
+        .where(lowest_band)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -745,12 +750,11 @@ def line_dedup(
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
-    n: int = 3,
     min_overlap: int = 5,
     rows: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Benchmark decontamination: per-document count of distinct
-    n-gram hashes shared with an evaluation set — the train/test
+    shingle hashes shared with an evaluation set — the train/test
     overlap scrub every serious training corpus runs before shipping.
 
     Returns every corpus document as (doc_id, n_overlap, contaminated)
@@ -769,13 +773,9 @@ def decontaminate(
     """
     from pyspark.sql.functions import broadcast
 
-    bench_h = (
-        shingle_rows(benchmark, n=n).select("h").distinct()
-    )
+    bench_h = shingle_rows(benchmark).select("h").distinct()
     corpus_rows = (
-        rows
-        if rows is not None
-        else shingle_rows(docs, n=n, distinct=True)
+        rows if rows is not None else shingle_rows(docs, distinct=True)
     )
     overlap = (
         corpus_rows.join(broadcast(bench_h), "h")
@@ -831,9 +831,9 @@ def substring_dedup(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     gram rows against the (true-dup-density-bounded) over-threshold
     key set, and one doc_id aggregation for the ordered reassembly
     (collect_list(struct(pos, tok)) + array_sort, the line_dedup
-    trick).  The gram build itself is the shingle_rows shape: token
-    posexplode + lead windows over (doc_id, pos) — codegen end-to-end,
-    the window's doc_id partitioning reused by the final aggregation.
+    trick).  The gram build is shingle_rows' ``_gram_rows`` at width
+    ``k`` with the 60-bit ``_h60`` — codegen end-to-end, the window's
+    doc_id partitioning reused by the final aggregation.
     60-bit hashes keep the shuffle narrow; at 10^12-gram scale accept
     the ~birthday collision count or verify survivors against the gram
     text (one extra bucket-local join) — documented, not silent.
@@ -845,20 +845,7 @@ def substring_dedup(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     form crushes them map-side before the exchange — the window form
     lands every occurrence of a hot gram on one reducer.  The duplicate
     cost is narrow codegen CPU; the shuffle volume is identical."""
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok"),
-    )
-    parts = [F.col("tok")] + [F.lead("tok", j).over(w) for j in range(1, k)]
-    gram = parts[0]
-    for p in parts[1:]:
-        gram = F.concat(gram, F.lit("_"), p)  # null past the doc tail
-    kg = (
-        toks.withColumn("g", gram)
-        .where(F.col("g").isNotNull())
-        .select("doc_id", "pos", F.expr(_h60("g")).alias("h"))
-    )
+    kg = _gram_rows(docs, k, _h60)
     dup_h = (
         kg.groupBy("h")
         .agg(F.min("doc_id").alias("_lo"), F.max("doc_id").alias("_hi"))
@@ -876,7 +863,7 @@ def substring_dedup(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
         .dropDuplicates(["doc_id", "cpos"])
         .withColumnRenamed("doc_id", "cdoc")
     )
-    flagged = toks.join(
+    flagged = _tokens(docs).join(
         covered,
         (F.col("doc_id") == F.col("cdoc")) & (F.col("pos") == F.col("cpos")),
         "left",
@@ -905,37 +892,32 @@ def index_bucket_reps(
     index_banded: DataFrame, max_bucket: int = 256
 ) -> DataFrame:
     """Cap the frozen index's band-bucket table at ``max_bucket``
-    representatives per (band, bucket) — the incremental-dedup dual of
-    ``_chunk_capped``.  A boilerplate bucket holding millions of index
-    docs would make every arriving doc that lands in it join-fan-out
-    by the full bucket.  The cap bounds that fan-out at a cost in
-    recall: new docs are verified against the reps only, so when a
-    bucket overflows ``max_bucket`` a new doc whose true near-dup was
-    not kept as a rep in any bucket they share is NOT flagged, and a
-    flagged doc's ``dup_of`` can name a rep rather than its true best
-    match.  Buckets within the cap lose nothing.  Rank order is the
-    same band-salted md5 as ``_chunk_capped`` (deterministic,
-    SQL-reproducible).  A deployment materializes this table once per
-    index build; it is strictly smaller than the full band table."""
-    order_col = F.md5(
-        F.concat_ws(":", F.col("band").cast("string"), F.col("doc_id"))
-    )
-    w = Window.partitionBy("band", "bucket").orderBy(
-        order_col, F.col("doc_id")
-    )
+    representatives per (band, bucket): the ``_chunk_capped`` chunk-0
+    rows, i.e. the first ``max_bucket`` in the same band-salted md5
+    order — the incremental-dedup dual of the chunked self-join.  A
+    boilerplate bucket holding millions of index docs would make every
+    arriving doc that lands in it join-fan-out by the full bucket.  The
+    cap bounds that fan-out at a cost in recall: new docs are verified
+    against the reps only, so when a bucket overflows ``max_bucket`` a
+    new doc whose true near-dup was not kept as a rep in any bucket they
+    share is NOT flagged, and a flagged doc's ``dup_of`` can name a rep
+    rather than its true best match.  Buckets within the cap lose
+    nothing.  Audit: ``bucket_cap_stats(index_banded, ["band",
+    "bucket"], max_bucket)`` lists exactly the truncated buckets, each
+    dropping ``n - max_bucket`` index docs.  A deployment materializes
+    this table once per index build; it is strictly smaller than the
+    full band table."""
     return (
-        index_banded.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max_bucket)
-        .drop("rn")
+        _chunk_capped(index_banded, "bucket", max_bucket)
+        .where(F.col("chunk") == 0)
+        .drop("chunk")
     )
 
 
 def dedup_against_index(
     new_docs: DataFrame,
     index_docs: DataFrame,
-    n: int = 3,
     threshold: float = 0.5,
-    rows_per_band: int = MINHASH_ROWS_PER_BAND,
     max_bucket: int = 256,
     index_banded: Optional[DataFrame] = None,
     index_rows: Optional[DataFrame] = None,
@@ -953,61 +935,37 @@ def dedup_against_index(
     corpus x corpus comparison, and the index is never recomputed.
 
     Recall is the banding's 1-(1-t^2)^16 (same 16x2 config as
-    ``lsh_candidate_pairs``); verification is exact hashed-shingle
-    Jaccard, so false candidates cost one join row, never a wrong
-    flag.  Shuffles: new-side signature aggregate (new-snapshot-sized),
-    the (band, bucket) candidate join, and two (doc, h) verification
-    joins bounded by candidate density."""
+    ``lsh_candidate_pairs``); verification is ``_verified_pairs``, so
+    false candidates cost one join row, never a wrong flag.  Shuffles:
+    new-side signature aggregate (new-snapshot-sized), the (band,
+    bucket) candidate join, and two (doc, h) verification joins bounded
+    by candidate density."""
     if index_rows is None:
-        index_rows = shingle_rows(index_docs, n, distinct=True)
+        index_rows = shingle_rows(index_docs, distinct=True)
     if index_banded is None:
-        index_banded = minhash_banded(
-            minhash_wide(index_docs, n), rows_per_band
-        )
+        index_banded = minhash_banded(minhash_wide(index_docs))
     if new_rows is None:
-        new_rows = shingle_rows(new_docs, n, distinct=True)
+        new_rows = shingle_rows(new_docs, distinct=True)
     if new_banded is None:
-        new_banded = minhash_banded(
-            minhash_wide(new_docs, n, rows=new_rows), rows_per_band
-        )
+        new_banded = minhash_banded(minhash_wide(new_docs, rows=new_rows))
     reps = index_bucket_reps(index_banded, max_bucket)
     cand = (
         new_banded.join(
-            reps.select(
-                "band", "bucket", F.col("doc_id").alias("dup_of")
-            ),
+            reps.select("band", "bucket", F.col("doc_id").alias("doc_b")),
             ["band", "bucket"],
         )
-        .select("doc_id", "dup_of")
+        .select(F.col("doc_id").alias("doc_a"), "doc_b")
         .distinct()
     )
-    n_new = new_rows.groupBy("doc_id").agg(F.count("*").alias("na"))
-    n_idx = index_rows.groupBy("doc_id").agg(F.count("*").alias("nb"))
-    inter = (
-        cand.join(new_rows.select("doc_id", "h"), "doc_id")
-        .join(
-            index_rows.select(F.col("doc_id").alias("dup_of"), "h"),
-            ["dup_of", "h"],
-        )
-        .groupBy("doc_id", "dup_of")
-        .agg(F.count("*").alias("ni"))
-    )
-    j = (
-        inter.join(n_new, "doc_id")
-        .join(n_idx.select(F.col("doc_id").alias("dup_of"), "nb"), "dup_of")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("ni") / (F.col("na") + F.col("nb") - F.col("ni")), 4
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("jaccard"), F.asc("dup_of")
+    j = _verified_pairs(cand, new_rows, index_rows, threshold)
+    w = Window.partitionBy("doc_a").orderBy(
+        F.desc("jaccard"), F.asc("doc_b")
     )
     return (
         j.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select("doc_id", "dup_of", "jaccard")
+        .select(
+            F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("dup_of"),
+            "jaccard",
+        )
     )

@@ -261,7 +261,7 @@ def kmeans_centroids(
     per-vector shuffle (a Window.partitionBy(vec_id) form was plan-
     audited at a full corpus exchange per iteration and rejected,
     PLANS.md r4).  At web scale k-means training additionally runs over
-    a deterministic hash sample (dedup.hash_sample) and the codebook is
+    a deterministic hash sample (analysis.hash_sample) and the codebook is
     reused corpus-wide.
 
     Returns ``(cell_id, centroid array<double>)``.

@@ -47,8 +47,9 @@ def test_minhash_config_is_consistent():
 
 
 def test_indivisible_rows_per_band_rejected(spark, bl):
+    wide = dedup.minhash_wide(bl)
     with pytest.raises(ValueError, match="does not divide"):
-        dedup.lsh_candidate_pairs(bl, rows_per_band=5).collect()
+        dedup.minhash_banded(wide, rows_per_band=5)
 
 
 def test_exact_pairs_match_construction_math(spark, bl):
@@ -89,12 +90,14 @@ def test_lsh_verified_recall_at_threshold(spark, bl):
 
 def test_four_band_config_would_fail_here(spark, bl):
     """Counterfactual: the r3 config (4 bands via rows_per_band=8 on
-    the same 32 perms) visibly under-recalls on this corpus — proof
-    the fixture has teeth, not just that the new config passes."""
+    the same 32 perms, passed as the ``banded`` table) visibly
+    under-recalls on this corpus — proof the fixture has teeth, not
+    just that the new config passes."""
     n_docs = bl.count()
     expected = synth.borderline_expected_pairs(n_docs)
+    four_bands = dedup.minhash_banded(dedup.minhash_wide(bl), rows_per_band=8)
     got = dedup.jaccard_lsh_verified(
-        bl, threshold=0.5, rows_per_band=8
+        bl, threshold=0.5, banded=four_bands
     ).collect()
     recall = len(got) / len(expected)
     assert recall < 0.95, (

@@ -252,35 +252,56 @@ class TestModeProperties:
 
 
 class TestChunkCapProperty:
-    """Chunked bucket self-joins: every within-chunk pair is a
-    within-bucket pair, chunk sizes never exceed the cap, and
-    small buckets are untouched (dedup._chunk_capped contract)."""
+    """dedup._chunk_capped against a hashlib model of its rule: within
+    each (band, bucket), rank by md5("<band>:<doc_id>") then doc_id, and
+    chunk = rank // cap."""
 
-    @given(
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=3),  # bucket
-                st.integers(min_value=0, max_value=10_000),  # doc id
-            ),
-            min_size=1, max_size=60, unique=True,
-        ),
-        st.integers(min_value=1, max_value=8),
-    )
-    def test_chunk_sizes_bounded_and_deterministic(self, rows, cap):
-        # pure-python mirror of the rank-chunk rule
-        from collections import defaultdict
+    def test_chunk_sizes_bounded_and_deterministic(self):
+        pytest.importorskip("pyspark")
+        import hashlib
+        import random
+        from collections import Counter
 
-        by_bucket = defaultdict(list)
-        for bucket, doc in rows:
-            by_bucket[bucket].append(doc)
-        for bucket, docs in by_bucket.items():
-            docs.sort()
-            chunks = defaultdict(list)
-            for rank, d in enumerate(docs):
-                chunks[rank // cap].append(d)
-            assert all(len(c) <= cap for c in chunks.values())
-            if len(docs) <= cap:
-                assert len(chunks) == 1  # under the cap: untouched
+        from py_pdf_parser_spark.session import get_spark
+        from py_pdf_parser_spark.textops import dedup
+
+        cap = 5
+        # under, at, just over and far over the cap
+        sizes = {"under": 3, "at": 5, "over": 6, "far": 23}
+        rng = random.Random(7)
+        docs = rng.sample(range(100_000), sum(sizes.values()))
+        rows = []
+        for band in range(3):  # every doc in one bucket per band
+            rng.shuffle(docs)
+            at = 0
+            for bucket, n in sizes.items():
+                rows += [(d, band, bucket) for d in docs[at:at + n]]
+                at += n
+        banded = get_spark(cores=4).createDataFrame(
+            rows, "doc_id long, band int, bucket string"
+        )
+        got = {
+            (r.doc_id, r.band, r.bucket): r.chunk
+            for r in dedup._chunk_capped(banded, "bucket", cap).collect()
+        }
+
+        want = {}
+        for band in range(3):
+            for bucket in sizes:
+                members = [d for d, b, k in rows if (b, k) == (band, bucket)]
+                members.sort(key=lambda d: (
+                    hashlib.md5(f"{band}:{d}".encode()).hexdigest(), d
+                ))
+                for rank, d in enumerate(members):
+                    want[d, band, bucket] = rank // cap
+        assert got == want
+        per_chunk = Counter((b, k, c) for (_, b, k), c in got.items())
+        assert max(per_chunk.values()) <= cap
+        n_chunks = Counter((b, k) for b, k, _ in per_chunk)
+        for band in range(3):
+            assert n_chunks[band, "under"] == n_chunks[band, "at"] == 1
+            assert n_chunks[band, "over"] == 2
+            assert n_chunks[band, "far"] == 5
 
 
 # ---------------------------------------------------------------------------

@@ -23,6 +23,8 @@ def test_driver_round_keys_are_registry_names():
     assert Q._DRIVER_ROW_ROUND
     assert set(Q._DRIVER_ROW_ROUND) <= set(Q.REGISTRY)
     assert Q._RETOUCHED <= set(Q.REGISTRY)
+    # the driver samples only the first 50 registry entries
+    assert len(Q._RETOUCHED) <= 50
 
 
 def test_green_r05_queries_map_to_round_5():

@@ -83,7 +83,7 @@ class TestBucketCaps:
             F.md5(F.concat_ws(",", F.col("m0").cast("string"),
                               F.col("m1").cast("string"))).alias("bucket"),
         )
-        one_band = dedup._chunk_capped(banded, ["band", "bucket"], "band", 10)
+        one_band = dedup._chunk_capped(banded, "bucket", 10)
         a, b = one_band.alias("a"), one_band.alias("b")
         per_band = (
             a.join(b, ["band", "bucket", "chunk"])
@@ -236,7 +236,7 @@ class TestSharedShingleRows:
 
     def test_operators_match_with_and_without_shared_rows(self, spark):
         docs = self._corpus(spark)
-        rows = dedup.shingle_rows(docs, 3, distinct=True).persist()
+        rows = dedup.shingle_rows(docs, distinct=True).persist()
         try:
             for fn in (
                 lambda d, r: dedup.minhash_signatures(d, rows=r),
@@ -285,7 +285,7 @@ class TestSharedSignatureTables:
             [(i, " ".join(f"w{(i // 2 * 5 + j) % 19}" for j in range(25)))
              for i in range(40)],
         )
-        rows = dedup.shingle_rows(docs, 3, distinct=True)
+        rows = dedup.shingle_rows(docs, distinct=True)
         a = sorted(map(tuple, dedup.ngram_jaccard_pairs(docs).collect()))
         b = sorted(map(tuple,
                        dedup.ngram_jaccard_pairs(docs, rows=rows).collect()))
@@ -2316,6 +2316,58 @@ class TestDedupAgainstIndex:
         # doc 1 is the identical match (J=1.0); doc 2 is close but lower
         assert out[100][0] == 1 and out[100][1] == 1.0
 
+    def test_index_rep_cap_binds_and_is_audited(self, spark):
+        """40 identical index docs share one bucket per band; with
+        max_bucket=8 a new copy is verified against each band's first 8
+        reps in md5("<band>:<doc_id>") order only, so its dup_of is the
+        smallest id among those reps, not the smallest copy.
+        bucket_cap_stats on the index bands lists exactly the truncated
+        buckets, each dropping n - 8 index docs."""
+        import hashlib
+
+        t = " ".join(f"tok{i}" for i in range(30))
+        copies = list(range(10, 50))
+        idx = _docs(spark, [(d, t) for d in copies]
+                    + [(1, "a unique index doc shares no shingles")])
+        new = _docs(spark, [(1000, t)])
+        cap = 8
+
+        def reps(band):
+            return sorted(copies, key=lambda d: (
+                hashlib.md5(f"{band}:{d}".encode()).hexdigest(), d
+            ))[:cap]
+
+        want = min(d for band in range(dedup.MINHASH_BANDS)
+                   for d in reps(band))
+        assert want != min(copies)  # an uncapped index would name 10
+        got = dedup.dedup_against_index(new, idx, max_bucket=cap).collect()
+        assert [tuple(r) for r in got] == [(1000, want, 1.0)]
+
+        banded = dedup.minhash_banded(dedup.minhash_wide(idx)).persist()
+        try:
+            sizes = banded.groupBy("band", "bucket").count()
+            kept = (
+                dedup.index_bucket_reps(banded, cap)
+                .groupBy("band", "bucket").count()
+                .withColumnRenamed("count", "kept")
+            )
+            truncated = {
+                (r.band, r.bucket): r["count"] - r.kept
+                for r in sizes.join(kept, ["band", "bucket"]).collect()
+                if r.kept < r["count"]
+            }
+            stats = {
+                (r.band, r.bucket): r.n
+                for r in dedup.bucket_cap_stats(
+                    banded, ["band", "bucket"], cap
+                ).collect()
+            }
+        finally:
+            banded.unpersist()
+        assert len(stats) == dedup.MINHASH_BANDS
+        assert set(stats.values()) == {len(copies)}
+        assert truncated == {key: n - cap for key, n in stats.items()}
+
     def test_frozen_artifacts_reproduce_recompute(self, spark):
         docs = spark.read.parquet(
             "/root/testdata/sf0.001/documents.parquet"
@@ -2324,8 +2376,8 @@ class TestDedupAgainstIndex:
         idx = docs.where(F.col("doc_id") % 4 != 0)
         fresh = {tuple(r) for r in
                  dedup.dedup_against_index(new, idx).collect()}
-        rows = dedup.shingle_rows(idx, 3, distinct=True).persist()
-        banded = dedup.minhash_banded(dedup.minhash_wide(idx, 3)).persist()
+        rows = dedup.shingle_rows(idx, distinct=True).persist()
+        banded = dedup.minhash_banded(dedup.minhash_wide(idx)).persist()
         frozen = {tuple(r) for r in dedup.dedup_against_index(
             new, idx, index_banded=banded, index_rows=rows).collect()}
         assert fresh == frozen and len(fresh) > 0
