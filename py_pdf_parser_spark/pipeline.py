@@ -26,7 +26,8 @@ Design (SURVEY.md §3.1, §4):
 * **Skew handling.** AQE covers shuffle skew, but pathological documents
   (bigdoc/bigmedia families) skew *kernel compute*, which AQE cannot see:
   heavy docs (cost above a threshold) are split off and round-robin
-  repartitioned so no task gets two of them; light docs flow straight
+  repartitioned over ``defaultParallelism`` tasks (no task gets two of
+  them while there are at most that many); light docs flow straight
   from file splits (no shuffle: a full-corpus repartition measured ~3x
   slower).  ``_rebalanced`` runs one kernel per branch.
 * **Checkpoint/resume.** Docs are routed to ``bucket =
@@ -482,18 +483,37 @@ def tune_scan_splits(
     spark: SparkSession, input_path: str
 ) -> Tuple[pafs.FileSystem, List[pafs.FileInfo]]:
     """Size parquet scan splits so the job gets ~_TASKS_PER_CORE tasks
-    per core.
+    per core, or one wave of tasks when the input is too small for that.
 
     Parallelism comes from scan splits, not a shuffle (see the module
     docstring).  The split is input bytes / (cores * _TASKS_PER_CORE),
-    clamped to [1 MiB, 128 MiB].  At 100 TB the 128 MiB cap binds (~1M
-    tasks) and this is a no-op.  Below cores * _TASKS_PER_CORE MiB the
-    1 MiB floor binds: the gated perfbench inputs (~0.4 MB and ~0.18 MB)
-    get the same split, plan and tasks at 1, 2 or 4 tasks per core.
-    Paired runs on 4 CPUs (``--seconds 10``, seeds 1-3, per-task archive
-    re-read already removed) read spans_mixed 5968 / 5852 / 5670 docs/s
-    and skew_checkpoint 401 / 436 / 516 docs/s (medians at 1 / 2 / 4):
-    run-to-run noise, no value winning both, so the default stays 4.
+    clamped to [1 MiB, 128 MiB], and the per-file open cost is
+    min(split, 4 MiB).  At 100 TB the 128 MiB cap binds (~1M tasks).
+
+    Below cores * _TASKS_PER_CORE MiB the 1 MiB floor binds, and with the
+    open cost equal to the split every file would get its own task.  A
+    Python task has a fixed cost that does not depend on its rows, almost
+    all of it the worker waiting on the JVM (for its task, its first
+    input batch, and after its result): 1-row ``mapInArrow`` tasks on 4
+    CPUs spend ~2 ms of Python CPU each, and each extra wave of 4 tasks
+    adds ~30-100 ms to a job.  So a small input is packed into one split
+    per core: the split is raised to each core's even share of the
+    weighted input (bytes plus one open cost per file), less half an open
+    cost.  Spark packs files largest first and admits one while
+    its split's weight is under the split size, so without that margin the
+    first splits take a file more than their share and fewer than ``cores``
+    splits come out; with it, near-equal files pack ``files / cores`` to a
+    split.  The split never drops below 1 MiB, so fewer files than cores
+    keep one split each.  On 4 CPUs spans_mixed's 8 files of ~42 KB plan 4
+    tasks instead of 8 (one wave instead of two): a pass took 454 ms
+    instead of 535 (medians of 16 interleaved passes in one session), and
+    paired ``perfbench`` runs (``--seconds 10``) read a median 10,095
+    docs/s instead of 9,062 on seeds 1-10 (ahead on 9) and 9,337 instead
+    of 7,992 on seeds 11-20 (ahead on 8).
+
+    Only ``maxPartitionBytes`` (at most 128 MiB, Spark's default) and
+    ``openCostInBytes`` are set, and no partition-count cap: a later scan
+    that skips this function gets splits no larger than Spark's own.
 
     Input bytes come from the ``pyarrow.fs`` listing of ``_parquet_files``
     (returned), so a plain path and a URI (any scheme ``_fs_path``
@@ -502,9 +522,14 @@ def tune_scan_splits(
     fs, files = _parquet_files(input_path)
     total = sum(f.size for f in files)
     cores = spark.sparkContext.defaultParallelism
-    split = max(1 << 20, min(128 << 20, total // (cores * _TASKS_PER_CORE)))
+    share = total // (cores * _TASKS_PER_CORE)
+    split = max(1 << 20, min(128 << 20, share))
+    open_cost = min(split, 4 << 20)
+    if share < 1 << 20:
+        weighted = total + len(files) * open_cost
+        split = min(128 << 20, max(split, -(-weighted // cores) - open_cost // 2))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(min(split, 4 << 20)))
+    spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
     return fs, files
 
 
@@ -518,11 +543,16 @@ def _rebalanced(
     """Skew-aware ``extract``: docs with ``cost > threshold`` are
     round-robin repartitioned over ``defaultParallelism`` partitions,
     the rest keep their scan splits, and each branch runs its own
-    kernel, unioned AFTER extraction.  One kernel over
-    a pre-kernel union would put the heavy exchange under it, and the two
-    corpus scans would serialize (measured 4x slower than plain on a
-    mildly-skewed corpus); separate branches let the light scan+kernel
-    run concurrently with the heavy scan+shuffle.
+    kernel, unioned AFTER extraction.  No task gets two heavy docs only
+    while there are at most ``defaultParallelism`` of them, and only when
+    they come from one scan split: round-robin starts each input split at
+    its own offset.  The heavy branch costs a shuffle, a re-plan and
+    ``defaultParallelism`` Python tasks even when it holds no doc.
+
+    One kernel over a pre-kernel union would put the heavy exchange
+    under it, and the two corpus scans would serialize (measured 4x
+    slower than plain on a mildly-skewed corpus); separate branches let
+    the light scan+kernel run concurrently with the heavy scan+shuffle.
 
     An ingest-persisted cost column (``n_spans``, ``n_bytes``) pushes the
     branch predicates to parquet stats, so the two branches read disjoint

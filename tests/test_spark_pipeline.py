@@ -22,6 +22,7 @@ from py_pdf_parser_spark.pipeline import (  # noqa: E402
     extract_spans,
     parse_elements,
     run_job,
+    tune_scan_splits,
 )
 from py_pdf_parser_spark.synth import (  # noqa: E402
     ensure_mixed_corpus,
@@ -704,6 +705,129 @@ class TestScanInput:
         assert pipeline._fs_path("s3a://b/x")[1] == "s3://b/x"
         assert pipeline._fs_path("s3n://b/x")[1] == "s3://b/x"
         assert pipeline._fs_path("hdfs://nn/x")[1] == "hdfs://nn/x"
+
+
+class TestScanSplits:
+    """``tune_scan_splits``: a small input runs as one wave (one split
+    per core), a large one keeps ~_TASKS_PER_CORE splits per core."""
+
+    @pytest.fixture(scope="class", autouse=True)
+    def _default_splits_after(self, spark):
+        yield
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+
+    @staticmethod
+    def _write_parts(out, sizes):
+        """One parquet file of the mixed corpus per size (docs), in order,
+        uncompressed so that file bytes follow doc counts."""
+        import pyarrow.dataset as ds
+        import pyarrow.parquet as pq
+
+        table = ds.dataset(ensure_mixed_corpus(0.001)).to_table()
+        assert sum(sizes) <= table.num_rows
+        os.makedirs(out, exist_ok=True)
+        start = 0
+        for i, n in enumerate(sizes):
+            pq.write_table(table.slice(start, n), f"{out}/part-{i:05d}.parquet",
+                           compression="none", use_dictionary=False)
+            start += n
+        return str(out)
+
+    @pytest.fixture(scope="class")
+    def small_files(self, spark, tmp_path_factory):
+        """2 x cores files, alternately 45 and 5 docs, so the big files
+        sort first."""
+        n_files = 2 * spark.sparkContext.defaultParallelism
+        out = tmp_path_factory.mktemp("small_files") / "in"
+        return self._write_parts(out, [45, 5] * (n_files // 2)), n_files
+
+    @staticmethod
+    def _today(total, cores):
+        """The split and open cost of ~4 tasks per core (1 MiB floor)."""
+        split = max(1 << 20, min(128 << 20, total // (cores * 4)))
+        return split, min(split, 4 << 20)
+
+    @staticmethod
+    def _fake_listing(monkeypatch, n_files, size):
+        """``_parquet_files`` lists n_files of size bytes; -> their total."""
+        from types import SimpleNamespace
+
+        from py_pdf_parser_spark import pipeline
+
+        files = [SimpleNamespace(size=size)] * n_files
+        monkeypatch.setattr(pipeline, "_parquet_files", lambda p: (None, files))
+        return n_files * size
+
+    @staticmethod
+    def _confs(spark):
+        return tuple(int(spark.conf.get(f"spark.sql.files.{k}"))
+                     for k in ("maxPartitionBytes", "openCostInBytes"))
+
+    def test_small_input_plans_one_split_per_core(self, spark, small_files):
+        """Twice as many small files as cores -> one scan split per core,
+        two files each, though the files differ in size ~5-fold."""
+        path, _ = small_files
+        tune_scan_splits(spark, path)
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+        per_split = (
+            df.select(F.spark_partition_id().alias("p"),
+                      F.input_file_name().alias("f"))
+            .groupBy("p").agg(F.countDistinct("f").alias("n")).collect()
+        )
+        assert sorted(r["n"] for r in per_split) == [2] * len(per_split)
+
+    def test_fewer_files_than_cores_keep_one_split_each(self, spark, tmp_path):
+        n_files = spark.sparkContext.defaultParallelism - 1
+        path = self._write_parts(tmp_path / "in", [10] * n_files)
+        tune_scan_splits(spark, path)
+        assert self._confs(spark) == (1 << 20, 1 << 20)
+        assert spark.read.parquet(path).rdd.getNumPartitions() == n_files
+
+    @pytest.mark.parametrize("total", [1 << 30, 100 << 30, 100 * 10 ** 12])
+    def test_large_inputs_keep_their_splits(self, spark, monkeypatch, total):
+        """From 1 GiB to 100 TB (10,000 files) the split is input bytes /
+        (cores x 4), clamped to [1 MiB, 128 MiB], as before packing."""
+        total = self._fake_listing(monkeypatch, 10_000, total // 10_000)
+        tune_scan_splits(spark, "ignored")
+        cores = spark.sparkContext.defaultParallelism
+        assert self._confs(spark) == self._today(total, cores)
+
+    def test_small_input_leaves_no_cap_on_a_later_scan(
+        self, spark, small_files, monkeypatch
+    ):
+        """A small-input call followed by a 100 GiB one leaves exactly the
+        100 GiB call's splits, and no partition-count cap in the session."""
+        tune_scan_splits(spark, small_files[0])
+        assert self._confs(spark)[0] > 1 << 20  # the small input was packed
+        total = self._fake_listing(monkeypatch, 10_240, 10 << 20)
+        tune_scan_splits(spark, "ignored")
+        cores = spark.sparkContext.defaultParallelism
+        assert self._confs(spark) == self._today(total, cores)
+        for key in ("maxPartitionNum", "minPartitionNum"):
+            assert spark.conf.get(f"spark.sql.files.{key}", None) is None
+
+    def test_packing_keeps_every_documents_output(self, spark, small_files):
+        """extract_spans over the packed splits and over one split per
+        file gives the same (doc_id, spans, status) rows."""
+        path, n_files = small_files
+
+        def rows():
+            out = extract_spans(spark, spark.read.parquet(path))
+            return sorted(
+                (r["doc_id"], str(r["spans"]), r["status"])
+                for r in out.select("doc_id", "spans", "status").collect()
+            )
+
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 20))
+        spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 20))
+        assert spark.read.parquet(path).rdd.getNumPartitions() == n_files
+        per_file = rows()
+        tune_scan_splits(spark, path)
+        assert spark.read.parquet(path).rdd.getNumPartitions() < n_files
+        assert rows() == per_file
+        assert {s for _, _, s in per_file} == {"ok"}
 
 
 class TestHotPathPlan:

@@ -110,6 +110,42 @@ class TestBucketCaps:
         assert rows[0]["n"] == 100
         assert rows[0]["pairs_dropped"] == 4950 - 450
 
+    @pytest.mark.parametrize("corpus,cap", [
+        ("_docs_table", 256), ("_patho_corpus", 256), ("_patho_corpus", 32),
+    ])
+    def test_cap_only_drops_pairs_of_an_overflowing_bucket(
+        self, spark, corpus, cap
+    ):
+        """An invariant that needs no oracle: capped LSH pairs and
+        verified pairs are a subset of the uncapped ones (cap above the
+        corpus size), and all of them when ``bucket_cap_stats`` lists no
+        bucket.  On sf0.01 no 256 cap binds.  On ``td_lsh_pairs_capped``'s
+        corpus (301 identical docs, one bucket per band) both caps do; at
+        256 no pair is lost all the same, since a pair split in one band
+        shares a chunk in another (salted chunk order), but at 32 some
+        are.  So an empty audit implies equal pairs, not the converse."""
+        from py_pdf_parser_spark import queries as Q
+        from tests.test_oracle_parity import SF_DIR
+
+        docs = getattr(Q, corpus)(spark, SF_DIR).select("doc_id", "text")
+        rows = dedup.shingle_rows(docs, distinct=True).persist()
+        banded = dedup.minhash_banded(dedup.minhash_wide(docs, rows=rows)).persist()
+        uncapped = docs.count() + 1
+        overflow = not dedup.bucket_cap_stats(banded, ["band", "bucket"], cap).isEmpty()
+        assert overflow == (corpus == "_patho_corpus")
+        for op in (dedup.lsh_candidate_pairs, dedup.jaccard_lsh_verified):
+            got, full = (
+                set(op(docs, max_bucket=m, rows=rows, banded=banded).collect())
+                for m in (cap, uncapped)
+            )
+            assert full and got <= full, op.__name__
+            if not overflow:
+                assert got == full, op.__name__
+            if cap == Q._PATHO_CAP:
+                assert got < full, op.__name__
+        rows.unpersist()
+        banded.unpersist()
+
     def test_embedding_dup_pairs_capped(self, spark):
         import hashlib
         from collections import Counter
