@@ -11,7 +11,7 @@ Local sandbox:
   python jobs/run_html_extract.py --cores 4 \\
       --input synthdata/html_sf0.01 --output /tmp/html_out
 
-Batch analogue of streaming.stream_html_extract; the block pipeline is
+Batch analogue of streaming.stream with content_spans; the block pipeline is
 pure Column expressions, so the job is a narrow map over the page scan
 plus one doc_id aggregate — no Python workers at all.
 """

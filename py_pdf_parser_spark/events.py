@@ -9,10 +9,13 @@ sessionization, and JSON property extraction — all built-in JVM-side
 expressions (zero Python), all shuffling only on small
 (window, type) / (user, session) keys.
 
-The same transformations run unchanged under Structured Streaming
-(``streaming.stream_windowed_counts``): ``windowed_counts`` is written
-against event-time so a ``withWatermark`` prefix makes it a valid
-append-mode streaming aggregation with late-data handling.
+The same transformations run unchanged under Structured Streaming:
+``streaming.stream(spark, input_dir, EVENTS_SCHEMA, windowed_counts,
+query_name, output_mode="complete")`` keeps every window, so its table
+equals the batch result.  ``windowed_counts`` is written against
+event-time, so a ``withWatermark`` prefix would make it a valid
+append-mode aggregation with late-data handling; complete mode ignores
+a watermark (it neither drops late rows nor evicts window state).
 """
 
 from __future__ import annotations

@@ -5,6 +5,7 @@ from pyspark.sql.types import (
     BinaryType,
     BooleanType,
     DoubleType,
+    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -54,6 +55,15 @@ PDF_BYTES_SCHEMA = StructType(
     [
         StructField("doc_id", StringType()),
         StructField("pdf_bytes", BinaryType()),
+    ]
+)
+
+# Embedding vectors (the driver's embeddings table shape).
+EMBEDDINGS_SCHEMA = StructType(
+    [
+        StructField("vec_id", LongType()),
+        StructField("embedding", ArrayType(FloatType())),
+        StructField("label", IntegerType()),
     ]
 )
 

@@ -657,7 +657,7 @@ def perplexity_thresholds(scores: DataFrame) -> DataFrame:
     """Per-language tercile thresholds (lang, t1, t2) from a
     (lang, bits_per_token) score table — the trained gate artifact a
     deployment fits once on a reference corpus and then applies to
-    every ingest batch (see ``streaming.stream_quality_gate``).
+    every ingest batch (see ``quality_gate``).
     Runs entirely over the bounded distinct-score table."""
     t = F.col("bits_per_token")
     return (
@@ -687,6 +687,21 @@ def bucket_by_thresholds(
         .otherwise("tail")
         .alias("bucket"),
     )
+
+
+def quality_gate(
+    docs: DataFrame, lm: DataFrame, thresholds: DataFrame
+) -> DataFrame:
+    """CCNet-style quality gate against frozen artifacts: bits-per-token
+    under the pre-trained ``lm`` (``unigram_lm``), labelled head/middle/
+    tail against the per-language ``thresholds``
+    (``perplexity_thresholds``) -> (doc_id, lang, bits_per_token,
+    bucket).  Neither artifact shifts with ``docs``, so a stream gates
+    each micro-batch with it and equals the batch result."""
+    scores = lm_perplexity(docs, lm=lm).join(
+        docs.select("doc_id", "lang"), "doc_id"
+    )
+    return bucket_by_thresholds(scores, thresholds)
 
 
 def gopher_rules(
@@ -1119,8 +1134,8 @@ def bm25_model(
     (q_id, tok, idf_micro, n_docs, total_tokens) — one row per query
     term, the whole table a few KB regardless of corpus size, so a
     deployment broadcasts it and scores arriving documents without
-    ever touching the training corpus again (``bm25_score`` /
-    ``streaming.stream_bm25_gate``).
+    ever touching the training corpus again (``bm25_score``, also as
+    a ``streaming.stream`` transform).
 
     idf uses ``tfidf_topk``'s fixed-point discipline (``_idf``): one
     float log2 per distinct query term.  Scale shape: tokens explode
@@ -1164,8 +1179,8 @@ def bm25_score(
     and engine-portable.  df/idf/avgdl are frozen in the model
     (the deployment contract: arriving documents must not shift the
     ranking function), so this is explode -> broadcast join -> exact
-    integer per-(doc, query) sum — stateless, corpus-parallel, and the
-    path ``streaming.stream_bm25_gate`` runs per micro-batch."""
+    integer per-(doc, query) sum — stateless, corpus-parallel, and run
+    per micro-batch as a ``streaming.stream`` transform."""
     postings = (
         docs.select(
             "doc_id",

@@ -182,8 +182,11 @@ class TestBytePathScaleMachinery:
 
     def test_stream_pdf_extract_matches_batch(self, spark, tmp_path):
         """Streaming REAL-PDF ingestion == batch byte-path extraction."""
+        from functools import partial
+
         from py_pdf_parser_spark.kernel.layout import spans_for
-        from py_pdf_parser_spark.streaming import stream_pdf_extract
+        from py_pdf_parser_spark.schema import PDF_BYTES_SCHEMA
+        from py_pdf_parser_spark.streaming import stream
 
         rows = [
             (d, render_pdf(d, spans_for(d)))
@@ -196,9 +199,13 @@ class TestBytePathScaleMachinery:
 
         out_dir = str(tmp_path / "pdf_out")
         ckpt = str(tmp_path / "pdf_ckpt")
-        query = stream_pdf_extract(
-            spark, in_dir, out_dir, ckpt,
-            config=bytes_config_for, include_media=True,
+        query = stream(
+            spark, in_dir, PDF_BYTES_SCHEMA,
+            partial(
+                extract_spans_from_pdf,
+                config=bytes_config_for, include_media=True,
+            ),
+            output_dir=out_dir, checkpoint_dir=ckpt,
         )
         try:
             query.processAllAvailable()

@@ -1,11 +1,23 @@
-"""Structured Streaming path: same kernels under foreachBatch."""
+"""Structured Streaming path: the batch operators through ``stream``."""
+
+from functools import partial
 
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
 
-from py_pdf_parser_spark.pipeline import extract_spans  # noqa: E402
-from py_pdf_parser_spark.streaming import stream_extract  # noqa: E402
+from py_pdf_parser_spark.pipeline import (  # noqa: E402
+    extract_spans,
+    extract_spans_rebalanced,
+)
+from py_pdf_parser_spark.schema import (  # noqa: E402
+    DOC_TABLE_SCHEMA,
+    DOCUMENTS_SCHEMA,
+    EMBEDDINGS_SCHEMA,
+    EVENTS_SCHEMA,
+    HTML_PAGES_SCHEMA,
+)
+from py_pdf_parser_spark.streaming import stream  # noqa: E402
 from py_pdf_parser_spark.synth import ensure_mixed_corpus  # noqa: E402
 
 
@@ -14,6 +26,11 @@ def spark():
     from py_pdf_parser_spark.session import get_spark
 
     return get_spark(cores=4)
+
+
+def _batches(query):
+    """How many of ``query``'s micro-batches read at least one row."""
+    return sum(p["numInputRows"] > 0 for p in query.recentProgress)
 
 
 def test_stream_extract_processes_files(spark, tmp_path):
@@ -31,7 +48,11 @@ def test_stream_extract_processes_files(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def run():
-        query = stream_extract(spark, in_dir, out_dir, ckpt)
+        query = stream(
+            spark, in_dir, DOCUMENTS_SCHEMA,
+            partial(extract_spans_rebalanced, spark),
+            output_dir=out_dir, checkpoint_dir=ckpt,
+        )
         try:
             query.processAllAvailable()
         finally:
@@ -66,17 +87,19 @@ def test_stream_extract_processes_files(spark, tmp_path):
 
 
 def test_stream_windowed_counts_matches_batch(spark, tmp_path):
-    """Watermarked streaming window agg == batch windowed_counts."""
+    """Complete-mode streaming window agg == batch windowed_counts."""
     import shutil
 
     from py_pdf_parser_spark.events import windowed_counts
-    from py_pdf_parser_spark.streaming import stream_windowed_counts
 
     src = "/root/testdata/sf0.001/events.parquet"
     in_dir = tmp_path / "events_in"
     in_dir.mkdir()
     shutil.copy(src, in_dir / "part-0.parquet")
-    query = stream_windowed_counts(spark, str(in_dir), query_name="wc_test")
+    query = stream(
+        spark, str(in_dir), EVENTS_SCHEMA, windowed_counts,
+        query_name="wc_test", output_mode="complete",
+    )
     try:
         query.processAllAvailable()
         streamed = {
@@ -123,9 +146,14 @@ def test_stream_sessionize_matches_batch(spark, tmp_path):
     base = int(os.path.getmtime(os.path.join(in_dir, parts[0])))
     for i, name in enumerate(parts):
         os.utime(os.path.join(in_dir, name), (base + 10 * i, base + 10 * i))
-    query = stream_sessionize(spark, in_dir, query_name="sess_test")
+    # two files per trigger: 2 micro-batches over the 3 files (4 would
+    # read them in one, and the fold would never carry state)
+    query = stream_sessionize(
+        spark, in_dir, "sess_test", max_files_per_trigger=2
+    )
     try:
         query.processAllAvailable()
+        n_batches = _batches(query)
         streamed = (
             spark.table("sess_test")
             .groupBy("user_id", "session_id")
@@ -142,6 +170,7 @@ def test_stream_sessionize_matches_batch(spark, tmp_path):
     want = {tuple(r) for r in sessionize(spark.read.parquet(src)).collect()}
     assert got == want
     assert len(want) > 50
+    assert n_batches == 2
 
 
 def test_stream_sessionize_multi_chunk_groups(spark, tmp_path):
@@ -166,9 +195,10 @@ def test_stream_sessionize_multi_chunk_groups(spark, tmp_path):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
     try:
-        query = stream_sessionize(spark, in_dir, query_name="sess_chunks")
+        query = stream_sessionize(spark, in_dir, "sess_chunks")
         try:
             query.processAllAvailable()
+            n_batches = _batches(query)
             streamed = (
                 spark.table("sess_chunks")
                 .groupBy("user_id", "session_id")
@@ -186,6 +216,8 @@ def test_stream_sessionize_multi_chunk_groups(spark, tmp_path):
 
     want = {tuple(r) for r in sessionize(spark.read.parquet(src)).collect()}
     assert got == want
+    # one input file: the chunks, not the batches, are what is split
+    assert n_batches == 1
 
 
 def test_stream_dedup_keeps_first_per_digest(spark, tmp_path):
@@ -211,13 +243,15 @@ def test_stream_dedup_keeps_first_per_digest(spark, tmp_path):
     # one file per trigger: the second (all-duplicate) drop arrives in a
     # LATER micro-batch, so survivors depend on carried state
     query = stream_dedup(
-        spark, in_dir, query_name="dedup_test", max_files_per_trigger=1
+        spark, in_dir, "dedup_test", max_files_per_trigger=1
     )
     try:
         query.processAllAvailable()
+        n_batches = _batches(query)
         out = spark.table("dedup_test")
         n_out = out.count()
         n_digests = out.select("digest").distinct().count()
+        survivors = {r.doc_id for r in out.collect()}
     finally:
         query.stop()
 
@@ -228,6 +262,13 @@ def test_stream_dedup_keeps_first_per_digest(spark, tmp_path):
     assert n_out == n_digests == want
     # the doubled drop means input rows are ~2x the survivors
     assert batch.count() > n_out
+    assert n_batches == 2
+    # the survivor per digest is the lowest doc_id of the first drop
+    first_drop = spark.read.parquet(os.path.join(in_dir, "a.parquet"))
+    lowest = first_drop.groupBy(
+        F.md5(F.to_json(F.struct("spans")))
+    ).agg(F.min("doc_id").alias("d"))
+    assert survivors == {r.d for r in lowest.collect()}
 
 
 def test_stream_html_extract_matches_batch(spark, tmp_path):
@@ -235,7 +276,6 @@ def test_stream_html_extract_matches_batch(spark, tmp_path):
     import os
     import shutil
 
-    from py_pdf_parser_spark.streaming import stream_html_extract
     from py_pdf_parser_spark.synth import ensure_html_corpus
     from py_pdf_parser_spark.textops.html import content_spans
 
@@ -248,7 +288,10 @@ def test_stream_html_extract_matches_batch(spark, tmp_path):
 
     out_dir = str(tmp_path / "html_out")
     ckpt = str(tmp_path / "html_ckpt")
-    query = stream_html_extract(spark, in_dir, out_dir, ckpt)
+    query = stream(
+        spark, in_dir, HTML_PAGES_SCHEMA, content_spans,
+        output_dir=out_dir, checkpoint_dir=ckpt,
+    )
     try:
         query.processAllAvailable()
     finally:
@@ -267,9 +310,6 @@ def test_stream_replay_is_idempotent(spark, tmp_path, surface):
     """A replayed micro-batch (foreachBatch is at-least-once) must not
     duplicate rows: the shared sink's writer overwrites its batch_id
     partition, for HTML and document extraction alike."""
-    from functools import partial
-
-    from py_pdf_parser_spark.pipeline import extract_spans_rebalanced
     from py_pdf_parser_spark.streaming import write_batch
     from py_pdf_parser_spark.synth import ensure_html_corpus
     from py_pdf_parser_spark.textops.html import content_spans
@@ -298,7 +338,6 @@ def test_stream_replay_is_idempotent(spark, tmp_path, surface):
 
 def test_stream_pii_scrub_matches_batch(spark, tmp_path):
     """Stateless streaming scrub == the batch operator on the same rows."""
-    from py_pdf_parser_spark.streaming import stream_pii_scrub
     from py_pdf_parser_spark.textops.analysis import pii_scrub
 
     rows = [
@@ -313,7 +352,7 @@ def test_stream_pii_scrub_matches_batch(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     docs.coalesce(1).write.parquet(in_dir)
 
-    q = stream_pii_scrub(spark, in_dir, query_name="pii_t")
+    q = stream(spark, in_dir, DOC_TABLE_SCHEMA, pii_scrub, query_name="pii_t")
     try:
         q.processAllAvailable()
         got = {
@@ -328,7 +367,6 @@ def test_stream_pii_scrub_matches_batch(spark, tmp_path):
 
 def test_stream_blocklist_gate_matches_batch(spark, tmp_path):
     """Stateless streaming blocklist gate == the batch operator."""
-    from py_pdf_parser_spark.streaming import stream_blocklist_gate
     from py_pdf_parser_spark.textops.analysis import blocklist_filter
 
     rows = [
@@ -343,8 +381,9 @@ def test_stream_blocklist_gate_matches_batch(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     docs.coalesce(1).write.parquet(in_dir)
 
-    q = stream_blocklist_gate(
-        spark, in_dir, ["bad", "ugly"], max_frac=0.2,
+    q = stream(
+        spark, in_dir, DOC_TABLE_SCHEMA,
+        partial(blocklist_filter, words=["bad", "ugly"], max_frac=0.2),
         query_name="blk_t")
     try:
         q.processAllAvailable()
@@ -368,7 +407,6 @@ def test_stream_mixture_sample_matches_batch(spark, tmp_path):
     """Stateless streaming mixture sampling == the batch operator on
     the same rows (fixed buckets + broadcast rates decide identically
     in any execution mode)."""
-    from py_pdf_parser_spark.streaming import stream_mixture_sample
     from py_pdf_parser_spark.textops.analysis import mixture_sample
 
     rows = [
@@ -384,8 +422,10 @@ def test_stream_mixture_sample_matches_batch(spark, tmp_path):
         [("a", 60), ("zero", 0)], "source string, pct long"
     )
 
-    q = stream_mixture_sample(
-        spark, in_dir, rates, default_pct=30, query_name="mix_t"
+    q = stream(
+        spark, in_dir, DOC_TABLE_SCHEMA,
+        partial(mixture_sample, rates=rates, default_pct=30),
+        query_name="mix_t",
     )
     try:
         q.processAllAvailable()
@@ -409,11 +449,11 @@ def test_stream_quality_gate_matches_batch(spark, tmp_path):
     same rows, across multiple micro-batches and a replay-safe sink."""
     import random
 
-    from py_pdf_parser_spark.streaming import stream_quality_gate
     from py_pdf_parser_spark.textops.analysis import (
         bucket_by_thresholds,
         lm_perplexity,
         perplexity_thresholds,
+        quality_gate,
         unigram_lm,
     )
 
@@ -445,12 +485,14 @@ def test_stream_quality_gate_matches_batch(spark, tmp_path):
 
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    q = stream_quality_gate(
-        spark, in_dir, lm, thresholds, out_dir, ckpt,
-        max_files_per_trigger=1,
+    q = stream(
+        spark, in_dir, DOC_TABLE_SCHEMA,
+        partial(quality_gate, lm=lm, thresholds=thresholds),
+        output_dir=out_dir, checkpoint_dir=ckpt, max_files_per_trigger=1,
     )
     try:
         q.processAllAvailable()
+        n_batches = _batches(q)
     finally:
         q.stop()
 
@@ -467,11 +509,11 @@ def test_stream_quality_gate_matches_batch(spark, tmp_path):
     }
     assert got == want and len(want) == 40
     assert {b for _, _, _, b in got} <= {"head", "middle", "tail"}
+    assert n_batches >= 2
 
 
 def test_stream_gopher_gate_matches_batch(spark, tmp_path):
     """Stateless streaming Gopher-rule gate == the batch operator."""
-    from py_pdf_parser_spark.streaming import stream_gopher_gate
     from py_pdf_parser_spark.textops.analysis import gopher_rules
 
     rows = [
@@ -490,9 +532,9 @@ def test_stream_gopher_gate_matches_batch(spark, tmp_path):
 
     bounds = dict(min_words=10, max_words=40,
                   min_mean_word_len=2.0, max_mean_word_len=6.0)
-    q = stream_gopher_gate(
-        spark, in_dir, query_name="gph_t", max_files_per_trigger=1,
-        **bounds)
+    q = stream(
+        spark, in_dir, DOC_TABLE_SCHEMA, partial(gopher_rules, **bounds),
+        query_name="gph_t", max_files_per_trigger=1)
     try:
         q.processAllAvailable()
         got = {tuple(r)
@@ -509,7 +551,6 @@ def test_stream_dsir_gate_matches_batch(spark, tmp_path):
     """Streaming DSIR scoring (fixed pre-trained model) == batch
     dsir_score with the same model on the same rows, including docs
     whose tokens the training corpus never saw."""
-    from py_pdf_parser_spark.streaming import stream_dsir_gate
     from py_pdf_parser_spark.textops.analysis import (
         dsir_model,
         dsir_score,
@@ -531,11 +572,14 @@ def test_stream_dsir_gate_matches_batch(spark, tmp_path):
     incoming.coalesce(3).write.parquet(in_dir)
 
     out_dir = str(tmp_path / "out")
-    q = stream_dsir_gate(
-        spark, in_dir, model, out_dir, str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, n_buckets=128)
+    q = stream(
+        spark, in_dir, DOC_TABLE_SCHEMA,
+        partial(dsir_score, model=model, n_buckets=128),
+        output_dir=out_dir, checkpoint_dir=str(tmp_path / "ckpt"),
+        max_files_per_trigger=1)
     try:
         q.processAllAvailable()
+        n_batches = _batches(q)
     finally:
         q.stop()
 
@@ -546,6 +590,7 @@ def test_stream_dsir_gate_matches_batch(spark, tmp_path):
     assert got == want and len(want) == 3
     # every token scored, unseen ones included
     assert {r[1] for r in want} == {3, 4}
+    assert n_batches >= 2
 
 
 def test_stream_pq_encode_matches_batch(spark, tmp_path):
@@ -553,7 +598,6 @@ def test_stream_pq_encode_matches_batch(spark, tmp_path):
     pq_assign with the same codebook on the same rows."""
     import numpy as np
 
-    from py_pdf_parser_spark.streaming import stream_pq_encode
     from py_pdf_parser_spark.textops.similarity import (
         pq_assign,
         pq_train,
@@ -563,13 +607,16 @@ def test_stream_pq_encode_matches_batch(spark, tmp_path):
     vecs = rng.randn(24, 8).astype("float32")
     emb = spark.createDataFrame(
         [(i, [float(x) for x in vecs[i]], int(i % 3)) for i in range(24)],
-        "vec_id long, embedding array<float>, label int",
+        EMBEDDINGS_SCHEMA,
     )
     codebook = pq_train(emb, n_subs=4, n_codes=4, n_iters=1)
     in_dir = str(tmp_path / "in")
     emb.coalesce(1).write.parquet(in_dir)
 
-    q = stream_pq_encode(spark, in_dir, codebook, query_name="pq_t")
+    q = stream(
+        spark, in_dir, EMBEDDINGS_SCHEMA,
+        partial(pq_assign, codebook=codebook), query_name="pq_t",
+    )
     try:
         q.processAllAvailable()
         got = {
@@ -589,7 +636,6 @@ def test_stream_bm25_gate_matches_batch(spark, tmp_path):
     """Streaming BM25 scoring (fixed retrieval model) == batch
     bm25_score with the same model on the same rows; the frozen
     df/avgdl come from the reference corpus, not the stream."""
-    from py_pdf_parser_spark.streaming import stream_bm25_gate
     from py_pdf_parser_spark.textops.analysis import (
         bm25_model,
         bm25_score,
@@ -612,11 +658,13 @@ def test_stream_bm25_gate_matches_batch(spark, tmp_path):
     incoming.coalesce(3).write.parquet(in_dir)
 
     out_dir = str(tmp_path / "out")
-    q = stream_bm25_gate(
-        spark, in_dir, model, out_dir, str(tmp_path / "ckpt"),
+    q = stream(
+        spark, in_dir, DOC_TABLE_SCHEMA, partial(bm25_score, model=model),
+        output_dir=out_dir, checkpoint_dir=str(tmp_path / "ckpt"),
         max_files_per_trigger=1)
     try:
         q.processAllAvailable()
+        n_batches = _batches(q)
     finally:
         q.stop()
 
@@ -628,3 +676,20 @@ def test_stream_bm25_gate_matches_batch(spark, tmp_path):
     assert {d for d, _, _ in want} == {1000, 1002}
     assert {(d, qid) for d, qid, _ in want} == {
         (1000, 0), (1002, 0), (1002, 1)}
+    assert n_batches >= 2
+
+
+@pytest.mark.parametrize(
+    "sink",
+    [
+        {},
+        {"query_name": "t", "output_dir": "out", "checkpoint_dir": "ck"},
+        {"query_name": "t", "output_dir": "out"},
+        {"output_dir": "out"},
+        {"checkpoint_dir": "ck"},
+    ],
+    ids=["neither", "both", "table+dir", "dir-only", "checkpoint-only"],
+)
+def test_stream_needs_exactly_one_sink(spark, tmp_path, sink):
+    with pytest.raises(ValueError, match="exactly one sink"):
+        stream(spark, str(tmp_path), DOC_TABLE_SCHEMA, lambda d: d, **sink)
